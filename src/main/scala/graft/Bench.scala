@@ -1,24 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
+import Harness.{jsonString => jstr}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // SCALE §8f: AQE listener events stringify the plan; un-checkpointed
-      // iterative lineages hit multi-GB plan strings (measured 1.98 GB →
-      // driver OOM inside explainString). Cap changes log text only.
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores, Harness.TimedPlanChars)
     // Warm the session (codegen, catalog, parquet footers) so the first
     // timed query isn't charged for JVM startup.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    Harness.warm(spark)
     graft.io.Tables.all.foreach { n =>
       try {
         val df = if (n == "events") graft.io.Tables.events(spark, sfDir)
@@ -41,10 +31,9 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0") {
       val warmT0 = System.nanoTime()
       val warmTimes = SparkEntry.queries.map { case (name, fn) =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> Harness.timed(spark) {
+          try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+        }
       }
       val slowest = warmTimes.toSeq.sortBy(-_._2).take(8)
         .map { case (k, v) =>
@@ -78,27 +67,16 @@ object Bench {
     val results = SparkEntry.queries.map { case (name, fn) =>
       canaries(name) = canaryRead()
       val times = (1 to runs).flatMap { _ =>
-        // cached frames match by logical-plan equality, so without this a
-        // query could silently reuse a previous query's (or its own prior
-        // run's) cache — each measurement must stand alone
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
+        try Some(Harness.timed(spark)(fn(spark, sfDir).count()))
+        catch {
           case e: Throwable =>
             errors.getOrElseUpdate(name,
               s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
             None
         }
       }
-      name -> (if (times.nonEmpty) times.sorted.apply(times.size / 2)
-               else Double.NaN)
+      name -> (if (times.nonEmpty) Harness.median(times) else Double.NaN)
     }
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\\n\\r\\t]", " ") + "\""
     val qs = results.map { case (k, v) =>
       jstr(k) + ":" + (if (v.isNaN) "null" else v.toString)
     }.mkString("{", ",", "}")
@@ -110,9 +88,8 @@ object Bench {
     // every per-query median out of BENCH_r09) — so the canary map goes on
     // its OWN line printed first, and the main line orders summary →
     // errors → queries so the queries map sits at the surviving end.
-    val canSorted = canaries.values.toSeq.sorted
-    val canMed = if (canSorted.nonEmpty) canSorted(canSorted.size / 2) else 0.0
-    val canMax = if (canSorted.nonEmpty) canSorted.last else 0.0
+    val canMed = if (canaries.nonEmpty) Harness.median(canaries.values.toSeq) else 0.0
+    val canMax = if (canaries.nonEmpty) canaries.values.max else 0.0
     val cans = canaries.map { case (k, v) => jstr(k + "__canary") + ":" + v }
       .mkString("{", ",", "}")
     val total = results.values.filterNot(_.isNaN).sum

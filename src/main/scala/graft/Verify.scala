@@ -1,52 +1,49 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.tools.Harness
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (`scripts/check_oracle.py`).
+  *
+  * Usage: sbt "runMain graft.Verify <sfDir> <outDir> [query...]" — with
+  * query names, only those are dumped (the dev loop for one operator).
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 1 MB like the test sessions (r11 rule): big enough that no real
-      // plan truncates (the largest registry plan is ~56 KB, so 16 KB
-      // spammed truncation warnings), small enough that the SCALE §8f
-      // AQE listener pathology (multi-GB strings from un-checkpointed
-      // iterative lineages) still can't OOM the driver.
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
+    val names =
+      if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq
+    val spark = Harness.session(Harness.cores, Harness.PlanChars)
+    dump(spark, args(0), args(1), names)
+    spark.stop()
+  }
+
+  /** Writes `names`' results under `outDir/<name>` and their oracle SQL to
+    * `outDir/oracle_sql.json`. A failing query is logged, not fatal; the
+    * session stays open.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
+    val queries = SparkEntry.queries
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    names.foreach { name =>
       // per-query cached frames (signatures, buckets, gram sets) are only
       // needed within their own query — drop them so 40+ queries don't
       // accumulate dead storage blocks in one session
       spark.catalog.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val wanted = names.toSet
+    val json = SparkEntry.oracleSql.iterator.filter { case (k, _) => wanted(k) }
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

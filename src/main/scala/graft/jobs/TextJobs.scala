@@ -3512,56 +3512,52 @@ object TextJobs {
     // slim handoff (r17): the token and edge caches were unmanaged and
     // outlived the query for the JVM lifetime; scope them, checkpoint the
     // 20-row output, release
-    val scope = graft.ops.CacheScope()
-    try textrankCore(spark, sfDir, scope).eagerCheckpoint()
-    finally scope.close()
-  }
-
-  /** Spec/audit hook: the un-checkpointed textrank plan. */
-  private[graft] def textrankCore(spark: SparkSession, sfDir: String,
-      scope: graft.ops.CacheScope): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val clean = regexp_replace(lower(col("text")),
-      TextAnalysis.stopwordPattern, " ")
-    // Hash-first pairing (r17, guide §2.3 "shuffle keys, not payloads" /
-    // r2 int-keys rule applied to the pair EXPLODE): tokens explode ONCE
-    // with their position and are md5-hashed ONCE EACH, then the window-2
-    // co-occurrence pairs come from two `lead`s over the (doc_id, pos)
-    // window — the pair lineage is all-int from birth. The r16 form
-    // zipped string pairs and hashed at the pair select (≥2 md5 per pair
-    // row ≈ 4 per token; this is 1 per token — ProfileR17 `tr` carries
-    // the measured both-ways numbers). The old `w1 <> w2` string guard is
-    // equivalent to the kept a <> b int guard (equal strings ⇒ equal
-    // hashes, and hash-collision pairs were dropped by a <> b anyway).
-    // ONE cached token frame feeds both the pairing window and the vocab
-    // map-back.
-    val t = scope.cache(Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        posexplode(regexp_extract_all(clean, lit("[a-z0-9]+"), lit(0)))
-          .as(Seq("pos", "w")))
-      .select(col("doc_id"), col("pos"), col("w"), hash60(col("w")).as("wh")))
-    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val nbr = t.select(col("wh"),
-      lead(col("wh"), 1).over(wDoc).as("n1"),
-      lead(col("wh"), 2).over(wDoc).as("n2"))
-    val e0 = scope.cache(nbr
-      .select(col("wh").as("h1"),
-        explode(array(col("n1"), col("n2"))).as("h2"))
-      .filter(col("h2").isNotNull)
-      .select(least(col("h1"), col("h2")).as("a"),
-        greatest(col("h1"), col("h2")).as("b"))
-      .filter(col("a") =!= col("b")) // drop theoretical hash-collision loops
-      .distinct()) // both edge directions read it (r1-2 rule)
-    val edges = e0.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
-    val vocab = t
-      .select(col("w"), col("wh"))
-      .distinct() // vocab-sized final mapping — the legit token-keyed agg
-    graft.ops.Graph.pageRank(edges, iters = TR_ITERS)
-      .join(vocab, col("node") === col("wh"))
-      .orderBy(col("r").desc, col("w").asc)
-      .limit(TR_TOPK)
-      .select(col("w").as("word"), col("r").as("rank_s"))
+    val scope = graft.ops.CacheScope()
+    try {
+      val clean = regexp_replace(lower(col("text")),
+        TextAnalysis.stopwordPattern, " ")
+      // Hash-first pairing (r17, guide §2.3 "shuffle keys, not payloads" /
+      // r2 int-keys rule applied to the pair EXPLODE): tokens explode ONCE
+      // with their position and are md5-hashed ONCE EACH, then the window-2
+      // co-occurrence pairs come from two `lead`s over the (doc_id, pos)
+      // window — the pair lineage is all-int from birth. The r16 form
+      // zipped string pairs and hashed at the pair select (≥2 md5 per pair
+      // row ≈ 4 per token; this is 1 per token — OPTIMIZATION_r17.md §3
+      // carries the measured both-ways numbers). The old `w1 <> w2` string
+      // guard is equivalent to the kept a <> b int guard (equal strings ⇒
+      // equal hashes, and hash-collision pairs were dropped by a <> b
+      // anyway). ONE cached token frame feeds both the pairing window and
+      // the vocab map-back.
+      val t = scope.cache(Tables.documents(spark, sfDir)
+        .select(col("doc_id"),
+          posexplode(regexp_extract_all(clean, lit("[a-z0-9]+"), lit(0)))
+            .as(Seq("pos", "w")))
+        .select(col("doc_id"), col("pos"), col("w"), hash60(col("w")).as("wh")))
+      val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      val nbr = t.select(col("wh"),
+        lead(col("wh"), 1).over(wDoc).as("n1"),
+        lead(col("wh"), 2).over(wDoc).as("n2"))
+      val e0 = scope.cache(nbr
+        .select(col("wh").as("h1"),
+          explode(array(col("n1"), col("n2"))).as("h2"))
+        .filter(col("h2").isNotNull)
+        .select(least(col("h1"), col("h2")).as("a"),
+          greatest(col("h1"), col("h2")).as("b"))
+        .filter(col("a") =!= col("b")) // drop theoretical hash-collision loops
+        .distinct()) // both edge directions read it (r1-2 rule)
+      val edges = e0.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
+      val vocab = t
+        .select(col("w"), col("wh"))
+        .distinct() // vocab-sized final mapping — the legit token-keyed agg
+      graft.ops.Graph.pageRank(edges, iters = TR_ITERS)
+        .join(vocab, col("node") === col("wh"))
+        .orderBy(col("r").desc, col("w").asc)
+        .limit(TR_TOPK)
+        .select(col("w").as("word"), col("r").as("rank_s"))
+        .eagerCheckpoint()
+    } finally scope.close()
   }
 
   /** Oracle: identical integer recurrence, rounds unrolled as CTEs (the

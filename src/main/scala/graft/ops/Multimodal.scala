@@ -31,7 +31,7 @@ object Multimodal {
   // `ImageIO.read(InputStream)`/`write(..., OutputStream)` wrap their
   // stream in a FileCache image stream by default: every tiny PNG
   // encode/decode creates and deletes a TEMP FILE on disk. Measured
-  // (ProfileR16 micro, 5000 fixture tiles, 1 thread): encode 0.91 →
+  // (OPTIMIZATION_r16.md §1, 5000 fixture tiles, 1 thread): encode 0.91 →
   // 0.30 s, decode 0.52 → 0.08 s with the memory-cached streams — and
   // under 32 concurrent tasks the temp-file churn also serializes on the
   // filesystem, so the parallel decode stage was SLOWER than one thread.

@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query bench harness: `runMain graft.tools.BenchOne <query> [runs]`
-  * times one registered query with the same cache-cleared discipline as
-  * [[graft.Bench]] and prints each run plus the median — the tool for
-  * chasing a single bench line without paying for the whole registry.
-  * `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` as in Bench.
+  * times one registered query with the same session and cache-cleared
+  * discipline as [[graft.Bench]] and prints each run plus the median — the
+  * tool for chasing a single bench line without paying for the whole
+  * registry. `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` as in Bench.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -14,27 +12,18 @@ object BenchOne {
     val name = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; known: " +
         graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = Harness.session(Harness.cores, Harness.TimedPlanChars)
+    Harness.warm(spark)
     val times = (1 to runs).map { i =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      var n = 0L
+      val dt = Harness.timed(spark) { n = fn(spark, sfDir).count() }
       println(f"[benchone] run $i: $dt%.3f s ($n rows)")
       dt
     }
-    println(f"[benchone] $name median: ${times.sorted.apply(times.size / 2)}%.3f s")
+    println(f"[benchone] $name median: ${Harness.median(times)}%.3f s")
     spark.stop()
   }
 }

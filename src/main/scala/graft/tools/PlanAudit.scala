@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Registry-wide physical-plan audit: one row per registered query with
   * the plan features that matter at 100 TB -- exchange count, broadcasts,
   * codegen spans, and the two all-pairs red flags. `PlanQualitySpec` pins
@@ -22,14 +20,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     graft.ops.Eager.planOnly = true
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cores, Harness.PlanChars)
 
     val out = new StringBuilder
     def emit(l: String = ""): Unit = { out.append(l).append('\n') }

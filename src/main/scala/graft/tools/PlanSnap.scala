@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Write `.explain("formatted")` for named queries to files — the
   * round-16 plan-evidence capture (`plans/r16/<query>_<tag>.txt`).
@@ -23,15 +22,7 @@ object PlanSnap {
     Files.createDirectories(outDir)
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cores, Harness.PlanChars)
     // SPARK_GRAFT_PLAN_MODE=simple shows the *(n) WholeStageCodegen span
     // markers FormattedMode omits (the r17 codegen-coverage evidence).
     val mode = sys.env.getOrElse("SPARK_GRAFT_PLAN_MODE", "formatted") match {

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Harness.median
 
 /** Scaling probes (SCALE.md §8) — committed so every number in SCALE.md is
   * repeatable. Three corpus shapes, selected by `SPARK_GRAFT_PROBE_MODE`
@@ -60,34 +61,13 @@ object Probe {
     "ann_ivf_pq", "ann_ivf_pq_rerank", "ann_ivf_pq_from_artifact",
     "hard_negatives")
 
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_PROBE_COPIES", "4").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mode = sys.env.getOrElse("SPARK_GRAFT_PROBE_MODE", "all")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // iterative loops (cc propagation on a deep/giant component) nest
-      // the physical plan per round, and AQE's listener events carry a
-      // full plan STRING — at ER-graph depth that string alone OOMs an
-      // 8g driver (seen: OutOfMemoryError inside explainString). Cap it;
-      // the cap changes log/event text only, never the executed plan.
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect() // JVM warmup
-
-    def time(thunk: => Long): Double = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      thunk
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = Harness.session(Harness.cores, Harness.TimedPlanChars)
+    Harness.warm(spark)
+    def time(thunk: => Long): Double = Harness.timed(spark)(thunk)
     def timeQuery(name: String, dir: String): Double =
       time(graft.SparkEntry.queries(name)(spark, dir).count())
 

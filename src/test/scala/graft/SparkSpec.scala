@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Harness
 
 /** Shared local session for all suites (one per suite via lazy val). */
 trait SparkSpec extends AnyFunSuite {
@@ -10,23 +11,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SCALE §8f: AQE listener events stringify the plan; un-checkpointed
-      // iterative lineages (the hits/pageRank distributed loops) nest one
-      // join layer per round and explainString OOMs the test JVM building
-      // a multi-GB string. 1 MB (not Bench's 16 KB): plan-pinning specs
-      // string-match on full executed plans — the registry's biggest is
-      // ~56 KB, and a 16 KB cap silently weakens every negative assert
-      // (measured: it cut bloom_might_contain out of the prescreen pin).
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** PlanChars, not Bench's 16 KB cap: plan-pinning specs string-match on
+    * full executed plans (see [[Harness.PlanChars]]).
+    */
+  lazy val session: SparkSession = Harness.session(4, Harness.PlanChars)
 }
