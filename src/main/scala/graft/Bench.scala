@@ -18,7 +18,7 @@ object Bench {
     }
     // Model/codegen warm pass (untimed, SPARK_GRAFT_BENCH_WARM=0 skips):
     // run every registered query once before timing. Trained models are
-    // train-once/score-many by contract (the rocchioModel/simLists content
+    // train-once/score-many by contract (the graft.model.ModelMemo
     // memos and the ArtifactJobs parquet artifacts), so the timed runs
     // should measure the SERVING regime on every run, not [train, serve,
     // serve] whose median depends on which run the 3-sample window

@@ -1174,91 +1174,35 @@ object AnalyticsJobs {
     * under the degree cap, intersection counts are map-side-combinable
     * sums, item set sizes join back on int keys, and the top-k window
     * partitions by item (catalog-sized key space, never a global funnel).
-    */
-  def itemSimilarity(spark: SparkSession, sfDir: String): DataFrame =
-    simLists(spark, sfDir)
-
-  /** Content-memoized full-log similarity lists — the CF model.
     *
-    * Four registry queries (`item_similarity`, `item_recs`, `rec_eval`'s
+    * Content-memoized full-log similarity lists — the CF model. Four
+    * registry queries (`item_similarity`, `item_recs`, `rec_eval`'s
     * full-log siblings, `rec_coverage`) train the identical catalog×K
     * lists from the identical events log, and the bench runs them as
     * independent queries — without a memo the registry pays the quadratic
-    * pair join four times (the `rocchioModel` contract, CLAUDE.md r8).
-    * The model is the catalog×[[SIM_TOP_K]] list frame — the exact rows
-    * the scoring side already broadcasts — so one driver copy per corpus
-    * is the same memory contract; the memo key fingerprints the events
-    * parquet (path, size, mtime, tail CRC) so a changed corpus retrains.
-    *
-    * 100 TB fence: a 10⁸-item catalog's lists do NOT belong in driver
-    * memory (they belong in storage — the [[ArtifactJobs]] parquet
-    * contract); above [[SimMemoMaxRows]] the memo declines (null mapping
-    * → recompute distributed every call) instead of OOMing the driver.
-    * The count that decides rides the cached build it would collect.
+    * pair join four times. The model is the catalog×[[SIM_TOP_K]] list
+    * frame — the exact rows the scoring side already broadcasts — served
+    * from [[graft.model.ModelMemo]] (which also declines lists too big for
+    * driver memory; those belong in the [[ArtifactJobs]] parquet contract).
     */
-  private val simListsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
-  // Hit/miss telemetry for the CF list memos, surfaced in graft.Bench's
-  // tail line as driver-side proof that timed runs serve from the memo
-  // (BENCHGAP r12: rec_eval read 4.5x local with a quiet canary — the
-  // open question was whether the driver's runs 2-3 actually hit).
-  private val simMemoHit = new java.util.concurrent.atomic.AtomicLong
-  private val simMemoMiss = new java.util.concurrent.atomic.AtomicLong
-  def simMemoStats: String = s"${simMemoHit.get}/${simMemoMiss.get}"
-
-  private[jobs] val SimMemoMaxRows = 1000000L
-
-  private[jobs] def simLists(spark: SparkSession, sfDir: String): DataFrame =
-    memoizedLists(spark, graft.io.Fingerprint.ofRefreshing(sfDir, "events"),
+  def itemSimilarity(spark: SparkSession, sfDir: String): DataFrame =
+    memoizedLists(spark, sfDir, "",
       itemSimilarityCore(interactionsOf(spark, sfDir)))
 
-  /** Spec hook: [[simLists]] for the memo-drift spec (a rewritten events
-    * parquet must retrain, never serve the stale CF lists).
+  /** The CF list models trained from `sfDir`'s events: the full-log lists
+    * (tag ""), the eval prefix (":prefix") and the incremental and erasure
+    * twins (":sim_inc", ":cf_erase") — a distinct tag per training input.
     */
-  private[graft] def simListsForSpec(spark: SparkSession,
-      sfDir: String): DataFrame = simLists(spark, sfDir)
+  private[jobs] def memoizedLists(spark: SparkSession, sfDir: String,
+      tag: String, build: => DataFrame): DataFrame =
+    graft.model.ModelMemo.shared.frame(spark, "cf_lists", sfDir, "events",
+      tag)(build)
 
-  /** The memo mechanism shared by the full-log and eval-prefix list
-    * models: catalog×K rows collected once per (corpus, tag) key; above
-    * [[SimMemoMaxRows]] it declines with a sentinel and serves the built
-    * frame distributed (the 100 TB fence — big models belong in the
-    * [[ArtifactJobs]] parquet contract, not driver memory).
+  /** "hits/misses" of the CF list memo, surfaced in graft.Bench's tail line
+    * as driver-side proof that timed runs serve from the memo.
     */
-  private[jobs] def memoizedLists(spark: SparkSession, key: String,
-      build: => DataFrame): DataFrame = {
-    import spark.implicits._
-    def rebuild(flat: Array[Long]): DataFrame =
-      flat.grouped(4).map(g => (g(0), g(1), g(2), g(3))).toSeq
-        .toDF("item_id", "rank", "partner", "jacc_ppm")
-    val hit = simListsMemo.get(key)
-    if (hit != null) {
-      simMemoHit.incrementAndGet()
-      if (hit.length == 0) build
-      else rebuild(hit)
-    } else {
-      simMemoMiss.incrementAndGet()
-      val built = build.cache()
-      if (built.count() > SimMemoMaxRows) {
-        // declined: record a zero-length sentinel so later calls skip the
-        // count probe too, and serve THIS call the frame already built
-        simListsMemo.putIfAbsent(key, Array.emptyLongArray)
-        built
-      } else {
-        val rows = built.collect()
-        built.unpersist()
-        val a = new Array[Long](rows.length * 4)
-        var j = 0
-        rows.foreach { r =>
-          a(j) = r.getLong(0); a(j + 1) = r.getLong(1)
-          a(j + 2) = r.getLong(2); a(j + 3) = r.getLong(3)
-          j += 4
-        }
-        simListsMemo.putIfAbsent(key, a)
-        rebuild(a)
-      }
-    }
-  }
+  def simMemoStats: String = graft.model.ModelMemo.shared.stats.get("cf_lists")
+    .fold("0/0")(s => s"${s.hits}/${s.misses}")
 
   /** The full distinct (u, i) interaction frame — the CF stack's input,
     * shared by the similarity/recs/eval queries.
@@ -1408,12 +1352,12 @@ object AnalyticsJobs {
     */
   def itemRecs(spark: SparkSession, sfDir: String): DataFrame =
     itemRecsServe(keptOf(interactionsOf(spark, sfDir)),
-      simLists(spark, sfDir))
+      itemSimilarity(spark, sfDir))
 
   /** The serving core over an already-distinct (u, i) frame — exposed so
     * the temporal-split eval ([[recEval]]) can train on a log prefix and
     * [[ArtifactJobs]] on a maintained interaction set (neither shares the
-    * full-log [[simLists]] memo — different training inputs).
+    * full-log [[itemSimilarity]] memo — different training inputs).
     */
   private[jobs] def itemRecsCore(ui: DataFrame): DataFrame = {
     // ONE capped frame serves the similarity build, the history join,
@@ -1521,8 +1465,7 @@ object AnalyticsJobs {
     // re-paid its training pass every bench run (6.1 s, the top r12
     // local sink) while serving identical lists
     val hist = keptOf(prefix)
-    val lists = memoizedLists(spark,
-      graft.io.Fingerprint.ofRefreshing(sfDir, "events") + ":prefix",
+    val lists = memoizedLists(spark, sfDir, ":prefix",
       itemSimilarityOverKept(hist))
     val recs = itemRecsServe(hist, lists)
     val perUser = recs

@@ -199,7 +199,7 @@ object ArtifactJobs {
   def semanticDedupFromArtifact(spark: SparkSession, sfDir: String): DataFrame = {
     // slim handoff (the semanticDedup discipline): vector cache +
     // pair-stage internals release at construction end; trainedCents
-    // serves a local C-row frame (computeIfAbsent memo), so persist's
+    // serves a local C-row frame (ModelMemo), so persist's
     // by-name model constructs no training plan on a memo hit
     val scope = graft.ops.CacheScope()
     try {
@@ -388,14 +388,14 @@ object ArtifactJobs {
       .filter(col("i").isNotNull)
     val storedUi = storedEdges.filter(col("src") % 2 === 0)
       .select(expr("src div 2").as("u"), expr("dst div 2").as("i"))
-    // Content-memoized like the full-log simLists (r8 contract): the
+    // Content-memoized like the full-log itemSimilarity lists: the
     // nightly maintenance job computes the merged-set lists ONCE per
     // corpus state and serving reads the model; a distinct memo tag
     // keeps the stored-artifact + delta lineage exercised on the miss
     // (the oracle hash-gates that computation), and repeat serves are
     // catalog×K lookups — the consistent ~3.2 s in every full bench run
     // was the quadratic pair join re-run per timed pass.
-    AnalyticsJobs.memoizedLists(spark, s"${eventsFp(sfDir)}:sim_inc",
+    AnalyticsJobs.memoizedLists(spark, sfDir, ":sim_inc",
       AnalyticsJobs.itemSimilarityCore(storedUi.unionAll(deltaUi).distinct()))
   }
 
@@ -715,7 +715,7 @@ object ArtifactJobs {
     // item_similarity_incremental precedent): the distinct ":cf_erase"
     // tag keeps the decrement lineage executing and hash-gating on the
     // miss; repeat serves are catalog×K lookups
-    memoizedLists(spark, fp + ":cf_erase", {
+    memoizedLists(spark, sfDir, ":cf_erase", {
       val scope = graft.ops.CacheScope()
       try {
         lazy val kept = scope.cache(keptUncached(interactionsOf(spark, sfDir)))

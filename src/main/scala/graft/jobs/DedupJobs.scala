@@ -480,7 +480,8 @@ object DedupJobs {
     import org.apache.spark.sql.expressions.Window
     val key = substring(
       regexp_replace(lower(trim(col("text"))), "\\s+", " "), 1, SNM_KEY_LEN)
-    val base = Tables.documents(spark, sfDir)
+    val docs = Tables.documents(spark, sfDir) // one load: each runs a schema job
+    val base = docs
       .select(col("doc_id"), col("lang").as("block"), col("text"),
         key.as("skey"))
       .repartitionByRange(col("block"), col("skey"), col("doc_id"))
@@ -513,8 +514,7 @@ object DedupJobs {
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
     // exact verify on the linear candidate set, shared-gram machinery
-    val g = Dedup.explodedGrams(
-        Tables.documents(spark, sfDir).select(col("doc_id"), col("text")),
+    val g = Dedup.explodedGrams(docs.select(col("doc_id"), col("text")),
         JACCARD_N, distinct = false)
       .select(col("doc_id"), Dedup.md5Long(col("gram")).as("gh"))
       .distinct().cache()
@@ -652,16 +652,15 @@ object DedupJobs {
     // caches through the components pass was the r13 driver-memory
     // footprint (10.8 s driver vs 4.0 s local, the rounds-4/5 playbook).
     val scope = graft.ops.CacheScope()
+    val docs = Tables.documents(spark, sfDir) // one load: each runs a schema job
     val text = new graft.ops.DedupPipeline(
-        Tables.documents(spark, sfDir).select(col("doc_id"), col("text")),
-        K, BANDS, JACCARD_N, scope)
+        docs.select(col("doc_id"), col("text")), K, BANDS, JACCARD_N, scope)
       .candidates.select(col("doc_a"), col("doc_b"))
-    val img = MultimodalJobs.pipelineScoped(spark, sfDir, scope).pairs
+    val img = MultimodalJobs.pipelineScoped(spark, docs, scope).pairs
       .select(col("doc_a"), col("doc_b"))
     val edges = text.unionAll(img).eagerCheckpoint()
     scope.close()
-    graft.ops.Dedup.connectedComponents(
-      Tables.documents(spark, sfDir).select(col("doc_id")), edges)
+    graft.ops.Dedup.connectedComponents(docs.select(col("doc_id")), edges)
   }
 
   /** Oracle: the minhash candidate chain + the image near-dup pairs
@@ -1885,56 +1884,18 @@ object DedupJobs {
     * precision prices the verify pass that follows candidates.
     */
   /** The exact-Jaccard truth pair set BOTH eval queries score against,
-    * content-memoized per corpus (the simLists/rocchioModel contract):
+    * content-memoized per corpus in [[graft.model.ModelMemo]]:
     * `dedup_eval` and `simhash_eval` each need the identical
     * [[ngramJaccard]] output, and without a memo the registry pays the
     * pair join twice per bench pass (~2.5-3 s each at sf0.1, the evals'
     * dominant cost — BenchOne r12). The memo holds (doc_a, doc_b) only —
-    * output-sized, the near-dup pair mass, NOT corpus-sized — and
-    * declines above [[TruthMemoMaxPairs]] (a dup-heavy 100 TB corpus's
-    * pair set belongs in storage, not driver memory), serving the built
-    * frame uncached instead. The `ngram_jaccard` gate itself stays
-    * UNmemoized: its bench median is how the pair-join machinery's cost
-    * is tracked.
+    * output-sized, the near-dup pair mass, NOT corpus-sized. The
+    * `ngram_jaccard` gate itself stays UNmemoized: its bench median is how
+    * the pair-join machinery's cost is tracked.
     */
-  private val truthMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
-  private[jobs] val TruthMemoMaxPairs = 1000000L
-
-  private def jaccardTruthPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    def rebuild(flat: Array[Long]): DataFrame =
-      flat.grouped(2).map(g => (g(0), g(1))).toSeq.toDF("doc_a", "doc_b")
-    val key = graft.io.Fingerprint.ofRefreshing(sfDir, "documents")
-    val hit = truthMemo.get(key)
-    if (hit != null) {
-      if (hit.length == 0)
-        ngramJaccard(spark, sfDir).select(col("doc_a"), col("doc_b"))
-      else rebuild(hit)
-    } else {
-      val built = ngramJaccard(spark, sfDir)
-        .select(col("doc_a"), col("doc_b")).cache()
-      if (built.count() > TruthMemoMaxPairs) {
-        truthMemo.putIfAbsent(key, Array.emptyLongArray)
-        built
-      } else {
-        val rows = built.collect()
-        built.unpersist()
-        val a = new Array[Long](rows.length * 2)
-        var j = 0
-        rows.foreach { r => a(j) = r.getLong(0); a(j + 1) = r.getLong(1); j += 2 }
-        truthMemo.putIfAbsent(key, a)
-        rebuild(a)
-      }
-    }
-  }
-
-  /** Spec hook: [[jaccardTruthPairs]] for the memo-drift spec (a
-    * rewritten documents parquet must recompute the truth set).
-    */
-  private[graft] def jaccardTruthForSpec(spark: SparkSession,
-      sfDir: String): DataFrame = jaccardTruthPairs(spark, sfDir)
+  private[graft] def jaccardTruthPairs(spark: SparkSession, sfDir: String): DataFrame =
+    graft.model.ModelMemo.shared.frame(spark, "truth_pairs", sfDir,
+      "documents")(ngramJaccard(spark, sfDir).select(col("doc_a"), col("doc_b")))
 
   def dedupEval(spark: SparkSession, sfDir: String): DataFrame = {
     val truth = jaccardTruthPairs(spark, sfDir)

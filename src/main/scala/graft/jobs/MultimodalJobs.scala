@@ -207,10 +207,9 @@ object MultimodalJobs {
     * consumers (cross_modal_clusters) that extract one slim frame and
     * release the decode/fingerprint caches before downstream work.
     */
-  def pipelineScoped(spark: SparkSession, sfDir: String,
+  def pipelineScoped(spark: SparkSession, docs: DataFrame,
       scope: graft.ops.CacheScope): graft.ops.ImagePipeline =
-    graft.ops.ImagePipeline(spark, Tables.documents(spark, sfDir),
-      NEARDUP_MAX_HAMMING, scope)
+    graft.ops.ImagePipeline(spark, docs, NEARDUP_MAX_HAMMING, scope)
 
   /** The dHash pipeline restated for the oracles: pixel mix (two
     * multiplicative steps mod 2^31−1 with xor-shifts between — every
@@ -314,7 +313,7 @@ object MultimodalJobs {
     // driver-memory gap on this query).
     val scope = graft.ops.CacheScope()
     val (ids, edges) = try {
-      val p = pipelineScoped(spark, sfDir, scope)
+      val p = pipelineScoped(spark, Tables.documents(spark, sfDir), scope)
       (p.scan.select(col("doc_id")).eagerCheckpoint(),
         p.pairs.select(col("doc_a"), col("doc_b")).eagerCheckpoint())
     } finally scope.close()

@@ -40,7 +40,7 @@ object SimilarityJobs {
   private val probeListSql: String =
     (0 +: (0 until PLANES).map(1 << _)).mkString("[", ", ", "]")
 
-  private[jobs] def vectors(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def vectors(spark: SparkSession, sfDir: String): DataFrame =
     Similarity.withNorm(Tables.embeddings(spark, sfDir),
       col("vec_id"), col("embedding"))
 
@@ -182,57 +182,28 @@ object SimilarityJobs {
     * (bounded, like connectedComponents' convergence count), not a
     * corpus-scale driver action.
     *
-    * Content-memoized per JVM (the `rocchioModel`/`memoizedLists` r8
-    * contract): SIX registry queries (`ann_ivf_trained`,
-    * `embedding_clusters`, `semantic_dedup`, `cluster_purity`,
-    * `embedding_outliers`, plus the artifact twins' training leg) train
-    * the IDENTICAL C centroids from the identical embeddings parquet —
-    * one C-row driver copy per corpus is the same memory contract as the
-    * broadcast every consumer already ships. `v` is by-name, so a memo
-    * hit never constructs the training plan; the miss still trains
-    * distributed and every consumer's oracle hash-gates the result.
+    * Content-memoized in [[graft.model.ModelMemo]]: SIX registry queries
+    * (`ann_ivf_trained`, `embedding_clusters`, `semantic_dedup`,
+    * `cluster_purity`, `embedding_outliers`, plus the artifact twins'
+    * training leg) train the IDENTICAL C centroids from the identical
+    * embeddings parquet. `v` is by-name, so a memo hit never constructs
+    * the training plan; the miss still trains distributed and every
+    * consumer's oracle hash-gates the result.
+    *
+    * A model trained on a different vector subset of the same corpus
+    * takes a DISTINCT memo `tag` (`ann_index_drift`'s established-only
+    * model uses ":est"), so each training set's miss lineage executes and
+    * hash-gates.
     */
-  private val centsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.types.StructType,
-      Array[org.apache.spark.sql.Row])]()
-
-  /** Spec hook: [[trainedCents]] over the standard vector frame of a
-    * fixture dir (exercises the memo path end to end).
-    */
-  private[graft] def trainedCentsForSpec(spark: SparkSession,
-      sfDir: String): DataFrame =
-    trainedCents(spark, sfDir, vectors(spark, sfDir))
-
-  private[jobs] def trainedCents(spark: SparkSession, sfDir: String,
-      v: => DataFrame): DataFrame = trainedCentsTagged(spark, sfDir, "", v)
-
-  /** [[trainedCents]] with a DISTINCT memo tag for models trained on a
-    * different vector subset of the same corpus (the `:sim_inc`
-    * discipline — the tag keeps the miss lineage executing and
-    * hash-gating per training set; `ann_index_drift`'s established-only
-    * model uses ":est").
-    */
-  private[jobs] def trainedCentsTagged(spark: SparkSession, sfDir: String,
-      tag: String, v: => DataFrame): DataFrame = {
-    val key = graft.io.Fingerprint.ofRefreshing(sfDir, "embeddings") + tag
-    // computeIfAbsent, not get-then-putIfAbsent: two concurrent first
-    // callers for the same corpus must not each run the full distributed
-    // training (deterministic result, so the race was wasted work, not a
-    // wrong answer). The C-row local frame is what every caller gets —
-    // memo hit and miss serve bit-identical rows (six consumers
-    // hash-green at both SFs in one JVM).
-    val hit = centsMemo.computeIfAbsent(key, _ => {
-      val training = graft.ops.CacheScope()
-      try {
-        val c = Similarity
-          .kmeansCentroids(v, IVF_CENTROIDS, KM_ITERS, training).cache()
-        val rows = (c.schema, c.collect())
-        c.unpersist()
-        rows
-      } finally training.close()
-    })
-    spark.createDataFrame(java.util.Arrays.asList(hit._2: _*), hit._1)
-  }
+  private[graft] def trainedCents(spark: SparkSession, sfDir: String,
+      v: => DataFrame, tag: String = ""): DataFrame =
+    // the memo collects the C rows before the training caches close; the
+    // local frame it serves on hit and miss alike needs none of them
+    graft.ops.CacheScope.scoped { training =>
+      graft.model.ModelMemo.shared.frame(spark, "centroids", sfDir,
+        "embeddings", tag)(
+        Similarity.kmeansCentroids(v, IVF_CENTROIDS, KM_ITERS, training))
+    }
 
   /** IVF over TRAINED centroids: `KM_ITERS` rounds of Lloyd's k-means from
     * the deterministic seeds, then the identical probe pipeline. The
@@ -436,8 +407,8 @@ object SimilarityJobs {
     val scope = graft.ops.CacheScope()
     try {
       val v = scope.cache(vectors(spark, sfDir))
-      val cents = trainedCentsTagged(spark, sfDir, ":est",
-        v.filter(col("vec_id") % 5 =!= 0))
+      val cents = trainedCents(spark, sfDir,
+        v.filter(col("vec_id") % 5 =!= 0), ":est")
       driftAudit(v, cents).eagerCheckpoint()
     } finally scope.close()
   }
@@ -527,8 +498,8 @@ object SimilarityJobs {
     */
   private def retrainedServedCents(spark: SparkSession, sfDir: String,
       v: DataFrame): DataFrame = {
-    val estCents = trainedCentsTagged(spark, sfDir, ":est",
-      v.filter(col("vec_id") % 5 =!= 0))
+    val estCents = trainedCents(spark, sfDir,
+      v.filter(col("vec_id") % 5 =!= 0), ":est")
     if (retrainVote(driftAudit(v, estCents))) trainedCents(spark, sfDir, v)
     else estCents
   }

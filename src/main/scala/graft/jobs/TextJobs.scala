@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
+import graft.model.ModelMemo
 import graft.ops.TextAnalysis
 import graft.ops.Eager.EagerOps
 
@@ -211,14 +212,7 @@ object TextJobs {
         // count desc, left asc, right asc
         val ((l, rr), c) = counts.minBy { case ((a, b), v) => (-v, a, b) }
         vocab = vocab.map { case (w, syms, c0) =>
-          val merged = Array.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == rr) {
-              merged += l + rr; i += 2 // greedy left-to-right, non-overlapping
-            } else { merged += syms(i); i += 1 }
-          }
-          (w, merged.result(), c0)
+          (w, fusePair(syms, l, rr, l + rr), c0)
         }
         merges += ((r.toLong, l, rr, c))
         r += 1
@@ -237,42 +231,35 @@ object TextJobs {
       .select(explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
 
-  /** Driver-held trained-BPE memo, keyed by the corpus fingerprint (the
-    * [[rocchioModel]] discipline): (merge table, encoder table). Training
-    * still runs as ONE distributed word count + a single-task trainer;
-    * only its OUTPUTS are collected — merge-table- and vocab-sized, the
-    * same memory contract as the broadcast every scoring join already
-    * ships. Registry consumers (`bpe_merges`, `bpe_encode`,
-    * `tokenizer_compare`, `bpe_greedy`, the artifact twins) share ONE
-    * training pass per corpus per JVM instead of retraining each.
-    */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Long, String, String, Long)], Seq[(String, Long)])]()
-
-  /** `tag`/`docFilter` select a sub-corpus training run (the
+  /** The trained BPE model (merge table, encoder table), held in
+    * [[graft.model.ModelMemo]]. Training still runs as ONE distributed
+    * word count + a single-task trainer; only its OUTPUTS are collected —
+    * merge-table- and vocab-sized, the same memory contract as the
+    * broadcast every scoring join already ships. Registry consumers
+    * (`bpe_merges`, `bpe_encode`, `tokenizer_compare`, `bpe_greedy`, the
+    * artifact twins) share ONE training pass per corpus per JVM.
+    *
+    * `tag`/`docFilter` select a sub-corpus training run (the
     * [[tokenizerEval]] train split) under its own memo key; the defaults
     * are the full-corpus model every existing consumer shares.
     */
   private[jobs] def bpeModel(spark: SparkSession, sfDir: String,
       tag: String = "", docFilter: Column = lit(true))
       : (Seq[(Long, String, String, Long)], Seq[(String, Long)]) =
-    bpeMemo.computeIfAbsent(docsFingerprint(sfDir) + tag, _ => {
+    ModelMemo.shared.value("bpe", sfDir, "documents", tag) {
       import spark.implicits._
-      // one wire row for both outputs: kind 0 = merge, kind 1 = encoder
-      val rows = wordCounts(spark, sfDir, docFilter).as[(String, Long)]
+      // the whole model is the single task's one output row (none when an
+      // empty corpus leaves no partition to run)
+      wordCounts(spark, sfDir, docFilter).as[(String, Long)]
         .coalesce(1).mapPartitions { it =>
           val vocab0 = it.map { case (w, c) =>
             (w, w.toCharArray.map(_.toString): Array[String], c)
           }.toArray
           val (merges, vocab) = trainBpeRounds(vocab0, BPE_ROUNDS)
-          merges.iterator.map { case (r, l, rr, c) => (0, r, l, rr, c) } ++
-            vocab.iterator.map { case (w, syms, _) =>
-              (1, 0L, w, "", syms.length.toLong)
-            }
-        }.collect()
-      (rows.toSeq.collect { case (0, r, l, rr, c) => (r, l, rr, c) },
-        rows.toSeq.collect { case (1, _, w, _, n) => (w, n) })
-    })
+          Iterator.single((merges: Seq[(Long, String, String, Long)],
+            vocab.toSeq.map { case (w, syms, _) => (w, syms.length.toLong) }))
+        }.collect().headOption.getOrElse((Nil, Nil))
+    }
 
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -353,18 +340,24 @@ object TextJobs {
       w: String, merges: Seq[(String, String)]): Array[String] = {
     var syms: Array[String] = w.toCharArray.map(_.toString)
     merges.foreach { case (l, r) =>
-      if (syms.length > 1) {
-        val out = Array.newBuilder[String]
-        var i = 0
-        while (i < syms.length) {
-          if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == r) {
-            out += l + r; i += 2
-          } else { out += syms(i); i += 1 }
-        }
-        syms = out.result()
-      }
+      if (syms.length > 1) syms = fusePair(syms, l, r, l + r)
     }
     syms
+  }
+
+  /** `syms` with each adjacent (l, r) fused into `fused`: one greedy
+    * left-to-right, non-overlapping pass (the BPE and WordPiece merge).
+    */
+  private def fusePair(syms: Array[String], l: String, r: String,
+      fused: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == r) {
+        out += fused; i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.result()
   }
 
   /** The scoring half of [[bpeEncode]]: per-doc token accounting against
@@ -550,14 +543,7 @@ object TextJobs {
         }
         val mergedSym = l + rr.stripPrefix("##")
         vocab = vocab.map { case (w, syms, c0) =>
-          val merged = Array.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == l && syms(i + 1) == rr) {
-              merged += mergedSym; i += 2 // greedy left-to-right
-            } else { merged += syms(i); i += 1 }
-          }
-          (w, merged.result(), c0)
+          (w, fusePair(syms, l, rr, mergedSym), c0)
         }
         merges += ((r.toLong, l, rr, pc, score(l, rr, pc)))
         r += 1
@@ -575,32 +561,24 @@ object TextJobs {
     * (word, cnt) table and run inside one task (coalesce(1), the round-6
     * rule — k distributed rounds would be pure exchange scheduling).
     */
-  /** Driver-held trained-WordPiece memo — the [[bpeModel]] contract:
+  /** The trained WordPiece model — the [[bpeModel]] contract:
     * (merge table, encoder table), trained once per corpus per JVM by the
     * same distributed-count + single-task pass, collected at merge-table/
     * vocab size.
     */
-  private val wpMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Long, String, String, Long, Long)], Seq[(String, Long)])]()
-
   private[jobs] def wordpieceModel(spark: SparkSession, sfDir: String,
       tag: String = "", docFilter: Column = lit(true))
       : (Seq[(Long, String, String, Long, Long)], Seq[(String, Long)]) =
-    wpMemo.computeIfAbsent(docsFingerprint(sfDir) + tag, _ => {
+    ModelMemo.shared.value("wordpiece", sfDir, "documents", tag) {
       import spark.implicits._
-      val rows = wordCounts(spark, sfDir, docFilter).as[(String, Long)]
+      wordCounts(spark, sfDir, docFilter).as[(String, Long)]
         .coalesce(1).mapPartitions { it =>
           val vocab0 = it.map { case (w, c) => (w, wpInitSyms(w), c) }.toArray
           val (merges, vocab) = trainWordPieceRounds(vocab0, WP_ROUNDS)
-          merges.iterator.map { case (r, l, rr, pc, sc) =>
-            (0, r, l, rr, pc, sc)
-          } ++ vocab.iterator.map { case (w, syms, _) =>
-            (1, 0L, w, "", syms.length.toLong, 0L)
-          }
-        }.collect()
-      (rows.toSeq.collect { case (0, r, l, rr, pc, sc) => (r, l, rr, pc, sc) },
-        rows.toSeq.collect { case (1, _, w, _, n, _) => (w, n) })
-    })
+          Iterator.single((merges: Seq[(Long, String, String, Long, Long)],
+            vocab.toSeq.map { case (w, syms, _) => (w, syms.length.toLong) }))
+        }.collect().headOption.getOrElse((Nil, Nil))
+    }
 
   def wordpieceMerges(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -946,15 +924,11 @@ object TextJobs {
   /** The trained unigram vocabulary: (piece, usage) — final EM-round
     * Viterbi usage counts, top [[UNI_TOP_V]] by (usage desc, piece asc).
     */
-  /** Driver-held trained-unigram memo — the [[bpeModel]] contract:
-    * (top-V vocabulary, encoder table), one training pass per corpus per
-    * JVM shared by `unigram_vocab`/`unigram_encode*`/`tokenizer_compare`
-    * and the artifact twin.
-    */
-  private val uniMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Long)], Seq[(String, Long)], Seq[(String, Long)])]()
-
-  /** (top-V vocab, encoder table, FULL final scores). The third element
+  /** The trained unigram model — the [[bpeModel]] contract: one training
+    * pass per corpus per JVM shared by `unigram_vocab`/`unigram_encode*`/
+    * `tokenizer_compare` and the artifact twin.
+    *
+    * (top-V vocab, encoder table, FULL final scores). The third element
     * is the complete `v2` piece-score map — what [[viterbi]] actually
     * segments under; [[tokenizerEval]] serves HELD-OUT words, which
     * the (train-word → count) encoder table cannot answer.
@@ -962,24 +936,19 @@ object TextJobs {
   private[jobs] def unigramModel(spark: SparkSession, sfDir: String,
       tag: String = "", docFilter: Column = lit(true))
       : (Seq[(String, Long)], Seq[(String, Long)], Seq[(String, Long)]) =
-    uniMemo.computeIfAbsent(docsFingerprint(sfDir) + tag, _ => {
+    ModelMemo.shared.value("unigram", sfDir, "documents", tag) {
       import spark.implicits._
-      val rows = wordCounts(spark, sfDir, docFilter).as[(String, Long)]
+      wordCounts(spark, sfDir, docFilter).as[(String, Long)]
         .coalesce(1).mapPartitions { it =>
           val words = uniWords(it.toArray)
           val scores = trainUnigramScores(words)
           val topV = scores.toSeq
             .sortBy { case (p, u) => (-u, p) }.take(UNI_TOP_V)
-          topV.iterator.map { case (p, u) => (0, p, u) } ++
-            words.iterator.map { case (w, _) =>
-              (1, w, viterbi(w, scores).length.toLong)
-            } ++
-            scores.iterator.map { case (p, s) => (2, p, s) }
-        }.collect()
-      (rows.toSeq.collect { case (0, p, u) => (p, u) },
-        rows.toSeq.collect { case (1, w, n) => (w, n) },
-        rows.toSeq.collect { case (2, p, s) => (p, s) })
-    })
+          Iterator.single((topV, words.toSeq.map { case (w, _) =>
+            (w, viterbi(w, scores).length.toLong)
+          }, scores.toSeq))
+        }.collect().headOption.getOrElse((Nil, Nil, Nil))
+    }
 
   def unigramVocab(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -2561,25 +2530,17 @@ object TextJobs {
     * (b, w) rows + one double; scoring already ships it to every executor
     * as a broadcast), so holding one driver-side copy per corpus is the
     * same memory contract, and rebuilding the frames from the memo is one
-    * `createDataFrame` on model-sized data — no corpus work. The memo key
-    * fingerprints the documents parquet files (path, size, mtime), so a
-    * changed corpus — other SF dirs, spec temp dirs, rewritten fixtures —
-    * retrains instead of reusing a stale model.
+    * `createDataFrame` on model-sized data — no corpus work
+    * ([[graft.model.ModelMemo]]).
     */
-  private val rocchioMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[(Long, Long)], Double)]()
-
-  private def docsFingerprint(sfDir: String): String =
-    graft.io.Fingerprint.ofRefreshing(sfDir, "documents")
-
   private[jobs] def rocchioModel(
       spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val (bw, theta) = rocchioMemo.computeIfAbsent(docsFingerprint(sfDir), _ => {
+    val (bw, theta) = ModelMemo.shared.value("rocchio", sfDir, "documents") {
       val (weights, thetaDf) = rocchioTrain(spark, sfDir)
       val w = weights.select(col("b"), col("w")).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       (w, thetaDf.collect()(0).getDouble(0))
-    })
+    }
     import spark.implicits._
     (bw.toSeq.toDF("b", "w"), Seq(theta).toDF("theta"))
   }

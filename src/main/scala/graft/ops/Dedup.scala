@@ -416,10 +416,7 @@ object Dedup {
       // graph before the default came down to 5 (2^5 subtrees, trivial).
       val next = if ((i + 1) % checkpointEvery == 0) next0.localCheckpoint()
                  else next0.cache()
-      val t0 = System.nanoTime()
       val changed = next.filter(col("chg")).count() // materializes the cache
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        println(f"[cc] round $i: changed=$changed ${(System.nanoTime() - t0) / 1e9}%.3f s")
       prevCached.unpersist()
       prevCached = next
       labels = next.select(col("doc_id"), col("cluster"))

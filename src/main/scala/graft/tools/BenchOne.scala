@@ -1,10 +1,15 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+
 /** Per-query bench harness: `runMain graft.tools.BenchOne <query> [runs]`
   * times one registered query with the same session and cache-cleared
   * discipline as [[graft.Bench]] and prints each run plus the median — the
   * tool for chasing a single bench line without paying for the whole
-  * registry. `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` as in Bench.
+  * registry. `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` as in Bench. Each
+  * run line also counts the Spark jobs it started, its codegen compiles,
+  * and its [[graft.model.ModelMemo]] hits/misses.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -19,11 +24,27 @@ object BenchOne {
     Harness.warm(spark)
     val times = (1 to runs).map { i =>
       var n = 0L
+      val before = counters(spark)
       val dt = Harness.timed(spark) { n = fn(spark, sfDir).count() }
-      println(f"[benchone] run $i: $dt%.3f s ($n rows)")
+      val Seq(jobs, compiles, hits, misses) =
+        counters(spark).zip(before).map { case (a, b) => a - b }
+      println(f"[benchone] run $i: $dt%.3f s ($n rows) jobs=${jobs - 1}" +
+        s" compiles=$compiles memo_hit_miss=$hits/$misses")
       dt
     }
     println(f"[benchone] $name median: ${Harness.median(times)}%.3f s")
     spark.stop()
+  }
+
+  /** (jobs, codegen compiles, memo hits, memo misses) so far. Spark numbers
+    * jobs in submission order, so a one-task marker job's id counts the
+    * jobs before it (a pair of calls brackets its own marker too).
+    */
+  private def counters(spark: SparkSession): Seq[Long] = {
+    val mark = spark.sparkContext.parallelize(Seq(0), 1).countAsync()
+    mark.get()
+    val memo = graft.model.ModelMemo.shared.stats.values
+    Seq(mark.jobIds.head, CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      memo.map(_.hits).sum, memo.map(_.misses).sum)
   }
 }

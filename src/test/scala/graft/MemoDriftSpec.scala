@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Drift guard for the JVM-level content memos (trainedCents, the CF
-  * simLists, the jaccard truth pairs): the memo key is
-  * [[graft.io.Fingerprint]] of the backing parquet, so REWRITING that
+/** Drift guard for every model in [[graft.model.ModelMemo]] (centroids,
+  * CF lists, jaccard truth pairs, the bpe / wordpiece / unigram
+  * tokenizers, rocchio): each entry remembers the
+  * [[graft.io.Fingerprint]] of its backing parquet, so REWRITING that
   * parquet in place — same path, new content, the regenerated-fixture /
   * daily-relanded-table case — must retrain/recompute, never serve the
   * stale model. Each test copies a fixture table into a temp dir, serves
@@ -50,12 +51,13 @@ class MemoDriftSpec extends SparkSpec {
 
   test("trainedCents retrains when the embeddings parquet is rewritten in place") {
     driftCheck("embeddings", dir =>
-      rows(graft.jobs.SimilarityJobs.trainedCentsForSpec(spark, dir)))
+      rows(graft.jobs.SimilarityJobs.trainedCents(spark, dir,
+        graft.jobs.SimilarityJobs.vectors(spark, dir))))
   }
 
   test("CF simLists recompute when the events parquet is rewritten in place") {
     driftCheck("events", dir =>
-      rows(graft.jobs.AnalyticsJobs.simListsForSpec(spark, dir)))
+      rows(graft.jobs.AnalyticsJobs.itemSimilarity(spark, dir)))
   }
 
   test("cf_erasure (memoized output + persisted count artifacts) recomputes on an in-place events rewrite") {
@@ -68,6 +70,26 @@ class MemoDriftSpec extends SparkSpec {
 
   test("jaccard truth pairs recompute when the documents parquet is rewritten in place") {
     driftCheck("documents", dir =>
-      rows(graft.jobs.DedupJobs.jaccardTruthForSpec(spark, dir)))
+      rows(graft.jobs.DedupJobs.jaccardTruthPairs(spark, dir)))
+  }
+
+  test("bpe merges retrain when the documents parquet is rewritten in place") {
+    driftCheck("documents", dir =>
+      rows(graft.jobs.TextJobs.bpeMerges(spark, dir)))
+  }
+
+  test("wordpiece merges retrain when the documents parquet is rewritten in place") {
+    driftCheck("documents", dir =>
+      rows(graft.jobs.TextJobs.wordpieceMerges(spark, dir)))
+  }
+
+  test("unigram vocab retrains when the documents parquet is rewritten in place") {
+    driftCheck("documents", dir =>
+      rows(graft.jobs.TextJobs.unigramVocab(spark, dir)))
+  }
+
+  test("rocchio classifier retrains when the documents parquet is rewritten in place") {
+    driftCheck("documents", dir =>
+      rows(graft.jobs.TextJobs.qualityClassifierTrained(spark, dir)))
   }
 }

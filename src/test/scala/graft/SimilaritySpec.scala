@@ -21,8 +21,8 @@ class SimilaritySpec extends SparkSpec {
     // the trainedCents memo keys on the embeddings parquet fingerprint —
     // two corpora served from ONE JVM must never share a model, and a
     // repeat call on the same corpus must serve the identical rows
-    def rows(sfDir: String) = graft.jobs.SimilarityJobs
-      .trainedCentsForSpec(spark, sfDir)
+    import graft.jobs.SimilarityJobs.{trainedCents, vectors}
+    def rows(sfDir: String) = trainedCents(spark, sfDir, vectors(spark, sfDir))
       .select($"cent_id", $"cnorm").as[(Long, Double)].collect().toSet
     val a1 = rows(sf("sf0.001"))
     val b = rows(sf("sf0.01"))
