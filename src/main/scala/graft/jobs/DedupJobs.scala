@@ -343,28 +343,16 @@ object DedupJobs {
     // its corpus-sized distinct-gram cache unmanaged for the JVM
     // lifetime — scope it, checkpoint the pair output, release
     val scope = graft.ops.CacheScope()
-    try prefixGateCore(spark, sfDir, scope).eagerCheckpoint()
-    finally scope.close()
+    try {
+      val d = Tables.documents(spark, sfDir)
+        .where(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("text"), col("lang").as("block"))
+      Dedup.jaccardPairsPrefix(d, JACCARD_N, PREFIX_TAU_NUM, PREFIX_TAU_DEN,
+          scope)
+        .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
+        .eagerCheckpoint()
+    } finally scope.close()
   }
-
-  private def prefixGateCore(spark: SparkSession, sfDir: String,
-      scope: graft.ops.CacheScope): DataFrame = {
-    val d = Tables.documents(spark, sfDir)
-      .where(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("text"), col("lang").as("block"))
-    Dedup.jaccardPairsPrefix(d, JACCARD_N, PREFIX_TAU_NUM, PREFIX_TAU_DEN,
-        scope)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-  }
-
-  /** Spec hook: the UN-checkpointed prefix-fence plan (what
-    * [[ngramJaccardPrefix]] materializes behind its slim handoff) — the
-    * PlanQualitySpec negative pins (no gram-string exchange, no
-    * cartesian) would false-pass on an `ExistingRDD` scan.
-    */
-  private[graft] def ngramJaccardPrefixPlanForSpec(spark: SparkSession,
-      sfDir: String): DataFrame =
-    prefixGateCore(spark, sfDir, graft.ops.CacheScope.unmanaged)
 
   /** Uncompressed exact-Jaccard semantics at `threshold` — the shared
     * oracle shape for both jaccard gates; the literal is emitted via

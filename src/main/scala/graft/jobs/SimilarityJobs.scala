@@ -744,17 +744,6 @@ object SimilarityJobs {
     * linear), only the quadratic pair stage is compressed. The oracle
     * states the UNcompressed semantics, so losslessness is hash-checked.
     */
-  /** Spec hook: the UN-checkpointed within-cell pair plan (what
-    * [[semanticDedup]] materializes eagerly behind its slim handoff) —
-    * the PlanQualitySpec cell-equi-join pin reads this shape.
-    */
-  private[graft] def semanticDedupPlanForSpec(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val v = vectors(spark, sfDir)
-    Similarity.withinCellPairs(v, trainedCents(spark, sfDir, v),
-      NEARDUP_THRESHOLD)
-  }
-
   def semanticDedup(spark: SparkSession, sfDir: String): DataFrame = {
     // slim handoff: the output is the pair-mass frame, so it materializes
     // eagerly and the vector cache + withinCellPairs' internal membership

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.model.ModelMemo
@@ -247,19 +247,28 @@ object TextJobs {
       tag: String = "", docFilter: Column = lit(true))
       : (Seq[(Long, String, String, Long)], Seq[(String, Long)]) =
     ModelMemo.shared.value("bpe", sfDir, "documents", tag) {
-      import spark.implicits._
-      // the whole model is the single task's one output row (none when an
-      // empty corpus leaves no partition to run)
-      wordCounts(spark, sfDir, docFilter).as[(String, Long)]
-        .coalesce(1).mapPartitions { it =>
-          val vocab0 = it.map { case (w, c) =>
-            (w, w.toCharArray.map(_.toString): Array[String], c)
-          }.toArray
-          val (merges, vocab) = trainBpeRounds(vocab0, BPE_ROUNDS)
-          Iterator.single((merges: Seq[(Long, String, String, Long)],
-            vocab.toSeq.map { case (w, syms, _) => (w, syms.length.toLong) }))
-        }.collect().headOption.getOrElse((Nil, Nil))
+      bpeTraining(spark, sfDir, docFilter).collect().headOption
+        .getOrElse((Nil, Nil))
     }
+
+  /** The pass [[bpeModel]] collects: one distributed word count, then the
+    * whole model as the single task's one output row (none when an empty
+    * corpus leaves no partition to run).
+    */
+  private[graft] def bpeTraining(spark: SparkSession, sfDir: String,
+      docFilter: Column = lit(true))
+      : Dataset[(Seq[(Long, String, String, Long)], Seq[(String, Long)])] = {
+    import spark.implicits._
+    wordCounts(spark, sfDir, docFilter).as[(String, Long)]
+      .coalesce(1).mapPartitions { it =>
+        val vocab0 = it.map { case (w, c) =>
+          (w, w.toCharArray.map(_.toString): Array[String], c)
+        }.toArray
+        val (merges, vocab) = trainBpeRounds(vocab0, BPE_ROUNDS)
+        Iterator.single((merges: Seq[(Long, String, String, Long)],
+          vocab.toSeq.map { case (w, syms, _) => (w, syms.length.toLong) }))
+      }
+  }
 
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -937,18 +946,26 @@ object TextJobs {
       tag: String = "", docFilter: Column = lit(true))
       : (Seq[(String, Long)], Seq[(String, Long)], Seq[(String, Long)]) =
     ModelMemo.shared.value("unigram", sfDir, "documents", tag) {
-      import spark.implicits._
-      wordCounts(spark, sfDir, docFilter).as[(String, Long)]
-        .coalesce(1).mapPartitions { it =>
-          val words = uniWords(it.toArray)
-          val scores = trainUnigramScores(words)
-          val topV = scores.toSeq
-            .sortBy { case (p, u) => (-u, p) }.take(UNI_TOP_V)
-          Iterator.single((topV, words.toSeq.map { case (w, _) =>
-            (w, viterbi(w, scores).length.toLong)
-          }, scores.toSeq))
-        }.collect().headOption.getOrElse((Nil, Nil, Nil))
+      unigramTraining(spark, sfDir, docFilter).collect().headOption
+        .getOrElse((Nil, Nil, Nil))
     }
+
+  /** The pass [[unigramModel]] collects, shaped as [[bpeTraining]]. */
+  private[graft] def unigramTraining(spark: SparkSession, sfDir: String,
+      docFilter: Column = lit(true)): Dataset[(Seq[(String, Long)],
+        Seq[(String, Long)], Seq[(String, Long)])] = {
+    import spark.implicits._
+    wordCounts(spark, sfDir, docFilter).as[(String, Long)]
+      .coalesce(1).mapPartitions { it =>
+        val words = uniWords(it.toArray)
+        val scores = trainUnigramScores(words)
+        val topV = scores.toSeq
+          .sortBy { case (p, u) => (-u, p) }.take(UNI_TOP_V)
+        Iterator.single((topV, words.toSeq.map { case (w, _) =>
+          (w, viterbi(w, scores).length.toLong)
+        }, scores.toSeq))
+      }
+  }
 
   def unigramVocab(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

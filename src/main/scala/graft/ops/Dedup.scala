@@ -295,7 +295,8 @@ object Dedup {
     * SEQUENTIAL recurrence with no parallelism worth buying (the
     * round-6 BPE lesson: k chained rounds of a frame that fits in one
     * task = k×3 exchanges of pure scheduling). So when one count of the
-    * candidate pairs shows ≤ `singleTaskEdgeLimit` rows, the component
+    * candidate pairs shows ≤ `singleTaskBytes` of pairs (16 B each; the
+    * [[Regime]] choice at site `union_find`), the component
     * labels are resolved by UNION-FIND (min-rooted, path-compressed)
     * inside ONE executor task (`coalesce(1).mapPartitions` — no driver
     * collect), and the resulting (node → component-min) map — bounded by
@@ -306,38 +307,26 @@ object Dedup {
     * chains) — the correct shape when the dup graph itself is too big
     * for one task's memory.
     *
-    * The 4M default is MEASURED, not argued (SCALE.md §8f, round-9
-    * probe): union-find beats the distributed loop at every probed size
-    * through 16M edges on both bracketing graph shapes (star 4M: 4.5 vs
-    * 11.1 s; ER 4M: 5.8 vs 32.8 s; even 16M: 17-24 vs 29-89 s), so the
-    * regime boundary is set by the single task's MEMORY, not speed —
+    * The default ([[Regime.SingleTaskBytes]], 4M pairs) is MEASURED, not
+    * argued (SCALE.md §8f, round-9 probe): union-find beats the
+    * distributed loop at every probed size through 16M edges on both
+    * bracketing graph shapes (star 4M: 4.5 vs 11.1 s; ER 4M: 5.8 vs
+    * 32.8 s; even 16M: 17-24 vs 29-89 s), so the regime boundary is set by the single task's MEMORY, not speed —
     * ~4M edges ≈ ≤8M-entry hash map ≈ ~400 MB, comfortable in a
     * standard executor; 16M would court task OOM on a busy one.
     */
   def connectedComponents(
       vertices: DataFrame, pairs: DataFrame, maxIters: Int = 100,
       checkpointEvery: Int = 5, starAfter: Int = 20,
-      singleTaskEdgeLimit: Long = 4000000L): DataFrame =
-    connectedComponentsInstrumented(vertices, pairs, maxIters,
-      checkpointEvery, starAfter, singleTaskEdgeLimit)._1
-
-  /** [[connectedComponents]] plus (propagation rounds used, converged
-    * without the star fallback) — lets specs pin WHICH path finished
-    * (single-task union-find reports 0 rounds; the distributed loop
-    * reports its round count), which the output alone cannot reveal
-    * because every path lands the same labels.
-    */
-  private[graft] def connectedComponentsInstrumented(
-      vertices: DataFrame, pairs: DataFrame, maxIters: Int = 100,
-      checkpointEvery: Int = 5, starAfter: Int = 20,
-      singleTaskEdgeLimit: Long = 4000000L): (DataFrame, Int, Boolean) = {
+      singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val pr = pairs
       .select(col("doc_a").cast("long"), col("doc_b").cast("long")).cache()
     // one count() materializes the pair cache (every path reads it next)
     // and picks the resolution strategy
-    if (pr.count() <= singleTaskEdgeLimit) {
+    if (Regime.choose("union_find", pr.count() * pr.schema.defaultSize,
+        singleTaskBytes)) {
       // Single-task union-find over the dup-pair graph. Orientation and
       // duplicate pairs are irrelevant to union-find, so the symmetric
       // union + distinct the distributed loop needs are skipped too.
@@ -369,7 +358,7 @@ object Dedup {
           col("doc_id") === col("node"), "left")
         .select(col("doc_id"),
           coalesce(col("root"), col("doc_id")).as("cluster"))
-      return (out, 0, true)
+      return out
     }
     val edges = pr
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -444,7 +433,7 @@ object Dedup {
           coalesce(col("root"), col("cluster")).as("cluster"))
     }
     edges.unpersist()
-    (out, i, converged)
+    out
   }
 
   /** Alternating large-star/small-star contraction (the published
@@ -668,22 +657,16 @@ object Dedup {
       scope: CacheScope = CacheScope.unmanaged): DataFrame =
     hammingPairsPlanned(fp, bands.map(Seq(_)), maxHamming, scope)
 
-  /** Below this row count the disjoint c = 1 plan runs with ZERO
-    * model jobs: even the adversarial worst case (every distinct fp
-    * sharing one band value → n²/2 accidental candidates) costs under a
-    * second at the measured ~7 ns/candidate hot-key rate, i.e. less than
-    * the model jobs themselves — and the multimodal fixtures live far
-    * below it, so the pipelines stop paying the per-query counting
-    * overhead the r10 probe measured (1.99 s auto vs 1.22 s fixed at
-    * 64×).
-    */
-  val AutoShortCircuitRows: Long = 16384L
-
   /** [[hammingPairs]] with the band plan derived from the corpus. Caches
     * the fingerprint frame; its row count (a near-free job that
     * materializes the cache the join reads anyway) short-circuits small
-    * corpora straight to the disjoint plan. Above
-    * [[AutoShortCircuitRows]], the distinct-fp frame is built ONCE
+    * corpora straight to the disjoint plan with ZERO model jobs: at or
+    * below [[Regime.HammingShortCircuitBytes]] (16384 fingerprints; site
+    * `hamming_auto`) even the adversarial worst case (every distinct fp
+    * sharing one band value → n²/2 accidental candidates) costs under a
+    * second at the measured ~7 ns/candidate hot-key rate, less than the
+    * model jobs themselves (the r10 probe: 1.99 s auto vs 1.22 s fixed at
+    * 64×). Above it, the distinct-fp frame is built ONCE
     * (cached, shared with the join core — previously the core rebuilt
     * it), counted, and one 16-bit-key aggregation measures the EXACT
     * c = 1 accidental-candidate mass Σ C(cnt, 2) for
@@ -702,7 +685,10 @@ object Dedup {
       s"need bits=$bits >= maxHamming=$maxHamming + 1 for a pigeonhole plan")
     val fpc = scope.cache(fp.select(col("doc_id"), col("fp")))
     val disjoint = bandBlocks(maxHamming + 1, bits).map(Seq(_))
-    if (fpc.count() <= AutoShortCircuitRows)
+    // sized at two longs per row whatever the id column's type, so the
+    // boundary stays 16384 fingerprints for every caller
+    if (Regime.choose("hamming_auto", fpc.count() * 16L,
+        Regime.HammingShortCircuitBytes))
       return hammingCore(fpc, disjoint, maxHamming)
     val distinctFp = scope.cache(fpc.select(col("fp")).distinct())
     val f = distinctFp.count()

@@ -14,9 +14,14 @@ import org.apache.spark.sql.DataFrame
   * an `ExistingRDD` scan — O(registry executions) wall-time for zero
   * audited shape. [[planOnly]] flips every [[checkpoint]] site to a
   * pass-through so a plan auditor sees the real lineage without running
-  * it. Set ONLY by single-threaded audit tools ([[graft.tools.PlanAudit]])
-  * — never by queries, specs that pin serve-time plans, or anything
-  * concurrent (the flag is process-global).
+  * it. Set ONLY by single-threaded plan readers: the audit tools
+  * ([[graft.tools.PlanAudit]], [[graft.tools.PlanSnap]]) and
+  * PlanQualitySpec's `lineage` helper, which resets it in a `finally`
+  * (suites run one at a time in the forked test JVM) — never by queries
+  * or anything concurrent (the flag is process-global). The one read
+  * outside this object is the LSH broadcast choice
+  * ([[Similarity.lshTopK]]), which must not execute its regime count
+  * under an audit.
   *
   * Iterative-loop internals (graph fixpoints, union-find outputs) keep
   * literal `localCheckpoint()` calls: their construction is execution —

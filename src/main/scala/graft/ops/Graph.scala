@@ -90,7 +90,8 @@ object Graph {
     * in SCALE.md §8f/§8g for the graph-loop family): the EDGE frame of an
     * interaction graph is the distinct (user,item) pair set — orders of
     * magnitude smaller than the event log it aggregates from — so when
-    * one count shows ≤ `singleTaskEdgeLimit` edges the whole k-round
+    * one count shows ≤ `singleTaskBytes` of edges (16 B each; the
+    * [[Regime]] choice at site `pagerank`) the whole k-round
     * fixpoint runs inside ONE executor task over primitive arrays
     * (`coalesce(1).mapPartitions`, no driver collect): k rounds × 3
     * exchanges of a frame that fits in one task is pure scheduling.
@@ -107,18 +108,8 @@ object Graph {
   def pageRank(
       edges: DataFrame, iters: Int = 10,
       checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): DataFrame =
-    pageRankInstrumented(edges, iters, checkpointEvery, singleTaskEdgeLimit)._1
-
-  /** [[pageRank]] plus which regime ran (true = single-task), so specs can
-    * pin the path — both land bit-identical ranks, which the output alone
-    * cannot reveal.
-    */
-  private[graft] def pageRankInstrumented(
-      edges: DataFrame, iters: Int,
-      checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): (DataFrame, Boolean) =
-    core(edges, None, iters, checkpointEvery, singleTaskEdgeLimit)
+      singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame =
+    core(edges, None, iters, checkpointEvery, singleTaskBytes)
 
   /** Personalized PageRank: identical recurrence, but the restart mass
     * (1−d) injects ONLY at the `seeds` nodes (a one-column LONG frame),
@@ -140,8 +131,8 @@ object Graph {
   def personalizedPageRank(
       edges: DataFrame, seeds: DataFrame, iters: Int = 10,
       checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): DataFrame =
-    core(edges, Some(seeds), iters, checkpointEvery, singleTaskEdgeLimit)._1
+      singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame =
+    core(edges, Some(seeds), iters, checkpointEvery, singleTaskBytes)
 
   /** Anchor scale for [[hits]] scores: after each half-step the side's
     * total mass renormalizes to ≈ this. With the default 10^12, edge
@@ -167,8 +158,9 @@ object Graph {
     *   a_{t+1}(v) = (Σ_{u→v} h_t(u))  div d_a,   d_a = max(Σ_v raw div scale, 1)
     *   h_{t+1}(u) = (Σ_{u→v} a_{t+1}(v)) div d_h, analogous
     *
-    * Regimes (§8f/§8g): at or below `singleTaskEdgeLimit` the loop runs
-    * in ONE task over interned primitive arrays; above it, per-round
+    * Regimes (§8f/§8g; [[Regime]] site `hits`): at or below
+    * `singleTaskBytes` of edges the loop runs in ONE task over interned
+    * primitive arrays; above it, per-round
     * src-/dst-keyed integer-sum aggregations with each half-step's 1-ROW
     * total collected to the driver (model-sized, the documented
     * bounded-collect contract) and `localCheckpoint` every
@@ -177,16 +169,8 @@ object Graph {
     */
   def hits(edges: DataFrame, iters: Int = 10,
       checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L,
-      scale: Long = HitsScale): DataFrame =
-    hitsInstrumented(edges, iters, checkpointEvery, singleTaskEdgeLimit,
-      scale)._1
-
-  private[graft] def hitsInstrumented(
-      edges: DataFrame, iters: Int,
-      checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L,
-      scale: Long = HitsScale): (DataFrame, Boolean) = {
+      singleTaskBytes: Long = Regime.SingleTaskBytes,
+      scale: Long = HitsScale): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // iters = 0 would diverge between regimes (the single-task path's `a`
@@ -206,7 +190,8 @@ object Graph {
         "bounded by E * 2 * scale) — drop the scale a decade per decade " +
         "of edges")
 
-    if (nEdges <= singleTaskEdgeLimit) {
+    if (Regime.choose("hits", nEdges * e.schema.defaultSize,
+        singleTaskBytes)) {
       val out = e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
         val pairs = it.toArray
         // the two sides intern separately (a raw id may appear on both)
@@ -249,7 +234,7 @@ object Graph {
           dIds.indices.iterator.map(j => (dIds(j), "auth", a(j)))
       }.toDF("node", "side", "score_s").localCheckpoint()
       e.unpersist()
-      return (out, true)
+      return out
     }
 
     def renorm(raw: DataFrame, checkpoint: Boolean): DataFrame = {
@@ -283,11 +268,9 @@ object Graph {
     }
     // h and a are materialized; the edge cache is no longer read
     e.unpersist()
-    val out = h.select(col("node"), lit("hub").as("side"),
-        col("s").as("score_s"))
+    h.select(col("node"), lit("hub").as("side"), col("s").as("score_s"))
       .unionAll(a.select(col("node"), lit("auth").as("side"),
         col("s").as("score_s")))
-    (out, false)
   }
 
   /** Label-propagation community detection over a (symmetric) edge list
@@ -303,8 +286,9 @@ object Graph {
     * bipartite structure, and a deterministic fixed-round snapshot is
     * exactly reproducible where "until stable" is not.
     *
-    * Regimes (§8f/§8g): at or below `singleTaskEdgeLimit` the rounds run
-    * in ONE task over a dst-sorted edge array (per-node vote counting in
+    * Regimes (§8f/§8g; [[Regime]] site `label_propagation`): at or below
+    * `singleTaskBytes` of edges the rounds run in ONE task over a
+    * dst-sorted edge array (per-node vote counting in
     * a scratch map, O(E) per round); above it, per-round edge⨝label join,
     * (node, label) count aggregate, and a node-partitioned ROW_NUMBER
     * argmax — every key a LONG, `localCheckpoint` every
@@ -312,14 +296,7 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, iters: Int = 5,
       checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): DataFrame =
-    labelPropagationInstrumented(edges, iters, checkpointEvery,
-      singleTaskEdgeLimit)._1
-
-  private[graft] def labelPropagationInstrumented(
-      edges: DataFrame, iters: Int,
-      checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): (DataFrame, Boolean) = {
+      singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     require(iters >= 0, s"labelPropagation: iters must be >= 0, got $iters")
@@ -327,25 +304,14 @@ object Graph {
       .distinct().cache()
     val nEdges = e.count()
 
-    if (nEdges <= singleTaskEdgeLimit) {
+    if (Regime.choose("label_propagation", nEdges * e.schema.defaultSize,
+        singleTaskBytes)) {
       val out = e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val pairs = it.toArray
-        val idx = scala.collection.mutable.LongMap.empty[Int]
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        def intern(x: Long): Int =
-          idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
-        val srcI = new Array[Int](pairs.length)
-        val dstI = new Array[Int](pairs.length)
-        var i = 0
-        while (i < pairs.length) {
-          srcI(i) = intern(pairs(i)._1); dstI(i) = intern(pairs(i)._2)
-          i += 1
-        }
-        val n = ids.length
-        // dst-sorted edge order so each round walks per-node vote groups
-        val order = Array.range(0, pairs.length)
-          .sortBy(j => (dstI(j), srcI(j)))
-        var lbl = Array.tabulate(n)(j => ids(j)) // label₀ = own id
+        val g = interned(it.toArray)
+        val (ids, srcI, dstI) = (g.ids, g.src, g.dst)
+        // each round walks per-node vote groups
+        val order = g.byDst
+        var lbl = ids.clone() // label₀ = own id
         var round = 0
         while (round < iters) {
           val next = lbl.clone() // isolated nodes keep their label
@@ -377,7 +343,7 @@ object Graph {
         ids.indices.iterator.map(j => (ids(j), lbl(j)))
       }.toDF("node", "community").localCheckpoint()
       e.unpersist()
-      return (out, true)
+      return out
     }
 
     val nodes = e.select(col("src").as("node"))
@@ -403,8 +369,7 @@ object Graph {
       lbl = next
       round += 1
     }
-    val out = lbl.withColumnRenamed("lbl", "community")
-    (out, false)
+    lbl.withColumnRenamed("lbl", "community")
   }
 
   /** Coreness (k-core number) per node over an UNDIRECTED simple edge
@@ -428,9 +393,9 @@ object Graph {
     * assert names a deeper graph (convergence takes O(diameter)-ish
     * rounds; ≤ 9 on every fixture probed).
     *
-    * Regimes ([[pageRank]] scaladoc; SCALE.md §8f/§8g): at or below
-    * `singleTaskEdgeLimit` the loop runs in ONE task over a dst-sorted
-    * edge array (per-node h-index from a sorted neighbor scan, O(E log E)
+    * Regimes ([[pageRank]] scaladoc; SCALE.md §8f/§8g; [[Regime]] site
+    * `coreness`): at or below `singleTaskBytes` of edges the loop runs in
+    * ONE task over a dst-sorted edge array (per-node h-index from a sorted neighbor scan, O(E log E)
     * once + O(E) per round); above it, per-round edge⨝value join, a
     * node-partitioned DESC row_number (catalog-keyed window, never a
     * global funnel), and a map-side-combinable MAX aggregate, with
@@ -439,14 +404,7 @@ object Graph {
     */
   def coreness(edges: DataFrame, iters: Int = 12,
       checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): DataFrame =
-    corenessInstrumented(edges, iters, checkpointEvery,
-      singleTaskEdgeLimit)._1
-
-  private[graft] def corenessInstrumented(
-      edges: DataFrame, iters: Int,
-      checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): (DataFrame, Boolean) = {
+      singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     require(iters >= 1, s"coreness: iters must be >= 1, got $iters")
@@ -454,26 +412,15 @@ object Graph {
       .distinct().cache()
     val nEdges = e.count()
 
-    if (nEdges <= singleTaskEdgeLimit) {
+    if (Regime.choose("coreness", nEdges * e.schema.defaultSize,
+        singleTaskBytes)) {
       val out = e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val pairs = it.toArray
-        val idx = scala.collection.mutable.LongMap.empty[Int]
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        def intern(x: Long): Int =
-          idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
-        val srcI = new Array[Int](pairs.length)
-        val dstI = new Array[Int](pairs.length)
-        var i = 0
-        while (i < pairs.length) {
-          srcI(i) = intern(pairs(i)._1); dstI(i) = intern(pairs(i)._2)
-          i += 1
-        }
-        val n = ids.length
-        // dst-sorted edge order: each round walks per-node neighbor groups
-        val order = Array.range(0, pairs.length)
-          .sortBy(j => (dstI(j), srcI(j)))
-        val deg = new Array[Long](n)
-        i = 0; while (i < pairs.length) { deg(dstI(i)) += 1L; i += 1 }
+        val g = interned(it.toArray)
+        val (ids, srcI, dstI) = (g.ids, g.src, g.dst)
+        // each round walks per-node neighbor groups
+        val order = g.byDst
+        val deg = new Array[Long](ids.length)
+        var i = 0; while (i < dstI.length) { deg(dstI(i)) += 1L; i += 1 }
         var c = deg.clone()
         var round = 0
         var converged = false
@@ -512,7 +459,7 @@ object Graph {
         ids.indices.iterator.map(j => (ids(j), deg(j), c(j)))
       }.toDF("node", "deg", "coreness").localCheckpoint()
       e.unpersist()
-      return (out, true)
+      return out
     }
 
     import org.apache.spark.sql.expressions.Window
@@ -544,9 +491,8 @@ object Graph {
     require(stable,
       s"coreness: h-index fixpoint not converged after $iters rounds — " +
         "raise iters (convergence needs O(diameter)-ish rounds)")
-    val out = deg.join(c, "node")
+    deg.join(c, "node")
       .select(col("node"), col("deg"), col("c").as("coreness"))
-    (out, false)
   }
 
   /** Per-node triangle counts + local clustering coefficient over an
@@ -623,8 +569,9 @@ object Graph {
     * monotone: a node is settled the first round it is reached, so early
     * exit on an empty frontier is semantically invisible.
     *
-    * Regimes ([[pageRank]] scaladoc; SCALE.md §8f/§8g): at or below
-    * `singleTaskEdgeLimit` the whole BFS runs in ONE task over interned
+    * Regimes ([[pageRank]] scaladoc; SCALE.md §8f/§8g; [[Regime]] site
+    * `hop_distances`): at or below `singleTaskBytes` of edges the whole
+    * BFS runs in ONE task over interned
     * primitive arrays (the seed set ships as an |S|-sized driver copy,
     * the documented bounded-collect contract); above it, per-round
     * frontier⨝edges equi-join + LONG-keyed anti-join against the settled
@@ -634,14 +581,7 @@ object Graph {
     */
   def hopDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): DataFrame =
-    hopDistancesInstrumented(edges, seeds, maxHops, checkpointEvery,
-      singleTaskEdgeLimit)._1
-
-  private[graft] def hopDistancesInstrumented(
-      edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): (DataFrame, Boolean) = {
+      singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     require(maxHops >= 0, s"hopDistances: maxHops must be >= 0, got $maxHops")
@@ -650,22 +590,13 @@ object Graph {
     val nEdges = e.count() // materializes the cache; picks the regime
     val s = seeds.select(col("seed").cast("long")).distinct()
 
-    if (nEdges <= singleTaskEdgeLimit) {
+    if (Regime.choose("hop_distances", nEdges * e.schema.defaultSize,
+        singleTaskBytes)) {
       // |S|-sized driver copy (bounded-collect contract, as in [[core]])
       val seedSet = s.as[Long].collect().toSet
       val out = e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val pairs = it.toArray
-        val idx = scala.collection.mutable.LongMap.empty[Int]
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        def intern(x: Long): Int =
-          idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
-        val srcI = new Array[Int](pairs.length)
-        val dstI = new Array[Int](pairs.length)
-        var i = 0
-        while (i < pairs.length) {
-          srcI(i) = intern(pairs(i)._1); dstI(i) = intern(pairs(i)._2)
-          i += 1
-        }
+        val g = interned(it.toArray)
+        val (ids, srcI, dstI) = (g.ids, g.src, g.dst)
         val n = ids.length
         val dist = Array.fill(n)(Int.MaxValue)
         var j = 0
@@ -675,8 +606,8 @@ object Graph {
         var changed = true
         while (h <= maxHops && changed) {
           changed = false
-          i = 0
-          while (i < pairs.length) {
+          var i = 0
+          while (i < srcI.length) {
             if (dist(srcI(i)) == h - 1 && dist(dstI(i)) > h) {
               dist(dstI(i)) = h; changed = true
             }
@@ -688,7 +619,7 @@ object Graph {
           .map(j => (ids(j), dist(j).toLong))
       }.toDF("node", "dist").localCheckpoint()
       e.unpersist()
-      return (out, true)
+      return out
     }
 
     // Distributed frontier loop: settled = everything reached so far,
@@ -722,7 +653,7 @@ object Graph {
       h += 1
     }
     e.unpersist()
-    (settled, false)
+    settled
   }
 
   /** Multi-source WEIGHTED shortest paths (min-plus / Bellman-Ford) over
@@ -742,8 +673,10 @@ object Graph {
     * edge frame's actual max weight — one agg on the frame the loop
     * reads anyway, the [[checkRankCeiling]] discipline).
     *
-    * Regimes ([[pageRank]] scaladoc): single task over interned arrays
-    * at or below `singleTaskEdgeLimit` edges; above it, per-round
+    * Regimes ([[pageRank]] scaladoc; [[Regime]] site `min_plus`): single
+    * task over interned arrays at or below `singleTaskBytes` of edges —
+    * 24 B per (src, dst, w) edge, so the default boundary is about 2.8M
+    * edges, not the two-column fixpoints' 4M; above it, per-round
     * edges⨝dist equi-join + dst-keyed MIN aggregate + an in-row
     * changed bit on the merge (the connectedComponents rule — no
     * separate next⨝prev convergence join), `localCheckpoint` every
@@ -751,14 +684,7 @@ object Graph {
     */
   def minPlusDistances(edges: DataFrame, seeds: DataFrame, rounds: Int,
       checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): DataFrame =
-    minPlusDistancesInstrumented(edges, seeds, rounds, checkpointEvery,
-      singleTaskEdgeLimit)._1
-
-  private[graft] def minPlusDistancesInstrumented(
-      edges: DataFrame, seeds: DataFrame, rounds: Int,
-      checkpointEvery: Int = 5,
-      singleTaskEdgeLimit: Long = 4000000L): (DataFrame, Boolean) = {
+      singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     require(rounds >= 0, s"minPlusDistances: rounds must be >= 0, got $rounds")
@@ -777,23 +703,14 @@ object Graph {
     }
     val s = seeds.select(col("seed").cast("long")).distinct()
 
-    if (nEdges <= singleTaskEdgeLimit) {
+    if (Regime.choose("min_plus", nEdges * e.schema.defaultSize,
+        singleTaskBytes)) {
       val seedSet = s.as[Long].collect().toSet // bounded-collect contract
       val out = e.as[(Long, Long, Long)].coalesce(1).mapPartitions { it =>
         val triples = it.toArray
-        val idx = scala.collection.mutable.LongMap.empty[Int]
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        def intern(x: Long): Int =
-          idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
-        val srcI = new Array[Int](triples.length)
-        val dstI = new Array[Int](triples.length)
-        val ws = new Array[Long](triples.length)
-        var i = 0
-        while (i < triples.length) {
-          srcI(i) = intern(triples(i)._1); dstI(i) = intern(triples(i)._2)
-          ws(i) = triples(i)._3
-          i += 1
-        }
+        val g = interned(triples.length)(triples(_)._1, triples(_)._2)
+        val (ids, srcI, dstI) = (g.ids, g.src, g.dst)
+        val ws = triples.map(_._3)
         val n = ids.length
         val inf = Long.MaxValue
         var dist = Array.fill(n)(inf)
@@ -808,7 +725,7 @@ object Graph {
         while (r < rounds && changed) {
           changed = false
           val next = dist.clone()
-          i = 0
+          var i = 0
           while (i < triples.length) {
             val ds = dist(srcI(i))
             if (ds != inf && ds + ws(i) < next(dstI(i))) {
@@ -823,7 +740,7 @@ object Graph {
           .map(j => (ids(j), dist(j)))
       }.toDF("node", "cost").localCheckpoint()
       e.unpersist()
-      return (out, true)
+      return out
     }
 
     val nodes = e.select(col("src").as("node"))
@@ -859,7 +776,7 @@ object Graph {
       r += 1
     }
     e.unpersist()
-    (dist, false)
+    dist
   }
 
   /** The shared fixpoint. `seeds = None` is the uniform variant — restart
@@ -867,8 +784,7 @@ object Graph {
     */
   private def core(
       edges: DataFrame, seeds: Option[DataFrame], iters: Int,
-      checkpointEvery: Int,
-      singleTaskEdgeLimit: Long): (DataFrame, Boolean) = {
+      checkpointEvery: Int, singleTaskBytes: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
@@ -876,28 +792,19 @@ object Graph {
     val nEdges = e.count() // materializes the cache; picks the regime
     val s = seeds.map(_.select(col("seed").cast("long")).distinct())
 
-    if (nEdges <= singleTaskEdgeLimit) {
+    if (Regime.choose("pagerank", nEdges * e.schema.defaultSize,
+        singleTaskBytes)) {
       // |S|-sized driver copy (None → no set); the node count and the
       // normalized seed mass are computed IN-TASK from the interned graph
       val seedSet = s.map(_.as[Long].collect().toSet)
       val nSeeds = seedSet.map(ss => math.max(ss.size.toLong, 1L))
       val ranks = e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val pairs = it.toArray
-        val idx = scala.collection.mutable.LongMap.empty[Int]
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        def intern(x: Long): Int =
-          idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
-        val srcI = new Array[Int](pairs.length)
-        val dstI = new Array[Int](pairs.length)
-        var i = 0
-        while (i < pairs.length) {
-          srcI(i) = intern(pairs(i)._1); dstI(i) = intern(pairs(i)._2)
-          i += 1
-        }
+        val g = interned(it.toArray)
+        val (ids, srcI, dstI) = (g.ids, g.src, g.dst)
         val n = ids.length
         val deg = new Array[Long](n)
-        i = 0
-        while (i < pairs.length) { deg(srcI(i)) += 1L; i += 1 }
+        var i = 0
+        while (i < srcI.length) { deg(srcI(i)) += 1L; i += 1 }
         val (massOf, baseOf): (Int => Long, Int => Long) = seedSet match {
           case None => (_ => PrScale, _ => PrBase)
           case Some(ss) =>
@@ -913,7 +820,7 @@ object Graph {
         while (round < iters) {
           val nxt = base.clone()
           i = 0
-          while (i < pairs.length) {
+          while (i < srcI.length) {
             nxt(dstI(i)) += (r(srcI(i)) * 85L) / (deg(srcI(i)) * 100L)
             i += 1
           }
@@ -926,7 +833,7 @@ object Graph {
         ids.indices.iterator.map(j => (ids(j), r(j)))
       }.toDF("node", "r").localCheckpoint()
       e.unpersist()
-      return (ranks, true)
+      return ranks
     }
 
     // Distributed loop. Out-degrees ride the cached edge frame so each
@@ -980,6 +887,31 @@ object Graph {
       ranks = next
       round += 1
     }
-    (ranks, false)
+    ranks
   }
+
+  /** A single-task edge array with its node ids numbered densely in
+    * first-seen order (each edge's src, then its dst): node `j` is raw id
+    * `ids(j)`, edge `i` runs `src(i)` → `dst(i)`.
+    */
+  private final class Interned(val ids: Array[Long], val src: Array[Int],
+      val dst: Array[Int]) {
+    /** Edge indices sorted by (dst, src): each node's in-edges adjoin. */
+    def byDst: Array[Int] =
+      Array.range(0, src.length).sortBy(j => (dst(j), src(j)))
+  }
+
+  private def interned(m: Int)(src: Int => Long, dst: Int => Long): Interned = {
+    val idx = scala.collection.mutable.LongMap.empty[Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def id(x: Long): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val s = new Array[Int](m)
+    val d = new Array[Int](m)
+    var i = 0
+    while (i < m) { s(i) = id(src(i)); d(i) = id(dst(i)); i += 1 }
+    new Interned(ids.toArray, s, d)
+  }
+
+  private def interned(pairs: Array[(Long, Long)]): Interned =
+    interned(pairs.length)(pairs(_)._1, pairs(_)._2)
 }

@@ -44,11 +44,14 @@ object Similarity {
     * runs in ONE task with every other core idle (r17: knn_classify's
     * 8-core/32-core ratio measured 0.96). At scale the scan has ≥ cores
     * splits and this is the identity — no shuffle is added where the
-    * layout already parallelizes, so nothing is tuned to local[32].
+    * layout already parallelizes, so nothing is tuned to local[32]. The
+    * [[Regime]] record at site `spread` compares partition counts.
     */
   private def spreadIfNarrow(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
+    if (Regime.choose("spread", df.rdd.getNumPartitions, want - 1))
+      df.repartition(want)
+    else df
   }
 
   /** Exact top-k neighbors for each query vector (brute force).
@@ -74,27 +77,12 @@ object Similarity {
     */
   def nearDupPairsBlocked(
       vectors: DataFrame, threshold: Double, planes: Int, dims: Int,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    // same spread + broadcast-below-regime-limit shape as [[lshTopK]]
-    // (see [[LshBroadcastMaxRows]]) — the bucket equi-join stays the
-    // corpus-scale plan
-    val withBucket = scope.cache(spreadIfNarrow(vectors)
-      .withColumn("bucket", lshBucket(col("v"), planes, dims)))
-    val bcast = !Eager.planOnly && withBucket.count() <= LshBroadcastMaxRows
-    val probes = withBucket.withColumn("probe",
-      explode(array((lit(0) +: (0 until planes).map(j => lit(1 << j))): _*)))
-      .withColumn("probe", col("bucket").bitwiseXOR(col("probe")))
-    val a = probes.alias("a")
-    val b = if (bcast) broadcast(withBucket.alias("b"))
-      else withBucket.alias("b")
-    // each qualifying pair matches on exactly one probe value, so no
-    // distinct is needed — multiplicity is 1 by construction
-    a.join(b, col("a.probe") === col("b.bucket") &&
+      scope: CacheScope = CacheScope.unmanaged): DataFrame =
+    lshCandidates(vectors, planes, dims, scope)(
         col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         cosine(col("a.v"), col("a.norm"), col("b.v"), col("b.norm")).as("sim"))
       .filter(col("sim") >= threshold)
-  }
 
   /** All near-duplicate pairs with cosine ≥ threshold (exact, pairwise
     * within the id-ordered half-matrix). Quadratic — the small-scale
@@ -370,49 +358,47 @@ object Similarity {
     * the recall lost to sign boundaries while keeping the join an equi-join
     * on bucket (candidates ≈ (planes+1)/2^planes of the corpus per query).
     */
-  /** Corpora at or below this row count broadcast their bucketed frame
-    * into the LSH candidate join (≈512 MB of 64-dim doubles at the
-    * limit — well under the 8 GB broadcast cap); larger corpora keep the
-    * bucket equi-join (the scale path). Regime selection by ONE count of
-    * the already-cached frame (the r8 union-find precedent): with only
-    * 2^planes distinct bucket values, the equi-join's exchange hashes a
-    * handful of key values onto the shuffle partitions (guide §2.5's
-    * too-few-distinct-keys trap) — at bench scale the broadcast join
-    * removes both that exchange and its skew (measured 2.73 → 0.86 s at
-    * sf0.1), while at corpus scale the bucket count grows with `planes`
-    * and the equi-join is the only shape that doesn't ship the corpus to
-    * every executor.
-    */
-  private val LshBroadcastMaxRows = 1000000L
-
   def lshTopK(vectors: DataFrame, planes: Int, k: Int, dims: Int = 64,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    // bucketed corpus is read by both self-join sides — cache the tiny
-    // frame; spread first so the bucket/cosine arithmetic parallelizes
-    // off a 1-split scan
-    val withBucket = scope.cache(
-      spreadIfNarrow(vectors)
-        .withColumn("bucket", lshBucket(col("v"), planes, dims)))
-    // the count doubles as the cache materialization the join needs
-    // anyway; under plan-only auditing nothing may execute, so the audit
-    // sees the corpus-scale (equi-join) shape
-    val bcast = !Eager.planOnly && withBucket.count() <= LshBroadcastMaxRows
-    val probes = withBucket.withColumn("probe",
-      explode(array((lit(0) +: (0 until planes).map(j => lit(1 << j))): _*)))
-      .withColumn("probe", col("bucket").bitwiseXOR(col("probe")))
-    val a = probes.alias("a")
-    val b = if (bcast) broadcast(withBucket.alias("b"))
-      else withBucket.alias("b")
-    // each (query, neighbor) candidate matches on exactly one probe value
-    // (the probe set {bucket^p} is pairwise distinct and b's bucket is
-    // fixed), so multiplicity is 1 by construction — no distinct, which
-    // would shuffle the full candidate set once more for nothing
-    val scored = a.join(b,
-        col("a.probe") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
+    val scored = lshCandidates(vectors, planes, dims, scope)(
+        col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
         cosine(col("a.v"), col("a.norm"), col("b.v"), col("b.norm")).as("sim"))
     TopN.topNPer(scored, col("query_id"), col("sim"), col("neighbor_id"), k)
+  }
+
+  /** The LSH candidate join shared by [[lshTopK]] and
+    * [[nearDupPairsBlocked]]: side `a` is every vector once per probe
+    * (its bucket and each single-bit flip), side `b` the bucketed corpus,
+    * joined on `a.probe = b.bucket` and `pair`. Each (a, b) pair matches
+    * on exactly one probe value (the probe set {bucket^p} is pairwise
+    * distinct and b's bucket is fixed), so multiplicity is 1 by
+    * construction — no distinct, which would shuffle the candidates again.
+    *
+    * The corpus is spread off its 1-split scan, bucketed and cached (both
+    * sides read it). At or below [[Regime.LshBroadcastBytes]] (8 B per
+    * dimension per row; site `lsh_broadcast`) side `b` is broadcast: with
+    * only 2^planes distinct buckets the equi-join's exchange hashes a
+    * handful of keys onto the shuffle partitions (guide §2.5's
+    * too-few-distinct-keys trap), and the broadcast removes both that
+    * exchange and its skew (measured 2.73 → 0.86 s at sf0.1). Above it, or
+    * under plan-only auditing where nothing may execute, the bucket
+    * equi-join stays: at corpus scale it is the only shape that doesn't
+    * ship the corpus to every executor. The count doubles as the cache
+    * materialization the join needs anyway.
+    */
+  private def lshCandidates(vectors: DataFrame, planes: Int, dims: Int,
+      scope: CacheScope)(pair: Column): DataFrame = {
+    val withBucket = scope.cache(spreadIfNarrow(vectors)
+      .withColumn("bucket", lshBucket(col("v"), planes, dims)))
+    val bcast = !Eager.planOnly && Regime.choose("lsh_broadcast",
+      withBucket.count() * 8L * dims, Regime.LshBroadcastBytes)
+    val probes = withBucket.withColumn("probe",
+      explode(array((lit(0) +: (0 until planes).map(j => lit(1 << j))): _*)))
+      .withColumn("probe", col("bucket").bitwiseXOR(col("probe")))
+    val b = if (bcast) broadcast(withBucket.alias("b"))
+      else withBucket.alias("b")
+    probes.alias("a").join(b, col("a.probe") === col("b.bucket") && pair)
   }
 
   /** Product quantization (Jégou et al., the IVF-PQ storage half): split

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * tool for chasing a single bench line without paying for the whole
   * registry. `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` as in Bench. Each
   * run line also counts the Spark jobs it started, its codegen compiles,
-  * and its [[graft.model.ModelMemo]] hits/misses.
+  * its [[graft.model.ModelMemo]] hits/misses, and lists the
+  * [[graft.ops.Regime]] choices it made.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -25,11 +26,13 @@ object BenchOne {
     val times = (1 to runs).map { i =>
       var n = 0L
       val before = counters(spark)
+      val regimesBefore = graft.ops.Regime.stats
       val dt = Harness.timed(spark) { n = fn(spark, sfDir).count() }
       val Seq(jobs, compiles, hits, misses) =
         counters(spark).zip(before).map { case (a, b) => a - b }
       println(f"[benchone] run $i: $dt%.3f s ($n rows) jobs=${jobs - 1}" +
-        s" compiles=$compiles memo_hit_miss=$hits/$misses")
+        s" compiles=$compiles memo_hit_miss=$hits/$misses" +
+        s" regimes=${regimes(regimesBefore, graft.ops.Regime.stats)}")
       dt
     }
     println(f"[benchone] $name median: ${Harness.median(times)}%.3f s")
@@ -46,5 +49,21 @@ object BenchOne {
     val memo = graft.model.ModelMemo.shared.stats.values
     Seq(mark.jobIds.head, CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       memo.map(_.hits).sum, memo.map(_.misses).sum)
+  }
+
+  /** The choices between two [[graft.ops.Regime.stats]] snapshots, by
+    * site: `union_find:S,spread:L2` (S small, L large, a count past one),
+    * `none` when the run chose nothing.
+    */
+  private def regimes(before: Map[String, graft.ops.Regime.Stats],
+      after: Map[String, graft.ops.Regime.Stats]): String = {
+    def tag(letter: String, n: Long) =
+      if (n == 0) "" else if (n == 1) letter else s"$letter$n"
+    val made = after.toSeq.sortBy(_._1).flatMap { case (site, a) =>
+      val b = before.getOrElse(site, graft.ops.Regime.Stats(0, 0))
+      val t = tag("S", a.small - b.small) + tag("L", a.large - b.large)
+      if (t.isEmpty) None else Some(s"$site:$t")
+    }
+    if (made.isEmpty) "none" else made.mkString(",")
   }
 }

@@ -183,7 +183,7 @@ object Probe {
       "thumbnail_match")
 
     /** Regime-crossover probe for [[graft.ops.Dedup.connectedComponents]]:
-      * time the single-task union-find path (singleTaskEdgeLimit=MaxValue)
+      * time the single-task union-find path (singleTaskBytes=MaxValue)
       * against the distributed min-label/star path (limit=0) on synthetic
       * graphs ABOVE and below the 1M-edge default, in the two shapes that
       * bracket real dup graphs: `star` (groups of 8, the shallow
@@ -221,9 +221,9 @@ object Probe {
       for (shape <- shapes; m <- sizes) {
         val (v, p) = graph(shape, m)
         val uf = median((1 to 3).map(_ => time(Dedup.connectedComponents(
-          v, p, singleTaskEdgeLimit = Long.MaxValue).count())))
+          v, p, singleTaskBytes = Long.MaxValue).count())))
         val dist = median((1 to 3).map(_ => time(Dedup.connectedComponents(
-          v, p, singleTaskEdgeLimit = 0L).count())))
+          v, p, singleTaskBytes = 0L).count())))
         println(f"$shape%-6s $m%10d $uf%11.2f $dist%12.2f")
       }
     }
@@ -273,9 +273,9 @@ object Probe {
             .cast("long") * 2 + 1).as("dst"))
         val sym = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
         val one = median((1 to 3).map(_ => time(Graph.pageRank(
-          sym, iters = 10, singleTaskEdgeLimit = Long.MaxValue).count())))
+          sym, iters = 10, singleTaskBytes = Long.MaxValue).count())))
         val dist = median((1 to 3).map(_ => time(Graph.pageRank(
-          sym, iters = 10, singleTaskEdgeLimit = 0L).count())))
+          sym, iters = 10, singleTaskBytes = 0L).count())))
         println(f"$m%10d $one%12.2f $dist%12.2f")
       }
     }
@@ -473,13 +473,13 @@ object Probe {
         val seeds = spark.range(100).select((col("id") * 2).as("seed"))
         val wsym = sym.withColumn("w", lit(3L))
         val b1 = median((1 to 3).map(_ => time(Graph.hopDistances(
-          sym, seeds, 4, singleTaskEdgeLimit = Long.MaxValue).count())))
+          sym, seeds, 4, singleTaskBytes = Long.MaxValue).count())))
         val bd = median((1 to 3).map(_ => time(Graph.hopDistances(
-          sym, seeds, 4, singleTaskEdgeLimit = 0L).count())))
+          sym, seeds, 4, singleTaskBytes = 0L).count())))
         val m1 = median((1 to 3).map(_ => time(Graph.minPlusDistances(
-          wsym, seeds, 4, singleTaskEdgeLimit = Long.MaxValue).count())))
+          wsym, seeds, 4, singleTaskBytes = Long.MaxValue).count())))
         val md = median((1 to 3).map(_ => time(Graph.minPlusDistances(
-          wsym, seeds, 4, singleTaskEdgeLimit = 0L).count())))
+          wsym, seeds, 4, singleTaskBytes = 0L).count())))
         println(f"$m%10d $b1%10.2f $bd%9.2f $m1%9.2f $md%8.2f")
       }
     }

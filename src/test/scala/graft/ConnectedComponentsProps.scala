@@ -43,14 +43,14 @@ class ConnectedComponentsProps extends SparkSpec {
   }
 
   test("distributed propagation path equals reference union-find on random graphs") {
-    // singleTaskEdgeLimit = 0 forces the min-label loop (+ star fallback
+    // singleTaskBytes = 0 forces the min-label loop (+ star fallback
     // when depth exhausts the budget): with the union-find shortcut
     // handling every dup-pair-sized graph, this property run is what
     // keeps the distributed path honest on arbitrary shapes
     val rnd = new scala.util.Random(7)
     for (_ <- 1 to 4) {
       val n = 2 + rnd.nextInt(29)
-      // at least one edge: the count()<=limit gate routes a randomly EMPTY
+      // at least one edge: the size<=limit gate routes a randomly EMPTY
       // edge set to union-find even under the limit=0 pin, and that
       // iteration would exercise nothing distributed
       val edges = Seq.fill(1 + rnd.nextInt(25)) {
@@ -62,8 +62,9 @@ class ConnectedComponentsProps extends SparkSpec {
       val pairs = edges.toDF("doc_a", "doc_b")
       val got = graft.ops.Dedup
         .connectedComponents(vertices, pairs, maxIters = 40,
-          singleTaskEdgeLimit = 0L)
+          singleTaskBytes = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(!graft.ops.Regime.last("union_find").get.small)
       assert(got == unionFind(n, edges), s"n=$n edges=$edges")
     }
   }

@@ -256,13 +256,13 @@ class DedupSpec extends SparkSpec {
     val chain = (0 until n - 1).map(i => (i.toLong, i + 1L))
       .toDF("doc_a", "doc_b")
     val t0 = System.nanoTime()
-    // starAfter = 100 + singleTaskEdgeLimit = 0 pin the PLAIN one-hop
+    // starAfter = 100 + singleTaskBytes = 0 pin the PLAIN one-hop
     // shuffle propagation path (this test is about lineage truncation at
     // ~44 nested rounds; pointer jumping on the broadcast path would
     // converge in ~7 and leave truncation untested — that path has its
     // own test below)
     val out = Dedup.connectedComponents(vertices, chain, maxIters = 100,
-      checkpointEvery = 5, starAfter = 100, singleTaskEdgeLimit = 0L)
+      checkpointEvery = 5, starAfter = 100, singleTaskBytes = 0L)
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val secs = (System.nanoTime() - t0) / 1e9
     assert(labels.size == n && labels.values.forall(_ == 0L))
@@ -281,12 +281,15 @@ class DedupSpec extends SparkSpec {
     val vertices = (0 until n).map(_.toLong).toDF("doc_id")
     val chain = (0 until n - 1).map(i => (i.toLong, i + 1L))
       .toDF("doc_a", "doc_b")
-    val (out, rounds, done) = Dedup.connectedComponentsInstrumented(
+    val before = graft.ops.Regime.stats.get("union_find")
+    val out = Dedup.connectedComponents(
       vertices, chain, maxIters = 100, checkpointEvery = 5)
+    assert(graft.ops.Regime.stats.get("union_find") != before)
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == n && labels.values.forall(_ == 0L))
-    assert(done && rounds == 0,
-      s"expected the single-task union-find path, got $rounds rounds")
+    val choice = graft.ops.Regime.last("union_find").get
+    assert(choice.small && choice.size == 16L * (n - 1),
+      s"expected the single-task union-find path, got $choice")
   }
 
   test("diameter-200 chain converges via the large-star/small-star fallback") {
@@ -294,7 +297,7 @@ class DedupSpec extends SparkSpec {
     // starAfter=20 budget the run must SWITCH to large-star/small-star
     // (O(log d) rounds) and still land every label on the component min —
     // the round-4 advisor's hard-fail scenario (IllegalStateException at
-    // the budget) must be gone. singleTaskEdgeLimit=0 pins the DISTRIBUTED
+    // the budget) must be gone. singleTaskBytes=0 pins the DISTRIBUTED
     // path: with broadcast + pointer jumping active this graph converges
     // before the star budget and the fallback would go untested.
     val n = 201
@@ -306,7 +309,7 @@ class DedupSpec extends SparkSpec {
     val allV = vertices.unionAll(Seq(9000L, 9001L, 9500L).toDF("doc_id"))
     val t0 = System.nanoTime()
     val out = Dedup.connectedComponents(allV, pairs, maxIters = 60,
-      checkpointEvery = 5, singleTaskEdgeLimit = 0L)
+      checkpointEvery = 5, singleTaskBytes = 0L)
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val secs = (System.nanoTime() - t0) / 1e9
     assert((0 until n).forall(i => labels(i.toLong) == 0L))

@@ -296,7 +296,7 @@ class EdgeCaseSpec extends SparkSpec {
     val noEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(Graph.pageRank(noEdges, iters = 3).count() == 0)
     assert(Graph.pageRank(noEdges, iters = 3,
-      singleTaskEdgeLimit = 0L).count() == 0)
+      singleTaskBytes = 0L).count() == 0)
     // self-loop-only graph: one node feeding itself, mass conserved
     val selfLoop = Seq((5L, 5L)).toDF("src", "dst")
     val r = Graph.pageRank(selfLoop, iters = 10).collect()

@@ -9,7 +9,18 @@ import org.apache.spark.sql.functions._
   */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
-  import graft.ops.Graph
+  import graft.ops.{Graph, Regime}
+  import org.apache.spark.sql.DataFrame
+
+  /** `f`'s frame and whether `site` chose the single-task regime for it
+    * (both regimes land the same output, so only the record tells).
+    */
+  private def regime(site: String)(f: => DataFrame): (DataFrame, Boolean) = {
+    val before = Regime.stats.get(site)
+    val out = f
+    assert(Regime.stats.get(site) != before, s"$site chose no regime")
+    (out, Regime.last(site).get.small)
+  }
 
   private def refRanks(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     val es = edges.distinct
@@ -29,8 +40,8 @@ class GraphSpec extends SparkSpec {
     // two users (0,2), two items (1,3): u0 touches both items, u2 only item 1
     val edges = Seq((0L, 1L), (0L, 3L), (2L, 1L))
     val sym = edges ++ edges.map(_.swap)
-    val (df, singleTask) = Graph.pageRankInstrumented(
-      sym.toDF("src", "dst"), iters = 10)
+    val (df, singleTask) = regime("pagerank")(Graph.pageRank(
+      sym.toDF("src", "dst"), iters = 10))
     assert(singleTask)
     val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == refRanks(sym, 10))
@@ -44,14 +55,22 @@ class GraphSpec extends SparkSpec {
       (rnd.nextInt(20).toLong * 2, rnd.nextInt(15).toLong * 2 + 1)
     }.distinct
     val sym = (edges ++ edges.map(_.swap)).toDF("src", "dst")
-    val (one, p1) = Graph.pageRankInstrumented(sym, iters = 10)
-    val (dist, p2) = Graph.pageRankInstrumented(
-      sym, iters = 10, singleTaskEdgeLimit = 0L)
+    val (one, p1) = regime("pagerank")(Graph.pageRank(sym, iters = 10))
+    val (dist, p2) = regime("pagerank")(Graph.pageRank(
+      sym, iters = 10, singleTaskBytes = 0L))
     assert(p1 && !p2)
     val a = one.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
     assert(a == refRanks(edges ++ edges.map(_.swap), 10))
+    // the limit is bytes: E two-long edges are 16·E, inclusive
+    val bytes = 16L * 2 * edges.size
+    val (_, atLimit) = regime("pagerank")(Graph.pageRank(
+      sym, iters = 10, singleTaskBytes = bytes))
+    assert(atLimit && Regime.last("pagerank").get.size == bytes)
+    val (_, belowLimit) = regime("pagerank")(Graph.pageRank(
+      sym, iters = 10, singleTaskBytes = bytes - 1))
+    assert(!belowLimit)
   }
 
   test("personalized pagerank: regimes agree; proximity to seeds orders ranks") {
@@ -62,7 +81,7 @@ class GraphSpec extends SparkSpec {
     val one = Graph.personalizedPageRank(chain.toDF("src", "dst"), seeds, 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dist = Graph.personalizedPageRank(chain.toDF("src", "dst"), seeds, 10,
-        singleTaskEdgeLimit = 0L)
+        singleTaskBytes = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(one == dist)
     // monotone decay along the chain away from the seed
@@ -97,9 +116,9 @@ class GraphSpec extends SparkSpec {
       (rnd.nextInt(20).toLong, 100L + rnd.nextInt(15))
     }.distinct
     val df = edges.toDF("src", "dst")
-    val (one, p1) = Graph.hitsInstrumented(df, iters = 10)
-    val (dist, p2) = Graph.hitsInstrumented(df, iters = 10,
-      singleTaskEdgeLimit = 0L)
+    val (one, p1) = regime("hits")(Graph.hits(df, iters = 10))
+    val (dist, p2) = regime("hits")(Graph.hits(df, iters = 10,
+      singleTaskBytes = 0L))
     assert(p1 && !p2)
     def toMap(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -120,7 +139,7 @@ class GraphSpec extends SparkSpec {
     // renorm leaves a side's total just under 2*scale, so E*scale alone is
     // not safe — the guard must reject E > Long.MaxValue/(2*scale)
     val ex = intercept[IllegalArgumentException] {
-      Graph.hitsInstrumented(Seq((0L, 1L), (2L, 3L)).toDF("src", "dst"),
+      Graph.hits(Seq((0L, 1L), (2L, 3L)).toDF("src", "dst"),
         iters = 1, scale = Long.MaxValue / 3L)
     }
     assert(ex.getMessage.contains("2 * scale"))
@@ -141,13 +160,13 @@ class GraphSpec extends SparkSpec {
     val star = spark.range(1L, 140001L)
       .selectExpr("id as src", "cast(0 as long) as dst")
     val exOne = intercept[Exception] {
-      Graph.pageRankInstrumented(star, iters = 2)
+      Graph.pageRank(star, iters = 2)
     }
     assert(exOne.getMessage.contains("damping multiply would wrap") ||
       Option(exOne.getCause).exists(
         _.getMessage.contains("damping multiply would wrap")))
     val exDist = intercept[Exception] {
-      Graph.pageRankInstrumented(star, iters = 2, singleTaskEdgeLimit = 0L)
+      Graph.pageRank(star, iters = 2, singleTaskBytes = 0L)
     }
     assert(exDist.getMessage.contains("damping multiply would wrap") ||
       Option(exDist.getCause).exists(
@@ -175,9 +194,10 @@ class GraphSpec extends SparkSpec {
     val edges = (clique(Seq(0L, 1L, 2L, 3L)) ++
       clique(Seq(10L, 11L, 12L, 13L)) ++ Seq((3L, 10L), (10L, 3L))).distinct
     val df = edges.toDF("src", "dst")
-    val (one, p1) = Graph.labelPropagationInstrumented(df, iters = 5)
-    val (dist, p2) = Graph.labelPropagationInstrumented(df, iters = 5,
-      singleTaskEdgeLimit = 0L)
+    val (one, p1) = regime("label_propagation")(
+      Graph.labelPropagation(df, iters = 5))
+    val (dist, p2) = regime("label_propagation")(
+      Graph.labelPropagation(df, iters = 5, singleTaskBytes = 0L))
     assert(p1 && !p2)
     val a = one.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -190,7 +210,7 @@ class GraphSpec extends SparkSpec {
     // iters = 0: every node keeps its own id, both regimes
     val z1 = Graph.labelPropagation(df, iters = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val z2 = Graph.labelPropagation(df, iters = 0, singleTaskEdgeLimit = 0L)
+    val z2 = Graph.labelPropagation(df, iters = 0, singleTaskBytes = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(z1 == z2 && z1.forall { case (n, c) => n == c })
   }
@@ -226,9 +246,9 @@ class GraphSpec extends SparkSpec {
         (101L, 102L), (102L, 101L)) ++
       clique(Seq(1L, 200L, 201L))).distinct
     val df = edges.toDF("src", "dst")
-    val (one, p1) = Graph.corenessInstrumented(df, iters = 12)
-    val (dist, p2) = Graph.corenessInstrumented(df, iters = 12,
-      singleTaskEdgeLimit = 0L)
+    val (one, p1) = regime("coreness")(Graph.coreness(df, iters = 12))
+    val (dist, p2) = regime("coreness")(Graph.coreness(df, iters = 12,
+      singleTaskBytes = 0L))
     assert(p1 && !p2)
     def toMap(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -255,7 +275,7 @@ class GraphSpec extends SparkSpec {
     assert(msg(ex1).contains("not converged"))
     val ex2 = intercept[Exception] {
       Graph.coreness(cyc.toDF("src", "dst"), iters = 1,
-        singleTaskEdgeLimit = 0L).collect()
+        singleTaskBytes = 0L).collect()
     }
     assert(msg(ex2).contains("not converged"))
   }
@@ -314,9 +334,10 @@ class GraphSpec extends SparkSpec {
       Seq((10L, 11L), (11L, 10L))
     val edges = chain.toDF("src", "dst")
     val seeds = Seq(0L, 99L).toDF("seed")
-    val (one, p1) = Graph.hopDistancesInstrumented(edges, seeds, maxHops = 3)
-    val (dist, p2) = Graph.hopDistancesInstrumented(
-      edges, seeds, maxHops = 3, singleTaskEdgeLimit = 0L)
+    val (one, p1) = regime("hop_distances")(
+      Graph.hopDistances(edges, seeds, maxHops = 3))
+    val (dist, p2) = regime("hop_distances")(
+      Graph.hopDistances(edges, seeds, maxHops = 3, singleTaskBytes = 0L))
     assert(p1 && !p2)
     val a = one.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -329,7 +350,7 @@ class GraphSpec extends SparkSpec {
     assert(full == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L,
       5L -> 5L))
     val full2 = Graph.hopDistances(edges, Seq(0L).toDF("seed"), maxHops = 50,
-      singleTaskEdgeLimit = 0L)
+      singleTaskBytes = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(full2 == full)
   }
@@ -356,11 +377,11 @@ class GraphSpec extends SparkSpec {
       dist
     }
     for (hops <- Seq(0, 2, 5)) {
-      val (one, p1) = Graph.hopDistancesInstrumented(
-        es.toDF("src", "dst"), seeds.toDF("seed"), maxHops = hops)
-      val (dist, p2) = Graph.hopDistancesInstrumented(
+      val (one, p1) = regime("hop_distances")(Graph.hopDistances(
+        es.toDF("src", "dst"), seeds.toDF("seed"), maxHops = hops))
+      val (dist, p2) = regime("hop_distances")(Graph.hopDistances(
         es.toDF("src", "dst"), seeds.toDF("seed"), maxHops = hops,
-        singleTaskEdgeLimit = 0L)
+        singleTaskBytes = 0L))
       assert(p1 && !p2)
       val a = one.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val b = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -392,11 +413,11 @@ class GraphSpec extends SparkSpec {
       d
     }
     for (rounds <- Seq(0, 1, 3, 8)) {
-      val (one, p1) = Graph.minPlusDistancesInstrumented(
-        es.toDF("src", "dst", "w"), seeds.toDF("seed"), rounds)
-      val (dist, p2) = Graph.minPlusDistancesInstrumented(
+      val (one, p1) = regime("min_plus")(Graph.minPlusDistances(
+        es.toDF("src", "dst", "w"), seeds.toDF("seed"), rounds))
+      val (dist, p2) = regime("min_plus")(Graph.minPlusDistances(
         es.toDF("src", "dst", "w"), seeds.toDF("seed"), rounds,
-        singleTaskEdgeLimit = 0L)
+        singleTaskBytes = 0L))
       assert(p1 && !p2)
       val a = one.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val b = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -428,7 +449,7 @@ class GraphSpec extends SparkSpec {
     // most 1 unit per (edge, round) — so the fixpoint total is bounded
     // above by N·S and below by N·S minus the loss budget
     val edges = Seq((0L, 1L), (1L, 0L), (0L, 3L), (3L, 0L), (2L, 1L), (1L, 2L))
-    val (df, _) = Graph.pageRankInstrumented(edges.toDF("src", "dst"), 10)
+    val df = Graph.pageRank(edges.toDF("src", "dst"), 10)
     val ranks = df.collect().map(_.getLong(1))
     val n = ranks.length
     val total = ranks.sum

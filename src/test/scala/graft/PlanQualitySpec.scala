@@ -1,6 +1,8 @@
 package graft
 
 import graft.jobs._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution._
 
 /** Physical-plan assertions: the properties that make these queries viable
   * at 100 TB are pinned here so a refactor can't silently lose them
@@ -9,8 +11,33 @@ import graft.jobs._
   */
 class PlanQualitySpec extends SparkSpec {
 
-  private def plan(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString
+  /** The executed plan string. A plan that is only a scan of an existing
+    * RDD or local rows (a checkpointed or collected output) fails: every
+    * pin on it would pass whatever the query computes — build such a
+    * query through [[lineage]].
+    */
+  private def plan(df: DataFrame): String = {
+    val p = df.queryExecution.executedPlan
+    assert(!bareScan(p), s"pin would read a bare scan — use lineage:\n$p")
+    p.toString
+  }
+
+  private def bareScan(p: SparkPlan): Boolean = p match {
+    case _: RDDScanExec | _: LocalTableScanExec => true
+    case _: WholeStageCodegenExec | _: InputAdapter | _: ProjectExec |
+        _: FilterExec => bareScan(p.children.head)
+    case _ => false
+  }
+
+  /** `build` under [[graft.ops.Eager.planOnly]], as PlanAudit reads the
+    * registry: slim-handoff checkpoints pass through, so the frame keeps
+    * the query's lineage. The flag is process-global; suites run one at
+    * a time in the forked test JVM, and it is reset before this returns.
+    */
+  private def lineage(build: => DataFrame): DataFrame = {
+    graft.ops.Eager.planOnly = true
+    try build finally graft.ops.Eager.planOnly = false
+  }
 
   test("q1: filter pushed to parquet scan, columns pruned") {
     val p = plan(RelationalJobs.q1Pricing(spark, sf("sf0.001")))
@@ -105,7 +132,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("neardup + decontamination plans contain no all-pairs join") {
-    val pn = plan(SimilarityJobs.embeddingNeardup(spark, sf("sf0.001")))
+    val pn = plan(lineage(SimilarityJobs.embeddingNeardup(spark, sf("sf0.001"))))
     assert(!pn.contains("BroadcastNestedLoopJoin") && !pn.contains("CartesianProduct"),
       s"embedding_neardup regressed to an all-pairs join:\n$pn")
     val pd = plan(DedupJobs.decontamination(spark, sf("sf0.001")))
@@ -211,7 +238,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("substring dup rate shuffles int hashes only, nothing quadratic") {
-    val p = plan(DedupJobs.substringDupRate(spark, sf("sf0.001")))
+    val p = plan(lineage(DedupJobs.substringDupRate(spark, sf("sf0.001"))))
     // frequency is an aggregation, not a pairing: no join of the gram
     // lineage against itself, and no exchange ever carries gram strings
     assert(!"Exchange hashpartitioning\\([^)]*gram#".r.findFirstIn(p).isDefined,
@@ -222,8 +249,8 @@ class PlanQualitySpec extends SparkSpec {
 
   test("semantic dedup pairs via an int-cell equi-join, never all-pairs") {
     // the registry query checkpoints its output behind a slim handoff
-    // (r15), so the pin reads the UN-checkpointed pair plan via the hook
-    val p = plan(SimilarityJobs.semanticDedupPlanForSpec(spark, sf("sf0.001")))
+    // (r15), so the pin reads its lineage
+    val p = plan(lineage(SimilarityJobs.semanticDedup(spark, sf("sf0.001"))))
     // nested-loop joins in this plan are only the C-bounded broadcast
     // centroid assigns (their build side is the ≤C-row centroid frame —
     // never a data×data product); the count of their STRING occurrences
@@ -254,7 +281,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("composed jaccard fence shuffles int keys only, never all-pairs") {
-    val p = plan(DedupJobs.ngramJaccardPrefixPlanForSpec(spark, sf("sf0.001")))
+    val p = plan(lineage(DedupJobs.ngramJaccardPrefix(spark, sf("sf0.001"))))
     // both fences (identity compression + df-ordered prefix) are int-keyed:
     // no exchange may carry gram strings, and candidate generation must be
     // the prefix equi-join, never a quadratic fallback
@@ -361,7 +388,9 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("bpe_merges: one distributed count, then a narrow single-task trainer") {
-    val p = plan(TextJobs.bpeMerges(spark, sf("sf0.001")))
+    // bpe_merges serves the memoized model as local rows, so the pin
+    // reads the training pass the memo collects
+    val p = plan(TextJobs.bpeTraining(spark, sf("sf0.001")).toDF())
     // the k merge rounds must not re-introduce per-round exchanges: the
     // only exchanges are the word count's partial/final pair plus the
     // coalesce(1) funnel — regression = exchange count growing with k
@@ -391,7 +420,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("unigram trainer shares the BPE exchange discipline") {
-    val p = plan(TextJobs.unigramVocab(spark, sf("sf0.001")))
+    val p = plan(TextJobs.unigramTraining(spark, sf("sf0.001")).toDF())
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(exchanges <= 2,
       s"unigram trainer pays per-EM-round exchanges:\n$p")

@@ -258,6 +258,19 @@ class SimilaritySpec extends SparkSpec {
       s"rerank recall ($rerankHits) fell below raw ADC ($adcHits)")
   }
 
+  test("ann_lsh sizes its broadcast choice in bytes: rows x 8 x dims") {
+    import graft.ops.Regime
+    val sfd = sf("sf0.001")
+    val before = Regime.stats.get("lsh_broadcast")
+    SimilarityJobs.annLsh(spark, sfd)
+    assert(Regime.stats.get("lsh_broadcast") != before)
+    val v = SimilarityJobs.vectors(spark, sfd)
+    val dims = v.select(size($"v")).first().getInt(0)
+    assert(Regime.last("lsh_broadcast").get == Regime.Choice(
+      "lsh_broadcast", v.count() * 8L * dims, Regime.LshBroadcastBytes,
+      small = true))
+  }
+
   test("ann_eval_lsh restricts to the truth queries and re-derives exactly") {
     val sfd = sf("sf0.001")
     val truth = SimilarityJobs.annCosineTopK(spark, sfd)
