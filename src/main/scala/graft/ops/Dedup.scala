@@ -753,19 +753,6 @@ object Dedup {
     inter.unionAll(intra)
   }
 
-  /** Near-dup pairs by SimHash hamming distance within a blocking key. */
-  def simhashPairs(fp: DataFrame, block: DataFrame, maxHamming: Int): DataFrame = {
-    val withBlock = fp.join(block, "doc_id")
-    val a = withBlock.alias("a"); val b = withBlock.alias("b")
-    a.join(b,
-        col("a.block") === col("b.block") && col("a.doc_id") < col("b.doc_id"))
-      .withColumn("hamming",
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("hamming"))
-  }
-
   /** The shared-gram Jaccard core: pairs + per-doc set sizes over a frame
     * of (doc_id, text, block). Intersections come from an equi-join on
     * 32-bit gram hashes (shuffle on int, never a cross join); candidate

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{col, timestamp_millis}
 
 /** C1–C5: CEP-lite — a relaxed-contiguity sequence detector with timeout,
   * generalizing the reference's create→pay pattern
@@ -11,10 +9,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * .within(15 min)` + timeout/select demux via side outputs).
   *
   * The pattern is a list of named predicates over a generic keyed event;
-  * the NFA is the per-key GroupState (current step + step timestamps) and
-  * `within` is the event-time timeout. Matches emit tag="matched" with the
-  * step timestamps; expirations emit tag="timeout" with the partial depth —
-  * the two PatternSelect/PatternTimeout functions as one tagged stream.
+  * the NFA is the per-key state of a [[DeadlineMachine]] (current step +
+  * step timestamps) and `within` is its event-time deadline. Matches emit
+  * tag="matched" with the step timestamps; expirations emit tag="timeout"
+  * with the partial depth — the two PatternSelect/PatternTimeout functions
+  * as one tagged stream.
   *
   * The reference itself proves this equivalence by re-implementing the CEP
   * job as a hand state machine (`OrderPayTimeoutWithoutCEP.java:24-27`).
@@ -38,122 +37,26 @@ object CepLite {
   def detect(events: Dataset[KeyedEvent], pattern: Seq[String], withinMs: Long)
       : Dataset[CepMatch] = {
     import events.sparkSession.implicits._
-    events
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis(
-        org.apache.spark.sql.functions.col("tsMs")))
-      .withWatermark("ts", "0 seconds")
-      .as[KeyedEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CepState, CepMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state) => onGroup(key, it, state, pattern, withinMs)
-      }
-  }
-
-  /** The same NFA on `transformWithState` — [[detect]] stays as the
-    * `flatMapGroupsWithState` compatibility surface. The `within` deadline
-    * is anchored at the FIRST matched step, so re-registering on later
-    * batches lands on the same timestamp (TWS timers are idempotent per
-    * timestamp); a completed match deletes its timer and the handler
-    * no-ops on already-cleared keys.
-    */
-  def detectTws(
-      events: Dataset[KeyedEvent], pattern: Seq[String], withinMs: Long)
-      : Dataset[CepMatch] = {
-    import events.sparkSession.implicits._
-    events
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis(
-        org.apache.spark.sql.functions.col("tsMs")))
-      .withWatermark("ts", "0 seconds")
-      .as[KeyedEvent]
-      .groupByKey(_.key)
-      .transformWithState(
-        new CepProcessor(pattern, withinMs),
-        TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  class CepProcessor(pattern: Seq[String], withinMs: Long)
-      extends StatefulProcessor[Long, KeyedEvent, CepMatch] {
-
-    @transient private var st: ValueState[CepState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CepState]("cep_state",
-        Encoders.product[CepState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long,
-        rows: Iterator[KeyedEvent],
-        timerValues: TimerValues): Iterator[CepMatch] = {
-      var s = if (st.exists()) st.get() else CepState(0, Nil)
-      val out = Seq.newBuilder[CepMatch]
-      rows.toSeq.sortBy(_.tsMs).foreach { e =>
+    DeadlineMachine.run[Long, KeyedEvent, CepState, CepMatch](
+      events
+        .withColumn("ts", timestamp_millis(col("tsMs")))
+        .withWatermark("ts", "0 seconds")
+        .as[KeyedEvent]
+        .groupByKey(_.key),
+      empty = CepState(0, Nil),
+      order = Ordering.by(_.tsMs),
+      step = (key, s, e) =>
         if (s.step < pattern.length && e.kind == pattern(s.step)) {
-          s = CepState(s.step + 1, e.tsMs :: s.stepTs)
-          if (s.step == pattern.length) {
-            out += CepMatch(key, "matched", s.step,
-              s.stepTs.lastOption, s.stepTs.headOption)
-            s = CepState(0, Nil)
-            st.clear()
-            getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-          }
-        } // relaxed contiguity: non-matching kinds are skipped
-      }
-      if (s.step > 0) {
-        st.update(s)
-        getHandle.registerTimer(math.max(s.stepTs.last + withinMs,
-          timerValues.getCurrentWatermarkInMs() + 1)) // within(…)
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(
-        key: Long,
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[CepMatch] = {
-      if (!st.exists()) Iterator.empty // matched before the deadline
-      else {
-        val s = st.get()
-        st.clear()
-        Iterator(CepMatch(key, "timeout", s.step,
-          s.stepTs.lastOption, s.stepTs.headOption))
-      }
-    }
-  }
-
-  private[streaming] def onGroup(
-      key: Long,
-      events: Iterator[KeyedEvent],
-      state: GroupState[CepState],
-      pattern: Seq[String],
-      withinMs: Long): Iterator[CepMatch] = {
-
-    if (state.hasTimedOut) {
-      val s = state.getOption.getOrElse(CepState(0, Nil))
-      state.remove()
-      Iterator(CepMatch(key, "timeout", s.step,
-        s.stepTs.lastOption, s.stepTs.headOption))
-    } else {
-      var s = state.getOption.getOrElse(CepState(0, Nil))
-      val out = Seq.newBuilder[CepMatch]
-      events.toSeq.sortBy(_.tsMs).foreach { e =>
-        if (s.step < pattern.length && e.kind == pattern(s.step)) {
-          s = CepState(s.step + 1, e.tsMs :: s.stepTs)
-          if (s.step == pattern.length) {
-            out += CepMatch(key, "matched", s.step,
-              s.stepTs.lastOption, s.stepTs.headOption)
-            s = CepState(0, Nil)
-            state.remove()
-          }
-        } // relaxed contiguity: non-matching kinds are skipped
-      }
-      if (s.step > 0) {
-        state.update(s)
-        state.setTimeoutTimestamp(math.max(s.stepTs.last + withinMs,
-          state.getCurrentWatermarkMs() + 1)) // within(…)
-      }
-      out.result().iterator
-    }
+          val next = CepState(s.step + 1, e.tsMs :: s.stepTs)
+          if (next.step == pattern.length)
+            Left(CepMatch(key, "matched", next.step,
+              next.stepTs.lastOption, next.stepTs.headOption))
+          else Right(next)
+        } else Right(s), // relaxed contiguity: non-matching kinds are skipped
+      // within(…) is anchored at the FIRST matched step (stepTs is
+      // newest-first), so later steps never extend the deadline
+      deadline = s => s.stepTs.lastOption.map(_ + withinMs),
+      expire = (key, s) => Iterator(CepMatch(key, "timeout", s.step,
+        s.stepTs.lastOption, s.stepTs.headOption)))
   }
 }

@@ -1,10 +1,6 @@
 package graft.streaming
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 import graft.model.{OrderEvent, OrderResult}
 
 /** X3: the per-order payment-timeout state machine
@@ -18,11 +14,11 @@ import graft.model.{OrderEvent, OrderResult}
   *  - timer fires with only pay (out-of-order pay-before-create, the
   *    reference's `:90,124-130` branch) → "payed but not found created"
   *
-  * Spark-first: `flatMapGroupsWithState` keyed by orderId with
-  * `EventTimeTimeout`; `GroupState.setTimeoutTimestamp` is the reference's
-  * `registerEventTimeTimer`, and clearing state on emission replicates its
-  * clear-on-emit discipline (state never outlives an order — at 100 TB the
-  * state store holds only in-flight orders).
+  * Spark-first: a [[DeadlineMachine]] keyed by orderId; its event-time
+  * timeout is the reference's `registerEventTimeTimer`, and clearing state
+  * on emission replicates its clear-on-emit discipline (state never
+  * outlives an order — at 100 TB the state store holds only in-flight
+  * orders).
   */
 object OrderTimeoutStream {
 
@@ -35,140 +31,32 @@ object OrderTimeoutStream {
   def detect(orders: Dataset[OrderEvent], deadlineMs: Long = DefaultDeadlineMs)
       : Dataset[OrderResult] = {
     import orders.sparkSession.implicits._
-    orders
-      .withWatermark("ts", "0 seconds")
-      .groupByKey(_.orderId)
-      .flatMapGroupsWithState[OrderMachineState, OrderResult](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (orderId, events, state) => onGroup(orderId, events, state, deadlineMs)
-      }
-  }
-
-  /** The same machine on Spark 4's `transformWithState` (the current
-    * stateful API: typed `ValueState`, real multi-timer registry, RocksDB
-    * state store) — [[detect]] stays as the `flatMapGroupsWithState`
-    * compatibility surface. Semantics are identical (spec-pinned on the
-    * reference fixture replay); the one mechanical difference is that TWS
-    * timers are not cancelled by clearing state, so a resolved order
-    * deletes its pending timers explicitly and the timer handler treats
-    * state-already-cleared as a no-op.
-    */
-  def detectTws(
-      orders: Dataset[OrderEvent], deadlineMs: Long = DefaultDeadlineMs)
-      : Dataset[OrderResult] = {
-    import orders.sparkSession.implicits._
-    orders
-      .withWatermark("ts", "0 seconds")
-      .groupByKey(_.orderId)
-      .transformWithState(
-        new OrderTimeoutProcessor(deadlineMs),
-        TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  class OrderTimeoutProcessor(deadlineMs: Long)
-      extends StatefulProcessor[Long, OrderEvent, OrderResult] {
-
-    @transient private var st: ValueState[OrderMachineState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[OrderMachineState]("order_state",
-        Encoders.product[OrderMachineState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        orderId: Long,
-        rows: Iterator[OrderEvent],
-        timerValues: TimerValues): Iterator[OrderResult] = {
-      var s = if (st.exists()) st.get() else OrderMachineState(None, None)
-      val out = Seq.newBuilder[OrderResult]
-      rows.toSeq.sortBy(_.ts.getTime).foreach { e =>
-        e.eventType match {
-          case "create" => s = s.copy(createTs = Some(e.ts.getTime))
-          case "pay"    => s = s.copy(payTs = Some(e.ts.getTime))
-          case _        => ()
+    DeadlineMachine.run[Long, OrderEvent, OrderMachineState, OrderResult](
+      orders.withWatermark("ts", "0 seconds").groupByKey(_.orderId),
+      empty = OrderMachineState(None, None),
+      order = Ordering.by(_.ts.getTime),
+      step = (orderId, s, e) => {
+        val next = e.eventType match {
+          case "create" => s.copy(createTs = Some(e.ts.getTime))
+          case "pay"    => s.copy(payTs = Some(e.ts.getTime))
+          case _        => s
         }
-        (s.createTs, s.payTs) match {
+        (next.createTs, next.payTs) match {
           case (Some(c), Some(p)) =>
-            out += OrderResult(orderId,
+            Left(OrderResult(orderId,
               if (p <= c + deadlineMs) "payed successfully"
-              else "payed but already timeout")
-            s = OrderMachineState(None, None)
-            st.clear()
-            getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-          case _ => ()
+              else "payed but already timeout"))
+          case _ => Right(next)
         }
-      }
-      if (s.createTs.isDefined || s.payTs.isDefined) {
-        st.update(s)
-        val base = s.createTs.orElse(s.payTs).get
-        getHandle.registerTimer(math.max(base + deadlineMs,
-          timerValues.getCurrentWatermarkInMs() + 1))
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(
-        orderId: Long,
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[OrderResult] = {
-      if (!st.exists()) Iterator.empty // resolved before the horizon
-      else {
-        val s = st.get()
-        st.clear()
-        (s.createTs, s.payTs) match {
-          case (Some(_), None) => Iterator(OrderResult(orderId, "timeout"))
-          case (None, Some(_)) =>
-            Iterator(OrderResult(orderId, "payed but not found created"))
-          case _ => Iterator.empty
-        }
-      }
-    }
-  }
-
-  private[streaming] def onGroup(
-      orderId: Long,
-      events: Iterator[OrderEvent],
-      state: GroupState[OrderMachineState],
-      deadlineMs: Long): Iterator[OrderResult] = {
-
-    if (state.hasTimedOut) {
-      val s = state.getOption.getOrElse(OrderMachineState(None, None))
-      state.remove()
-      (s.createTs, s.payTs) match {
+      },
+      // create waits the full deadline; a lonely pay waits the same
+      // horizon for its create (reference arms payTs + deadline there)
+      deadline = s => s.createTs.orElse(s.payTs).map(_ + deadlineMs),
+      expire = (orderId, s) => (s.createTs, s.payTs) match {
         case (Some(_), None) => Iterator(OrderResult(orderId, "timeout"))
         case (None, Some(_)) =>
           Iterator(OrderResult(orderId, "payed but not found created"))
         case _ => Iterator.empty // already resolved
-      }
-    } else {
-      var s = state.getOption.getOrElse(OrderMachineState(None, None))
-      val out = Seq.newBuilder[OrderResult]
-      events.toSeq.sortBy(_.ts.getTime).foreach { e =>
-        e.eventType match {
-          case "create" => s = s.copy(createTs = Some(e.ts.getTime))
-          case "pay"    => s = s.copy(payTs = Some(e.ts.getTime))
-          case _        => ()
-        }
-        (s.createTs, s.payTs) match {
-          case (Some(c), Some(p)) =>
-            out += OrderResult(orderId,
-              if (p <= c + deadlineMs) "payed successfully"
-              else "payed but already timeout")
-            s = OrderMachineState(None, None)
-            state.remove()
-          case _ => ()
-        }
-      }
-      if (s.createTs.isDefined || s.payTs.isDefined) {
-        state.update(s)
-        // create waits the full deadline; a lonely pay waits the same
-        // horizon for its create (reference arms payTs + deadline there).
-        // Deadlines already behind the watermark fire at the next batch.
-        val base = s.createTs.orElse(s.payTs).get
-        state.setTimeoutTimestamp(
-          math.max(base + deadlineMs, state.getCurrentWatermarkMs() + 1))
-      }
-      out.result().iterator
-    }
+      })
   }
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{col, timestamp_millis}
 import graft.model.{OrderEvent, ReceiptEvent}
 
 /** X4: two-stream pay↔receipt reconciliation with asymmetric waits
@@ -13,7 +11,7 @@ import graft.model.{OrderEvent, ReceiptEvent}
   * `unmatchedPays` / `unmatchedReceipts` side outputs).
   *
   * Spark has no two-input keyed operator, so the closest semantic clone is
-  * union-of-tagged-events → `flatMapGroupsWithState` per txId — one state
+  * union-of-tagged-events → one [[DeadlineMachine]] per txId — one state
   * machine sees both streams exactly like `processElement1/2`. Side outputs
   * become a `tag` column (matched / unmatched_pay / unmatched_receipt);
   * split downstream with filters (SURVEY.md §2.2 K3).
@@ -54,151 +52,41 @@ object TxMatchStream {
   val PayWaitMs = 5000L     // reference: pay waits 5 s for its receipt
   val ReceiptWaitMs = 3000L // reference: receipt waits 3 s for its pay
 
-  def tagged(pays: Dataset[OrderEvent], receipts: Dataset[ReceiptEvent])
-      : Dataset[TxEvent] = {
-    import pays.sparkSession.implicits._
-    val p = pays.map(o => TxEvent(o.txId, "pay", o.ts.getTime, o.orderId, ""))
-    val r = receipts.map(x => TxEvent(x.txId, "receipt", x.ts.getTime, -1L, x.payChannel))
-    p.unionByName(r)
-  }
-
   def detect(pays: Dataset[OrderEvent], receipts: Dataset[ReceiptEvent],
       payWaitMs: Long = PayWaitMs, receiptWaitMs: Long = ReceiptWaitMs)
       : Dataset[TxResult] = {
     import pays.sparkSession.implicits._
-    tagged(pays, receipts)
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis(
-        org.apache.spark.sql.functions.col("tsMs")))
-      .withWatermark("ts", "0 seconds")
-      .as[TxEvent]
-      .groupByKey(_.txId)
-      .flatMapGroupsWithState[TxState, TxResult](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (txId, events, state) =>
-          onGroup(txId, events, state, payWaitMs, receiptWaitMs)
-      }
-  }
-
-  /** The same CoProcess clone on `transformWithState` — [[detect]] stays
-    * as the `flatMapGroupsWithState` compatibility surface. A matched pair
-    * deletes its pending lonely-side timers (TWS timers outlive cleared
-    * state, unlike the single GroupState timeout), and the timer handler
-    * treats already-resolved keys as no-ops.
-    */
-  def detectTws(pays: Dataset[OrderEvent], receipts: Dataset[ReceiptEvent],
-      payWaitMs: Long = PayWaitMs, receiptWaitMs: Long = ReceiptWaitMs)
-      : Dataset[TxResult] = {
-    import pays.sparkSession.implicits._
-    tagged(pays, receipts)
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis(
-        org.apache.spark.sql.functions.col("tsMs")))
-      .withWatermark("ts", "0 seconds")
-      .as[TxEvent]
-      .groupByKey(_.txId)
-      .transformWithState(
-        new TxMatchProcessor(payWaitMs, receiptWaitMs),
-        TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  class TxMatchProcessor(payWaitMs: Long, receiptWaitMs: Long)
-      extends StatefulProcessor[String, TxEvent, TxResult] {
-
-    @transient private var st: ValueState[TxState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[TxState]("tx_state",
-        Encoders.product[TxState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        txId: String,
-        rows: Iterator[TxEvent],
-        timerValues: TimerValues): Iterator[TxResult] = {
-      var s = if (st.exists()) st.get() else TxState(None, None, None, None)
-      val out = Seq.newBuilder[TxResult]
-      rows.toSeq.sortBy(e => (e.tsMs, e.side)).foreach { e =>
-        if (e.side == "pay")
-          s = s.copy(payTs = Some(e.tsMs), payOrderId = Some(e.orderId))
-        else
-          s = s.copy(receiptTs = Some(e.tsMs), receiptChannel = Some(e.payChannel))
-        if (s.payTs.isDefined && s.receiptTs.isDefined) {
-          out += TxResult(txId, "matched", s.payTs, s.receiptTs,
-            s.payOrderId, s.receiptChannel)
-          s = TxState(None, None, None, None)
-          st.clear()
-          getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-        }
-      }
-      if (s.payTs.isDefined || s.receiptTs.isDefined) {
-        st.update(s)
-        val deadline = (s.payTs.map(_ + payWaitMs).toSeq ++
-          s.receiptTs.map(_ + receiptWaitMs).toSeq).min
-        getHandle.registerTimer(math.max(deadline,
-          timerValues.getCurrentWatermarkInMs() + 1))
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(
-        txId: String,
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[TxResult] = {
-      if (!st.exists()) Iterator.empty // matched before the horizon
-      else {
-        val s = st.get()
-        st.clear()
-        val out = Seq.newBuilder[TxResult]
-        if (s.payTs.isDefined)
-          out += TxResult(txId, "unmatched_pay", s.payTs, None,
-            s.payOrderId, None)
-        if (s.receiptTs.isDefined)
-          out += TxResult(txId, "unmatched_receipt", None, s.receiptTs, None,
-            s.receiptChannel)
-        out.result().iterator
-      }
-    }
-  }
-
-  private[streaming] def onGroup(
-      txId: String,
-      events: Iterator[TxEvent],
-      state: GroupState[TxState],
-      payWaitMs: Long,
-      receiptWaitMs: Long): Iterator[TxResult] = {
-
-    if (state.hasTimedOut) {
-      val s = state.getOption.getOrElse(TxState(None, None, None, None))
-      state.remove()
-      val out = Seq.newBuilder[TxResult]
-      if (s.payTs.isDefined)
-        out += TxResult(txId, "unmatched_pay", s.payTs, None, s.payOrderId, None)
-      if (s.receiptTs.isDefined)
-        out += TxResult(txId, "unmatched_receipt", None, s.receiptTs, None,
-          s.receiptChannel)
-      out.result().iterator
-    } else {
-      var s = state.getOption.getOrElse(TxState(None, None, None, None))
-      val out = Seq.newBuilder[TxResult]
-      events.toSeq.sortBy(e => (e.tsMs, e.side)).foreach { e =>
-        if (e.side == "pay") s = s.copy(payTs = Some(e.tsMs), payOrderId = Some(e.orderId))
-        else s = s.copy(receiptTs = Some(e.tsMs), receiptChannel = Some(e.payChannel))
-        if (s.payTs.isDefined && s.receiptTs.isDefined) {
-          out += TxResult(txId, "matched", s.payTs, s.receiptTs,
-            s.payOrderId, s.receiptChannel)
-          s = TxState(None, None, None, None)
-          state.remove()
-        }
-      }
-      if (s.payTs.isDefined || s.receiptTs.isDefined) {
-        state.update(s)
-        // asymmetric lonely-side waits, exactly the reference's two timers;
-        // a deadline already behind the watermark fires at the next batch
-        val deadline = (s.payTs.map(_ + payWaitMs).toSeq ++
-          s.receiptTs.map(_ + receiptWaitMs).toSeq).min
-        state.setTimeoutTimestamp(
-          math.max(deadline, state.getCurrentWatermarkMs() + 1))
-      }
-      out.result().iterator
-    }
+    val tagged = pays
+      .map(o => TxEvent(o.txId, "pay", o.ts.getTime, o.orderId, ""))
+      .unionByName(receipts.map(x =>
+        TxEvent(x.txId, "receipt", x.ts.getTime, -1L, x.payChannel)))
+    DeadlineMachine.run[String, TxEvent, TxState, TxResult](
+      tagged
+        .withColumn("ts", timestamp_millis(col("tsMs")))
+        .withWatermark("ts", "0 seconds")
+        .as[TxEvent]
+        .groupByKey(_.txId),
+      empty = TxState(None, None, None, None),
+      order = Ordering.by(e => (e.tsMs, e.side)),
+      step = (txId, s, e) => {
+        val next =
+          if (e.side == "pay")
+            s.copy(payTs = Some(e.tsMs), payOrderId = Some(e.orderId))
+          else
+            s.copy(receiptTs = Some(e.tsMs), receiptChannel = Some(e.payChannel))
+        if (next.payTs.isDefined && next.receiptTs.isDefined)
+          Left(TxResult(txId, "matched", next.payTs, next.receiptTs,
+            next.payOrderId, next.receiptChannel))
+        else Right(next)
+      },
+      // asymmetric lonely-side waits, exactly the reference's two timers
+      deadline = s => (s.payTs.map(_ + payWaitMs) ++
+        s.receiptTs.map(_ + receiptWaitMs)).minOption,
+      expire = (txId, s) =>
+        s.payTs.iterator.map(_ =>
+          TxResult(txId, "unmatched_pay", s.payTs, None, s.payOrderId, None)) ++
+        s.receiptTs.iterator.map(_ =>
+          TxResult(txId, "unmatched_receipt", None, s.receiptTs, None,
+            s.receiptChannel)))
   }
 }

@@ -12,18 +12,6 @@ import graft.streaming.DriftStream.DriftRow
 class DriftStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   // (tsMs, event_type) — day d, offset seconds s
   private def ev(d: Int, s: Int, t: String): (Long, String) =
     (d * 86400000L + s * 1000L, t)

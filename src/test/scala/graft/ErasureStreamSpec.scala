@@ -12,12 +12,8 @@ class ErasureStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("erasure stream matches a reference model over randomized batches") {
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
-    try {
+    withRocksDb {
       val rnd = new scala.util.Random(42)
       val in = MemoryStream[In]
       val q = ErasureStream.erasure(in.toDS()).toDF()
@@ -65,23 +61,12 @@ class ErasureStreamSpec extends SparkSpec {
         }
         assert(dead.nonEmpty, "seed produced no erasures — re-seed the test")
       } finally q.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("erasure rollup: deletion propagates to bucket aggregates as retracts") {
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
-    try {
+    withRocksDb {
       val log = scala.collection.mutable.ArrayBuffer
         .empty[(Boolean, graft.streaming.ErasureRollup.BucketAgg)]
       val in = MemoryStream[In]
@@ -133,23 +118,12 @@ class ErasureStreamSpec extends SparkSpec {
           0L -> BucketAgg(0L, 1L, 2L, 200L),
           1L -> BucketAgg(1L, 1L, 1L, 40L)))
       } finally q.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("erasure stream: upsert, ack-with-cascade, then permanent suppression") {
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
-    try {
+    withRocksDb {
       val in = MemoryStream[In]
       val q = ErasureStream.erasure(in.toDS()).toDF()
         .writeStream.format("memory").queryName("erasure")
@@ -203,13 +177,6 @@ class ErasureStreamSpec extends SparkSpec {
         assert(b4.toSet == Set(Out(2L, "profile", 2000L, 4L, 400L)))
         assert(rows().count(r => r.user_id == 2L && r.kind == "purge_ack") == 0)
       } finally q.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

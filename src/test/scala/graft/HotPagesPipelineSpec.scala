@@ -15,12 +15,8 @@ class HotPagesPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("split stream feeds windowed counts; late rows surface, not vanish") {
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
-    try {
+    withRocksDb {
       val in = MemoryStream[Hit]
       // disorder 5 s, lateness 60 s — the reference's HotPages budgets
       val tagged = LateSplit.splitChained(in.toDS(),
@@ -60,13 +56,6 @@ class HotPagesPipelineSpec extends SparkSpec {
         assert(counted.filter(_._1 == "/home").forall(_._2 <= 2))
         assert(counted.filter(_._1 == "/cart").forall(_._2 == 1))
       } finally { lateQ.stop(); mainQ.stop() }
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

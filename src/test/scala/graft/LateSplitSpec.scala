@@ -12,12 +12,8 @@ class LateSplitSpec extends SparkSpec {
   import spark.implicits._
 
   test("rows behind watermark−lateness are tagged late, others pass through") {
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
-    try {
+    withRocksDb {
       val in = MemoryStream[Hit]
       // disorder 5 s, lateness 60 s, slack 1000 s
       val q = LateSplit.split(in.toDS(),
@@ -41,13 +37,6 @@ class LateSplitSpec extends SparkSpec {
         assert(byTs(9950000L) == "ontime")
         assert(got.length == 4) // nothing dropped: capture, not discard
       } finally q.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

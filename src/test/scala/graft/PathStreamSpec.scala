@@ -21,18 +21,6 @@ class PathStreamSpec extends SparkSpec {
       .as[(Long, String, String)].collect().toSet
   }
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   private def runStream(batches: Seq[Seq[PathEvent]],
       disorderMs: Long = 0L): Seq[PathEdge] = withRocksDb {
     implicit val sqlCtx = spark.sqlContext

@@ -216,11 +216,7 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
   }
 
   test("chained sessionization + top-N equals the batch restatement") {
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try (1 to 3).foreach { seed =>
+    withRocksDb { (1 to 3).foreach { seed =>
       implicit val sqlCtx = spark.sqlContext
       val data = randomEvents(seed, 150)
       val in = MemoryStream[Event]
@@ -261,13 +257,6 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
           .as[(Long, Int, String, Long)].collect().toSet
         assert(streaming == batch, s"seed=$seed diverged")
       } finally q.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    }}
   }
 }

@@ -11,18 +11,6 @@ import graft.streaming.StreamingCaps.DocArrival
 class StreamingCapsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("admits the first N per cell across micro-batches, rejects the rest") {
     withRocksDb {
       implicit val sqlCtx = spark.sqlContext

@@ -1,14 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.model.OrderEvent
-import graft.streaming.OrderTimeoutStream
+import graft.model.{OrderEvent, ReceiptEvent}
+import graft.streaming.{CepLite, OrderTimeoutStream, TxMatchStream}
 
 /** Integration: unbounded file-source replay of the whole events table
   * through the stateful layer (S1 streaming replay), and exactly-once
-  * checkpoint recovery across a query restart.
+  * checkpoint recovery across a query restart for each of the reference's
+  * three keyed state machines (order timeout, tx match, CEP).
   */
 class StreamingIntegrationSpec extends SparkSpec {
   import spark.implicits._
@@ -100,34 +102,43 @@ class StreamingIntegrationSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("checkpointed query restarts exactly-once (no lost or duplicated state)") {
-    implicit val sqlCtx = spark.sqlContext
+  private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+
+  /** Two lifetimes of one append query on one checkpoint: `before` feeds
+    * the first, which is then stopped; `after` feeds the query restarted
+    * from the checkpoint. Returns every row both lifetimes wrote.
+    */
+  private def acrossRestart[T: Encoder](df: => DataFrame)(before: => Unit)(
+      after: => Unit): Array[T] = {
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val outDir = Files.createTempDirectory("graft_out").toString
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-
-    val in = MemoryStream[OrderEvent]
-    def start() = OrderTimeoutStream.detect(in.toDS(), deadlineMs = 60000).toDF()
-      .writeStream.format("parquet")
+    def start() = df.writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
-
     val q1 = start()
-    in.addData(OrderEvent(1, "create", "a", ts(10)), OrderEvent(1, "pay", "a", ts(20)),
-      OrderEvent(2, "create", "b", ts(10)))
+    before
     q1.processAllAvailable()
     q1.stop()
-
-    // restart from the checkpoint; pending state (order 2) must survive
     val q2 = start()
-    in.addData(OrderEvent(3, "create", "c", ts(30)), OrderEvent(3, "pay", "c", ts(40)),
-      OrderEvent(9, "create", "", ts(10000))) // watermark → fire order 2 timer
+    after
     q2.processAllAvailable()
     q2.stop()
+    spark.read.parquet(outDir).as[T].collect()
+  }
 
-    val out = spark.read.parquet(outDir).as[graft.model.OrderResult].collect()
-      .filter(_.orderId != 9L)
+  test("checkpointed query restarts exactly-once (no lost or duplicated state)") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[OrderEvent]
+    val out = acrossRestart[graft.model.OrderResult](
+        OrderTimeoutStream.detect(in.toDS(), deadlineMs = 60000).toDF()) {
+      in.addData(OrderEvent(1, "create", "a", ts(10)), OrderEvent(1, "pay", "a", ts(20)),
+        OrderEvent(2, "create", "b", ts(10)))
+    } {
+      // restart from the checkpoint; pending state (order 2) must survive
+      in.addData(OrderEvent(3, "create", "c", ts(30)), OrderEvent(3, "pay", "c", ts(40)),
+        OrderEvent(9, "create", "", ts(10000))) // watermark → fire order 2 timer
+    }.filter(_.orderId != 9L)
     val byOrder = out.groupBy(_.orderId).view.mapValues(_.map(_.resultState)).toMap
     assert(byOrder(1L).toSeq == Seq("payed successfully")) // exactly once
     assert(byOrder(3L).toSeq == Seq("payed successfully"))
@@ -135,15 +146,58 @@ class StreamingIntegrationSpec extends SparkSpec {
     assert(out.length == 3)
   }
 
+  test("tx match restarts exactly-once: parked sides flush once, pairs never re-emit") {
+    implicit val sqlCtx = spark.sqlContext
+    val pays = MemoryStream[OrderEvent]
+    val receipts = MemoryStream[ReceiptEvent]
+    val out = acrossRestart[TxMatchStream.TxResult](
+        TxMatchStream.detect(pays.toDS(), receipts.toDS()).toDF()) {
+      // every event inside the 3 s receipt wait, so a trigger that falls
+      // between the two addData calls cannot move the watermark past a
+      // deadline: B and C park, E's pay waits for its receipt
+      pays.addData(OrderEvent(1, "pay", "A", ts(10)), OrderEvent(2, "pay", "B", ts(11)),
+        OrderEvent(5, "pay", "E", ts(12)))
+      receipts.addData(ReceiptEvent("A", "wechat", ts(11)),
+        ReceiptEvent("C", "alipay", ts(12)))
+    } {
+      receipts.addData(ReceiptEvent("E", "wechat", ts(13)),
+        ReceiptEvent("Z", "wechat", ts(1000)))
+      pays.addData(OrderEvent(9, "pay", "Z", ts(1000))) // watermark → flush B, C
+    }.filter(_.txId != "Z")
+    val byTx = out.groupBy(_.txId).view.mapValues(_.map(_.tag).toSeq).toMap
+    assert(byTx("A") == Seq("matched")) // exactly once
+    assert(byTx("E") == Seq("matched")) // parked pay resumed after the restart
+    assert(byTx("B") == Seq("unmatched_pay")) // state + deadline survived
+    assert(byTx("C") == Seq("unmatched_receipt"))
+    assert(out.length == 4)
+  }
+
+  test("CEP restarts exactly-once: a parked partial match times out once") {
+    implicit val sqlCtx = spark.sqlContext
+    import CepLite.KeyedEvent
+    val in = MemoryStream[KeyedEvent]
+    val out = acrossRestart[CepLite.CepMatch](
+        CepLite.detect(in.toDS(), Seq("create", "pay"), withinMs = 60000).toDF()) {
+      in.addData(KeyedEvent(1, "create", 10000), KeyedEvent(1, "pay", 20000),
+        KeyedEvent(2, "create", 10000), KeyedEvent(4, "create", 15000))
+    } {
+      in.addData(KeyedEvent(3, "create", 30000), KeyedEvent(3, "pay", 40000),
+        KeyedEvent(4, "pay", 50000),
+        KeyedEvent(9, "other", 10000000)) // watermark → fire key 2's within
+    }
+    val byKey = out.groupBy(_.key).view.mapValues(_.map(m => m.tag -> m.depth).toSeq).toMap
+    assert(byKey(1L) == Seq("matched" -> 2)) // exactly once
+    assert(byKey(3L) == Seq("matched" -> 2))
+    assert(byKey(4L) == Seq("matched" -> 2)) // step 1 resumed after the restart
+    assert(byKey(2L) == Seq("timeout" -> 1)) // state + deadline survived
+    assert(out.length == 4)
+  }
+
   test("late-split watermark survives a checkpointed restart") {
     import graft.streaming.LateSplit
     import graft.streaming.LateSplit.Hit
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ckpt = Files.createTempDirectory("late_ckpt").toString
       val outDir = Files.createTempDirectory("late_out").toString
       val in = MemoryStream[Hit]
@@ -171,13 +225,6 @@ class StreamingIntegrationSpec extends SparkSpec {
       assert(got(10000000L) == "ontime")
       assert(got(9000000L) == "late", "persisted watermark lost on restart")
       assert(got(9950000L) == "ontime")
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

@@ -21,18 +21,6 @@ class StreamingSketchSpec extends SparkSpec {
   private val SEED = 42
   private val SHARDS = 4
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def latestPerShard(rows: Seq[(Int, Array[Byte])]): Seq[Array[Byte]] =
     rows.groupBy(_._1).values.map { perShard =>
       // update mode re-emits a shard's sketch every batch; totalCount grows

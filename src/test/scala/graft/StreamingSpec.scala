@@ -56,10 +56,14 @@ class StreamingSpec extends SparkSpec {
       in.addData(OrderEvent(7, "pay", "t7", ts(100)),
         OrderEvent(7, "create", "t7", ts(40)))
       q.processAllAvailable()
+      // a stale deadline timer must NOT re-emit for the resolved order
+      in.addData(OrderEvent(99, "create", "", ts(5000)))
+      q.processAllAvailable()
       val got = spark.table("order_results_ooo")
         .as[graft.model.OrderResult].collect()
       assert(got.map(r => r.orderId -> r.resultState).toMap ==
         Map(7L -> "payed successfully"))
+      assert(got.length == 1)
     } finally q.stop()
   }
 

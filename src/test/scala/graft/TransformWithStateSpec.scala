@@ -10,12 +10,8 @@ class TransformWithStateSpec extends SparkSpec {
   import spark.implicits._
 
   test("two-timer top-N: emit at windowEnd, clear at windowEnd+lateness") {
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
-    try {
+    withRocksDb {
       val in = MemoryStream[TopNState.KeyedCount]
       val q = TopNMultiTimer.topN(in.toDS(), n = 2, latenessMs = 60000).toDF()
         .writeStream.format("memory").queryName("tws_topn")
@@ -40,13 +36,6 @@ class TransformWithStateSpec extends SparkSpec {
           .filter(_.windowEnd == 100000)
         assert(all.length == first.length) // no duplicate emissions on cleanup
       } finally q.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

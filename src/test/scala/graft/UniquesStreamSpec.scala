@@ -14,18 +14,6 @@ import graft.streaming.UniquesStream
 class UniquesStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streamed 7-day HLL uniques land within the batch ±5% gate") {
     withRocksDb {
     val dir = sf("sf0.001")
