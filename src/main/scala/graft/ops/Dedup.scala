@@ -59,7 +59,7 @@ object Dedup {
     */
   def explodedGrams(df: DataFrame, n: Int, distinct: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val others = df.columns.filterNot(_ == "text").map(col)
+    val others = df.columns.toSeq.filterNot(_ == "text").map(col)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val words = df.select(others :+
       posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "w")): _*)
@@ -317,7 +317,7 @@ object Dedup {
     */
   def connectedComponents(
       vertices: DataFrame, pairs: DataFrame, maxIters: Int = 100,
-      checkpointEvery: Int = 5, starAfter: Int = 20,
+      starAfter: Int = 20,
       singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
@@ -372,7 +372,6 @@ object Dedup {
     pr.unpersist()
     var labels = vertices.select(col("doc_id"), col("doc_id").as("cluster"))
       .cache()
-    var prevCached = labels
     var converged = false
     var i = 0
     while (!converged && i < math.min(starAfter, maxIters)) {
@@ -384,31 +383,18 @@ object Dedup {
       // change detection rides the propagation join (a "did any label
       // drop" flag computed in-row) — a separate next⨝prev count join
       // would pay an extra shuffle per iteration for the same bit
-      val next0 = labels.join(nbrMin, Seq("doc_id"), "left")
+      val next = labels.join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
             .as("cluster"),
           (coalesce(col("nbr_min"), col("cluster")) < col("cluster"))
             .as("chg"))
-      // caching materializes the DATA but the logical plan still nests one
-      // join+agg layer per iteration — at diameter ~50 (deep dup chains the
-      // iteration budget explicitly allows) analysis + codegen cost per
-      // iteration grows superlinearly and can stall the driver. Cutting the
-      // plan back to a leaf every few iterations bounds it; localCheckpoint
-      // (eager) costs one extra materialization per `checkpointEvery`, nil
-      // at the shallow convergence near-dup clusters actually exhibit.
-      // `labels` feeds each round TWICE (nbrMin + the outer join), so the
-      // un-checkpointed plan TREE doubles per round: at depth 10 the
-      // walked tree is ~2^10 subtrees and any plan-string consumer (AQE
-      // listener events, error messages) traverses ALL of it — measured
-      // 1.98 GB of plan text and ~1 CPU-min per event on an ER-shaped
-      // graph before the default came down to 5 (2^5 subtrees, trivial).
-      val next = if ((i + 1) % checkpointEvery == 0) next0.localCheckpoint()
-                 else next0.cache()
-      val changed = next.filter(col("chg")).count() // materializes the cache
-      prevCached.unpersist()
-      prevCached = next
-      labels = next.select(col("doc_id"), col("cluster"))
+      // `labels` feeds each round TWICE (nbrMin + the outer join), so an
+      // uncut plan TREE doubles per round (1.98 GB of plan text at depth 10,
+      // SCALE.md §8f); the cut keeps every round's plan the same size
+      val (cut, changed) = Fixpoint.step(labels, next)(
+        _.filter(col("chg")).count())
+      labels = cut.select(col("doc_id"), col("cluster"))
       converged = changed == 0
       i += 1
     }
@@ -458,8 +444,8 @@ object Dedup {
     */
   private[ops] def starContract(
       edgeList: DataFrame, maxRounds: Int): DataFrame = {
-    // eager checkpoint (not cache): e's plan is inlined ~12× into each
-    // round's tree (see below), so it must enter the loop as a LEAF
+    // a cut (not a cache): e's plan is inlined ~12× into each round's
+    // tree (see below), so it must enter the loop as a LEAF
     var e = edgeList
       .select(greatest(col("src"), col("dst")).as("hi"),
         least(col("src"), col("dst")).as("lo"))
@@ -486,19 +472,16 @@ object Dedup {
         .filter(col("hi") =!= col("lo"))
         .unionAll(mn2.select(col("hi"), col("mn").as("lo")))
         .distinct()
-      // truncate lineage EVERY round, not periodically: Catalyst logical
-      // plans are trees, and one star round references the previous edge
-      // set ~12× (sym twice in large, large thrice in small), so plan SIZE
-      // grows ~12^rounds between truncations — five un-truncated rounds
-      // overflow the tree-printer's stack, never mind the analyzer. The
-      // round is materialized for the convergence count anyway, so the
-      // eager checkpoint costs one cache write, not an extra computation.
-      val next = small.localCheckpoint()
-      val nextCount = next.count()
-      // fixpoint test: both sides are distinct sets, so equal size plus
+      // one star round references the previous edge set ~12× (sym twice
+      // in large, large thrice in small), so an uncut plan grows
+      // ~12^rounds — five uncut rounds overflow the tree-printer's stack.
+      // Fixpoint test: both sides are distinct sets, so equal size plus
       // empty difference means set equality (stars map to themselves)
-      converged = nextCount == prevCount && next.exceptAll(e).count() == 0
-      e.unpersist()
+      val (next, (nextCount, same)) = Fixpoint.step(e, small) { n =>
+        val c = n.count()
+        (c, c == prevCount && n.exceptAll(e).count() == 0)
+      }
+      converged = same
       e = next
       prevCount = nextCount
       r += 1
@@ -509,12 +492,12 @@ object Dedup {
           s"($prevCount edges live) — this bounds only a runaway loop; " +
           "O(log d) rounds suffice for any real graph")
     // at the fixpoint each non-root node carries exactly one edge, to its
-    // component minimum; eager checkpoint so unpersisting `e` cannot force
-    // a full-loop recompute when the caller consumes the mapping
+    // component minimum; eager checkpoint, so the mapping no longer reads
+    // `e` when its blocks are released
     val roots = e.groupBy(col("hi")).agg(min(col("lo")).as("root"))
       .select(col("hi").as("node"), col("root"))
       .localCheckpoint()
-    e.unpersist()
+    Fixpoint.release(e)
     roots
   }
 

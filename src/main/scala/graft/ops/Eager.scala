@@ -23,10 +23,10 @@ import org.apache.spark.sql.DataFrame
   * ([[Similarity.lshTopK]]), which must not execute its regime count
   * under an audit.
   *
-  * Iterative-loop internals (graph fixpoints, union-find outputs) keep
-  * literal `localCheckpoint()` calls: their construction is execution —
-  * a plan-only mode would nest one layer per round and push analysis cost
-  * superlinear (the r4 rule) without avoiding any work.
+  * Iterative-loop internals ([[Fixpoint.step]]'s per-round cut,
+  * union-find outputs) keep literal `localCheckpoint()` calls: their
+  * construction is execution — a plan-only mode would nest one layer per
+  * round and push analysis cost superlinear without avoiding any work.
   */
 object Eager {
   @volatile private[graft] var planOnly: Boolean = false

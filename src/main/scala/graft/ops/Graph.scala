@@ -97,8 +97,8 @@ object Graph {
     * exchanges of a frame that fits in one task is pure scheduling.
     * Above the limit the distributed loop runs: edges⨝ranks keyed on
     * LONG node ids, per-round in-flow as a map-side-combinable integer
-    * sum, `localCheckpoint` every `checkpointEvery` rounds to stop the
-    * logical plan nesting one join layer per round (the round-4 rule).
+    * sum, each round cut to a leaf by [[Fixpoint.step]] so its plan
+    * does not grow with the round count.
     *
     * 100 TB shape: the event log never enters the loop — callers
     * aggregate it to distinct edges first (one shuffle over the raw log);
@@ -107,9 +107,8 @@ object Graph {
     */
   def pageRank(
       edges: DataFrame, iters: Int = 10,
-      checkpointEvery: Int = 5,
       singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame =
-    core(edges, None, iters, checkpointEvery, singleTaskBytes)
+    core(edges, None, iters, singleTaskBytes)
 
   /** Personalized PageRank: identical recurrence, but the restart mass
     * (1−d) injects ONLY at the `seeds` nodes (a one-column LONG frame),
@@ -130,9 +129,8 @@ object Graph {
     */
   def personalizedPageRank(
       edges: DataFrame, seeds: DataFrame, iters: Int = 10,
-      checkpointEvery: Int = 5,
       singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame =
-    core(edges, Some(seeds), iters, checkpointEvery, singleTaskBytes)
+    core(edges, Some(seeds), iters, singleTaskBytes)
 
   /** Anchor scale for [[hits]] scores: after each half-step the side's
     * total mass renormalizes to ≈ this. With the default 10^12, edge
@@ -163,12 +161,11 @@ object Graph {
     * primitive arrays; above it, per-round
     * src-/dst-keyed integer-sum aggregations with each half-step's 1-ROW
     * total collected to the driver (model-sized, the documented
-    * bounded-collect contract) and `localCheckpoint` every
-    * `checkpointEvery` rounds. Output: (node, side, score_s) with side
-    * 'hub' for the src side and 'auth' for the dst side.
+    * bounded-collect contract), each half-step's raw sums cut by
+    * [[Fixpoint.step]]. Output: (node, side, score_s) with side 'hub'
+    * for the src side and 'auth' for the dst side.
     */
   def hits(edges: DataFrame, iters: Int = 10,
-      checkpointEvery: Int = 5,
       singleTaskBytes: Long = Regime.SingleTaskBytes,
       scale: Long = HitsScale): DataFrame = {
     val spark = edges.sparkSession
@@ -237,36 +234,28 @@ object Graph {
       return out
     }
 
-    def renorm(raw: DataFrame, checkpoint: Boolean): DataFrame = {
-      val rc = raw.cache()
-      // 1-row total (bounded collect): the divisor must be ONE exact
-      // integer, not a per-partition approximation
-      val tot = rc.agg(sum(col("raw"))).first().getLong(0)
+    // one half-step: the side's raw sums are cut, their 1-row total
+    // (bounded collect: the divisor must be ONE exact integer, not a
+    // per-partition approximation) is the round's action, and the
+    // renormalized side is a projection of the cut
+    def renorm(prev: DataFrame, raw: DataFrame): DataFrame = {
+      val (rc, tot) = Fixpoint.step(prev, raw)(
+        _.agg(sum(col("raw"))).first().getLong(0))
       val d = math.max(tot / scale, 1L)
-      val s = rc.select(col("node"), expr(s"raw div $d").as("s"))
-      val out = if (checkpoint) s.localCheckpoint() else { s.cache().count(); s }
-      rc.unpersist()
-      out
+      rc.select(col("node"), expr(s"raw div $d").as("s"))
     }
     var h = e.select(col("src").as("node")).distinct()
       .select(col("node"), lit(scale).as("s")).cache()
     var a: DataFrame = h // replaced in round 1
-    var prevH = h
-    var prevA: DataFrame = null
     var round = 0
     while (round < iters) {
-      val cp = (round + 1) % checkpointEvery == 0
-      a = renorm(e.join(h.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("s")).as("raw")), cp)
-      if (prevA != null) prevA.unpersist()
-      prevA = a
-      h = renorm(e.join(a.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(sum(col("s")).as("raw")), cp)
-      prevH.unpersist()
-      prevH = h
+      a = renorm(a, e.join(h.withColumnRenamed("node", "src"), "src")
+        .groupBy(col("dst").as("node")).agg(sum(col("s")).as("raw")))
+      h = renorm(h, e.join(a.withColumnRenamed("node", "dst"), "dst")
+        .groupBy(col("src").as("node")).agg(sum(col("s")).as("raw")))
       round += 1
     }
-    // h and a are materialized; the edge cache is no longer read
+    // h and a read cuts; the edge cache is no longer read
     e.unpersist()
     h.select(col("node"), lit("hub").as("side"), col("s").as("score_s"))
       .unionAll(a.select(col("node"), lit("auth").as("side"),
@@ -291,11 +280,10 @@ object Graph {
     * dst-sorted edge array (per-node vote counting in
     * a scratch map, O(E) per round); above it, per-round edge⨝label join,
     * (node, label) count aggregate, and a node-partitioned ROW_NUMBER
-    * argmax — every key a LONG, `localCheckpoint` every
-    * `checkpointEvery` rounds. Output: (node, community).
+    * argmax — every key a LONG, each round cut by [[Fixpoint.step]].
+    * Output: (node, community).
     */
   def labelPropagation(edges: DataFrame, iters: Int = 5,
-      checkpointEvery: Int = 5,
       singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -349,7 +337,6 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().cache()
     var lbl = nodes.select(col("node"), col("node").as("lbl")).cache()
-    var prev = lbl
     var round = 0
     import org.apache.spark.sql.expressions.Window
     while (round < iters) {
@@ -358,17 +345,15 @@ object Graph {
         .unionAll(lbl) // one self-vote
       val counted = votes.groupBy(col("node"), col("lbl"))
         .agg(count(lit(1)).as("c"))
-      val next0 = counted
+      val next = counted
         .withColumn("rn", row_number().over(Window.partitionBy(col("node"))
           .orderBy(col("c").desc, col("lbl").asc)))
         .filter(col("rn") === 1).select(col("node"), col("lbl"))
-      val next = if ((round + 1) % checkpointEvery == 0) next0.localCheckpoint()
-                 else { val c = next0.cache(); c.count(); c }
-      prev.unpersist()
-      prev = next
-      lbl = next
+      lbl = Fixpoint.step(lbl, next)(_.count())._1
       round += 1
     }
+    e.unpersist()
+    nodes.unpersist()
     lbl.withColumnRenamed("lbl", "community")
   }
 
@@ -398,12 +383,11 @@ object Graph {
     * ONE task over a dst-sorted edge array (per-node h-index from a sorted neighbor scan, O(E log E)
     * once + O(E) per round); above it, per-round edge⨝value join, a
     * node-partitioned DESC row_number (catalog-keyed window, never a
-    * global funnel), and a map-side-combinable MAX aggregate, with
-    * `localCheckpoint` every `checkpointEvery` rounds. Output:
-    * (node, deg, coreness).
+    * global funnel), and a map-side-combinable MAX aggregate, each round
+    * cut by [[Fixpoint.step]] with its changed bit computed in-row.
+    * Output: (node, deg, coreness).
     */
   def coreness(edges: DataFrame, iters: Int = 12,
-      checkpointEvery: Int = 5,
       singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -466,7 +450,6 @@ object Graph {
     val deg = e.groupBy(col("dst").as("node"))
       .agg(count(lit(1)).as("deg")).cache()
     var c = deg.select(col("node"), col("deg").as("c")).cache()
-    var prev = c
     var round = 0
     var stable = false
     while (round < iters && !stable) {
@@ -475,22 +458,23 @@ object Graph {
       val ranked = nb.withColumn("r",
         row_number().over(Window.partitionBy(col("node"))
           .orderBy(col("c").desc)))
-      val next0 = ranked.groupBy(col("node"))
+      val next = ranked.groupBy(col("node"))
         .agg(max(least(col("r").cast("long"), col("c"))).as("c"))
-      val next = if ((round + 1) % checkpointEvery == 0) next0.localCheckpoint()
-                 else { val cc = next0.cache(); cc.count(); cc }
-      // convergence probe on node-sized frames (cheap; also the monotone
-      // no-op tail means converged rounds cost one join over stable caches)
-      stable = next.join(prev.withColumnRenamed("c", "pc"), "node")
-        .filter(col("c") =!= col("pc")).isEmpty
-      prev.unpersist()
-      prev = next
-      c = next
+      // the changed bit rides the round (the connectedComponents rule): a
+      // node-keyed join to the previous values, counted by the action that
+      // materializes the cut
+      val (cut, changed) = Fixpoint.step(c,
+        next.join(c.withColumnRenamed("c", "pc"), "node")
+          .select(col("node"), col("c"), (col("c") =!= col("pc")).as("chg")))(
+        _.filter(col("chg")).count())
+      stable = changed == 0
+      c = cut.select(col("node"), col("c"))
       round += 1
     }
     require(stable,
       s"coreness: h-index fixpoint not converged after $iters rounds — " +
         "raise iters (convergence needs O(diameter)-ish rounds)")
+    e.unpersist()
     deg.join(c, "node")
       .select(col("node"), col("deg"), col("c").as("coreness"))
   }
@@ -575,12 +559,11 @@ object Graph {
     * primitive arrays (the seed set ships as an |S|-sized driver copy,
     * the documented bounded-collect contract); above it, per-round
     * frontier⨝edges equi-join + LONG-keyed anti-join against the settled
-    * frame, `localCheckpoint` every `checkpointEvery` rounds. Each round
-    * shuffles only the FRONTIER (≤ nodes), never the event log the edges
-    * were aggregated from. Output: (node, dist).
+    * frame, which each round extends and [[Fixpoint.step]] cuts. Each
+    * round shuffles only the FRONTIER (≤ nodes), never the event log the
+    * edges were aggregated from. Output: (node, dist).
     */
   def hopDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      checkpointEvery: Int = 5,
       singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -622,34 +605,27 @@ object Graph {
       return out
     }
 
-    // Distributed frontier loop: settled = everything reached so far,
-    // frontier = nodes settled exactly last round.
+    // Distributed frontier loop over ONE frame: settled = everything
+    // reached so far, its frontier = the rows settled exactly last round.
+    // Every round reads only the previous round's cut.
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     var settled = nodes
       .join(broadcast(s.withColumnRenamed("seed", "node")), Seq("node"))
       .select(col("node"), lit(0L).as("dist")).cache()
-    var frontier = settled
-    var frontierN = frontier.count() // materializes the seed frame
-    var prevSettled = settled
-    var prevFrontier = frontier
+    var frontierN = settled.count() // materializes the seed frame
     var h = 1
     while (h <= maxHops && frontierN > 0) {
       val news = e
-        .join(frontier.select(col("node").as("src")), "src")
+        .join(settled.filter(col("dist") === h - 1)
+          .select(col("node").as("src")), "src")
         .select(col("dst").as("node")).distinct()
         .join(settled, Seq("node"), "left_anti")
-        .select(col("node"), lit(h.toLong).as("dist")).cache()
-      frontierN = news.count()
-      val next0 = settled.unionAll(news)
-      val next = if (h % checkpointEvery == 0) next0.localCheckpoint()
-                 else { val c = next0.cache(); c.count(); c }
-      if (prevFrontier ne prevSettled) prevFrontier.unpersist()
-      prevSettled.unpersist()
+        .select(col("node"), lit(h.toLong).as("dist"))
+      val (next, n) = Fixpoint.step(settled, settled.unionAll(news))(
+        _.filter(col("dist") === h).count())
       settled = next
-      prevSettled = next
-      frontier = news
-      prevFrontier = news
+      frontierN = n
       h += 1
     }
     e.unpersist()
@@ -679,11 +655,10 @@ object Graph {
     * edges, not the two-column fixpoints' 4M; above it, per-round
     * edges⨝dist equi-join + dst-keyed MIN aggregate + an in-row
     * changed bit on the merge (the connectedComponents rule — no
-    * separate next⨝prev convergence join), `localCheckpoint` every
-    * `checkpointEvery` rounds. Output: (node, cost).
+    * separate next⨝prev convergence join), each round cut by
+    * [[Fixpoint.step]]. Output: (node, cost).
     */
   def minPlusDistances(edges: DataFrame, seeds: DataFrame, rounds: Int,
-      checkpointEvery: Int = 5,
       singleTaskBytes: Long = Regime.SingleTaskBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -749,7 +724,6 @@ object Graph {
       .join(broadcast(s.withColumnRenamed("seed", "node")), Seq("node"))
       .select(col("node"), lit(0L).as("cost")).cache()
     dist.count()
-    var prev = dist
     var r = 0
     var changed = 1L
     while (r < rounds && changed > 0) {
@@ -758,21 +732,19 @@ object Graph {
         .groupBy(col("dst").as("node"))
         .agg(min(col("cost") + col("w")).as("cand"))
       // full outer merge; the changed bit is computed IN-ROW here
-      val merged0 = dist.join(cand, Seq("node"), "full_outer")
+      val merged = dist.join(cand, Seq("node"), "full_outer")
         .select(col("node"),
           least(coalesce(col("cost"), lit(Long.MaxValue)),
             coalesce(col("cand"), lit(Long.MaxValue))).as("cost"),
           (col("cost").isNull ||
             (col("cand").isNotNull && col("cand") < col("cost")))
             .cast("long").as("chg"))
-      val merged = if ((r + 1) % checkpointEvery == 0) merged0.localCheckpoint()
-                   else { val c = merged0.cache(); c }
-      // ONE materialization pass doubles as the convergence count
-      changed = merged.agg(sum(col("chg"))).first().getLong(0)
-      val next = merged.select(col("node"), col("cost"))
-      prev.unpersist()
-      prev = merged
-      dist = next
+      // ONE materialization pass doubles as the convergence count (0 on
+      // an empty frame: no seed in the graph)
+      val (cut, chg) = Fixpoint.step(dist, merged)(
+        _.agg(coalesce(sum(col("chg")), lit(0L))).first().getLong(0))
+      changed = chg
+      dist = cut.select(col("node"), col("cost"))
       r += 1
     }
     e.unpersist()
@@ -784,7 +756,7 @@ object Graph {
     */
   private def core(
       edges: DataFrame, seeds: Option[DataFrame], iters: Int,
-      checkpointEvery: Int, singleTaskBytes: Long): DataFrame = {
+      singleTaskBytes: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
@@ -864,29 +836,26 @@ object Graph {
             when(col("is_seed"), lit(m)).otherwise(lit(0L)).as("r0"))
     }).cache()
     var ranks = nodes.select(col("node"), col("r0").as("r")).cache()
-    var prev = ranks
     var round = 0
     while (round < iters) {
       val inflow = esd
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(expr("(r * 85) div (deg * 100)")).as("in_r"))
-      val next0 = nodes.join(inflow, Seq("node"), "left")
+      val next = nodes.join(inflow, Seq("node"), "left")
         .select(col("node"),
           (col("base") + coalesce(col("in_r"), lit(0L))).as("r"))
-      val next = if ((round + 1) % checkpointEvery == 0) next0.localCheckpoint()
-                 else next0.cache()
       // the materialization pass doubles as the runtime overflow guard:
-      // agg(max) scans (and thus populates) every cached partition exactly
-      // like the count() it replaces
-      val mxRow = next.agg(max(col("r"))).first()
+      // agg(max) scans (and thus populates) every partition of the cut
+      val (cut, mxRow) = Fixpoint.step(ranks, next)(
+        _.agg(max(col("r"))).first())
       checkRankCeiling(if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0),
         round + 1)
-      prev.unpersist()
-      prev = next
-      ranks = next
+      ranks = cut
       round += 1
     }
+    esd.unpersist()
+    nodes.unpersist()
     ranks
   }
 

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions.{col, timestamp_millis}
   *
   * The pattern is a list of named predicates over a generic keyed event;
   * the NFA is the per-key state of a [[DeadlineMachine]] (current step +
-  * step timestamps) and `within` is its event-time deadline. Matches emit
-  * tag="matched" with the step timestamps; expirations emit tag="timeout"
-  * with the partial depth — the two PatternSelect/PatternTimeout functions
-  * as one tagged stream.
+  * first and last step timestamps) and `within` is its event-time
+  * deadline. Matches emit tag="matched" with the step timestamps;
+  * expirations emit tag="timeout" with the partial depth — the two
+  * PatternSelect/PatternTimeout functions as one tagged stream.
   *
   * The reference itself proves this equivalence by re-implementing the CEP
   * job as a hand state machine (`OrderPayTimeoutWithoutCEP.java:24-27`).
@@ -22,7 +22,13 @@ object CepLite {
 
   final case class KeyedEvent(key: Long, kind: String, tsMs: Long)
 
-  final case class CepState(step: Int, stepTs: List[Long])
+  /** Flat on purpose: `detect` reads only the first and last step times,
+    * and a collection field would decode through `MapObjects`, whose
+    * lambda-variable id grows every micro-batch, so the state's
+    * projections would compile anew on each batch.
+    */
+  final case class CepState(
+      step: Int, firstTs: Option[Long], lastTs: Option[Long])
 
   final case class CepMatch(
       key: Long,
@@ -43,20 +49,20 @@ object CepLite {
         .withWatermark("ts", "0 seconds")
         .as[KeyedEvent]
         .groupByKey(_.key),
-      empty = CepState(0, Nil),
+      empty = CepState(0, None, None),
       order = Ordering.by(_.tsMs),
       step = (key, s, e) =>
         if (s.step < pattern.length && e.kind == pattern(s.step)) {
-          val next = CepState(s.step + 1, e.tsMs :: s.stepTs)
+          val next = CepState(s.step + 1, s.firstTs.orElse(Some(e.tsMs)),
+            Some(e.tsMs))
           if (next.step == pattern.length)
-            Left(CepMatch(key, "matched", next.step,
-              next.stepTs.lastOption, next.stepTs.headOption))
+            Left(CepMatch(key, "matched", next.step, next.firstTs, next.lastTs))
           else Right(next)
         } else Right(s), // relaxed contiguity: non-matching kinds are skipped
-      // within(…) is anchored at the FIRST matched step (stepTs is
-      // newest-first), so later steps never extend the deadline
-      deadline = s => s.stepTs.lastOption.map(_ + withinMs),
+      // within(…) is anchored at the FIRST matched step, so later steps
+      // never extend the deadline
+      deadline = s => s.firstTs.map(_ + withinMs),
       expire = (key, s) => Iterator(CepMatch(key, "timeout", s.step,
-        s.stepTs.lastOption, s.stepTs.headOption)))
+        s.firstTs, s.lastTs)))
   }
 }

@@ -19,10 +19,4 @@ object LateData {
   def droppedByWatermark(q: StreamingQuery): Long =
     q.recentProgress.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark))
       .sum
-
-  /** Drops in the most recent micro-batch only. */
-  def lastBatchDropped(q: StreamingQuery): Long =
-    Option(q.lastProgress)
-      .map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum)
-      .getOrElse(0L)
 }

@@ -28,28 +28,6 @@ object StreamingWindows {
     slidingCountChained(stream.withWatermark(tsCol, delay),
       key, tsCol, size, slide)
 
-  /** W5 stand-in: update-mode pipeline — late rows inside the (widened)
-    * watermark re-emit refined counts, mirroring allowedLateness re-fires.
-    * Caller runs with `outputMode("update")`.
-    */
-  def slidingCountWithLateness(
-      stream: DataFrame, key: Column, tsCol: String,
-      size: String, slide: String, disorder: String, lateness: String): DataFrame = {
-    val widened = s"${toSeconds(disorder) + toSeconds(lateness)} seconds"
-    slidingCount(stream, key, tsCol, size, slide, widened)
-  }
-
-  private def toSeconds(interval: String): Long = {
-    val Array(n, unit) = interval.trim.split("\\s+", 2)
-    val mult = unit.toLowerCase match {
-      case u if u.startsWith("sec") => 1L
-      case u if u.startsWith("min") => 60L
-      case u if u.startsWith("hour") => 3600L
-      case u => throw new IllegalArgumentException(s"unsupported unit $u")
-    }
-    n.toLong * mult
-  }
-
   /** W1/W2 over an ALREADY-watermarked stream (e.g. downstream of a
     * chained stateful op like `LateSplit.splitChained`, where Spark
     * forbids re-declaring the watermark).

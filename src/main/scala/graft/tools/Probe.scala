@@ -112,7 +112,7 @@ object Probe {
     def runRegistry(label: String, queries0: Seq[String], probeDir: String): Unit = {
       val queries = only.fold(queries0)(s => queries0.filter(s))
       println(s"== $label (${copies}x, vs $sfDir) ==")
-      println(f"${"query"}%-22s ${"base"}%8s ${copies + "x"}%8s  ratio")
+      println(f"${"query"}%-22s ${"base"}%8s ${s"${copies}x"}%8s  ratio")
       queries.foreach { q =>
         val b = median((1 to 3).map(_ => timeQuery(q, sfDir)))
         val p = median((1 to 3).map(_ => timeQuery(q, probeDir)))

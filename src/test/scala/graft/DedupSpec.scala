@@ -262,7 +262,7 @@ class DedupSpec extends SparkSpec {
     // converge in ~7 and leave truncation untested — that path has its
     // own test below)
     val out = Dedup.connectedComponents(vertices, chain, maxIters = 100,
-      checkpointEvery = 5, starAfter = 100, singleTaskBytes = 0L)
+      starAfter = 100, singleTaskBytes = 0L)
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val secs = (System.nanoTime() - t0) / 1e9
     assert(labels.size == n && labels.values.forall(_ == 0L))
@@ -282,8 +282,7 @@ class DedupSpec extends SparkSpec {
     val chain = (0 until n - 1).map(i => (i.toLong, i + 1L))
       .toDF("doc_a", "doc_b")
     val before = graft.ops.Regime.stats.get("union_find")
-    val out = Dedup.connectedComponents(
-      vertices, chain, maxIters = 100, checkpointEvery = 5)
+    val out = Dedup.connectedComponents(vertices, chain, maxIters = 100)
     assert(graft.ops.Regime.stats.get("union_find") != before)
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == n && labels.values.forall(_ == 0L))
@@ -309,7 +308,7 @@ class DedupSpec extends SparkSpec {
     val allV = vertices.unionAll(Seq(9000L, 9001L, 9500L).toDF("doc_id"))
     val t0 = System.nanoTime()
     val out = Dedup.connectedComponents(allV, pairs, maxIters = 60,
-      checkpointEvery = 5, singleTaskBytes = 0L)
+      singleTaskBytes = 0L)
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val secs = (System.nanoTime() - t0) / 1e9
     assert((0 until n).forall(i => labels(i.toLong) == 0L))
@@ -759,7 +758,7 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0))
     // local union-find truth over the unioned pair graphs
     def closure(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map(docs.map(d => d -> d): _*)
+      val parent = scala.collection.mutable.Map(docs.toSeq.map(d => d -> d): _*)
       def find(x: Long): Long = {
         var r = x
         while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }

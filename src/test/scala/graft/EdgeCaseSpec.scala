@@ -327,6 +327,18 @@ class EdgeCaseSpec extends SparkSpec {
       .forall(_.getLong(1) == 0L))
   }
 
+  test("path loops agree across regimes when no seed is in the graph") {
+    import graft.ops.Graph
+    val w = Seq((0L, 1L, 2L), (1L, 2L, 3L)).toDF("src", "dst", "w")
+    val ghost = Seq(99L).toDF("seed")
+    for (limit <- Seq(graft.ops.Regime.SingleTaskBytes, 0L)) {
+      assert(Graph.minPlusDistances(w, ghost, 3, singleTaskBytes = limit)
+        .count() == 0)
+      assert(Graph.hopDistances(w.select("src", "dst"), ghost, 3,
+        singleTaskBytes = limit).count() == 0)
+    }
+  }
+
   test("round-13 ops are total on empty and degenerate documents") {
     // textrank on docs too short to pair (0-2 surviving tokens) and on an
     // empty corpus: the n > k pairing guards and pageRank's empty-graph

@@ -21,7 +21,7 @@ class SocketSourceSpec extends SparkSpec {
         val out = new PrintWriter(sock.getOutputStream, true)
         (1 to 50).foreach { i =>
           out.println(
-            s"10.0.0.$i - - 17/05/2015:10:05:${(i % 60).formatted("%02d")} +0000 GET /page/$i")
+            f"10.0.0.$i - - 17/05/2015:10:05:${i % 60}%02d +0000 GET /page/$i")
         }
         out.flush()
         Thread.sleep(3000) // keep the connection open while Spark reads

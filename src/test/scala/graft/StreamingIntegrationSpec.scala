@@ -10,7 +10,9 @@ import graft.streaming.{CepLite, OrderTimeoutStream, TxMatchStream}
 /** Integration: unbounded file-source replay of the whole events table
   * through the stateful layer (S1 streaming replay), and exactly-once
   * checkpoint recovery across a query restart for each of the reference's
-  * three keyed state machines (order timeout, tx match, CEP).
+  * three keyed state machines (order timeout, tx match, CEP), with the
+  * state each machine leaves in its checkpoint read back through Spark's
+  * state data source.
   */
 class StreamingIntegrationSpec extends SparkSpec {
   import spark.implicits._
@@ -106,10 +108,11 @@ class StreamingIntegrationSpec extends SparkSpec {
 
   /** Two lifetimes of one append query on one checkpoint: `before` feeds
     * the first, which is then stopped; `after` feeds the query restarted
-    * from the checkpoint. Returns every row both lifetimes wrote.
+    * from the checkpoint. Returns every row both lifetimes wrote, and the
+    * checkpoint.
     */
   private def acrossRestart[T: Encoder](df: => DataFrame)(before: => Unit)(
-      after: => Unit): Array[T] = {
+      after: => Unit): (Array[T], String) = {
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val outDir = Files.createTempDirectory("graft_out").toString
     def start() = df.writeStream.format("parquet")
@@ -124,13 +127,21 @@ class StreamingIntegrationSpec extends SparkSpec {
     after
     q2.processAllAvailable()
     q2.stop()
-    spark.read.parquet(outDir).as[T].collect()
+    (spark.read.parquet(outDir).as[T].collect(), ckpt)
   }
+
+  /** The keys a stopped query's keyed state store holds after its last
+    * batch: exactly the keys still parked, since an emitted or expired key
+    * must leave no state behind.
+    */
+  private def parkedKeys[K: Encoder](ckpt: String): Set[K] =
+    spark.read.format("statestore").load(ckpt).select("key.*").as[K]
+      .collect().toSet
 
   test("checkpointed query restarts exactly-once (no lost or duplicated state)") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[OrderEvent]
-    val out = acrossRestart[graft.model.OrderResult](
+    val (all, ckpt) = acrossRestart[graft.model.OrderResult](
         OrderTimeoutStream.detect(in.toDS(), deadlineMs = 60000).toDF()) {
       in.addData(OrderEvent(1, "create", "a", ts(10)), OrderEvent(1, "pay", "a", ts(20)),
         OrderEvent(2, "create", "b", ts(10)))
@@ -138,19 +149,21 @@ class StreamingIntegrationSpec extends SparkSpec {
       // restart from the checkpoint; pending state (order 2) must survive
       in.addData(OrderEvent(3, "create", "c", ts(30)), OrderEvent(3, "pay", "c", ts(40)),
         OrderEvent(9, "create", "", ts(10000))) // watermark → fire order 2 timer
-    }.filter(_.orderId != 9L)
+    }
+    val out = all.filter(_.orderId != 9L)
     val byOrder = out.groupBy(_.orderId).view.mapValues(_.map(_.resultState)).toMap
     assert(byOrder(1L).toSeq == Seq("payed successfully")) // exactly once
     assert(byOrder(3L).toSeq == Seq("payed successfully"))
     assert(byOrder(2L).toSeq == Seq("timeout")) // state survived the restart
     assert(out.length == 3)
+    assert(parkedKeys[Long](ckpt) == Set(9L)) // only the unexpired create
   }
 
   test("tx match restarts exactly-once: parked sides flush once, pairs never re-emit") {
     implicit val sqlCtx = spark.sqlContext
     val pays = MemoryStream[OrderEvent]
     val receipts = MemoryStream[ReceiptEvent]
-    val out = acrossRestart[TxMatchStream.TxResult](
+    val (all, ckpt) = acrossRestart[TxMatchStream.TxResult](
         TxMatchStream.detect(pays.toDS(), receipts.toDS()).toDF()) {
       // every event inside the 3 s receipt wait, so a trigger that falls
       // between the two addData calls cannot move the watermark past a
@@ -163,20 +176,23 @@ class StreamingIntegrationSpec extends SparkSpec {
       receipts.addData(ReceiptEvent("E", "wechat", ts(13)),
         ReceiptEvent("Z", "wechat", ts(1000)))
       pays.addData(OrderEvent(9, "pay", "Z", ts(1000))) // watermark → flush B, C
-    }.filter(_.txId != "Z")
+    }
+    val out = all.filter(_.txId != "Z")
     val byTx = out.groupBy(_.txId).view.mapValues(_.map(_.tag).toSeq).toMap
     assert(byTx("A") == Seq("matched")) // exactly once
     assert(byTx("E") == Seq("matched")) // parked pay resumed after the restart
     assert(byTx("B") == Seq("unmatched_pay")) // state + deadline survived
     assert(byTx("C") == Seq("unmatched_receipt"))
     assert(out.length == 4)
+    // every tx resolved, E's parked pay included: no key keeps state
+    assert(parkedKeys[String](ckpt) == Set.empty[String])
   }
 
   test("CEP restarts exactly-once: a parked partial match times out once") {
     implicit val sqlCtx = spark.sqlContext
     import CepLite.KeyedEvent
     val in = MemoryStream[KeyedEvent]
-    val out = acrossRestart[CepLite.CepMatch](
+    val (out, ckpt) = acrossRestart[CepLite.CepMatch](
         CepLite.detect(in.toDS(), Seq("create", "pay"), withinMs = 60000).toDF()) {
       in.addData(KeyedEvent(1, "create", 10000), KeyedEvent(1, "pay", 20000),
         KeyedEvent(2, "create", 10000), KeyedEvent(4, "create", 15000))
@@ -191,6 +207,8 @@ class StreamingIntegrationSpec extends SparkSpec {
     assert(byKey(4L) == Seq("matched" -> 2)) // step 1 resumed after the restart
     assert(byKey(2L) == Seq("timeout" -> 1)) // state + deadline survived
     assert(out.length == 4)
+    // key 4's partial match resolved after the restart: no key keeps state
+    assert(parkedKeys[Long](ckpt) == Set.empty[Long])
   }
 
   test("late-split watermark survives a checkpointed restart") {

@@ -310,7 +310,7 @@ class StreamingSimilaritySpec extends SparkSpec {
       .writeStream.format("memory").queryName("stream_knn")
       .outputMode("append").start()
     val got = try {
-      in.addData(arrivals: _*)
+      in.addData(arrivals.toSeq: _*)
       q.processAllAvailable()
       spark.table("stream_knn").select($"vec_id", $"predicted")
         .as[(Long, Long)].collect().toMap

@@ -141,6 +141,16 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("C1 CEP-lite state decodes without a collection") {
+    // a collection field decodes through MapObjects, whose lambda-variable
+    // id grows every micro-batch, so the state's projections would compile
+    // anew on each batch
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    import org.apache.spark.sql.catalyst.expressions.objects.MapObjects
+    val dec = ExpressionEncoder[CepLite.CepState]().objDeserializer
+    assert(dec.collectFirst { case m: MapObjects => m }.isEmpty, dec.toString)
+  }
+
   test("J2 stream-stream interval join buffers and matches within bounds") {
     implicit val sqlCtx = spark.sqlContext
     val pays = MemoryStream[OrderEvent]
