@@ -502,24 +502,10 @@ object DedupJobs {
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
     // exact verify on the linear candidate set, shared-gram machinery
-    val g = Dedup.explodedGrams(docs.select(col("doc_id"), col("text")),
-        JACCARD_N, distinct = false)
-      .select(col("doc_id"), Dedup.md5Long(col("gram")).as("gh"))
-      .distinct().cache()
-    val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val inter = cand
-      .join(g.select(col("doc_id").as("doc_a"), col("gh")), "doc_a")
-      .join(g.select(col("doc_id").as("doc_b"), col("gh")), Seq("doc_b", "gh"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_grams", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_grams", "nb"), "doc_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= JACCARD_THRESHOLD)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
+    val g = Dedup.hashedGrams(docs.select(col("doc_id"), col("text")),
+        JACCARD_N, distinct = true).cache()
+    Dedup.jaccardScored(Dedup.candidateOverlaps(cand, g), Dedup.setSizes(g),
+      JACCARD_THRESHOLD)
   }
 
   /** Oracle: ROW_NUMBER over the identical total sort key (DuckDB may
@@ -815,9 +801,7 @@ object DedupJobs {
           .filter(splitCol(spark) =!= "train")
           .select(col("doc_id"), col("text")),
         CONTAM_W, distinct = false)
-      .select(
-        conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long").as("gh1"),
-        conv(substring(md5(col("gram")), 9, 8), 16, 10).cast("long").as("gh2"))
+      .select(Dedup.windowHash(col("gram")): _*)
       .distinct()
   }
 
@@ -844,10 +828,8 @@ object DedupJobs {
     val pd = Dedup.explodedGrams(
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text")),
         CONTAM_W, distinct = false)
-      .select(col("doc_id"),
-        conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long").as("gh1"),
-        conv(substring(md5(col("gram")), 9, 8), 16, 10).cast("long").as("gh2"),
-        (splitCol(spark) === "train").as("is_train"))
+      .select((col("doc_id") +: Dedup.windowHash(col("gram"))) :+
+        (splitCol(spark) === "train").as("is_train"): _*)
       .groupBy(col("doc_id"), col("is_train"), col("gh1"), col("gh2"))
       .agg(count(lit(1)).as("c"))
       .cache()
@@ -1663,9 +1645,8 @@ object DedupJobs {
         staged.filter(col("keeper")).select(col("doc_id"), col("text")),
         CONTAM_W, distinct = false)
       .join(staged.select(col("doc_id"), col("is_train")), "doc_id")
-      .select(col("doc_id"), col("is_train"),
-        conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long").as("gh1"),
-        conv(substring(md5(col("gram")), 9, 8), 16, 10).cast("long").as("gh2"))
+      .select(Seq(col("doc_id"), col("is_train")) ++
+        Dedup.windowHash(col("gram")): _*)
     val contaminated = pd.filter(col("is_train"))
       .join(pd.filter(!col("is_train")).select(col("gh1"), col("gh2")),
         Seq("gh1", "gh2"), "left_semi")

@@ -34,6 +34,21 @@ object Dedup {
   def md5Long(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
+  /** The 64-bit window hash: md5's first 16 hex chars as two 32-bit limbs
+    * (gh1, gh2), so `gh1` is [[md5Long]]. Positional-window consumers key
+    * on both limbs: a single 32-bit key saturates by birthday collisions
+    * at crawl scale (~10¹¹ distinct windows against 2³² buckets), at 64
+    * bits the per-window false-collision probability stays ~n/2⁶⁴. The
+    * batch screens and their streaming twins
+    * ([[graft.streaming.StreamingDecontam]] joins on
+    * `DedupJobs.evalWindowHashes`) share this one definition.
+    */
+  def windowHash(window: Column): Seq[Column] = {
+    val h = md5(window)
+    Seq(conv(substring(h, 1, 8), 16, 10).cast("long").as("gh1"),
+      conv(substring(h, 9, 8), 16, 10).cast("long").as("gh2"))
+  }
+
   /** Distinct word tokens of a document. */
   def wordSet(text: Column): Column =
     array_distinct(split(trim(text), "\\s+"))
@@ -73,6 +88,25 @@ object Dedup {
     if (distinct) grams.distinct() else grams
   }
 
+  /** The hashed gram set: [[explodedGrams]] with each gram replaced by its
+    * 32-bit [[md5Long]] `gh`, keeping every non-`text` column of `df`
+    * (doc_id, and a blocking key where the caller has one). Grams never
+    * leave the window stage as strings, so every later shuffle is on ints.
+    *
+    * `distinct = true` is the set semantics Jaccard-style counting needs,
+    * taken ONCE, after hashing: the gram window leaves the frame
+    * partitioned by doc_id, which clusters (doc_id, …, gh) too, so the
+    * dedup adds no exchange (a string distinct inside [[explodedGrams]]
+    * would be a full extra gram shuffle). Duplicate-insensitive consumers
+    * (minhash's `min()`) keep `distinct = false`.
+    */
+  def hashedGrams(df: DataFrame, n: Int, distinct: Boolean): DataFrame = {
+    val keys = df.columns.toSeq.filterNot(_ == "text").map(col)
+    val hashed = explodedGrams(df, n, distinct = false)
+      .select(keys :+ md5Long(col("gram")).as("gh"): _*)
+    if (distinct) hashed.distinct() else hashed
+  }
+
   /** MinHash signature: k permutations simulated by salted hashes;
     * h_j(doc) = min over shingles of md5Long(j || ":" || shingle).
     * One row per doc with columns h0..h{k-1}. Shingles are word `n`-grams —
@@ -81,11 +115,11 @@ object Dedup {
     */
   def minhashSignatures(
       df: DataFrame, id: Column, text: Column, k: Int, n: Int = 2): DataFrame =
-    minhashFromGrams(
+    minhashFromHashes(
       // no distinct: min() is duplicate-insensitive, and skipping it leaves
       // exactly ONE exchange (the gram window's doc_id partitioning, which
       // the signature groupBy then reuses) between scan and signature agg
-      explodedGrams(df.select(id.as("doc_id"), text.as("text")), n,
+      hashedGrams(df.select(id.as("doc_id"), text.as("text")), n,
         distinct = false), k)
 
   /** Smallest prime above 2^32 — the universal-hash modulus. */
@@ -123,11 +157,6 @@ object Dedup {
     val aggs = (0 until k).map(j => min(minhashCol(col("gh"), j)).as(s"h$j"))
     hashed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
-
-  /** MinHash signatures from a distinct gram frame (doc_id, gram). */
-  def minhashFromGrams(grams: DataFrame, k: Int): DataFrame =
-    minhashFromHashes(
-      grams.select(col("doc_id"), md5Long(col("gram")).as("gh")), k)
 
   /** LSH candidate pairs from a signature frame: `bands` bands of `rowsPerBand`
     * hashes; docs sharing any full band are candidates. Output
@@ -736,49 +765,97 @@ object Dedup {
     inter.unionAll(intra)
   }
 
-  /** The shared-gram Jaccard core: pairs + per-doc set sizes over a frame
-    * of (doc_id, text, block). Intersections come from an equi-join on
-    * 32-bit gram hashes (shuffle on int, never a cross join); candidate
-    * pairs are only those sharing ≥1 gram in-block. Set sizes are counted
-    * in the same hash space, so engine parity holds even under
-    * (vanishingly rare) hash collisions. The shared-gram self-join is the
-    * quadratic zone: a gram shared by f in-block docs contributes f² join
-    * rows — callers fence it ([[jaccardPairs]] collapses identical
-    * contents first; [[jaccardPairsPrefix]] joins only df-ordered
-    * prefixes).
+  /** Per-doc gram-set sizes (doc_id, n_grams) of a distinct hashed gram
+    * frame, counted in the same hash space as the intersections, so
+    * engine parity holds even under (vanishingly rare) hash collisions.
     */
-  private def jaccardCore(
-      df: DataFrame, n: Int, threshold: Double,
-      scope: CacheScope = CacheScope.unmanaged): (DataFrame, DataFrame) = {
-    // one row per distinct (doc, gram-hash) — used three times (sizes + both
-    // join sides); cache instead of recomputing the explode+lead lineage.
-    // Set semantics via ONE distinct, on int keys, after hashing: the gram
-    // window leaves the frame partitioned by doc_id, which clusters
-    // (doc_id, block, gh) too, so this dedup adds no exchange (a string
-    // distinct inside explodedGrams would be a full extra gram shuffle).
-    val g = scope.cache(explodedGrams(
-        df.select(col("doc_id"), col("block"), col("text")), n,
-        distinct = false)
-      .select(col("doc_id"), col("block"), md5Long(col("gram")).as("gh"))
-      .distinct())
-    val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val ga = g.alias("ga"); val gb = g.alias("gb")
-    val inter = ga.join(gb,
+  private[graft] def setSizes(g: DataFrame): DataFrame =
+    g.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
+
+  /** Exact overlaps by the block-fenced self-join: (doc_a, doc_b, inter)
+    * for every in-block pair sharing ≥ 1 gram, over a distinct
+    * (doc_id, block, gh) frame. An equi-join on int gram hashes (never a
+    * cross join); the shared-gram self-join is the quadratic zone — a gram
+    * shared by f in-block docs contributes f² join rows, so callers fence
+    * it ([[jaccardPairs]] collapses identical contents first).
+    */
+  private[graft] def blockOverlaps(g: DataFrame): DataFrame =
+    g.alias("ga").join(g.alias("gb"),
         col("ga.gh") === col("gb.gh") &&
           col("ga.block") === col("gb.block") &&
           col("ga.doc_id") < col("gb.doc_id"))
       .groupBy(col("ga.doc_id").as("doc_a"), col("gb.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    val pairs = inter
+
+  /** Exact overlaps for candidate pairs only: (doc_a, doc_b, inter) with
+    * `cand` (doc_a, doc_b) joined to both sides' full gram sets and the
+    * common hashes counted. Verification cost tracks the candidate count
+    * (LSH, sorted-neighborhood or prefix candidates), never all pairs; a
+    * candidate sharing no gram has no row.
+    */
+  private[graft] def candidateOverlaps(
+      cand: DataFrame, g: DataFrame): DataFrame =
+    cand
+      .join(g.select(col("doc_id").as("doc_a"), col("gh")), "doc_a")
+      .join(g.select(col("doc_id").as("doc_b"), col("gh")), Seq("doc_b", "gh"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("inter"))
+
+  /** Both sides' set sizes joined onto overlaps:
+    * (doc_b, doc_a, inter, na, nb).
+    */
+  private[graft] def withSetSizes(
+      inter: DataFrame, sizes: DataFrame): DataFrame =
+    inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a")
         .withColumnRenamed("n_grams", "na"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b")
         .withColumnRenamed("n_grams", "nb"), "doc_b")
+
+  /** Exact Jaccard |A∩B| / |A∪B| ≥ `threshold` (inclusive) over
+    * overlaps: (doc_a, doc_b, inter, jaccard).
+    */
+  private[graft] def jaccardScored(
+      inter: DataFrame, sizes: DataFrame, threshold: Double): DataFrame =
+    withSetSizes(inter, sizes)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-    (pairs, sizes)
+
+  /** Exact containment in both directions as integer ppm floor-divisions
+    * (all-positive operands — Spark `div` ≡ DuckDB `//`), kept when either
+    * direction is ≥ `thresholdPpm` (inclusive):
+    * (doc_a, doc_b, cont_ab_ppm, cont_ba_ppm).
+    */
+  private[graft] def containmentScored(
+      inter: DataFrame, sizes: DataFrame, thresholdPpm: Long): DataFrame =
+    withSetSizes(inter, sizes)
+      .select(col("doc_a"), col("doc_b"),
+        expr("(inter * 1000000) div na").as("cont_ab_ppm"),
+        expr("(inter * 1000000) div nb").as("cont_ba_ppm"))
+      .filter(greatest(col("cont_ab_ppm"), col("cont_ba_ppm"))
+        >= thresholdPpm)
+
+  /** The distinct hashed (doc_id, block, gh) frame every blocked pairing
+    * core reads several times (sizes, both join sides), cached instead of
+    * recomputing the explode+lead lineage.
+    */
+  private def blockedGrams(
+      df: DataFrame, n: Int, scope: CacheScope): DataFrame =
+    scope.cache(hashedGrams(
+      df.select(col("doc_id"), col("block"), col("text")), n, distinct = true))
+
+  /** The shared-gram Jaccard core: pairs + per-doc set sizes over a frame
+    * of (doc_id, text, block), by [[blockOverlaps]]. Candidate pairs are
+    * only those sharing ≥1 gram in-block.
+    */
+  private def jaccardCore(
+      df: DataFrame, n: Int, threshold: Double,
+      scope: CacheScope = CacheScope.unmanaged): (DataFrame, DataFrame) = {
+    val g = blockedGrams(df, n, scope)
+    val sizes = setSizes(g)
+    (jaccardScored(blockOverlaps(g), sizes, threshold), sizes)
   }
 
   /** n-gram Jaccard similarity pairs within a blocking key.
@@ -818,35 +895,13 @@ object Dedup {
     * threshold. Ratios are integer ppm floor-divisions of exact set
     * counts (all-positive operands — Spark `div` ≡ DuckDB `//`).
     *
-    * Same shared-gram machinery as [[jaccardPairs]]'s core (set
-    * semantics via ONE distinct on int hashes riding the gram window's
-    * doc_id partitioning; block-fenced int-keyed equi-join, never
-    * all-pairs). `df` must provide (doc_id, text, block).
+    * Same kernel as [[jaccardPairs]]'s core ([[blockOverlaps]] over the
+    * distinct hashed grams). `df` must provide (doc_id, text, block).
     */
   def containmentPairs(df: DataFrame, n: Int, thresholdPpm: Long,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val g = scope.cache(explodedGrams(
-        df.select(col("doc_id"), col("block"), col("text")), n,
-        distinct = false)
-      .select(col("doc_id"), col("block"), md5Long(col("gram")).as("gh"))
-      .distinct())
-    val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val inter = g.alias("ga").join(g.alias("gb"),
-        col("ga.gh") === col("gb.gh") &&
-          col("ga.block") === col("gb.block") &&
-          col("ga.doc_id") < col("gb.doc_id"))
-      .groupBy(col("ga.doc_id").as("doc_a"), col("gb.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_grams", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_grams", "nb"), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        expr("(inter * 1000000) div na").as("cont_ab_ppm"),
-        expr("(inter * 1000000) div nb").as("cont_ba_ppm"))
-      .filter(greatest(col("cont_ab_ppm"), col("cont_ba_ppm"))
-        >= thresholdPpm)
+    val g = blockedGrams(df, n, scope)
+    containmentScored(blockOverlaps(g), setSizes(g), thresholdPpm)
   }
 
   /** Containment-prefix length for the SMALLER side of a qualifying pair:
@@ -885,12 +940,7 @@ object Dedup {
   def containmentPairsPrefix(df: DataFrame, n: Int, thresholdPpm: Long,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = scope.cache(explodedGrams(
-        df.select(col("doc_id"), col("block"), col("text")), n,
-        distinct = false)
-      .select(col("doc_id"), col("block"), md5Long(col("gram")).as("gh"))
-      .distinct())
-    val sizes = e.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
+    val e = blockedGrams(df, n, scope)
     val dfc = e.groupBy(col("block"), col("gh"))
       .agg(count(lit(1)).as("gram_df"))
     val wDoc = Window.partitionBy(col("doc_id"))
@@ -913,22 +963,7 @@ object Dedup {
       .select(least(col("pa.doc_id"), col("pb.doc_id")).as("doc_a"),
         greatest(col("pa.doc_id"), col("pb.doc_id")).as("doc_b"))
       .distinct()
-    val inter = cand
-      .join(e.alias("ga"), col("ga.doc_id") === col("doc_a"))
-      .join(e.alias("gb"),
-        col("gb.doc_id") === col("doc_b") && col("gb.gh") === col("ga.gh"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_grams", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_grams", "nb"), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        expr("(inter * 1000000) div na").as("cont_ab_ppm"),
-        expr("(inter * 1000000) div nb").as("cont_ba_ppm"))
-      .filter(greatest(col("cont_ab_ppm"), col("cont_ba_ppm"))
-        >= thresholdPpm)
+    containmentScored(candidateOverlaps(cand, e), setSizes(e), thresholdPpm)
   }
 
   /** Identity compression around any representative-level pairing core:
@@ -1073,11 +1108,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     require(tauNum > 0 && tauNum < tauDen, "need 0 < tau < 1")
     val threshold = tauNum.toDouble / tauDen
-    val e = scope.cache(explodedGrams(
-        df.select(col("doc_id"), col("block"), col("text")), n,
-        distinct = false)
-      .select(col("doc_id"), col("block"), md5Long(col("gram")).as("gh"))
-      .distinct())
+    val e = blockedGrams(df, n, scope)
     val dfc = e.groupBy(col("block"), col("gh"))
       .agg(count(lit(1)).as("gram_df"))
     val wDoc = Window.partitionBy(col("doc_id"))
@@ -1123,23 +1154,8 @@ object Dedup {
       .select(least(col("pa.doc_id"), col("pb.doc_id")).as("doc_a"),
         greatest(col("pa.doc_id"), col("pb.doc_id")).as("doc_b"))
       .distinct()
-    val sizes = e.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val inter = cand
-      .join(e.alias("ga"), col("ga.doc_id") === col("doc_a"))
-      .join(e.alias("gb"),
-        col("gb.doc_id") === col("doc_b") && col("gb.gh") === col("ga.gh"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    val pairs = inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_grams", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_grams", "nb"), "doc_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-    (pairs, sizes)
+    val sizes = setSizes(e)
+    (jaccardScored(candidateOverlaps(cand, e), sizes, threshold), sizes)
   }
 
   /** Per-document duplicated-substring rate: the fraction of a document's
@@ -1160,12 +1176,10 @@ object Dedup {
     * agg and the join back move only the REDUCED distinct (doc, hash)
     * frame on int keys. Nothing is quadratic in corpus size — the
     * stop-gram f² trap of shared-gram SELF-joins cannot occur because
-    * frequency is an aggregation, not a pairing. The window key is 64
-    * bits of md5 as two 32-bit limbs: a single 32-bit key would saturate
-    * by birthday collisions at crawl scale (~10¹¹ distinct windows
-    * against 2³² buckets makes nearly every unique window share a bucket
-    * with some other document, inflating dup_rate toward 1 for clean
-    * docs); at 64 bits the per-window false-dup probability stays ~n/2⁶⁴.
+    * frequency is an aggregation, not a pairing. The window key is the
+    * 64-bit [[windowHash]]: a 32-bit key would make nearly every unique
+    * window share a bucket with some other document at crawl scale,
+    * inflating dup_rate toward 1 for clean docs.
     *
     * Output (doc_id, n_windows, n_dup_windows, dup_rate); documents with
     * fewer than `w` words have no windows and no row.
@@ -1173,10 +1187,7 @@ object Dedup {
   def substringDupRate(df: DataFrame, w: Int,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     val grams = explodedGrams(df, w, distinct = false)
-      .withColumn("h", md5(col("gram")))
-      .select(col("doc_id"),
-        conv(substring(col("h"), 1, 8), 16, 10).cast("long").as("gh1"),
-        conv(substring(col("h"), 9, 8), 16, 10).cast("long").as("gh2"))
+      .select(col("doc_id") +: windowHash(col("gram")): _*)
     // one row per (doc, window-hash) with positional multiplicity; feeds
     // both the document-frequency agg and the final per-doc rollup
     val perDoc = scope.cache(
@@ -1213,8 +1224,8 @@ object Dedup {
     * explode (≤ w× the DUPLICATED windows only, not the corpus), and the
     * rebuild is one per-doc aggregation whose collect_list is bounded by
     * document length — the per-doc sort is the reassembly contract, not a
-    * global sort. Two-limb 64-bit keys as in the rate query
-    * (birthday-safe at crawl scale).
+    * global sort. Keys are the 64-bit [[windowHash]], as in the rate
+    * query.
     */
   /** INTRA-document repetition cleaning — the within-doc sibling of
     * [[substringDedupClean]] (which deliberately removes only CROSS-doc
@@ -1245,11 +1256,8 @@ object Dedup {
     }
     val parts = col("tok") +: (1 until w).map(j => col(s"t$j"))
     val occ = withParts.filter(parts.last.isNotNull)
-      .select(col("doc_id"), col("pos").as("spos"),
-        md5(concat_ws(" ", parts: _*)).as("h"))
-      .select(col("doc_id"), col("spos"),
-        conv(substring(col("h"), 1, 8), 16, 10).cast("long").as("gh1"),
-        conv(substring(col("h"), 9, 8), 16, 10).cast("long").as("gh2"))
+      .select(Seq(col("doc_id"), col("pos").as("spos")) ++
+        windowHash(concat_ws(" ", parts: _*)): _*)
     val firsts = occ.groupBy(col("doc_id"), col("gh1"), col("gh2"))
       .agg(min(col("spos")).as("first_pos"))
     val covered = occ.join(firsts, Seq("doc_id", "gh1", "gh2"))
@@ -1281,11 +1289,8 @@ object Dedup {
     }
     val parts = col("tok") +: (1 until w).map(j => col(s"t$j"))
     val occ = withParts.filter(parts.last.isNotNull)
-      .select(col("doc_id"), col("pos").as("spos"),
-        md5(concat_ws(" ", parts: _*)).as("h"))
-      .select(col("doc_id"), col("spos"),
-        conv(substring(col("h"), 1, 8), 16, 10).cast("long").as("gh1"),
-        conv(substring(col("h"), 9, 8), 16, 10).cast("long").as("gh2"))
+      .select(Seq(col("doc_id"), col("pos").as("spos")) ++
+        windowHash(concat_ws(" ", parts: _*)): _*)
     // distinct docs per window hash; dup windows are the ones shared
     // across documents (within-doc repeats alone don't trigger removal —
     // text_repetition covers those)

@@ -55,9 +55,8 @@ final class DedupPipeline private (
     * scan is skipped and the bucketing replaces the window's clustering.
     */
   val hashedGrams: DataFrame = persistedGrams.getOrElse(
-    Dedup.explodedGrams(
-        docs.select(col("doc_id"), col("text")), n, distinct = false)
-      .select(col("doc_id"), Dedup.md5Long(col("gram")).as("gh")))
+    Dedup.hashedGrams(docs.select(col("doc_id"), col("text")), n,
+      distinct = false))
 
   /** Distinct (doc_id, gh): THE cached frame of the pass — strictly
     * smaller than the raw grams, and every downstream stage reads it. The
@@ -96,29 +95,15 @@ final class DedupPipeline private (
       candidates.select(col("doc_a"), col("doc_b")))
 
   /** Exact n-gram Jaccard computed ONLY for LSH candidate pairs:
-    * (doc_a, doc_b, inter, jaccard) with jaccard ≥ `threshold`. Set sizes
-    * and intersections count in the same hash space, so engine parity
-    * holds even under (vanishingly rare) hash collisions.
+    * (doc_a, doc_b, inter, jaccard) with jaccard ≥ `threshold` — the
+    * candidate form of [[Dedup.candidateOverlaps]] over the cached
+    * distinct grams.
     */
-  def verifiedPairs(threshold: Double): DataFrame = {
-    val gd = distinctGrams
-    val sizes = gd.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val inter = candidates.select(col("doc_a"), col("doc_b"))
-      .join(gd.alias("ga"), col("ga.doc_id") === col("doc_a"))
-      .join(gd.alias("gb"),
-        col("gb.doc_id") === col("doc_b") && col("gb.gh") === col("ga.gh"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_grams", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_grams", "nb"), "doc_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-  }
+  def verifiedPairs(threshold: Double): DataFrame =
+    Dedup.jaccardScored(
+      Dedup.candidateOverlaps(
+        candidates.select(col("doc_a"), col("doc_b")), distinctGrams),
+      Dedup.setSizes(distinctGrams), threshold)
 
   /** Release the cached gram frame (end of the corpus pass). Construct
     * with a tracking [[CacheScope]] and close THAT instead to also release

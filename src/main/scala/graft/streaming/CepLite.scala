@@ -47,8 +47,7 @@ object CepLite {
       events
         .withColumn("ts", timestamp_millis(col("tsMs")))
         .withWatermark("ts", "0 seconds")
-        .as[KeyedEvent]
-        .groupByKey(_.key),
+        .groupBy(col("key")).as[Long, KeyedEvent],
       empty = CepState(0, None, None),
       order = Ordering.by(_.tsMs),
       step = (key, s, e) =>

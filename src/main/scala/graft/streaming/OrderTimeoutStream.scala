@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
 import graft.model.{OrderEvent, OrderResult}
 
 /** X3: the per-order payment-timeout state machine
@@ -32,7 +33,8 @@ object OrderTimeoutStream {
       : Dataset[OrderResult] = {
     import orders.sparkSession.implicits._
     DeadlineMachine.run[Long, OrderEvent, OrderMachineState, OrderResult](
-      orders.withWatermark("ts", "0 seconds").groupByKey(_.orderId),
+      orders.withWatermark("ts", "0 seconds")
+        .groupBy(col("orderId")).as[Long, OrderEvent],
       empty = OrderMachineState(None, None),
       order = Ordering.by(_.ts.getTime),
       step = (orderId, s, e) => {

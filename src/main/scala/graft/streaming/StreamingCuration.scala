@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.TextAnalysis
+import graft.ops.{Dedup, TextAnalysis}
 
 /** Composed ingest-curation stream — the streaming twin of the batch
   * curation funnel (`DedupJobs.curationPipeline`'s admission shape): the
@@ -83,10 +83,8 @@ object StreamingCuration {
       .withColumn("g", explode(expr(
         s"filter(transform(w_arr, (x, i) -> array_join(slice(w_arr, i + 1, $w), ' ')), " +
           s"(g, i) -> i <= size(w_arr) - $w)")))
-      .select(col(tsCol), col("doc_id"), col("source"), col("n_tok"),
-        col("q"),
-        conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long").as("gh1"),
-        conv(substring(md5(col("g")), 9, 8), 16, 10).cast("long").as("gh2"))
+      .select(Seq(col(tsCol), col("doc_id"), col("source"), col("n_tok"),
+        col("q")) ++ Dedup.windowHash(col("g")): _*)
     val perDoc = wins
       .join(evalWindows.withColumn("hit", lit(1L)), Seq("gh1", "gh2"), "left")
       .groupBy(window(col(tsCol), windowLen), col("doc_id"), col("source"))

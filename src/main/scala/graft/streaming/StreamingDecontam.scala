@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Dedup
 
 /** Streaming eval-decontamination screen — the ingest-side form of
   * `DedupJobs.ngramContamination` (the GPT-3/Llama exact n-gram
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: window extraction is a pure per-row array computation
   * (the [[StreamingDedup]] in-flight trade — per-arrival cost, zero
   * state, text never shuffles); the eval lookup is a stream-static LEFT
-  * equi-join on the two 32-bit md5-half int keys (the eval table is
+  * equi-join on the two int limbs of `Dedup.windowHash` (the eval table is
   * benchmarks, not corpus — small, re-planned per micro-batch and
   * broadcast by size); the per-doc rollup is a watermarked windowed
   * aggregation. The static side must be DISTINCT (gh1, gh2) rows —
@@ -24,8 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * Outputs are BIT-EQUAL to the batch `ngram_contamination` columns for
   * the same documents (spec-pinned): same whitespace windows, same
-  * md5-half hashes, integer counts, and the one double division uses
-  * identical operands — stream and batch cannot drift by arithmetic.
+  * `Dedup.windowHash` keys, integer counts, and the one double division
+  * uses identical operands — stream and batch cannot drift by arithmetic.
   */
 object StreamingDecontam {
 
@@ -46,9 +47,8 @@ object StreamingDecontam {
       .withColumn("g", explode(expr(
         s"filter(transform(w_arr, (x, i) -> array_join(slice(w_arr, i + 1, $w), ' ')), " +
           s"(g, i) -> i <= size(w_arr) - $w)")))
-      .select(col("doc_id"), col(tsCol).as("ts"),
-        conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long").as("gh1"),
-        conv(substring(md5(col("g")), 9, 8), 16, 10).cast("long").as("gh2"))
+      .select(Seq(col("doc_id"), col(tsCol).as("ts")) ++
+        Dedup.windowHash(col("g")): _*)
     wins
       .join(evalWindows.withColumn("hit", lit(1L)), Seq("gh1", "gh2"), "left")
       .groupBy(window(col("ts"), "10 seconds"), col("doc_id"))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions.{col, timestamp_millis}
+import org.apache.spark.sql.functions.{col, lit, timestamp_millis, unix_millis}
 import graft.model.{OrderEvent, ReceiptEvent}
 
 /** X4: two-stream pay↔receipt reconciliation with asymmetric waits
@@ -57,15 +57,17 @@ object TxMatchStream {
       : Dataset[TxResult] = {
     import pays.sparkSession.implicits._
     val tagged = pays
-      .map(o => TxEvent(o.txId, "pay", o.ts.getTime, o.orderId, ""))
-      .unionByName(receipts.map(x =>
-        TxEvent(x.txId, "receipt", x.ts.getTime, -1L, x.payChannel)))
+      .select(col("txId"), lit("pay").as("side"),
+        unix_millis(col("ts")).as("tsMs"), col("orderId"),
+        lit("").as("payChannel"))
+      .unionByName(receipts.select(col("txId"), lit("receipt").as("side"),
+        unix_millis(col("ts")).as("tsMs"), lit(-1L).as("orderId"),
+        col("payChannel")))
     DeadlineMachine.run[String, TxEvent, TxState, TxResult](
       tagged
         .withColumn("ts", timestamp_millis(col("tsMs")))
         .withWatermark("ts", "0 seconds")
-        .as[TxEvent]
-        .groupByKey(_.txId),
+        .groupBy(col("txId")).as[String, TxEvent],
       empty = TxState(None, None, None, None),
       order = Ordering.by(e => (e.tsMs, e.side)),
       step = (txId, s, e) => {

@@ -428,6 +428,43 @@ class DedupSpec extends SparkSpec {
     assert(jacc.isEmpty)
   }
 
+  test("overlap kernel: candidate and self-join forms agree; thresholds inclusive") {
+    // hand-built distinct (doc_id, block, gh) sets: 1={1,2,3,4} 2={2,3,4,5}
+    // 3={1,9} in block 0; 4={1,2,3,4} 5={1,2} in block 1
+    val g = Seq(1L -> Seq(1L, 2L, 3L, 4L), 2L -> Seq(2L, 3L, 4L, 5L),
+        3L -> Seq(1L, 9L), 4L -> Seq(1L, 2L, 3L, 4L), 5L -> Seq(1L, 2L))
+      .flatMap { case (d, hs) => hs.map(h => (d, if (d <= 3) 0 else 1, h)) }
+      .toDF("doc_id", "block", "gh")
+    val sizes = Dedup.setSizes(g)
+    def rows(inter: org.apache.spark.sql.DataFrame) =
+      Dedup.withSetSizes(inter, sizes)
+        .select($"doc_a", $"doc_b", $"inter", $"na", $"nb")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).toSet
+    // every in-block pair as a candidate; (2, 3) shares nothing, and the
+    // cross-block twins 1 and 4 are never a pair
+    val cand = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
+    val selfJoin = rows(Dedup.blockOverlaps(g))
+    assert(selfJoin == Set((1L, 2L, 3L, 4L, 4L), (1L, 3L, 1L, 4L, 2L),
+      (4L, 5L, 2L, 4L, 2L)))
+    assert(rows(Dedup.candidateOverlaps(cand, g)) == selfJoin)
+    // jaccard: (1,2) 3/5, (1,3) 1/5, (4,5) 2/4 — a score equal to the
+    // threshold is kept
+    val inter = Dedup.blockOverlaps(g)
+    def jaccard(t: Double) = Dedup.jaccardScored(inter, sizes, t)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(jaccard(0.5) == Set((1L, 2L), (4L, 5L)))
+    assert(jaccard(0.6) == Set((1L, 2L)))
+    assert(jaccard(0.6 + 1e-9).isEmpty)
+    // containment ppm max(ab, ba): (1,2) 750000, (1,3) 500000, (4,5) 1e6
+    def contained(ppm: Long) = Dedup.containmentScored(inter, sizes, ppm)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(contained(500000L) == Set((1L, 2L), (1L, 3L), (4L, 5L)))
+    assert(contained(750000L) == Set((1L, 2L), (4L, 5L)))
+    assert(contained(1000000L) == Set((4L, 5L)))
+    assert(contained(1000001L).isEmpty)
+  }
+
   test("sorted_neighborhood equals a brute-force replay of rank+window+jaccard") {
     val dir = sf("sf0.001")
     val got = DedupJobs.sortedNeighborhood(spark, dir)

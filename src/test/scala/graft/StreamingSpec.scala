@@ -151,6 +151,27 @@ class StreamingSpec extends SparkSpec {
     assert(dec.collectFirst { case m: MapObjects => m }.isEmpty, dec.toString)
   }
 
+  test("deadline machines key by column: no AppendColumns, no typed tag map") {
+    // a lambda key (`groupByKey`) plans an AppendColumns that deserializes
+    // every event and compiles its own key and joiner classes per query
+    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, MapElements}
+    implicit val sqlCtx = spark.sqlContext
+    val orders = MemoryStream[OrderEvent]
+    val receipts = MemoryStream[ReceiptEvent]
+    val events = MemoryStream[CepLite.KeyedEvent]
+    val plans = Map(
+      "order" -> OrderTimeoutStream.detect(orders.toDS()),
+      "tx" -> TxMatchStream.detect(orders.toDS(), receipts.toDS()),
+      "cep" -> CepLite.detect(events.toDS(), Seq("create", "pay"), 1000L))
+      .map { case (k, ds) => k -> ds.queryExecution.analyzed }
+    plans.foreach { case (k, p) =>
+      assert(p.collectFirst { case a: AppendColumns => a }.isEmpty,
+        s"$k:\n$p")
+    }
+    assert(plans("tx").collectFirst { case m: MapElements => m }.isEmpty,
+      plans("tx").toString)
+  }
+
   test("J2 stream-stream interval join buffers and matches within bounds") {
     implicit val sqlCtx = spark.sqlContext
     val pays = MemoryStream[OrderEvent]
