@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
+import graft.ops.Dedup
 import graft.ops.Eager.EagerOps
 
 /** Analytics headroom beyond the reference's own surface (SURVEY.md §2.6 /
@@ -187,8 +188,7 @@ object AnalyticsJobs {
     */
   def abMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     val arm = when(
-      conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 2 === 0, "A").otherwise("B")
+      Dedup.md5Long(col("user_id").cast("string")) % 2 === 0, "A").otherwise("B")
     Tables.events(spark, sfDir)
       .select(arm.as("arm"), col("user_id"), col("event_type"),
         expr("cast(round(value * 100 + 1e-9) as bigint)").as("cents"))
@@ -926,7 +926,7 @@ object AnalyticsJobs {
       canon(col("props")))
     events
       .select(expr("datediff(cast(ts as date), date'1970-01-01')").as("day"),
-        conv(substring(md5(canonical), 1, 15), 16, 10).cast("long").as("h"),
+        Dedup.hash60(canonical).as("h"),
         cents.as("cents"))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_rows"),
@@ -2324,7 +2324,7 @@ object AnalyticsJobs {
     val edges = ev.select(col("u").as("src"), col("it").as("dst"))
       .unionAll(ev.select(col("it").as("src"), col("u").as("dst")))
     val seeds = Tables.events(spark, sfDir)
-      .filter(graft.ops.Dedup.md5Long(col("user_id").cast("string"))
+      .filter(Dedup.md5Long(col("user_id").cast("string"))
         % REACH_SEED_MOD === 0)
       .select((col("user_id") * 2).as("seed"))
     graft.ops.Graph.hopDistances(edges, seeds, maxHops = REACH_HOPS)
@@ -2457,7 +2457,7 @@ object AnalyticsJobs {
       .unionAll(pairs.select(col("it").as("src"), col("u").as("dst"),
         col("w")))
     val seeds = Tables.events(spark, sfDir)
-      .filter(graft.ops.Dedup.md5Long(col("user_id").cast("string"))
+      .filter(Dedup.md5Long(col("user_id").cast("string"))
         % REACH_SEED_MOD === 0)
       .select((col("user_id") * 2).as("seed"))
     graft.ops.Graph.minPlusDistances(edges, seeds, rounds = CHEAP_ROUNDS)

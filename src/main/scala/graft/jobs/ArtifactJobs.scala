@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.Eager.EagerOps
 
 import graft.io.Tables
-import graft.ops.Similarity
+import graft.ops.{Dedup, Similarity}
 
 /** Persist-then-score: the production train-once/score-many shape.
   *
@@ -117,7 +117,7 @@ object ArtifactJobs {
     val loaded = persist(spark, "bpe_encoder", docsFp(sfDir),
       TextJobs.bpeEncoderTable(spark, sfDir))
     TextJobs.bpeEncodeWith(spark, sfDir,
-      loaded.select(TextJobs.hash60(col("w")).as("wh"), col("n_syms")))
+      loaded.select(Dedup.hash60(col("w")).as("wh"), col("n_syms")))
   }
 
   /** PQ encoding against a codebook LOADED from parquet: train the
@@ -170,7 +170,7 @@ object ArtifactJobs {
     val loaded = persist(spark, "unigram_encoder", docsFp(sfDir),
       TextJobs.unigramEncoderTable(spark, sfDir))
     TextJobs.unigramEncodeWith(spark, sfDir,
-      loaded.select(TextJobs.hash60(col("w")).as("wh"), col("n_pieces")))
+      loaded.select(Dedup.hash60(col("w")).as("wh"), col("n_pieces")))
   }
 
   /** WordPiece token accounting against a tokenizer table LOADED from
@@ -183,7 +183,7 @@ object ArtifactJobs {
     val loaded = persist(spark, "wordpiece_encoder", docsFp(sfDir),
       TextJobs.wordpieceEncoderTable(spark, sfDir))
     TextJobs.wordpieceEncodeWith(spark, sfDir,
-      loaded.select(TextJobs.hash60(col("w")).as("wh"), col("n_syms")))
+      loaded.select(Dedup.hash60(col("w")).as("wh"), col("n_syms")))
   }
 
   /** SemDeDup pair search served from persisted k-means centroids — the

@@ -1,15 +1,15 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.Dedup
+import graft.ops.{Dedup, TextAnalysis}
 import graft.ops.Eager.EagerOps
+import OracleSql.{fingerprintSql, hexIntSql, hexIntSqlAt, normalizedSql, wordsSql}
 
-/** Deduplication queries over `documents`, each with a DuckDB oracle.
-  * DuckDB lacks `conv(hex, 16, 10)`, so the oracles rebuild the md5-prefix
-  * hash positionally: Σ (strpos('0123..f', digit_i) − 1) · 16^(8−i) — the
-  * exact integer Spark's `conv` produces.
+/** Deduplication queries over `documents`, each with a DuckDB oracle that
+  * states the text contract (hashes, word split, normalizer) through
+  * [[OracleSql]]'s forms.
   */
 object DedupJobs {
 
@@ -17,13 +17,9 @@ object DedupJobs {
   private val BANDS = 2  // LSH bands (4 rows/band): strict, near-dups only
   private val SIMHASH_BITS = 16
 
-  private def hexIntSqlAt(inner: String, from: Int): String =
-    OracleSql.hexIntSqlAt(inner, from)
-  private def hexIntSql(inner: String): String = OracleSql.hexIntSql(inner)
-
   private val wordsCte =
-    """words AS (
-      |  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS w
+    s"""words AS (
+      |  SELECT doc_id, unnest(list_distinct(${wordsSql("text")})) AS w
       |  FROM documents
       |)""".stripMargin
 
@@ -33,7 +29,7 @@ object DedupJobs {
     Dedup.exact(Tables.documents(spark, sfDir), col("doc_id"), col("text"))
 
   val dedupExactSql: String =
-    """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
+    s"""SELECT ${fingerprintSql("text")} AS fingerprint,
       |       MIN(doc_id) AS keeper, COUNT(*) AS n_dups
       |FROM documents GROUP BY 1""".stripMargin
 
@@ -89,7 +85,6 @@ object DedupJobs {
     * never a global funnel).
     */
   def dedupBestKeeper(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ops.TextAnalysis
     import org.apache.spark.sql.expressions.Window
     val cl = dedupClusters(spark, sfDir)
     val q = Tables.documents(spark, sfDir)
@@ -217,11 +212,11 @@ object DedupJobs {
     * (without it DuckDB would emit a truncated 1-word gram).
     */
   private val bigramCte =
-    """grams AS (
+    s"""grams AS (
       |  SELECT doc_id, unnest(list_distinct(
       |    [array_to_string(w[i:i+1], ' ') FOR i IN range(1, len(w))]
       |  )) AS gram
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      |  FROM (SELECT doc_id, ${wordsSql("text")} AS w
       |        FROM documents)
       |  WHERE len(w) >= 2
       |)""".stripMargin
@@ -364,7 +359,7 @@ object DedupJobs {
        |    SELECT doc_id, lang AS block, unnest(
        |      [array_to_string(w[i:i+${JACCARD_N - 1}], ' ')
        |       FOR i IN range(1, len(w) - ${JACCARD_N - 2})]) AS gram
-       |    FROM (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS w
+       |    FROM (SELECT doc_id, lang, ${wordsSql("text")} AS w
        |          FROM documents $docWhere)
        |    WHERE len(w) >= ${JACCARD_N})
        |), sizes AS (
@@ -423,7 +418,7 @@ object DedupJobs {
        |    SELECT doc_id, lang AS block, unnest(
        |      [array_to_string(w[i:i+${JACCARD_N - 1}], ' ')
        |       FOR i IN range(1, len(w) - ${JACCARD_N - 2})]) AS gram
-       |    FROM (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS w
+       |    FROM (SELECT doc_id, lang, ${wordsSql("text")} AS w
        |          FROM documents)
        |    WHERE len(w) >= $JACCARD_N)
        |), sizes AS (
@@ -466,8 +461,7 @@ object DedupJobs {
     */
   def sortedNeighborhood(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val key = substring(
-      regexp_replace(lower(trim(col("text"))), "\\s+", " "), 1, SNM_KEY_LEN)
+    val key = substring(TextAnalysis.normalized(col("text")), 1, SNM_KEY_LEN)
     val docs = Tables.documents(spark, sfDir) // one load: each runs a schema job
     val base = docs
       .select(col("doc_id"), col("lang").as("block"), col("text"),
@@ -518,7 +512,7 @@ object DedupJobs {
        |  SELECT doc_id, lang AS block,
        |         ROW_NUMBER() OVER (ORDER BY
        |           lang ASC,
-       |           substr(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
+       |           substr(${normalizedSql("text")},
        |                  1, $SNM_KEY_LEN) ASC,
        |           doc_id ASC) AS rank
        |  FROM documents
@@ -533,7 +527,7 @@ object DedupJobs {
        |    SELECT doc_id, unnest(
        |      [array_to_string(w[i:i+${JACCARD_N - 1}], ' ')
        |       FOR i IN range(1, len(w) - ${JACCARD_N - 2})]) AS gram
-       |    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+       |    FROM (SELECT doc_id, ${wordsSql("text")} AS w
        |          FROM documents)
        |    WHERE len(w) >= $JACCARD_N)
        |), sizes AS (
@@ -663,32 +657,30 @@ object DedupJobs {
   // ---- deterministic train/val/test split + decontamination ----
 
   /** Content-independent, engine-reproducible split assignment: bucket =
-    * md5(doc_id) mod 100 → 80/10/10. Hash-based (not random) so any
+    * md5Long(key) mod 100 → 80/10/10. Hash-based (not random) so any
     * engine, any run, any partitioning yields the identical split — the
     * property a training pipeline actually needs.
     */
-  private def splitCol(spark: SparkSession) = {
-    import org.apache.spark.sql.functions._
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-      .cast("long") % 100
+  private def splitOf(key: Column) = {
+    val bucket = Dedup.md5Long(key.cast("string")) % 100
     when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
   }
 
-  private val splitSqlExpr =
-    s"""CASE WHEN ${hexIntSql("doc_id::VARCHAR")} % 100 < 80 THEN 'train'
-       |     WHEN ${hexIntSql("doc_id::VARCHAR")} % 100 < 90 THEN 'val'
+  /** DuckDB [[splitOf]]. */
+  private def splitSqlOf(key: String): String =
+    s"""CASE WHEN ${hexIntSql(s"$key::VARCHAR")} % 100 < 80 THEN 'train'
+       |     WHEN ${hexIntSql(s"$key::VARCHAR")} % 100 < 90 THEN 'val'
        |     ELSE 'test' END""".stripMargin
 
   def trainSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     Tables.documents(spark, sfDir)
-      .withColumn("split", splitCol(spark))
+      .withColumn("split", splitOf(col("doc_id")))
       .groupBy(col("lang"), col("split"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
   }
 
   val trainSplitSql: String =
-    s"""SELECT lang, $splitSqlExpr AS split,
+    s"""SELECT lang, ${splitSqlOf("doc_id")} AS split,
        |       COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS n_chars
        |FROM documents GROUP BY 1, 2""".stripMargin
 
@@ -709,13 +701,10 @@ object DedupJobs {
   def splitLeakageSafe(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val clusters = pipeline(spark, sfDir).clusters
-    val bucket = conv(substring(md5(col("cluster").cast("string")), 1, 8), 16, 10)
-      .cast("long") % 100
     clusters
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster"))))
-      .withColumn("split",
-        when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test"))
+      .withColumn("split", splitOf(col("cluster")))
       .withColumn("weight_ppm", expr("1000000 div cluster_size"))
       .select(col("doc_id"), col("cluster"), col("cluster_size"),
         col("split"), col("weight_ppm"))
@@ -734,9 +723,7 @@ object DedupJobs {
        |  FROM clust
        |)
        |SELECT doc_id, cluster, cluster_size,
-       |       CASE WHEN ${hexIntSql("cluster::VARCHAR")} % 100 < 80 THEN 'train'
-       |            WHEN ${hexIntSql("cluster::VARCHAR")} % 100 < 90 THEN 'val'
-       |            ELSE 'test' END AS split,
+       |       ${splitSqlOf("cluster")} AS split,
        |       CAST(1000000 AS BIGINT) // cluster_size AS weight_ppm
        |FROM sized""".stripMargin
 
@@ -753,7 +740,6 @@ object DedupJobs {
     * over doc-count-sized frames, and a gram join restricted to candidates.
     */
   def decontamination(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     // slim handoff: the split join reads only (doc_a, doc_b, jaccard), so
     // the verified frame is materialized eagerly and every pipeline-
     // internal cache (grams, signatures, membership) releases before the
@@ -767,7 +753,7 @@ object DedupJobs {
         .verifiedPairs(JACCARD_THRESHOLD).eagerCheckpoint()
     } finally scope.close()
     val splits = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), splitCol(spark).as("split"))
+      .select(col("doc_id"), splitOf(col("doc_id")).as("split"))
     verified
       .join(splits.withColumnRenamed("doc_id", "doc_a")
         .withColumnRenamed("split", "split_a"), "doc_a")
@@ -790,15 +776,14 @@ object DedupJobs {
     */
   private[graft] def trainDocs(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .filter(splitCol(spark) === "train")
+      .filter(splitOf(col("doc_id")) === "train")
       .select(col("doc_id"), col("text"))
 
   private[graft] def evalWindowHashes(
       spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     Dedup.explodedGrams(
         Tables.documents(spark, sfDir)
-          .filter(splitCol(spark) =!= "train")
+          .filter(splitOf(col("doc_id")) =!= "train")
           .select(col("doc_id"), col("text")),
         CONTAM_W, distinct = false)
       .select(Dedup.windowHash(col("gram")): _*)
@@ -824,12 +809,11 @@ object DedupJobs {
     * side Spark will broadcast on its own when it fits.
     */
   def ngramContamination(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val pd = Dedup.explodedGrams(
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text")),
         CONTAM_W, distinct = false)
       .select((col("doc_id") +: Dedup.windowHash(col("gram"))) :+
-        (splitCol(spark) === "train").as("is_train"): _*)
+        (splitOf(col("doc_id")) === "train").as("is_train"): _*)
       .groupBy(col("doc_id"), col("is_train"), col("gh1"), col("gh2"))
       .agg(count(lit(1)).as("c"))
       .cache()
@@ -851,7 +835,7 @@ object DedupJobs {
        |  SELECT doc_id, unnest(
        |    [array_to_string(w[i:i+${CONTAM_W - 1}], ' ')
        |     FOR i IN range(1, len(w) - ${CONTAM_W - 2})]) AS gram
-       |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+       |  FROM (SELECT doc_id, ${wordsSql("text")} AS w
        |        FROM documents)
        |  WHERE len(w) >= $CONTAM_W
        |), pd AS (
@@ -902,7 +886,7 @@ object DedupJobs {
        |  JOIN sizes sb ON sb.doc_id = i.doc_b
        |  WHERE CAST(i.inter AS DOUBLE) / (sa.n_grams + sb.n_grams - i.inter)
        |        >= $JACCARD_THRESHOLD
-       |), splits AS (SELECT doc_id, $splitSqlExpr AS split FROM documents)
+       |), splits AS (SELECT doc_id, ${splitSqlOf("doc_id")} AS split FROM documents)
        |SELECT v.doc_a, v.doc_b, v.jaccard,
        |       sa.split AS split_a, sb.split AS split_b
        |FROM verified v
@@ -952,8 +936,7 @@ object DedupJobs {
       spark: SparkSession, sfDir: String,
       across: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val pipe = pipeline(spark, sfDir)
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-      .cast("long") % 100
+    val bucket = Dedup.md5Long(col("doc_id").cast("string")) % 100
     val flags = Tables.documents(spark, sfDir)
       .select(col("doc_id"), (bucket >= NEW_BUCKET).as("is_new"))
     // both side-filters read the flagged signature frame — cache it so
@@ -1047,7 +1030,7 @@ object DedupJobs {
        |  SELECT doc_id, unnest(
        |    [array_to_string(w[i:i+${SUBSTR_W - 1}], ' ')
        |     FOR i IN range(1, len(w) - ${SUBSTR_W - 2})]) AS gram
-       |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+       |  FROM (SELECT doc_id, ${wordsSql("text")} AS w
        |        FROM documents)
        |  WHERE len(w) >= $SUBSTR_W
        |), pd AS (
@@ -1090,7 +1073,7 @@ object DedupJobs {
     */
   private def substringCleanCteSql(src: String): String =
     s"""d AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+       |  SELECT doc_id, ${wordsSql("text")} AS w
        |  FROM $src
        |), tok AS (
        |  SELECT doc_id, unnest(range(1, len(w) + 1)) AS i, w FROM d
@@ -1101,8 +1084,8 @@ object DedupJobs {
        |         array_to_string(w[i:i+${SUBSTR_W - 1}], ' ') AS gram
        |  FROM tok WHERE i <= len(w) - ${SUBSTR_W - 1}
        |), occ AS (
-       |  SELECT doc_id, spos, ${OracleSql.hexIntSql("gram")} AS gh1,
-       |         ${OracleSql.hexIntSqlAt("gram", 9)} AS gh2
+       |  SELECT doc_id, spos, ${hexIntSql("gram")} AS gh1,
+       |         ${hexIntSqlAt("gram", 9)} AS gh2
        |  FROM g
        |), freq AS (
        |  SELECT gh1, gh2, COUNT(DISTINCT doc_id) AS n_docs
@@ -1148,7 +1131,7 @@ object DedupJobs {
     */
   val repetitionCleanSql: String =
     s"""WITH d AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+       |  SELECT doc_id, ${wordsSql("text")} AS w
        |  FROM documents
        |), tok AS (
        |  SELECT doc_id, unnest(range(1, len(w) + 1)) AS i, w FROM d
@@ -1160,7 +1143,7 @@ object DedupJobs {
        |  FROM tok WHERE i <= len(w) - ${REP_CLEAN_W - 1}
        |), occ AS (
        |  SELECT doc_id, spos, ${hexIntSql("gram")} AS gh1,
-       |         ${OracleSql.hexIntSqlAt("gram", 9)} AS gh2
+       |         ${hexIntSqlAt("gram", 9)} AS gh2
        |  FROM g
        |), firsts AS (
        |  SELECT doc_id, gh1, gh2, MIN(spos) AS first_pos
@@ -1255,7 +1238,6 @@ object DedupJobs {
     */
   def sourceCaps(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.ops.TextAnalysis
     val d = Tables.documents(spark, sfDir)
     val nTok = TextAnalysis.tokenCount(col("text"))
     val w = Window.partitionBy(col("source"), col("lang"))
@@ -1341,7 +1323,6 @@ object DedupJobs {
     * fingerprint-width hash aggs.
     */
   def corpusSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ops.TextAnalysis
     Tables.documents(spark, sfDir)
       .select(col("n_chars"), col("lang"), col("source"),
         TextAnalysis.tokenCount(col("text")).as("n_tok"),
@@ -1378,7 +1359,7 @@ object DedupJobs {
        |         COUNT(DISTINCT lang) AS n_langs,
        |         COUNT(DISTINCT source) AS n_sources,
        |         COUNT(DISTINCT
-       |           md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')))
+       |           ${fingerprintSql("text")})
        |           AS n_distinct_contents,
        |         CAST(SUM(CAST(round(($qualitySql) * 10000) AS BIGINT))
        |              AS BIGINT) AS q_sum
@@ -1406,9 +1387,8 @@ object DedupJobs {
     */
   def splitBalance(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.ops.TextAnalysis
     val d = Tables.documents(spark, sfDir)
-      .select(splitCol(spark).as("split"),
+      .select(splitOf(col("doc_id")).as("split"),
         TextAnalysis.tokenCount(col("text")).as("n_tok"))
       .select(col("split"), expr("least(n_tok div 20, 9L)").as("bucket"))
     val obs = d.groupBy(col("split"), col("bucket"))
@@ -1436,7 +1416,7 @@ object DedupJobs {
     val nTokSql =
       "CAST(length(regexp_extract_all(text, '[A-Za-z0-9]+')) AS BIGINT)"
     s"""WITH d AS (
-       |  SELECT $splitSqlExpr AS split,
+       |  SELECT ${splitSqlOf("doc_id")} AS split,
        |         least($nTokSql // 20, 9) AS bucket
        |  FROM documents
        |), obs AS (SELECT split, bucket, COUNT(*) AS o FROM d GROUP BY 1, 2),
@@ -1472,7 +1452,6 @@ object DedupJobs {
     */
   def sourceCapsQuality(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.ops.TextAnalysis
     val w = Window.partitionBy(col("source"), col("lang"))
       .orderBy(col("quality").desc, col("doc_id").asc)
     Tables.documents(spark, sfDir)
@@ -1526,7 +1505,6 @@ object DedupJobs {
     * reaches parquet for the projected columns.
     */
   def importanceResample(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ops.TextAnalysis
     val q = TextAnalysis.qualityScore(TextAnalysis.tokenCount(col("text")),
       TextAnalysis.stopwordCount(col("text")))
     Tables.documents(spark, sfDir)
@@ -1623,7 +1601,6 @@ object DedupJobs {
     */
   def curationScreened(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.ops.TextAnalysis
     val w = Window.partitionBy(col("source"), col("lang"))
       .orderBy(col("priority").asc, col("doc_id").asc)
     val flagged = Tables.documents(spark, sfDir)
@@ -1638,7 +1615,7 @@ object DedupJobs {
     val staged = flagged
       .join(keepers, Seq("doc_id"), "left")
       .withColumn("keeper", col("capped") && coalesce(col("keeper"), lit(false)))
-      .withColumn("is_train", splitCol(spark) === "train")
+      .withColumn("is_train", splitOf(col("doc_id")) === "train")
       .cache()
     // contamination universe: the deduped survivors only
     val pd = Dedup.explodedGrams(
@@ -1679,7 +1656,7 @@ object DedupJobs {
        |  FROM pr
        |), keep AS (
        |  SELECT MIN(doc_id) AS doc_id, true AS keeper FROM flags WHERE capped
-       |  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+       |  GROUP BY ${fingerprintSql("text")}
        |), staged AS (
        |  SELECT f.*, f.capped AND COALESCE(k.keeper, false) AS keeper
        |  FROM flags f LEFT JOIN keep k USING (doc_id)
@@ -1691,7 +1668,7 @@ object DedupJobs {
        |      [array_to_string(w[i:i+${CONTAM_W - 1}], ' ')
        |       FOR i IN range(1, len(w) - ${CONTAM_W - 2})]) AS gram
        |    FROM (SELECT doc_id, is_train,
-       |                 string_split_regex(trim(text), '\\s+') AS w
+       |                 ${wordsSql("text")} AS w
        |          FROM staged WHERE keeper)
        |    WHERE len(w) >= $CONTAM_W) s
        |), contam AS (
@@ -1728,7 +1705,6 @@ object DedupJobs {
     * fingerprint agg, one feeds the curation — nothing quadratic anywhere.
     */
   def corpusCuration(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ops.TextAnalysis
     val d = Tables.documents(spark, sfDir)
     val keepers = d
       .groupBy(TextAnalysis.fingerprint(col("text")).as("fingerprint"))
@@ -1739,7 +1715,7 @@ object DedupJobs {
     d.join(keepers, Seq("doc_id"), "left_semi")
       .withColumn("quality", TextAnalysis.qualityScore(nTok, nStop))
       .filter(col("quality") >= 0.5)
-      .withColumn("split", splitCol(spark))
+      .withColumn("split", splitOf(col("doc_id")))
       .groupBy(col("lang"), col("split"))
       .agg(count(lit(1)).as("n_docs"),
         sum(nTok).as("n_tokens"),
@@ -1756,9 +1732,9 @@ object DedupJobs {
          |    + 1e-9, 4)""".stripMargin
     s"""WITH keep AS (
        |  SELECT MIN(doc_id) AS doc_id FROM documents
-       |  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+       |  GROUP BY ${fingerprintSql("text")}
        |), scored AS (
-       |  SELECT d.lang, $splitSqlExpr AS split, $nTokSql AS n_tokens,
+       |  SELECT d.lang, ${splitSqlOf("doc_id")} AS split, $nTokSql AS n_tokens,
        |         d.n_chars, $qualitySql AS quality
        |  FROM documents d JOIN keep USING (doc_id)
        |)
@@ -1781,7 +1757,6 @@ object DedupJobs {
     * shared SQL fragments, so the two declarations cannot drift).
     */
   def curationPipeline(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ops.TextAnalysis
     val d = Tables.documents(spark, sfDir)
     val keepers = d
       .groupBy(TextAnalysis.fingerprint(col("text")).as("fp"))
@@ -1818,7 +1793,7 @@ object DedupJobs {
          |    + 1e-9, 4)""".stripMargin
     s"""WITH keep AS (
        |  SELECT MIN(doc_id) AS doc_id FROM documents
-       |  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+       |  GROUP BY ${fingerprintSql("text")}
        |), dd AS (
        |  SELECT doc.doc_id, doc.text FROM documents doc JOIN keep USING (doc_id)
        |), ${substringCleanCteSql("dd")}, scored AS (

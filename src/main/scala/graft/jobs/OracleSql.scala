@@ -1,27 +1,34 @@
 package graft.jobs
 
-/** Shared DuckDB-oracle SQL fragments. The engine-portable hash contract
-  * (`Dedup.md5Long`: first 8 md5-hex chars as BIGINT) restated in DuckDB's
-  * dialect — positional strpos arithmetic because DuckDB has no
-  * hex-to-int conv() — so every job's oracle derives the identical hash.
+/** The text contract's DuckDB forms, one per decision, mirroring
+  * `graft.ops.Dedup` and `graft.ops.TextAnalysis`. DuckDB has no
+  * hex-to-int `conv()`, so hashes sum positional strpos digits.
   */
 object OracleSql {
 
-  /** DuckDB: 8 md5-hex chars of `inner` starting at `from` as BIGINT. */
-  def hexIntSqlAt(inner: String, from: Int): String =
-    (1 to 8).map { i =>
-      s"(strpos('0123456789abcdef', substr(md5($inner),${from + i - 1},1))-1) * ${math.pow(16, 8 - i).toLong}::BIGINT"
+  /** `width` md5-hex chars of `inner` from 1-based `from` as BIGINT. */
+  private def hexSql(inner: String, from: Int, width: Int): String =
+    (1 to width).map { i =>
+      s"(strpos('0123456789abcdef', substr(md5($inner),${from + i - 1},1))-1) * ${math.pow(16, width - i).toLong}::BIGINT"
     }.mkString("(", " + ", ")")
 
-  /** DuckDB: first 8 md5-hex chars of `inner` as BIGINT. */
+  /** 8 md5-hex chars from `from` (9: `Dedup.windowHash`'s `gh2`). */
+  def hexIntSqlAt(inner: String, from: Int): String = hexSql(inner, from, 8)
+
+  /** `Dedup.md5Long`. */
   def hexIntSql(inner: String): String = hexIntSqlAt(inner, 1)
 
-  /** DuckDB: first 15 md5-hex chars of `inner` as a 60-bit BIGINT (the
-    * `hash60` convention — wide enough that sums/xors of realistic key
-    * sets stay collision-free while never touching the sign bit).
-    */
-  def hex60Sql(inner: String): String =
-    (1 to 15).map { i =>
-      s"(strpos('0123456789abcdef', substr(md5($inner),$i,1))-1) * ${math.pow(16, 15 - i).toLong}::BIGINT"
-    }.mkString("(", " + ", ")")
+  /** `Dedup.hash60`. */
+  def hex60Sql(inner: String): String = hexSql(inner, 1, 15)
+
+  /** `Dedup.words`. */
+  def wordsSql(inner: String): String =
+    s"string_split_regex(trim($inner), '\\s+')"
+
+  /** `TextAnalysis.normalized`. */
+  def normalizedSql(inner: String): String =
+    s"regexp_replace(lower(trim($inner)), '\\s+', ' ', 'g')"
+
+  /** `TextAnalysis.fingerprint`. */
+  def fingerprintSql(inner: String): String = s"md5(${normalizedSql(inner)})"
 }

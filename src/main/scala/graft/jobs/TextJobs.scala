@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.model.ModelMemo
-import graft.ops.TextAnalysis
+import graft.ops.{Dedup, TextAnalysis}
+import OracleSql.{fingerprintSql, hex60Sql, wordsSql}
 import graft.ops.Eager.EagerOps
 
 /** Text-analysis queries over `documents`: token/quality stats, language-ID,
@@ -120,8 +121,8 @@ object TextJobs {
       TextAnalysis.fingerprint(col("text")).as("fingerprint"))
 
   val docFingerprintSql: String =
-    """SELECT doc_id,
-      |       md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
+    s"""SELECT doc_id,
+      |       ${fingerprintSql("text")} AS fingerprint
       |FROM documents""".stripMargin
 
   private val VOCAB_K = 20
@@ -290,7 +291,7 @@ object TextJobs {
   def bpeEncode(spark: SparkSession, sfDir: String): DataFrame =
     bpeEncodeWith(spark, sfDir,
       bpeEncoderTable(spark, sfDir)
-        .select(hash60(col("w")).as("wh"), col("n_syms")))
+        .select(Dedup.hash60(col("w")).as("wh"), col("n_syms")))
 
   /** The trained tokenizer as a persistable artifact: (w, n_syms) — each
     * corpus word's symbol count after [[BPE_ROUNDS]] merges. Vocab-sized
@@ -377,7 +378,7 @@ object TextJobs {
     val dw = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), hash60(col("w")).as("wh"))
+      .groupBy(col("doc_id"), Dedup.hash60(col("w")).as("wh"))
       .agg(count(lit(1)).as("k"))
     dw.join(enc, "wh")
       .groupBy(col("doc_id"))
@@ -614,7 +615,7 @@ object TextJobs {
   def wordpieceEncode(spark: SparkSession, sfDir: String): DataFrame =
     wordpieceEncodeWith(spark, sfDir,
       wordpieceEncoderTable(spark, sfDir)
-        .select(hash60(col("w")).as("wh"), col("n_syms")))
+        .select(Dedup.hash60(col("w")).as("wh"), col("n_syms")))
 
   /** The scoring half of [[wordpieceEncode]] against an encoder lookup
     * table (wh, n_syms) — in-line trained or loaded from parquet.
@@ -624,7 +625,7 @@ object TextJobs {
     val dw = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), hash60(col("w")).as("wh"))
+      .groupBy(col("doc_id"), Dedup.hash60(col("w")).as("wh"))
       .agg(count(lit(1)).as("k"))
     dw.join(enc, "wh")
       .groupBy(col("doc_id"))
@@ -994,7 +995,7 @@ object TextJobs {
   def unigramEncode(spark: SparkSession, sfDir: String): DataFrame =
     unigramEncodeWith(spark, sfDir,
       unigramEncoderTable(spark, sfDir)
-        .select(hash60(col("w")).as("wh"), col("n_pieces")))
+        .select(Dedup.hash60(col("w")).as("wh"), col("n_pieces")))
 
   /** The scoring half of [[unigramEncode]] against an encoder lookup
     * table (wh, n_pieces) — in-line trained or loaded from parquet.
@@ -1004,7 +1005,7 @@ object TextJobs {
     val dw = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), hash60(col("w")).as("wh"))
+      .groupBy(col("doc_id"), Dedup.hash60(col("w")).as("wh"))
       .agg(count(lit(1)).as("k"))
     dw.join(enc, "wh")
       .groupBy(col("doc_id"))
@@ -1035,11 +1036,11 @@ object TextJobs {
   def unigramEncodeFallback(spark: SparkSession, sfDir: String): DataFrame = {
     val enc = unigramEncoderTable(spark, sfDir)
       .filter(length(col("w")) <= UNI_FB_MAX)
-      .select(hash60(col("w")).as("wh"), col("n_pieces"))
+      .select(Dedup.hash60(col("w")).as("wh"), col("n_pieces"))
     val dw = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), hash60(col("w")).as("wh"))
+      .groupBy(col("doc_id"), Dedup.hash60(col("w")).as("wh"))
       .agg(count(lit(1)).as("k"), max(length(col("w"))).as("wlen"))
     dw.join(enc, Seq("wh"), "left")
       .groupBy(col("doc_id"))
@@ -1182,18 +1183,6 @@ object TextJobs {
        |FROM dw LEFT JOIN enc USING (w)
        |GROUP BY doc_id""".stripMargin
 
-  /** DuckDB: first 15 md5-hex chars of `inner` as a 60-bit BIGINT (the
-    * [[OracleSql.hexIntSql]] shape widened past birthday range for
-    * corpus-scale bigram vocabularies).
-    */
-  private def hex60Sql(inner: String): String =
-    (1 to 15).map { i =>
-      s"(strpos('0123456789abcdef', substr(md5($inner),$i,1))-1) * ${math.pow(16, 15 - i).toLong}::BIGINT"
-    }.mkString("(", " + ", ")")
-
-  private[graft] def hash60(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** CCNet-style n-gram LM quality scoring with ENGINE-EXACT integer
     * arithmetic: train a hashed-bigram model on the corpus (c_bi = count
     * of bigram, c_prev = count of its prefix), then score each document
@@ -1217,18 +1206,9 @@ object TextJobs {
     * bigrams and no row (the [[substringDupRate]] convention).
     */
   def lmSurprise(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val pairs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        posexplode(TextAnalysis.tokens(lower(col("text")))).as(Seq("pos", "w")))
-      .withColumn("nxt", lead(col("w"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      // model training and scoring both read this frame; only int
-      // hashes leave it
-      .select(col("doc_id"), hash60(col("w")).as("ph"),
-        hash60(concat_ws(" ", col("w"), col("nxt"))).as("bh"))
-      .cache()
+    // model training and scoring both read this frame; only int hashes
+    // leave it
+    val pairs = lmPairs(Tables.documents(spark, sfDir)).cache()
     val cb = pairs.groupBy(col("bh")).agg(count(lit(1)).as("c_bi"))
     val cp = pairs.groupBy(col("ph")).agg(count(lit(1)).as("c_prev"))
     pairs.join(cb, "bh").join(cp, "ph")
@@ -1240,18 +1220,6 @@ object TextJobs {
           + lit(1e-9), 4).as("mean_surprise"))
   }
 
-  /** The CCNet configuration of [[lmSurprise]]: the bigram model is
-    * trained on the HIGH-QUALITY subset only (quality ≥ 0.4 — the same
-    * supervision split `quality_classifier_trained` uses), and EVERY
-    * document scores against that reference model. Bigrams absent from
-    * the model are out-of-model (real pipelines smooth them; here they
-    * are counted — `n_oov` — and excluded from the surprise sum, keeping
-    * every emitted number engine-exact): a doc that looks nothing like
-    * the clean corpus shows up as high `oov_rate`, one made of clean-
-    * corpus boilerplate as low `mean_surprise`. Same join shape as
-    * [[lmSurprise]] — the model side shrinks, an extra left join carries
-    * the OOV bit.
-    */
   /** Per-document hashed bigram keys (ph, bh) — the shared lineage of the
     * batch LM queries and the model the streaming screen joins against.
     */
@@ -1263,8 +1231,8 @@ object TextJobs {
         posexplode(TextAnalysis.tokens(lower(col("text")))).as(Seq("pos", "w")))
       .withColumn("nxt", lead(col("w"), 1).over(w))
       .filter(col("nxt").isNotNull)
-      .select(col("doc_id"), hash60(col("w")).as("ph"),
-        hash60(concat_ws(" ", col("w"), col("nxt"))).as("bh"))
+      .select(col("doc_id"), Dedup.hash60(col("w")).as("ph"),
+        Dedup.hash60(concat_ws(" ", col("w"), col("nxt"))).as("bh"))
   }
 
   /** The persisted reference model of [[lmSurpriseRef]] as two count
@@ -1282,6 +1250,18 @@ object TextJobs {
       ref.groupBy(col("ph")).agg(count(lit(1)).as("c_prev")))
   }
 
+  /** The CCNet configuration of [[lmSurprise]]: the bigram model is
+    * trained on the HIGH-QUALITY subset only (quality ≥ 0.4 — the same
+    * supervision split `quality_classifier_trained` uses), and EVERY
+    * document scores against that reference model. Bigrams absent from
+    * the model are out-of-model (real pipelines smooth them; here they
+    * are counted — `n_oov` — and excluded from the surprise sum, keeping
+    * every emitted number engine-exact): a doc that looks nothing like
+    * the clean corpus shows up as high `oov_rate`, one made of clean-
+    * corpus boilerplate as low `mean_surprise`. Same join shape as
+    * [[lmSurprise]] — the model side shrinks, an extra left join carries
+    * the OOV bit.
+    */
   def lmSurpriseRef(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.documents(spark, sfDir)
     val (cb, cp) = lmRefModel(spark, sfDir)
@@ -1886,12 +1866,12 @@ object TextJobs {
   def textRepetition(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.documents(spark, sfDir)
     val words = d.select(col("doc_id"),
-      explode(split(trim(col("text")), "\\s+")).as("w"))
+      explode(Dedup.words(col("text"))).as("w"))
     val ws = words.groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_words"), count(lit(1)).as("nd"))
-    val gs = graft.ops.Dedup
+    val gs = Dedup
       .explodedGrams(d.select(col("doc_id"), col("text")), 2, distinct = false)
       .groupBy(col("doc_id"), col("gram"))
       .agg(count(lit(1)).as("cnt"))
@@ -1909,8 +1889,8 @@ object TextJobs {
   }
 
   val textRepetitionSql: String =
-    """WITH w AS (
-      |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
+    s"""WITH w AS (
+      |  SELECT doc_id, unnest(${wordsSql("text")}) AS w
       |  FROM documents
       |), ws AS (
       |  SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_words, COUNT(*) AS nd
@@ -1919,7 +1899,7 @@ object TextJobs {
       |), g AS (
       |  SELECT doc_id, unnest(
       |    [array_to_string(wl[i:i+1], ' ') FOR i IN range(1, len(wl))]) AS gram
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS wl
+      |  FROM (SELECT doc_id, ${wordsSql("text")} AS wl
       |        FROM documents)
       |  WHERE len(wl) >= 2
       |), gs AS (
@@ -2015,7 +1995,7 @@ object TextJobs {
          |    + 1e-9, 4)""".stripMargin
     s"""WITH s AS (
        |  SELECT source,
-       |         md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+       |         ${fingerprintSql("text")} AS fp,
        |         CAST(ROUND($qualitySql * 10000.0) AS BIGINT) AS q4
        |  FROM documents
        |)
@@ -2039,7 +2019,7 @@ object TextJobs {
     * all, so the op is exactly as scalable as the scan itself.
     */
   def docChunks(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = Dedup.words(col("text"))
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), toks.as("toks"))
       .select(col("doc_id"),
@@ -2062,7 +2042,7 @@ object TextJobs {
        |    [{'k': CAST(k AS BIGINT),
        |      'c': wl[k * $CHUNK_STRIDE + 1 : k * $CHUNK_STRIDE + $CHUNK_W]}
        |     FOR k IN range(0, (len(wl) - 1) // $CHUNK_STRIDE + 1)]) AS s
-       |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS wl
+       |  FROM (SELECT doc_id, ${wordsSql("text")} AS wl
        |        FROM documents) t) u""".stripMargin
 
   // ---- PII redaction (email/phone scrub) ----
@@ -2362,7 +2342,7 @@ object TextJobs {
         TextAnalysis.tokenCount(col("text")).as("toks"))
     docs.join(broadcast(rates), "source")
       .withColumn("admit",
-        graft.ops.Dedup.md5Long(
+        Dedup.md5Long(
           concat(lit("mix#"), col("doc_id").cast("string"))) % 1000000L
           < col("rate_ppm"))
       .groupBy(col("source"))
@@ -2421,7 +2401,7 @@ object TextJobs {
     */
   def evalPanelSample(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val coin = graft.ops.Dedup.md5Long(
+    val coin = Dedup.md5Long(
       concat(lit("strat#"), col("doc_id").cast("string")))
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), coin.as("coin"))
@@ -2575,7 +2555,6 @@ object TextJobs {
     */
   private[jobs] def rocchioFeats(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.{HashedLinearModel => M}
-    import graft.ops.Dedup
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("t"))
       .select(col("doc_id"), (Dedup.md5Long(col("t")) % M.Buckets).as("b"))
@@ -3066,7 +3045,7 @@ object TextJobs {
           Window.partitionBy(col("doc_id")).orderBy(col("i"))), lit(0)) + 1)
       .withColumn("clen", (col("i") - col("start") + 1).cast("long"))
       .withColumn("ch",
-        hash60(expr("substring(text, start, i - start + 1)")))
+        Dedup.hash60(expr("substring(text, start, i - start + 1)")))
     val ranked = chunks.withColumn("rn",
       row_number().over(Window.partitionBy(col("ch"))
         .orderBy(col("doc_id"), col("start"))))
@@ -3511,7 +3490,7 @@ object TextJobs {
         .select(col("doc_id"),
           posexplode(regexp_extract_all(clean, lit("[a-z0-9]+"), lit(0)))
             .as(Seq("pos", "w")))
-        .select(col("doc_id"), col("pos"), col("w"), hash60(col("w")).as("wh")))
+        .select(col("doc_id"), col("pos"), col("w"), Dedup.hash60(col("w")).as("wh")))
       val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       val nbr = t.select(col("wh"),
         lead(col("wh"), 1).over(wDoc).as("n1"),

@@ -25,14 +25,23 @@ import org.apache.spark.sql.functions._
   *    lossless df-ordered prefix join (PPJoin family) that additionally
   *    fences the stop-gram f² zone on Zipf-vocabulary corpora.
   *
-  * Hashes are engine-portable: md5 hex prefix → BIGINT (Spark `conv`;
-  * DuckDB positional strpos arithmetic) so DuckDB oracles reproduce them.
+  * Text contract, the Spark form of each decision (DuckDB forms in
+  * `graft.jobs.OracleSql`): md5-hex-prefix hashes cut by one limb
+  * reader, the word split, and a row's positional windows.
   */
 object Dedup {
 
+  /** `width` hex chars of `hex` from 1-based `from` as a BIGINT. */
+  private def hexLimb(hex: Column, from: Int, width: Int): Column =
+    conv(substring(hex, from, width), 16, 10).cast("long")
+
   /** First 8 md5 hex chars as a non-negative BIGINT (32-bit range). */
-  def md5Long(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
+  def md5Long(c: Column): Column = hexLimb(md5(c), 1, 8)
+
+  /** First 15 md5 hex chars as a 60-bit BIGINT: past birthday range for
+    * corpus-scale vocabularies, never touching the sign bit.
+    */
+  def hash60(c: Column): Column = hexLimb(md5(c), 1, 15)
 
   /** The 64-bit window hash: md5's first 16 hex chars as two 32-bit limbs
     * (gh1, gh2), so `gh1` is [[md5Long]]. Positional-window consumers key
@@ -45,13 +54,32 @@ object Dedup {
     */
   def windowHash(window: Column): Seq[Column] = {
     val h = md5(window)
-    Seq(conv(substring(h, 1, 8), 16, 10).cast("long").as("gh1"),
-      conv(substring(h, 9, 8), 16, 10).cast("long").as("gh2"))
+    Seq(hexLimb(h, 1, 8).as("gh1"), hexLimb(h, 9, 8).as("gh2"))
   }
 
+  /** The 120-bit identity-compression key: md5's first 30 hex chars as
+    * two 60-bit limbs (gk1, gk2).
+    */
+  def contentKey(content: Column): Seq[Column] = {
+    val h = md5(content)
+    Seq(hexLimb(h, 1, 15).as("gk1"), hexLimb(h, 16, 15).as("gk2"))
+  }
+
+  /** The word split. `trim` strips spaces only (in DuckDB too), so a
+    * leading tab or trailing newline yields an empty first or last word.
+    */
+  def words(text: Column): Column = split(trim(text), "\\s+")
+
+  /** A row's `w`-word windows in order, ragged tail dropped: per row, the
+    * grams of [[explodedGrams]]. Pass a projected array column — the
+    * lambda reads `words` once per element.
+    */
+  def rowWindows(words: Column, w: Int): Column =
+    filter(transform(words, (_, i) => array_join(slice(words, i + 1, lit(w)), " ")),
+      (_, i) => i <= size(words) - w)
+
   /** Distinct word tokens of a document. */
-  def wordSet(text: Column): Column =
-    array_distinct(split(trim(text), "\\s+"))
+  def wordSet(text: Column): Column = array_distinct(words(text))
 
   /** Exact dedup: group by content fingerprint, keep the smallest id.
     * Output one row per distinct content: (fingerprint, keeper, n_dups).
@@ -76,9 +104,9 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val others = df.columns.toSeq.filterNot(_ == "text").map(col)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val words = df.select(others :+
-      posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "w")): _*)
-    val withParts = (1 until n).foldLeft(words) { (acc, j) =>
+    val exploded = df.select(others :+
+      posexplode(words(col("text"))).as(Seq("pos", "w")): _*)
+    val withParts = (1 until n).foldLeft(exploded) { (acc, j) =>
       acc.withColumn(s"w$j", lead(col("w"), j).over(w))
     }
     val parts = col("w") +: (1 until n).map(j => col(s"w$j"))
@@ -281,8 +309,7 @@ object Dedup {
     */
   def simhashWide(df: DataFrame, id: Column, text: Column, bits: Int): DataFrame = {
     require(bits <= 60, s"wide simhash word hash is 60-bit; got bits=$bits")
-    simhashHashed(df, id, text, bits,
-      c => conv(substring(md5(c), 1, 15), 16, 10).cast("long"))
+    simhashHashed(df, id, text, bits, hash60)
   }
 
   private def simhashHashed(df: DataFrame, id: Column, text: Column,
@@ -978,12 +1005,10 @@ object Dedup {
       df: DataFrame, scope: CacheScope)(
       core: DataFrame => (DataFrame, DataFrame)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val norm = md5(concat_ws(" ", split(trim(col("text")), "\\s+")))
     // the grouping pass hashes text in place and shuffles ONLY
     // (doc_id, block, gk1, gk2) int rows — never the text payload
-    val keyed = df.select(col("doc_id"), col("block"),
-      conv(substring(norm, 1, 15), 16, 10).cast("long").as("gk1"),
-      conv(substring(norm, 16, 15), 16, 10).cast("long").as("gk2"))
+    val keyed = df.select(Seq(col("doc_id"), col("block")) ++
+      contentKey(concat_ws(" ", words(col("text")))): _*)
     // one tiny exchange on (block, content-key); every doc learns its
     // group's representative (min doc_id) in the same pass. Only the
     // (doc_id, rep_id) membership is cached — the 120-bit content key and
@@ -1249,9 +1274,9 @@ object Dedup {
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ws = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val words = scope.cache(df.select(col("doc_id"),
-      posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok"))))
-    val withParts = (1 until w).foldLeft(words) { (acc, j) =>
+    val toks = scope.cache(df.select(col("doc_id"),
+      posexplode(words(col("text"))).as(Seq("pos", "tok"))))
+    val withParts = (1 until w).foldLeft(toks) { (acc, j) =>
       acc.withColumn(s"t$j", lead(col("tok"), j).over(ws))
     }
     val parts = col("tok") +: (1 until w).map(j => col(s"t$j"))
@@ -1265,7 +1290,7 @@ object Dedup {
       .select(col("doc_id"),
         explode(sequence(col("spos"), col("spos") + lit(w - 1))).as("pos"))
       .distinct()
-    words
+    toks
       .join(covered.withColumn("rm", lit(true)), Seq("doc_id", "pos"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
@@ -1282,9 +1307,9 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val ws = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     // one tokenize pass feeds both the window hashes and the rebuild
-    val words = scope.cache(df.select(col("doc_id"),
-      posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok"))))
-    val withParts = (1 until w).foldLeft(words) { (acc, j) =>
+    val toks = scope.cache(df.select(col("doc_id"),
+      posexplode(words(col("text"))).as(Seq("pos", "tok"))))
+    val withParts = (1 until w).foldLeft(toks) { (acc, j) =>
       acc.withColumn(s"t$j", lead(col("tok"), j).over(ws))
     }
     val parts = col("tok") +: (1 until w).map(j => col(s"t$j"))
@@ -1301,7 +1326,7 @@ object Dedup {
       .select(col("doc_id"),
         explode(sequence(col("spos"), col("spos") + lit(w - 1))).as("pos"))
       .distinct()
-    words
+    toks
       .join(covered.withColumn("rm", lit(true)), Seq("doc_id", "pos"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),

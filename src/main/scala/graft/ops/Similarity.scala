@@ -309,10 +309,8 @@ object Similarity {
       vectors: DataFrame, centroids: DataFrame, threshold: Double,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val h = md5(col("v").cast("string"))
-    val keyed = vectors.select(col("vec_id"),
-      conv(substring(h, 1, 15), 16, 10).cast("long").as("gk1"),
-      conv(substring(h, 16, 15), 16, 10).cast("long").as("gk2"))
+    val keyed = vectors.select(
+      col("vec_id") +: Dedup.contentKey(col("v").cast("string")): _*)
     val mem = scope.cache(keyed.withColumn("rep_id",
         min(col("vec_id")).over(Window.partitionBy(col("gk1"), col("gk2"))))
       .select(col("vec_id"), col("rep_id")))

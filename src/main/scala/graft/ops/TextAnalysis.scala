@@ -102,11 +102,16 @@ object TextAnalysis {
       "kept" -> (terminal && !braces && !lorem && nTok >= 5 && wordLen))
   }
 
+  /** The text normalizer: space-trimmed, lowercased, whitespace runs
+    * collapsed to one space.
+    */
+  def normalized(text: Column): Column =
+    regexp_replace(lower(trim(text)), "\\s+", " ")
+
   /** Normalized-content fingerprint: md5 of lowercased, whitespace-collapsed
     * text — the exact-dedup key. (Near-dup fingerprints live in Dedup.)
     */
-  def fingerprint(text: Column): Column =
-    md5(regexp_replace(lower(trim(text)), "\\s+", " "))
+  def fingerprint(text: Column): Column = md5(normalized(text))
 
   /** PII scrubbing patterns, restricted to syntax Java regex and RE2 (the
     * DuckDB engine) interpret identically — character classes, bounded

@@ -79,10 +79,8 @@ object StreamingCuration {
       .withColumn("n_tok", TextAnalysis.tokenCount(col("text")))
       .withColumn("q", TextAnalysis.qualityScore(col("n_tok"),
         TextAnalysis.stopwordCount(col("text"))))
-      .withColumn("w_arr", split(trim(col("text")), "\\s+"))
-      .withColumn("g", explode(expr(
-        s"filter(transform(w_arr, (x, i) -> array_join(slice(w_arr, i + 1, $w), ' ')), " +
-          s"(g, i) -> i <= size(w_arr) - $w)")))
+      .withColumn("w_arr", Dedup.words(col("text")))
+      .withColumn("g", explode(Dedup.rowWindows(col("w_arr"), w)))
       .select(Seq(col(tsCol), col("doc_id"), col("source"), col("n_tok"),
         col("q")) ++ Dedup.windowHash(col("g")): _*)
     val perDoc = wins

@@ -40,13 +40,8 @@ object StreamingDecontam {
       evalWindows: DataFrame, w: Int): DataFrame = {
     val wins = docs
       .withWatermark(tsCol, delay)
-      .withColumn("w_arr", split(trim(col("text")), "\\s+"))
-      // window i (0-based) spans words i..i+w-1; slice is 1-based, and
-      // the index filter drops the ragged tail exactly like
-      // explodedGrams' isNotNull guard
-      .withColumn("g", explode(expr(
-        s"filter(transform(w_arr, (x, i) -> array_join(slice(w_arr, i + 1, $w), ' ')), " +
-          s"(g, i) -> i <= size(w_arr) - $w)")))
+      .withColumn("w_arr", Dedup.words(col("text")))
+      .withColumn("g", explode(Dedup.rowWindows(col("w_arr"), w)))
       .select(Seq(col("doc_id"), col(tsCol).as("ts")) ++
         Dedup.windowHash(col("g")): _*)
     wins

@@ -59,21 +59,14 @@ object StreamingDedup {
     val sigged = (0 until k).foldLeft(
         docs
           .withWatermark(tsCol, delay)
-          .withColumn("w_arr", split(trim(col("text")), "\\s+"))
-          // bigram i pairs word i with word i+1 (element_at is 1-based);
-          // the index filter drops the ragged tail exactly like
-          // explodedGrams' isNotNull guard
-          .withColumn("gram_arr", expr(
-            "filter(transform(w_arr, (x, i) -> concat(x, ' ', try_element_at(w_arr, i + 2)))," +
-              " (g, i) -> i < size(w_arr) - 1)"))
+          .withColumn("w_arr", Dedup.words(col("text")))
           .withColumn("gh_arr",
-            expr("transform(gram_arr, g -> conv(substring(md5(g), 1, 8), 16, 10))")
-              .cast("array<long>"))) { (acc, j) =>
-        acc.withColumn(s"h$j", expr(
-          s"array_min(transform(gh_arr, h -> (h * ${Dedup.minhashA(j)}L" +
-            s" + ${Dedup.minhashB(j)}L) % ${Dedup.MinhashPrime}L))"))
+            transform(Dedup.rowWindows(col("w_arr"), 2), Dedup.md5Long(_)))) {
+        (acc, j) =>
+          acc.withColumn(s"h$j",
+            array_min(transform(col("gh_arr"), Dedup.minhashCol(_, j))))
       }
-      .drop("w_arr", "gram_arr", "gh_arr", "text")
+      .drop("w_arr", "gh_arr", "text")
     (0 until bands).map { bi =>
       val bandEq = (0 until rowsPerBand)
         .map(x => col(s"s.h${bi * rowsPerBand + x}") === col(s"c.h${bi * rowsPerBand + x}"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.TextAnalysis
+import graft.ops.{Dedup, TextAnalysis}
 
 /** Streaming LM-quality screen — the ingest-side form of
   * `TextJobs.lmSurpriseRef`: each ARRIVING document scores against the
@@ -35,14 +35,13 @@ object StreamingLm {
     val pairs = docs
       .withWatermark(tsCol, delay)
       .withColumn("toks", TextAnalysis.tokens(lower(col("text"))))
-      .withColumn("pair", explode(expr(
-        "filter(transform(toks, (x, i) -> " +
-          "named_struct('w', x, 'nxt', try_element_at(toks, i + 2))), " +
-          "p -> p.nxt IS NOT NULL)")))
+      .withColumn("pair", explode(filter(
+        transform(col("toks"), (x, i) =>
+          struct(x.as("w"), try_element_at(col("toks"), i + 2).as("nxt"))),
+        p => p.getField("nxt").isNotNull)))
       .select(col("doc_id"), col(tsCol).as("ts"),
-        graft.jobs.TextJobs.hash60(col("pair.w")).as("ph"),
-        graft.jobs.TextJobs.hash60(
-          concat_ws(" ", col("pair.w"), col("pair.nxt"))).as("bh"))
+        Dedup.hash60(col("pair.w")).as("ph"),
+        Dedup.hash60(concat_ws(" ", col("pair.w"), col("pair.nxt"))).as("bh"))
     pairs
       .join(bigramCounts, Seq("bh"), "left")
       .join(prefixCounts, Seq("ph"), "left")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{HashedLinearModel, TextModelFunctions}
-import graft.ops.TextAnalysis
+import graft.ops.{Dedup, TextAnalysis}
 
 /** In-flight text-ingest screen — the STATELESS gate a pipeline runs on
   * the document stream before the stateful screens (`StreamingDedup`,
@@ -51,8 +51,8 @@ object StreamingText {
     * batch corpus is big; a SINGLE arriving document is not, so the
     * identical first-occurrence contract runs as one per-row pass
     * (stateless typed mapPartitions — no state, no shuffle, composes
-    * anywhere in the ingest chain). Spec-pinned bit-equal to the batch
-    * op on the same documents.
+    * anywhere in the ingest chain) over the batch op's own word split.
+    * Spec-pinned bit-equal to the batch op on the same documents.
     *
     * Input needs (doc_id, text); emits (doc_id, n_tokens, n_removed,
     * clean_text) — the batch op's exact schema.
@@ -60,11 +60,10 @@ object StreamingText {
   def cleanRepetitions(docs: DataFrame, w: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)]
+    docs.select(col("doc_id"), Dedup.words(col("text")))
+      .as[(Long, Array[String])]
       .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val toks = text.trim.split("\\s+")
+        it.map { case (id, toks) =>
           val n = toks.length
           val removed = new Array[Boolean](n)
           val firstAt = scala.collection.mutable.HashMap.empty[String, Int]

@@ -16,6 +16,54 @@ class DedupSpec extends SparkSpec {
     (6L, "one", "en")) // single word: no bigrams
     .toDF("doc_id", "text", "lang")
 
+  test("text contract: md5-prefix hashes are the MessageDigest hex prefixes") {
+    val strs = Seq("", "a", "the quick brown fox", "naïve café",
+      "日本語のテキスト", "emoji \uD83D\uDE42 ok")
+    def limb(s: String, from: Int, width: Int): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.substring(from - 1, from - 1 + width), 16)
+    }
+    val s = col("s")
+    val got = strs.toDF("s").select(Seq(s, Dedup.md5Long(s).as("m32"),
+        Dedup.hash60(s).as("m60")) ++ Dedup.windowHash(s) ++
+        Dedup.contentKey(s): _*)
+      .collect()
+    assert(got.length == strs.length)
+    got.foreach { r =>
+      val in = r.getAs[String]("s")
+      assert(r.getAs[Long]("m32") == limb(in, 1, 8), in)
+      assert(r.getAs[Long]("m60") == limb(in, 1, 15), in)
+      assert(r.getAs[Long]("gh1") == limb(in, 1, 8), in)
+      assert(r.getAs[Long]("gh2") == limb(in, 9, 8), in)
+      assert(r.getAs[Long]("gk1") == limb(in, 1, 15), in)
+      assert(r.getAs[Long]("gk2") == limb(in, 16, 15), in)
+    }
+  }
+
+  test("text contract: rowWindows equals explodedGrams per doc, in order") {
+    val edge = Seq(
+      (1L, "\tx y z x y z"), (2L, "x y z x y z\n"),
+      (3L, "doubled  spaces   between words  here"),
+      (4L, "two words"), (5L, ""), (6L, " a b c d e f g h i j k"))
+      .toDF("doc_id", "text")
+    Seq(2, 3, 8).foreach { w =>
+      // the gram window sorts each doc's words by pos, so collected rows
+      // come out in pos order within a doc
+      val batch = Dedup.explodedGrams(edge, w, distinct = false)
+        .as[(Long, String)].collect().toSeq
+        .groupBy(_._1).map { case (d, gs) => d -> gs.map(_._2) }
+      val row = edge.select($"doc_id", Dedup.words($"text").as("w_arr"))
+        .select($"doc_id", Dedup.rowWindows($"w_arr", w))
+        .as[(Long, Seq[String])].collect().toMap
+      assert(row.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L))
+      row.foreach { case (d, gs) =>
+        assert(gs == batch.getOrElse(d, Seq.empty), s"doc $d at w=$w")
+      }
+      assert(row.values.exists(_.nonEmpty), s"w=$w")
+    }
+  }
+
   test("exact dedup groups normalized duplicates") {
     val out = Dedup.exact(docs, $"doc_id", $"text")
       .orderBy($"keeper").collect()

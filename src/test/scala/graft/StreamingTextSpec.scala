@@ -81,6 +81,33 @@ class StreamingTextSpec extends SparkSpec {
       "corpus must contain intra-doc repeats at w=3")
   }
 
+  test("repetition trim splits words exactly as the batch op on edge whitespace") {
+    implicit val sqlCtx = spark.sqlContext
+    // Spark's trim strips spaces only, so the leading tab and trailing
+    // newline each leave an empty word in the batch split
+    val rows = Seq(
+      (1L, "\tx y z x y z", ts(1)),
+      (2L, "x y z x y z\n", ts(2)),
+      (3L, "a plain line a plain line again", ts(3)))
+    val in = MemoryStream[(Long, String, Timestamp)]
+    val q = StreamingText.cleanRepetitions(
+        in.toDF().toDF("doc_id", "text", "ts"), w = 3)
+      .writeStream.format("memory").queryName("stream_rep_clean_edges")
+      .outputMode("append").start()
+    val got = try {
+      in.addData(rows: _*)
+      q.processAllAvailable()
+      spark.table("stream_rep_clean_edges").collect().map(_.toSeq).toSet
+    } finally q.stop()
+
+    val want = graft.ops.Dedup.repetitionClean(
+        rows.map(r => (r._1, r._2)).toDF("doc_id", "text"), 3)
+      .collect().map(_.toSeq).toSet
+    assert(got == want)
+    assert(want.contains(Seq(1L, 7L, 3L, " x y z")))
+    assert(want.exists(r => r(0) == 2L && r(1) == 7L))
+  }
+
   test("standing-query matches equal the batch pipeline's pre-rank hits") {
     implicit val sqlCtx = spark.sqlContext
     val sfd = sf("sf0.001")
