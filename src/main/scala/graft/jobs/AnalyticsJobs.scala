@@ -3,8 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.Dedup
-import graft.ops.Eager.EagerOps
+import graft.ops.{Dedup, Handoff}
 
 /** Analytics headroom beyond the reference's own surface (SURVEY.md §2.6 /
   * §2.7 notes): session windows, grouping sets, pivot, set operations.
@@ -1766,7 +1765,15 @@ object AnalyticsJobs {
       .cache()
     val uCount = kept.agg(count_distinct(col("u")).as("uc"))
     val sizes = kept.groupBy(col("i")).agg(count(lit(1)).as("n"))
-    kept.alias("a").join(kept.alias("b"),
+    // a cut (not cache): every consumer ([[itemTriangles]]'s
+    // deg/ed/orientation branches, [[itemKcore]]'s sym union) is a
+    // multi-reference, and a cache still re-prints/re-analyzes the whole
+    // co-occurrence lineage per reference (measured: 613-node CARTx17
+    // triangles plan uncached, 1203-node cached). The edge frame is
+    // lift-thinned item-pair-bounded — model-sized, never the corpus —
+    // so truncating its lineage is the [[graft.ops.Graph]] iterative
+    // pattern, not a durability risk worth re-deriving per branch.
+    Handoff.cut(kept.alias("a").join(kept.alias("b"),
         col("a.u") === col("b.u") && col("a.i") < col("b.i"))
       .groupBy(col("a.i").as("ia"), col("b.i").as("ib"))
       .agg(count(lit(1)).as("co"))
@@ -1774,16 +1781,7 @@ object AnalyticsJobs {
       .join(sizes.select(col("i").as("ib"), col("n").as("nb")), "ib")
       .crossJoin(broadcast(uCount))
       .filter(col("co") * col("uc") * 100 > lit(LIFT_PCT) * col("na") * col("nb"))
-      .select(col("ia"), col("ib"))
-      // localCheckpoint (not cache): every consumer ([[itemTriangles]]'s
-      // deg/ed/orientation branches, [[itemKcore]]'s sym union) is a
-      // multi-reference, and a cache still re-prints/re-analyzes the whole
-      // co-occurrence lineage per reference (measured: 613-node CARTx17
-      // triangles plan uncached, 1203-node cached). The edge frame is
-      // lift-thinned item-pair-bounded — model-sized, never the corpus —
-      // so truncating its lineage is the [[graft.ops.Graph]] iterative
-      // pattern, not a durability risk worth re-deriving per branch.
-      .eagerCheckpoint()
+      .select(col("ia"), col("ib")))
   }
 
   /** Shared oracle CTE chain ending in `und(ia, ib)` — the lift graph.

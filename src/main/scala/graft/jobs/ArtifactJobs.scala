@@ -2,10 +2,9 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Eager.EagerOps
 
 import graft.io.Tables
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{CacheScope, Dedup, Handoff, Similarity}
 
 /** Persist-then-score: the production train-once/score-many shape.
   *
@@ -81,16 +80,15 @@ object ArtifactJobs {
     // slim handoff (the semanticDedupFromArtifact discipline): scoring
     // touches only the loaded artifact, and the vector/probe caches
     // release at construction end
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val v = scope.cache(SimilarityJobs.vectors(spark, sfDir))
       val loaded = persist(spark, "ivf_centroids", vecsFp(sfDir),
         SimilarityJobs.trainedCents(spark, sfDir, v))
-      Similarity.ivfTopKWith(v, loaded,
+      Handoff.cut(Similarity.ivfTopKWith(v, loaded,
         col("vec_id") < SimilarityJobs.N_QUERIES,
         nprobe = SimilarityJobs.IVF_NPROBE, k = SimilarityJobs.TOP_K,
-        scope = scope).eagerCheckpoint()
-    } finally scope.close()
+        scope = scope))
+    }
   }
 
   /** Rocchio quality classifier scoring from persisted (b, w) weights
@@ -201,14 +199,13 @@ object ArtifactJobs {
     // pair-stage internals release at construction end; trainedCents
     // serves a local C-row frame (ModelMemo), so persist's
     // by-name model constructs no training plan on a memo hit
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val v = scope.cache(SimilarityJobs.vectors(spark, sfDir))
       val loaded = persist(spark, "ivf_centroids", vecsFp(sfDir),
         SimilarityJobs.trainedCents(spark, sfDir, v))
-      Similarity.withinCellPairs(v, loaded, SimilarityJobs.NEARDUP_THRESHOLD,
-        scope).eagerCheckpoint()
-    } finally scope.close()
+      Handoff.cut(Similarity.withinCellPairs(v, loaded,
+        SimilarityJobs.NEARDUP_THRESHOLD, scope))
+    }
   }
 
   /** Hard-negative mining served from persisted IVF centroids: the
@@ -421,11 +418,11 @@ object ArtifactJobs {
     val docs = Tables.documents(spark, sfDir)
     val stored = persist(spark, "video_fp_index", docsFp(sfDir),
       Multimodal.videoScan(spark, docs.filter(col("doc_id") % 5 =!= 0)))
-    // localCheckpoint, not .cache(): consumed by both the banded join and
+    // a handoff cut, not .cache(): consumed by both the banded join and
     // the verify stage, and a bare cache would leak past the query (see
     // [[fpIndexIncremental]]).
-    val delta = Multimodal.videoScan(spark,
-      docs.filter(col("doc_id") % 5 === 0)).eagerCheckpoint()
+    val delta = Handoff.cut(Multimodal.videoScan(spark,
+      docs.filter(col("doc_id") % 5 === 0)))
     val full = stored.unionByName(delta)
     val bands = Dedup.Bands63
     def banded(anchors: DataFrame, idAs: String, fpAs: String) =
@@ -511,13 +508,12 @@ object ArtifactJobs {
     val stored = persist(spark, indexName, docsFp(sfDir),
       scan(spark, docs.filter(col("doc_id") % 5 =!= 0))
         .select(col("doc_id"), col("fp")))
-    // Eagerly materialized (localCheckpoint, ContextCleaner-reclaimed)
-    // rather than .cache()d: the delta frame is consumed twice (its own
+    // A handoff cut (ContextCleaner-reclaimed) rather than .cache()d: the delta frame is consumed twice (its own
     // banded side and the stored ∪ delta side) but a bare cache would
     // outlive the query for the JVM lifetime — the same concurrent-
     // footprint class the cross_modal_clusters scoping fixed.
-    val delta = scan(spark, docs.filter(col("doc_id") % 5 === 0))
-      .select(col("doc_id"), col("fp")).eagerCheckpoint()
+    val delta = Handoff.cut(scan(spark, docs.filter(col("doc_id") % 5 === 0))
+      .select(col("doc_id"), col("fp")))
     val full = stored.unionByName(delta)
     val bands = Dedup.Bands63
     def banded(side: DataFrame, idAs: String, fpAs: String) =
@@ -609,12 +605,10 @@ object ArtifactJobs {
     */
   def imageIndexCompacted(spark: SparkSession, sfDir: String): DataFrame = {
     val idx = imageFpCompactedIdx(spark, sfDir)
-    val scope = graft.ops.CacheScope()
-    try {
-      graft.ops.Dedup.hammingPairsAuto(idx,
-          MultimodalJobs.NEARDUP_MAX_HAMMING, scope)
-        .eagerCheckpoint()
-    } finally scope.close()
+    CacheScope.scoped { scope =>
+      Handoff.cut(Dedup.hammingPairsAuto(idx,
+        MultimodalJobs.NEARDUP_MAX_HAMMING, scope))
+    }
   }
 
   /** The compacted full-corpus image fp index (stored 4/5 artifact ∪ five
@@ -673,12 +667,10 @@ object ArtifactJobs {
     val purged = persist(spark, "image_fp_purged", docsFp(sfDir),
       imageFpCompactedIdx(spark, sfDir)
         .filter(col("doc_id") % 29 =!= DOC_ERASE_RESIDUE))
-    val scope = graft.ops.CacheScope()
-    try {
-      graft.ops.Dedup.hammingPairsAuto(purged,
-          MultimodalJobs.NEARDUP_MAX_HAMMING, scope)
-        .eagerCheckpoint()
-    } finally scope.close()
+    CacheScope.scoped { scope =>
+      Handoff.cut(Dedup.hammingPairsAuto(purged,
+        MultimodalJobs.NEARDUP_MAX_HAMMING, scope))
+    }
   }
 
   /** ERASURE REACHES THE CF MODEL — the collaborative-filtering sibling
@@ -716,8 +708,7 @@ object ArtifactJobs {
     // tag keeps the decrement lineage executing and hash-gating on the
     // miss; repeat serves are catalog×K lookups
     memoizedLists(spark, sfDir, ":cf_erase", {
-      val scope = graft.ops.CacheScope()
-      try {
+      CacheScope.scoped { scope =>
         lazy val kept = scope.cache(keptUncached(interactionsOf(spark, sfDir)))
         val storedInter = persist(spark, "cf_pair_counts", fp,
           interCountsOf(kept))
@@ -735,8 +726,8 @@ object ArtifactJobs {
         val newSizes = storedSizes.join(dSizes, Seq("i"), "left")
           .select(col("i"), (col("n") - coalesce(col("dn"), lit(0L))).as("n"))
           .filter(col("n") > 0)
-        listsFromCounts(newInter, newSizes).eagerCheckpoint()
-      } finally scope.close()
+        Handoff.cut(listsFromCounts(newInter, newSizes))
+      }
     })
   }
 
@@ -767,12 +758,10 @@ object ArtifactJobs {
           .select(col("doc_id"), col("fp"))
       },
       sortCols = Seq("doc_id"))
-    val scope = graft.ops.CacheScope()
-    try {
-      graft.ops.Dedup.hammingPairsAuto(idx,
-          MultimodalJobs.NEARDUP_MAX_HAMMING, scope)
-        .eagerCheckpoint()
-    } finally scope.close()
+    CacheScope.scoped { scope =>
+      Handoff.cut(Dedup.hammingPairsAuto(idx,
+        MultimodalJobs.NEARDUP_MAX_HAMMING, scope))
+    }
   }
 
   /** VIDEO per-frame index COMPACTION — the sequence-fingerprint member
@@ -795,16 +784,15 @@ object ArtifactJobs {
           docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 25 === c * 5))
       },
       sortCols = Seq("doc_id", "frame_idx"))
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val anchors = idx.filter(col("frame_idx") === 0)
         .select(col("doc_id"), col("fp"))
-      VideoPipeline.verifyAligned(idx,
+      Handoff.cut(VideoPipeline.verifyAligned(idx,
         Dedup.hammingPairsAuto(anchors,
             MultimodalJobs.NEARDUP_MAX_HAMMING, scope)
           .select(col("doc_a"), col("doc_b")),
-        MultimodalJobs.NEARDUP_MAX_HAMMING).eagerCheckpoint()
-    } finally scope.close()
+        MultimodalJobs.NEARDUP_MAX_HAMMING))
+    }
   }
 
   /** IVF×PQ index COMPACTION — the embedding sibling of

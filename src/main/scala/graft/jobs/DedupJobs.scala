@@ -3,8 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.{Dedup, TextAnalysis}
-import graft.ops.Eager.EagerOps
+import graft.ops.{CacheScope, Dedup, Handoff, TextAnalysis}
 import OracleSql.{fingerprintSql, hexIntSql, hexIntSqlAt, normalizedSql, wordsSql}
 
 /** Deduplication queries over `documents`, each with a DuckDB oracle that
@@ -284,14 +283,12 @@ object DedupJobs {
   def ngramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     // slim handoff (r17): the compressed join's gram/membership caches
     // were unmanaged and outlived the query for the JVM lifetime
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val d = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"), col("lang").as("block"))
-      Dedup.jaccardPairs(d, JACCARD_N, JACCARD_THRESHOLD, scope)
-        .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-        .eagerCheckpoint()
-    } finally scope.close()
+      Handoff.cut(Dedup.jaccardPairs(d, JACCARD_N, JACCARD_THRESHOLD, scope)
+        .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard")))
+    }
   }
 
   /** τ for the prefix gate as the exact rational the filter needs:
@@ -337,16 +334,14 @@ object DedupJobs {
     // slim handoff (r16): the registry's top-cost query was also holding
     // its corpus-sized distinct-gram cache unmanaged for the JVM
     // lifetime — scope it, checkpoint the pair output, release
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val d = Tables.documents(spark, sfDir)
         .where(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("text"), col("lang").as("block"))
-      Dedup.jaccardPairsPrefix(d, JACCARD_N, PREFIX_TAU_NUM, PREFIX_TAU_DEN,
-          scope)
-        .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-        .eagerCheckpoint()
-    } finally scope.close()
+      Handoff.cut(Dedup.jaccardPairsPrefix(d, JACCARD_N, PREFIX_TAU_NUM,
+          PREFIX_TAU_DEN, scope)
+        .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard")))
+    }
   }
 
   /** Uncompressed exact-Jaccard semantics at `threshold` — the shared
@@ -400,13 +395,12 @@ object DedupJobs {
     // spec-pinned for containment-heavy Zipf shapes; the plain
     // intersection join remains the registered plan at this operating
     // point.
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val d = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"), col("lang").as("block"))
-      Dedup.containmentPairs(d, JACCARD_N, CONT_THRESHOLD_PPM, scope)
-        .eagerCheckpoint()
-    } finally scope.close()
+      Handoff.cut(Dedup.containmentPairs(d, JACCARD_N, CONT_THRESHOLD_PPM,
+        scope))
+    }
   }
 
   /** Oracle: the Jaccard oracle's gram chain with both ppm
@@ -615,20 +609,20 @@ object DedupJobs {
     // Scope the two pipelines' internal caches (grams, signatures, image
     // scan, fingerprint frames): this consumer reads ONLY the slim
     // (doc_a, doc_b) pair frames, so the union edge set is materialized
-    // eagerly (localCheckpoint) and every upstream cache is released
+    // eagerly ([[Handoff.cut]]) and every upstream cache is released
     // BEFORE cluster resolution runs — holding both pipelines' full
     // caches through the components pass was the r13 driver-memory
     // footprint (10.8 s driver vs 4.0 s local, the rounds-4/5 playbook).
-    val scope = graft.ops.CacheScope()
     val docs = Tables.documents(spark, sfDir) // one load: each runs a schema job
-    val text = new graft.ops.DedupPipeline(
-        docs.select(col("doc_id"), col("text")), K, BANDS, JACCARD_N, scope)
-      .candidates.select(col("doc_a"), col("doc_b"))
-    val img = MultimodalJobs.pipelineScoped(spark, docs, scope).pairs
-      .select(col("doc_a"), col("doc_b"))
-    val edges = text.unionAll(img).eagerCheckpoint()
-    scope.close()
-    graft.ops.Dedup.connectedComponents(docs.select(col("doc_id")), edges)
+    val edges = CacheScope.scoped { scope =>
+      val text = new graft.ops.DedupPipeline(
+          docs.select(col("doc_id"), col("text")), K, BANDS, JACCARD_N, scope)
+        .candidates.select(col("doc_a"), col("doc_b"))
+      val img = MultimodalJobs.pipelineScoped(spark, docs, scope).pairs
+        .select(col("doc_a"), col("doc_b"))
+      Handoff.cut(text.unionAll(img))
+    }
+    Dedup.connectedComponents(docs.select(col("doc_id")), edges)
   }
 
   /** Oracle: the minhash candidate chain + the image near-dup pairs
@@ -745,13 +739,12 @@ object DedupJobs {
     // internal cache (grams, signatures, membership) releases before the
     // split joins run — the cross_modal/image_clusters footprint playbook
     // (decontamination sat in BENCHGAP-r14's 2-3x watch band)
-    val scope = graft.ops.CacheScope()
-    val verified = try {
-      new graft.ops.DedupPipeline(
+    val verified = CacheScope.scoped { scope =>
+      Handoff.cut(new graft.ops.DedupPipeline(
           Tables.documents(spark, sfDir).select(col("doc_id"), col("text")),
           K, BANDS, JACCARD_N, scope)
-        .verifiedPairs(JACCARD_THRESHOLD).eagerCheckpoint()
-    } finally scope.close()
+        .verifiedPairs(JACCARD_THRESHOLD))
+    }
     val splits = Tables.documents(spark, sfDir)
       .select(col("doc_id"), splitOf(col("doc_id")).as("split"))
     verified
@@ -1011,12 +1004,11 @@ object DedupJobs {
     // and outlived the query for the JVM lifetime — the r16 verdict also
     // flagged this query's superlinear 8-core degradation as cache/memory
     // pressure (§5); scoping bounds its footprint to the query's own run
-    val scope = graft.ops.CacheScope()
-    try Dedup.substringDupRate(
+    CacheScope.scoped { scope =>
+      Handoff.cut(Dedup.substringDupRate(
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text")),
-        SUBSTR_W, scope)
-      .eagerCheckpoint()
-    finally scope.close()
+        SUBSTR_W, scope))
+    }
   }
 
   /** Oracle restates the window-hash → document-frequency cascade; the

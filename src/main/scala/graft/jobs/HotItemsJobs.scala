@@ -83,20 +83,23 @@ object HotItemsJobs {
   def hotItemsSql(spark: SparkSession, sfDir: String): DataFrame = {
     // view name scoped to this query — a generic "events" view would be
     // session-global state that silently collides with any other registry
-    // query (or user code) registering its own
-    Tables.events(spark, sfDir).createOrReplaceTempView("graft_hot_items_sql_events")
-    spark.sql(
-      """SELECT window_end, item, cnt, rn FROM (
+    // query (or user code) registering its own. `spark.sql` analyzes
+    // eagerly, so the view is dropped as soon as it returns.
+    val view = "graft_hot_items_sql_events"
+    Tables.events(spark, sfDir).createOrReplaceTempView(view)
+    try spark.sql(
+      s"""SELECT window_end, item, cnt, rn FROM (
         |  SELECT *, ROW_NUMBER() OVER (
         |    PARTITION BY window_end ORDER BY cnt DESC, item ASC) AS rn
         |  FROM (
         |    SELECT CAST(regexp_extract(props, '([0-9]+)', 1) AS BIGINT) AS item,
         |           unix_timestamp(window.end) AS window_end,
         |           COUNT(*) AS cnt
-        |    FROM graft_hot_items_sql_events
+        |    FROM $view
         |    WHERE event_type = 'view'
         |    GROUP BY item, window(ts, '1 hour', '5 minutes'))) ranked
         |WHERE rn <= 5""".stripMargin)
+    finally spark.catalog.dropTempView(view)
   }
 
   // ---- W2/F2/F3/X2: top-3 hot pages per 10min/2min window ----

@@ -3,8 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.Multimodal
-import graft.ops.Eager.EagerOps
+import graft.ops.{CacheScope, Handoff, Multimodal}
 
 /** Multimodal-pipeline queries. `multimodal_meta` (binary payload + typed
   * metadata extraction) is oracle-checked; the decode/feature path runs
@@ -208,7 +207,7 @@ object MultimodalJobs {
     * release the decode/fingerprint caches before downstream work.
     */
   def pipelineScoped(spark: SparkSession, docs: DataFrame,
-      scope: graft.ops.CacheScope): graft.ops.ImagePipeline =
+      scope: CacheScope): graft.ops.ImagePipeline =
     graft.ops.ImagePipeline(spark, docs, NEARDUP_MAX_HAMMING, scope)
 
   /** The dHash pipeline restated for the oracles: pixel mix (two
@@ -311,12 +310,11 @@ object MultimodalJobs {
     // components pass runs — the cross_modal_clusters footprint playbook
     // (holding the full decode cache through components was the r14
     // driver-memory gap on this query).
-    val scope = graft.ops.CacheScope()
-    val (ids, edges) = try {
+    val (ids, edges) = CacheScope.scoped { scope =>
       val p = pipelineScoped(spark, Tables.documents(spark, sfDir), scope)
-      (p.scan.select(col("doc_id")).eagerCheckpoint(),
-        p.pairs.select(col("doc_a"), col("doc_b")).eagerCheckpoint())
-    } finally scope.close()
+      (Handoff.cut(p.scan.select(col("doc_id"))),
+        Handoff.cut(p.pairs.select(col("doc_a"), col("doc_b"))))
+    }
     graft.ops.Dedup.connectedComponents(ids, edges)
   }
 
@@ -404,7 +402,7 @@ object MultimodalJobs {
     * ([[graft.ops.AudioPipeline]]) — one decode scan per corpus pass.
     */
   def audioPipeline(spark: SparkSession, sfDir: String,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.unmanaged)
+      scope: CacheScope = CacheScope.unmanaged)
       : graft.ops.AudioPipeline =
     graft.ops.AudioPipeline(spark, Tables.documents(spark, sfDir),
       NEARDUP_MAX_HAMMING, scope)
@@ -471,12 +469,11 @@ object MultimodalJobs {
     */
   def audioClusters(spark: SparkSession, sfDir: String): DataFrame = {
     // Slim handoff before components — see [[imageClusters]].
-    val scope = graft.ops.CacheScope()
-    val (ids, edges) = try {
+    val (ids, edges) = CacheScope.scoped { scope =>
       val p = audioPipeline(spark, sfDir, scope)
-      (p.scan.select(col("doc_id")).eagerCheckpoint(),
-        p.pairs.select(col("doc_a"), col("doc_b")).eagerCheckpoint())
-    } finally scope.close()
+      (Handoff.cut(p.scan.select(col("doc_id"))),
+        Handoff.cut(p.pairs.select(col("doc_a"), col("doc_b"))))
+    }
     graft.ops.Dedup.connectedComponents(ids, edges)
   }
 
@@ -543,7 +540,7 @@ object MultimodalJobs {
     * build on ([[graft.ops.VideoPipeline]]).
     */
   def videoPipeline(spark: SparkSession, sfDir: String,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.unmanaged)
+      scope: CacheScope = CacheScope.unmanaged)
       : graft.ops.VideoPipeline =
     graft.ops.VideoPipeline(spark, Tables.documents(spark, sfDir),
       NEARDUP_MAX_HAMMING, scope)
@@ -636,12 +633,11 @@ object MultimodalJobs {
     // scan cache is per-FRAME rows (an order more than images), so
     // releasing it before the components pass is the biggest footprint
     // win of the three modalities (the r14 3.7x driver/local flag).
-    val scope = graft.ops.CacheScope()
-    val (ids, edges) = try {
+    val (ids, edges) = CacheScope.scoped { scope =>
       val p = videoPipeline(spark, sfDir, scope)
-      (p.anchors.select(col("doc_id")).eagerCheckpoint(),
-        p.pairs.select(col("doc_a"), col("doc_b")).eagerCheckpoint())
-    } finally scope.close()
+      (Handoff.cut(p.anchors.select(col("doc_id"))),
+        Handoff.cut(p.pairs.select(col("doc_a"), col("doc_b"))))
+    }
     graft.ops.Dedup.connectedComponents(ids, edges)
   }
 

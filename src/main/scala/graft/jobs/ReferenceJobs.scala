@@ -35,19 +35,22 @@ object ReferenceJobs {
   def hotItemsSql(spark: SparkSession, userBehaviorCsv: String, topSize: Int = 5)
       : DataFrame = {
     // scoped view name: a bare "user_behavior" would be session-global
-    // state colliding with any caller's own registration
+    // state colliding with any caller's own registration; `spark.sql`
+    // analyzes eagerly, so the view is dropped as soon as it returns
+    val view = "graft_ref_user_behavior"
     Sources.userBehaviorCsv(spark, userBehaviorCsv).toDF()
-      .createOrReplaceTempView("graft_ref_user_behavior")
-    spark.sql(
+      .createOrReplaceTempView(view)
+    try spark.sql(
       s"""SELECT window_end, itemId, cnt, rn FROM (
          |  SELECT *, ROW_NUMBER() OVER (
          |    PARTITION BY window_end ORDER BY cnt DESC, itemId ASC) AS rn
          |  FROM (
          |    SELECT itemId, unix_timestamp(window.end) AS window_end,
          |           COUNT(*) AS cnt
-         |    FROM graft_ref_user_behavior WHERE behavior = 'pv'
+         |    FROM $view WHERE behavior = 'pv'
          |    GROUP BY itemId, window(ts, '1 hour', '5 minutes'))) t
          |WHERE rn <= $topSize""".stripMargin)
+    finally spark.catalog.dropTempView(view)
   }
 
   /** HotPages (`HotPages.java`): top-N urls per 10min/5s window over GET

@@ -3,8 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.Similarity
-import graft.ops.Eager.EagerOps
+import graft.ops.{CacheScope, Handoff, Similarity}
 
 /** Embedding similarity-search queries over `embeddings`, all hash-checked:
   * `ann_cosine_topk` is the exact brute-force baseline (query side
@@ -71,11 +70,10 @@ object SimilarityJobs {
     */
   def embeddingNeardup(spark: SparkSession, sfDir: String): DataFrame = {
     // slim handoff (r17): the bucketed-vector cache was unmanaged
-    val scope = graft.ops.CacheScope()
-    try Similarity.nearDupPairsBlocked(vectors(spark, sfDir),
-        NEARDUP_THRESHOLD, planes = PLANES, dims = DIMS, scope = scope)
-      .eagerCheckpoint()
-    finally scope.close()
+    CacheScope.scoped { scope =>
+      Handoff.cut(Similarity.nearDupPairsBlocked(vectors(spark, sfDir),
+        NEARDUP_THRESHOLD, planes = PLANES, dims = DIMS, scope = scope))
+    }
   }
 
   val embeddingNeardupSql: String =
@@ -97,11 +95,10 @@ object SimilarityJobs {
   def annLsh(spark: SparkSession, sfDir: String): DataFrame = {
     // slim handoff (r17): the bucketed-vector cache was unmanaged and
     // outlived the query for the JVM lifetime
-    val scope = graft.ops.CacheScope()
-    try Similarity.lshTopK(vectors(spark, sfDir), planes = PLANES,
-        k = TOP_K, dims = DIMS, scope = scope)
-      .eagerCheckpoint()
-    finally scope.close()
+    CacheScope.scoped { scope =>
+      Handoff.cut(Similarity.lshTopK(vectors(spark, sfDir), planes = PLANES,
+        k = TOP_K, dims = DIMS, scope = scope))
+    }
   }
 
   /** Exact DuckDB restatement of the sign-LSH top-k: bucket assignment,
@@ -199,7 +196,7 @@ object SimilarityJobs {
       v: => DataFrame, tag: String = ""): DataFrame =
     // the memo collects the C rows before the training caches close; the
     // local frame it serves on hit and miss alike needs none of them
-    graft.ops.CacheScope.scoped { training =>
+    CacheScope.scoped { training =>
       graft.model.ModelMemo.shared.frame(spark, "centroids", sfDir,
         "embeddings", tag)(
         Similarity.kmeansCentroids(v, IVF_CENTROIDS, KM_ITERS, training))
@@ -219,13 +216,12 @@ object SimilarityJobs {
     // assign rounds, and the final assign/probe/verify stages — cache it
     // so the parquet scan + norm computation runs once; scope-released at
     // construction end with the probe internals (r15 footprint playbook)
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val v = scope.cache(vectors(spark, sfDir))
-      Similarity.ivfTopKWith(v, trainedCents(spark, sfDir, v),
+      Handoff.cut(Similarity.ivfTopKWith(v, trainedCents(spark, sfDir, v),
         col("vec_id") < N_QUERIES, nprobe = IVF_NPROBE, k = TOP_K,
-        scope = scope).eagerCheckpoint()
-    } finally scope.close()
+        scope = scope))
+    }
   }
 
   /** One k-means iteration as a CTE pair: assignment argmax against
@@ -404,13 +400,12 @@ object SimilarityJobs {
     * over the full corpus, one 16-row conditional agg.
     */
   def annIndexDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val v = scope.cache(vectors(spark, sfDir))
       val cents = trainedCents(spark, sfDir,
         v.filter(col("vec_id") % 5 =!= 0), ":est")
-      driftAudit(v, cents).eagerCheckpoint()
-    } finally scope.close()
+      Handoff.cut(driftAudit(v, cents))
+    }
   }
 
   /** The per-cell drift audit shared by [[annIndexDrift]] (which emits it)
@@ -481,13 +476,12 @@ object SimilarityJobs {
     * everything ([[annIvfTrained]]'s serve).
     */
   def annIndexRetrained(spark: SparkSession, sfDir: String): DataFrame = {
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val v = scope.cache(vectors(spark, sfDir))
-      Similarity.ivfTopKWith(v, retrainedServedCents(spark, sfDir, v),
-        col("vec_id") < N_QUERIES,
-        nprobe = IVF_NPROBE, k = TOP_K, scope = scope).eagerCheckpoint()
-    } finally scope.close()
+      Handoff.cut(Similarity.ivfTopKWith(v,
+        retrainedServedCents(spark, sfDir, v), col("vec_id") < N_QUERIES,
+        nprobe = IVF_NPROBE, k = TOP_K, scope = scope))
+    }
   }
 
   /** The vote-selected serving model (shared by the IVF and IVF×PQ
@@ -515,14 +509,13 @@ object SimilarityJobs {
     * the serving stack the compaction gates maintain.
     */
   def annIvfPqRetrained(spark: SparkSession, sfDir: String): DataFrame = {
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val v = scope.cache(vectors(spark, sfDir))
-      Similarity.ivfPqRerank(v, retrainedServedCents(spark, sfDir, v),
-        col("vec_id") < N_QUERIES, nprobe = IVF_NPROBE,
-        m = PQ_M, k = PQ_K, dims = DIMS, topK = TOP_K,
-        shortlist = PQ_SHORTLIST).eagerCheckpoint()
-    } finally scope.close()
+      Handoff.cut(Similarity.ivfPqRerank(v,
+        retrainedServedCents(spark, sfDir, v), col("vec_id") < N_QUERIES,
+        nprobe = IVF_NPROBE, m = PQ_M, k = PQ_K, dims = DIMS, topK = TOP_K,
+        shortlist = PQ_SHORTLIST))
+    }
   }
 
   val annIndexDriftSql: String =
@@ -749,12 +742,11 @@ object SimilarityJobs {
     // eagerly and the vector cache + withinCellPairs' internal membership
     // caches release at construction end (the r15 footprint playbook —
     // a bare v.cache() outlived the query for the JVM lifetime)
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val v = scope.cache(vectors(spark, sfDir))
-      Similarity.withinCellPairs(v, trainedCents(spark, sfDir, v),
-        NEARDUP_THRESHOLD, scope).eagerCheckpoint()
-    } finally scope.close()
+      Handoff.cut(Similarity.withinCellPairs(v, trainedCents(spark, sfDir, v),
+        NEARDUP_THRESHOLD, scope))
+    }
   }
 
   /** Oracle: the shared unrolled-k-means prefix, rn=1 assignment, then the
@@ -1579,13 +1571,11 @@ object SimilarityJobs {
   def rrfFusion(spark: SparkSession, sfDir: String): DataFrame = {
     // slim handoff (r17): the corpus token cache was unmanaged and
     // outlived the query for the JVM lifetime
-    val scope = graft.ops.CacheScope()
-    try rrfFusionCore(spark, sfDir, scope).eagerCheckpoint()
-    finally scope.close()
+    CacheScope.scoped(scope => Handoff.cut(rrfFusionCore(spark, sfDir, scope)))
   }
 
   private def rrfFusionCore(spark: SparkSession, sfDir: String,
-      scope: graft.ops.CacheScope): DataFrame = {
+      scope: CacheScope): DataFrame = {
     val v = vectors(spark, sfDir)
     val dense = Similarity
       .bruteForceTopK(v, v.filter(col("vec_id") < N_QUERIES), RRF_DEPTH)

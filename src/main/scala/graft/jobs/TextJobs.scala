@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.model.ModelMemo
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.{CacheScope, Dedup, Handoff, TextAnalysis}
 import OracleSql.{fingerprintSql, hex60Sql, wordsSql}
-import graft.ops.Eager.EagerOps
 
 /** Text-analysis queries over `documents`: token/quality stats, language-ID,
   * content fingerprinting. All single-pass scans — no shuffle at all except
@@ -1708,8 +1707,7 @@ object TextJobs {
     val tf = bm25Tf(docs)
     // scope-released at construction end with an eager K×|queries| output
     // (the r15 footprint playbook — the dl cache outlived the query)
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
     val dl = scope.cache(bm25Dl(tf))
     val (nDocs, adl) = bm25CorpusStats(docs, dl)
     val matched = tf.join(broadcast(terms), col("token") === col("term"))
@@ -1735,11 +1733,10 @@ object TextJobs {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id").asc)
-    local.withColumn("rn", row_number().over(w).cast("long"))
+    Handoff.cut(local.withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= SEARCH_K)
-      .select(col("query_id"), col("doc_id"), col("score"), col("rn"))
-      .eagerCheckpoint()
-    } finally scope.close()
+      .select(col("query_id"), col("doc_id"), col("score"), col("rn")))
+    }
   }
 
   /** The (doc_id, token, tf) postings frame BM25 builds on. */
@@ -3470,8 +3467,7 @@ object TextJobs {
     // outlived the query for the JVM lifetime; scope them, checkpoint the
     // 20-row output, release
     import org.apache.spark.sql.expressions.Window
-    val scope = graft.ops.CacheScope()
-    try {
+    CacheScope.scoped { scope =>
       val clean = regexp_replace(lower(col("text")),
         TextAnalysis.stopwordPattern, " ")
       // Hash-first pairing (r17, guide §2.3 "shuffle keys, not payloads" /
@@ -3508,13 +3504,12 @@ object TextJobs {
       val vocab = t
         .select(col("w"), col("wh"))
         .distinct() // vocab-sized final mapping — the legit token-keyed agg
-      graft.ops.Graph.pageRank(edges, iters = TR_ITERS)
+      Handoff.cut(graft.ops.Graph.pageRank(edges, iters = TR_ITERS)
         .join(vocab, col("node") === col("wh"))
         .orderBy(col("r").desc, col("w").asc)
         .limit(TR_TOPK)
-        .select(col("w").as("word"), col("r").as("rank_s"))
-        .eagerCheckpoint()
-    } finally scope.close()
+        .select(col("w").as("word"), col("r").as("rank_s")))
+    }
   }
 
   /** Oracle: identical integer recurrence, rounds unrolled as CTEs (the

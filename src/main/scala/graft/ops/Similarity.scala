@@ -379,9 +379,8 @@ object Similarity {
     * only 2^planes distinct buckets the equi-join's exchange hashes a
     * handful of keys onto the shuffle partitions (guide §2.5's
     * too-few-distinct-keys trap), and the broadcast removes both that
-    * exchange and its skew (measured 2.73 → 0.86 s at sf0.1). Above it, or
-    * under plan-only auditing where nothing may execute, the bucket
-    * equi-join stays: at corpus scale it is the only shape that doesn't
+    * exchange and its skew (measured 2.73 → 0.86 s at sf0.1). Above it the
+    * bucket equi-join stays: at corpus scale it is the only shape that doesn't
     * ship the corpus to every executor. The count doubles as the cache
     * materialization the join needs anyway.
     */
@@ -389,7 +388,7 @@ object Similarity {
       scope: CacheScope)(pair: Column): DataFrame = {
     val withBucket = scope.cache(spreadIfNarrow(vectors)
       .withColumn("bucket", lshBucket(col("v"), planes, dims)))
-    val bcast = !Eager.planOnly && Regime.choose("lsh_broadcast",
+    val bcast = Regime.choose("lsh_broadcast",
       withBucket.count() * 8L * dims, Regime.LshBroadcastBytes)
     val probes = withBucket.withColumn("probe",
       explode(array((lit(0) +: (0 until planes).map(j => lit(1 << j))): _*)))

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.ops.Handoff
+
 /** Registry-wide physical-plan audit: one row per registered query with
   * the plan features that matter at 100 TB -- exchange count, broadcasts,
   * codegen spans, and the two all-pairs red flags. `PlanQualitySpec` pins
@@ -7,18 +9,17 @@ package graft.tools
   * new query can't quietly ship a cartesian product or a string-keyed
   * shuffle storm. Output: markdown to stdout (checked in as PLANAUDIT.md).
   *
-  * Plans are built at the given SF but never executed -- the audit reads
-  * the statically-planned tree (under AQE, the initial plan). Slim-handoff
-  * materialization points ([[graft.ops.Eager]]) are switched to
-  * pass-through for the audit, so the checkpointed queries neither execute
-  * their pipelines nor hide their lineage behind an `ExistingRDD` scan
-  * (the r15 regression: the audit was executing ten pipelines to print
-  * scan-only plans). Queries whose CONSTRUCTION is execution (regime
-  * counts, fixpoint loops, memo misses) still run -- that is inherent.
+  * Plans are built at the given SF and read before their action runs --
+  * the audit reads the statically-planned tree (under AQE, the initial
+  * plan). Construction runs as it does for every caller: regime counts,
+  * fixpoint loops, memo misses, and the slim-handoff pipelines, whose
+  * cuts ([[graft.ops.Handoff.cut]]) execute. Each plan is read through
+  * [[graft.ops.Handoff.lineage]], so a handoff query shows the pipeline
+  * its cut truncated, not an `ExistingRDD` scan, and the regimes shown
+  * are the ones the run picks.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    graft.ops.Eager.planOnly = true
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = Harness.session(Harness.cores, Harness.PlanChars)
 
@@ -144,7 +145,8 @@ object PlanAudit {
     emit("# Plan audit -- every registered query")
     emit()
     emit(s"Generated by `graft.tools.PlanAudit` against `$sfDir` " +
-      "(plan shapes only, nothing executed). Flags: CART = " +
+      "(plan shapes only; handoff pipelines execute and their lineage is " +
+      "read through `Handoff.lineage`). Flags: CART = " +
       "CartesianProduct/BroadcastNestedLoopJoin -- an all-pairs join " +
       "UNLESS the build side is a 1-row/bounded broadcast (annotated); " +
       "STR-X = an exchange partitioned on a raw text/gram payload column " +
@@ -156,7 +158,8 @@ object PlanAudit {
     var unexplained = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val p = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val p = Handoff.lineage(fn(spark, sfDir)).queryExecution.executedPlan
+          .toString
         val ex = count(p, "Exchange hashpartitioning") +
           count(p, "Exchange rangepartitioning") +
           count(p, "Exchange SinglePartition")

@@ -12,11 +12,6 @@ import java.nio.file.{Files, Paths}
 object PlanSnap {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanSnap <outDir> <tag> <query>...")
-    // r16 verdict item: without plan-only mode, eager-checkpointed
-    // (slim-handoff) queries EXECUTE their pipeline during plan
-    // construction and the captured plan is a single ExistingRDD scan —
-    // no lineage, vacuous evidence. Mirror PlanAudit.
-    graft.ops.Eager.planOnly = true
     val outDir = Paths.get(args(0)); val tag = args(1)
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
@@ -31,7 +26,10 @@ object PlanSnap {
     }
     names.foreach { name =>
       spark.catalog.clearCache()
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      // a slim-handoff query's own plan is one ExistingRDD scan: read the
+      // lineage its cut truncated, as PlanAudit does
+      val df = graft.ops.Handoff.lineage(
+        graft.SparkEntry.queries(name)(spark, sfDir))
       val txt = df.queryExecution.explainString(mode)
       Files.write(outDir.resolve(s"${name}_$tag.txt"),
         txt.getBytes(StandardCharsets.UTF_8))

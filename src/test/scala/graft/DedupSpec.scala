@@ -521,9 +521,12 @@ class DedupSpec extends SparkSpec {
     val docs = graft.io.Tables.documents(spark, dir)
       .select($"doc_id", $"lang", $"text")
       .as[(Long, String, String)].collect()
+    // Spark's trim strips spaces only (Scala's also strips tabs and
+    // newlines), and its split keeps a trailing empty word
+    def trimSpaces(s: String) = s.replaceAll("^ +| +$", "")
     // reference: global (lang, 40-char normalized prefix, doc_id) order
     val ranked = docs.sortBy { case (id, lang, text) =>
-      (lang, text.trim.toLowerCase.replaceAll("\\s+", " ").take(40), id)
+      (lang, trimSpaces(text).toLowerCase.replaceAll("\\s+", " ").take(40), id)
     }
     val cand = (for {
       i <- ranked.indices; j <- (i + 1) to math.min(i + 5, ranked.length - 1)
@@ -531,7 +534,8 @@ class DedupSpec extends SparkSpec {
     } yield (math.min(ranked(i)._1, ranked(j)._1),
       math.max(ranked(i)._1, ranked(j)._1))).toSet
     val grams = docs.map { case (id, _, text) =>
-      id -> text.trim.split("\\s+").toSeq.sliding(2).filter(_.size == 2)
+      id -> trimSpaces(text).split("\\s+", -1).toSeq.sliding(2)
+        .filter(_.size == 2)
         .map(_.mkString(" ")).toSet
     }.toMap
     val expect = cand.flatMap { case (a, b) =>

@@ -44,6 +44,8 @@ class HotItemsSpec extends SparkSpec {
   test("DataFrame and SQL paths agree") {
     val a = HotItemsJobs.hotItemsTopN(spark, sf("sf0.001"))
     val b = HotItemsJobs.hotItemsSql(spark, sf("sf0.001"))
+    assert(!spark.catalog.tableExists("graft_hot_items_sql_events"),
+      "hotItemsSql left its temp view in the session")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.jobs._
+import graft.ops.{CacheScope, Handoff}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution._
 
@@ -14,11 +15,11 @@ class PlanQualitySpec extends SparkSpec {
   /** The executed plan string. A plan that is only a scan of an existing
     * RDD or local rows (a checkpointed or collected output) fails: every
     * pin on it would pass whatever the query computes — build such a
-    * query through [[lineage]].
+    * query's output through [[Handoff.lineage]].
     */
   private def plan(df: DataFrame): String = {
     val p = df.queryExecution.executedPlan
-    assert(!bareScan(p), s"pin would read a bare scan — use lineage:\n$p")
+    assert(!bareScan(p), s"pin would read a bare scan — use Handoff.lineage:\n$p")
     p.toString
   }
 
@@ -29,14 +30,27 @@ class PlanQualitySpec extends SparkSpec {
     case _ => false
   }
 
-  /** `build` under [[graft.ops.Eager.planOnly]], as PlanAudit reads the
-    * registry: slim-handoff checkpoints pass through, so the frame keeps
-    * the query's lineage. The flag is process-global; suites run one at
-    * a time in the forked test JVM, and it is reset before this returns.
-    */
-  private def lineage(build: => DataFrame): DataFrame = {
-    graft.ops.Eager.planOnly = true
-    try build finally graft.ops.Eager.planOnly = false
+  test("Handoff.lineage reads a self-joined cut back to its pipeline") {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val cut = CacheScope.scoped { scope =>
+      val agg = scope.cache(spark.range(0, 200)
+        .groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("n")))
+      Handoff.cut(agg.join(spark.range(0, 5).toDF("k"), "k"))
+    } // the cached aggregate is released here; the cut still reads
+    val x = cut.as("a").join(cut.as("b"), col("a.k") <= col("b.k"))
+    val full = Handoff.lineage(x)
+    val p = full.queryExecution.executedPlan match {
+      case a: adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    assert(p.collect { case r: RDDScanExec => r }.isEmpty,
+      s"lineage still reads the cut:\n$p")
+    assert(p.toString.contains("Range"), s"pipeline missing:\n$p")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(full) == rows(x) && rows(x).size == 15)
+    val plain = spark.range(0, 10).toDF("k").filter(col("k") > 3)
+    assert(Handoff.lineage(plain).queryExecution.analyzed ==
+      plain.queryExecution.analyzed, "a frame with no cut changed its plan")
   }
 
   test("q1: filter pushed to parquet scan, columns pruned") {
@@ -132,7 +146,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("neardup + decontamination plans contain no all-pairs join") {
-    val pn = plan(lineage(SimilarityJobs.embeddingNeardup(spark, sf("sf0.001"))))
+    val pn = plan(Handoff.lineage(SimilarityJobs.embeddingNeardup(spark, sf("sf0.001"))))
     assert(!pn.contains("BroadcastNestedLoopJoin") && !pn.contains("CartesianProduct"),
       s"embedding_neardup regressed to an all-pairs join:\n$pn")
     val pd = plan(DedupJobs.decontamination(spark, sf("sf0.001")))
@@ -238,7 +252,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("substring dup rate shuffles int hashes only, nothing quadratic") {
-    val p = plan(lineage(DedupJobs.substringDupRate(spark, sf("sf0.001"))))
+    val p = plan(Handoff.lineage(DedupJobs.substringDupRate(spark, sf("sf0.001"))))
     // frequency is an aggregation, not a pairing: no join of the gram
     // lineage against itself, and no exchange ever carries gram strings
     assert(!"Exchange hashpartitioning\\([^)]*gram#".r.findFirstIn(p).isDefined,
@@ -250,7 +264,7 @@ class PlanQualitySpec extends SparkSpec {
   test("semantic dedup pairs via an int-cell equi-join, never all-pairs") {
     // the registry query checkpoints its output behind a slim handoff
     // (r15), so the pin reads its lineage
-    val p = plan(lineage(SimilarityJobs.semanticDedup(spark, sf("sf0.001"))))
+    val p = plan(Handoff.lineage(SimilarityJobs.semanticDedup(spark, sf("sf0.001"))))
     // nested-loop joins in this plan are only the C-bounded broadcast
     // centroid assigns (their build side is the ≤C-row centroid frame —
     // never a data×data product); the count of their STRING occurrences
@@ -281,7 +295,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("composed jaccard fence shuffles int keys only, never all-pairs") {
-    val p = plan(lineage(DedupJobs.ngramJaccardPrefix(spark, sf("sf0.001"))))
+    val p = plan(Handoff.lineage(DedupJobs.ngramJaccardPrefix(spark, sf("sf0.001"))))
     // both fences (identity compression + df-ordered prefix) are int-keyed:
     // no exchange may carry gram strings, and candidate generation must be
     // the prefix equi-join, never a quadratic fallback

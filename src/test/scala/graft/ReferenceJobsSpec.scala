@@ -35,6 +35,8 @@ class ReferenceJobsSpec extends SparkSpec {
     val a = ReferenceJobs.hotItems(spark, behaviorCsv)
       .select($"window_end", $"itemId", $"cnt", $"rn")
     val b = ReferenceJobs.hotItemsSql(spark, behaviorCsv)
+    assert(!spark.catalog.tableExists("graft_ref_user_behavior"),
+      "hotItemsSql left its temp view in the session")
     assert(a.count() > 0)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(a.groupBy($"window_end").count().agg(max("count")).as[Long].head() <= 5)
