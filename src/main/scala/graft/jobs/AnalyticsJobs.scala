@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.{Dedup, Handoff}
+import graft.ops.{CacheScope, Dedup, Handoff}
 
 /** Analytics headroom beyond the reference's own surface (SURVEY.md §2.6 /
   * §2.7 notes): session windows, grouping sets, pivot, set operations.
@@ -1759,12 +1759,6 @@ object AnalyticsJobs {
           .cast("long")).as("i"))
       .filter(col("i").isNotNull)
       .distinct()
-    val kept = ui.join(
-      ui.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") <= SIM_USER_CAP).select(col("u")), "u")
-      .cache()
-    val uCount = kept.agg(count_distinct(col("u")).as("uc"))
-    val sizes = kept.groupBy(col("i")).agg(count(lit(1)).as("n"))
     // a cut (not cache): every consumer ([[itemTriangles]]'s
     // deg/ed/orientation branches, [[itemKcore]]'s sym union) is a
     // multi-reference, and a cache still re-prints/re-analyzes the whole
@@ -1772,16 +1766,24 @@ object AnalyticsJobs {
     // triangles plan uncached, 1203-node cached). The edge frame is
     // lift-thinned item-pair-bounded — model-sized, never the corpus —
     // so truncating its lineage is the [[graft.ops.Graph]] iterative
-    // pattern, not a durability risk worth re-deriving per branch.
-    Handoff.cut(kept.alias("a").join(kept.alias("b"),
-        col("a.u") === col("b.u") && col("a.i") < col("b.i"))
-      .groupBy(col("a.i").as("ia"), col("b.i").as("ib"))
-      .agg(count(lit(1)).as("co"))
-      .join(sizes.select(col("i").as("ia"), col("n").as("na")), "ia")
-      .join(sizes.select(col("i").as("ib"), col("n").as("nb")), "ib")
-      .crossJoin(broadcast(uCount))
-      .filter(col("co") * col("uc") * 100 > lit(LIFT_PCT) * col("na") * col("nb"))
-      .select(col("ia"), col("ib")))
+    // pattern, not a durability risk worth re-deriving per branch. The
+    // cut is eager, so the scope releases `kept` once the edges exist.
+    CacheScope.scoped { scope =>
+      val kept = scope.cache(ui.join(
+        ui.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") <= SIM_USER_CAP).select(col("u")), "u"))
+      val uCount = kept.agg(count_distinct(col("u")).as("uc"))
+      val sizes = kept.groupBy(col("i")).agg(count(lit(1)).as("n"))
+      Handoff.cut(kept.alias("a").join(kept.alias("b"),
+          col("a.u") === col("b.u") && col("a.i") < col("b.i"))
+        .groupBy(col("a.i").as("ia"), col("b.i").as("ib"))
+        .agg(count(lit(1)).as("co"))
+        .join(sizes.select(col("i").as("ia"), col("n").as("na")), "ia")
+        .join(sizes.select(col("i").as("ib"), col("n").as("nb")), "ib")
+        .crossJoin(broadcast(uCount))
+        .filter(col("co") * col("uc") * 100 > lit(LIFT_PCT) * col("na") * col("nb"))
+        .select(col("ia"), col("ib")))
+    }
   }
 
   /** Shared oracle CTE chain ending in `und(ia, ib)` — the lift graph.
@@ -1818,13 +1820,18 @@ object AnalyticsJobs {
     * lift graph ([[liftEdges]]) — graph cohesion for the recommendation
     * stack ([[graft.ops.Graph.triangles]]: degree-ordered orientation
     * bounds the wedge join at O(E^1.5) total candidates, heavy hitters
-    * included; counts + one ppm floor division, engine-exact).
+    * included; counts + one ppm floor division, engine-exact). Slim
+    * handoff: the item-sized output is cut before the scope releases
+    * the degree and orientation caches.
     */
   def itemTriangles(spark: SparkSession, sfDir: String): DataFrame =
-    graft.ops.Graph.triangles(
-        liftEdges(spark, sfDir).select(col("ia").as("a"), col("ib").as("b")))
-      .select(col("node").as("item_id"), col("deg"), col("tri"),
-        col("lcc_ppm"))
+    CacheScope.scoped { scope =>
+      Handoff.cut(graft.ops.Graph.triangles(
+          liftEdges(spark, sfDir).select(col("ia").as("a"), col("ib").as("b")),
+          scope)
+        .select(col("node").as("item_id"), col("deg"), col("tri"),
+          col("lcc_ppm")))
+    }
 
   val itemTrianglesSql: String =
     s"""WITH $liftEdgesCte,

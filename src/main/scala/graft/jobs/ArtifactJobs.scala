@@ -10,7 +10,7 @@ import graft.ops.{CacheScope, Dedup, Handoff, Similarity}
   *
   * Every trained model in the registry ([[Similarity.kmeansCentroids]]
   * IVF centroids, [[TextJobs.rocchioTrain]] quality weights, the
-  * [[TextJobs.bpeEncoderTable]] tokenizer vocabulary) is an artifact a
+  * [[TextJobs.encoderTable]] tokenizer vocabularies) is an artifact a
   * real pipeline trains ONCE, writes to storage, and scores from many
   * times — the in-line trained twins re-train per query run, which
   * verifies the training math but not the artifact round-trip. Each
@@ -106,17 +106,19 @@ object ArtifactJobs {
     TextJobs.rocchioScore(spark, sfDir, loadedW, loadedT)
   }
 
-  /** BPE token accounting against a tokenizer table LOADED from parquet:
-    * the persisted form is the readable (word, n_syms) vocabulary; the
-    * scorer hashes it to the 60-bit join key exactly as the in-line
-    * trained twin does.
+  /** Token accounting against a tokenizer's encoder table LOADED from
+    * parquet: the persisted form is the readable (w, count) table
+    * ([[TextJobs.encoderTable]], artifact `<key>_encoder`), and
+    * [[TextJobs.encodeWith]] hashes it to the 60-bit join key exactly as
+    * the in-line trained twin does.
     */
-  def bpeEncodeFromArtifact(spark: SparkSession, sfDir: String): DataFrame = {
-    val loaded = persist(spark, "bpe_encoder", docsFp(sfDir),
-      TextJobs.bpeEncoderTable(spark, sfDir))
-    TextJobs.bpeEncodeWith(spark, sfDir,
-      loaded.select(Dedup.hash60(col("w")).as("wh"), col("n_syms")))
-  }
+  private def encodeFromArtifact[M <: AnyRef](spark: SparkSession,
+      sfDir: String, tk: TextJobs.Tokenizer[M]): DataFrame =
+    TextJobs.encodeWith(spark, sfDir, tk, persist(spark,
+      s"${tk.key}_encoder", docsFp(sfDir), TextJobs.encoderTable(spark, sfDir, tk)))
+
+  def bpeEncodeFromArtifact(spark: SparkSession, sfDir: String): DataFrame =
+    encodeFromArtifact(spark, sfDir, TextJobs.bpe)
 
   /** PQ encoding against a codebook LOADED from parquet: train the
     * refined (s, code, cv) codebook (identical to `pq_codes_trained`),
@@ -158,31 +160,11 @@ object ArtifactJobs {
       dims = DIMS, topK = TOP_K, shortlist = PQ_SHORTLIST)
   }
 
-  /** Unigram token accounting against a tokenizer table LOADED from
-    * parquet — the [[bpeEncodeFromArtifact]] pattern for the second
-    * tokenizer: the persisted form is the readable (word, n_pieces)
-    * table; the scorer hashes it to the 60-bit join key exactly as the
-    * in-line trained twin does.
-    */
-  def unigramEncodeFromArtifact(spark: SparkSession, sfDir: String): DataFrame = {
-    val loaded = persist(spark, "unigram_encoder", docsFp(sfDir),
-      TextJobs.unigramEncoderTable(spark, sfDir))
-    TextJobs.unigramEncodeWith(spark, sfDir,
-      loaded.select(Dedup.hash60(col("w")).as("wh"), col("n_pieces")))
-  }
+  def unigramEncodeFromArtifact(spark: SparkSession, sfDir: String): DataFrame =
+    encodeFromArtifact(spark, sfDir, TextJobs.unigram)
 
-  /** WordPiece token accounting against a tokenizer table LOADED from
-    * parquet — the [[bpeEncodeFromArtifact]] pattern for the third
-    * tokenizer: the persisted form is the readable (word, n_syms) table;
-    * the scorer hashes it to the 60-bit join key exactly as the in-line
-    * trained twin does.
-    */
-  def wordpieceEncodeFromArtifact(spark: SparkSession, sfDir: String): DataFrame = {
-    val loaded = persist(spark, "wordpiece_encoder", docsFp(sfDir),
-      TextJobs.wordpieceEncoderTable(spark, sfDir))
-    TextJobs.wordpieceEncodeWith(spark, sfDir,
-      loaded.select(Dedup.hash60(col("w")).as("wh"), col("n_syms")))
-  }
+  def wordpieceEncodeFromArtifact(spark: SparkSession, sfDir: String): DataFrame =
+    encodeFromArtifact(spark, sfDir, TextJobs.wordpiece)
 
   /** SemDeDup pair search served from persisted k-means centroids — the
     * production shape: cluster the corpus against YESTERDAY'S trained

@@ -25,6 +25,10 @@ object OracleSql {
   def wordsSql(inner: String): String =
     s"string_split_regex(trim($inner), '\\s+')"
 
+  /** `TextAnalysis.tokens`. */
+  def tokensSql(inner: String): String =
+    s"regexp_extract_all($inner, '[A-Za-z0-9]+')"
+
   /** `TextAnalysis.normalized`. */
   def normalizedSql(inner: String): String =
     s"regexp_replace(lower(trim($inner)), '\\s+', ' ', 'g')"

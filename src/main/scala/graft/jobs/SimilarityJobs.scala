@@ -514,7 +514,7 @@ object SimilarityJobs {
       Handoff.cut(Similarity.ivfPqRerank(v,
         retrainedServedCents(spark, sfDir, v), col("vec_id") < N_QUERIES,
         nprobe = IVF_NPROBE, m = PQ_M, k = PQ_K, dims = DIMS, topK = TOP_K,
-        shortlist = PQ_SHORTLIST))
+        shortlist = PQ_SHORTLIST, scope = scope))
     }
   }
 
@@ -1626,7 +1626,7 @@ object SimilarityJobs {
        |), tok AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, ${OracleSql.hexIntSql("w")} AS th
        |  FROM (SELECT doc_id,
-       |          unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
+       |          unnest(${OracleSql.tokensSql("lower(text)")}) AS w
        |        FROM documents) raw
        |), ov AS (
        |  SELECT q.doc_id AS query_id, c.doc_id AS doc_id, COUNT(*) AS ov

@@ -1,11 +1,11 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.model.ModelMemo
 import graft.ops.{CacheScope, Dedup, Handoff, TextAnalysis}
-import OracleSql.{fingerprintSql, hex60Sql, wordsSql}
+import OracleSql.{fingerprintSql, hex60Sql, tokensSql, wordsSql}
 
 /** Text-analysis queries over `documents`: token/quality stats, language-ID,
   * content fingerprinting. All single-pass scans — no shuffle at all except
@@ -143,7 +143,7 @@ object TextJobs {
 
   val vocabTopKSql: String =
     s"""WITH t AS (
-       |  SELECT lang, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS token
+       |  SELECT lang, unnest(${tokensSql("lower(text)")}) AS token
        |  FROM documents
        |), c AS (
        |  SELECT lang, token, COUNT(*) AS n FROM t GROUP BY 1, 2
@@ -154,39 +154,220 @@ object TextJobs {
        |  FROM c) r
        |WHERE rn <= $VOCAB_K""".stripMargin
 
+  // ---- subword tokenizers: BPE, WordPiece, unigram ----
+
+  /** A subword tokenizer as the shared pipeline sees it: [[training]] →
+    * [[model]] → [[encoderTable]] → [[encodeWith]]. Each algorithm
+    * supplies only what differs: `train`, its single-task trainer over
+    * the corpus (word, count) table; `empty`, its model of an empty
+    * corpus; and `encoder`, the (word, token count) table its model
+    * carries. `key` is the memo key and names the persisted encoder
+    * artifact; `countCol` names the encoder's count column, `totalCol`
+    * and `rateCol` the per-doc token total and per-word rate. The model
+    * encoder is built on first training, which keeps reflection off
+    * object initialization.
+    */
+  private[graft] final class Tokenizer[M <: AnyRef](val key: String,
+      val countCol: String, val totalCol: String, val rateCol: String,
+      val empty: M, val train: Array[(String, Long)] => M,
+      val encoder: M => Seq[(String, Long)], enc: => Encoder[M]) {
+    lazy val modelEncoder: Encoder[M] = enc
+  }
+
+  /** The distributed corpus stage every tokenizer trains from: one
+    * tokenize + two-phase word count.
+    */
+  private def wordCounts(spark: SparkSession, sfDir: String,
+      docFilter: Column = lit(true)): DataFrame =
+    Tables.documents(spark, sfDir)
+      .where(docFilter)
+      .select(explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+
+  /** A tokenizer's training pass — the step a tokenizer pipeline runs
+    * after [[vocabTopK]]'s counting pass. The corpus contributes ONE
+    * distributed tokenize + word count; the trainer then runs on the
+    * compressed (word, cnt) table (distinct words — orders of magnitude
+    * smaller than a 100 TB corpus, the standard tokenizer-training
+    * compression) INSIDE ONE task (coalesce(1) + `mapPartitions`), not as
+    * k chained DataFrame rounds: each distributed round would pay ~3
+    * exchanges + a cache of a frame that fits in one task (measured 7.9 s
+    * for 6 BPE rounds at sf0.1, ~all scheduling fixed cost), while every
+    * trainer here is a sequential recurrence with no parallelism to buy.
+    * This is the industrial trainer shape (SentencePiece/HF tokenizers
+    * hold the word-count table of arbitrarily large corpora on one node);
+    * a 100 TB corpus caps the vocab with a frequency floor first, which
+    * composes here as a HAVING on the distributed count. The model is the
+    * task's one output row — none when an empty corpus leaves no
+    * partition to run.
+    */
+  private[graft] def training[M <: AnyRef](spark: SparkSession,
+      sfDir: String, tk: Tokenizer[M], docFilter: Column = lit(true))
+      : Dataset[M] = {
+    import spark.implicits._
+    val train = tk.train
+    wordCounts(spark, sfDir, docFilter).as[(String, Long)]
+      .coalesce(1).mapPartitions { it =>
+        Iterator.single(train(it.toArray))
+      }(tk.modelEncoder)
+  }
+
+  /** A tokenizer's trained model, held in [[graft.model.ModelMemo]] under
+    * (`key`, documents, `tag`): one [[training]] pass per corpus per JVM
+    * serves every consumer (the merges/vocab query, encode, greedy,
+    * [[tokenizerCompare]], the artifact twins). Only the trainer's
+    * OUTPUTS are collected — merge-table- and vocab-sized, the memory
+    * contract every scoring broadcast already ships. `tag`/`docFilter`
+    * select a sub-corpus training run (the [[tokenizerEval]] train
+    * split) under its own memo key.
+    */
+  private[jobs] def model[M <: AnyRef](spark: SparkSession, sfDir: String,
+      tk: Tokenizer[M], tag: String = "", docFilter: Column = lit(true)): M =
+    ModelMemo.shared.value(tk.key, sfDir, "documents", tag) {
+      training(spark, sfDir, tk, docFilter).collect().headOption
+        .getOrElse(tk.empty)
+    }
+
+  /** The trained tokenizer as a persistable artifact: (w, `countCol`),
+    * each training word's token count — the trainer's final vocab IS the
+    * encoder. Vocab-sized (broadcastable); [[ArtifactJobs]] writes it to
+    * parquet and scores from the load.
+    */
+  private[jobs] def encoderTable[M <: AnyRef](spark: SparkSession,
+      sfDir: String, tk: Tokenizer[M]): DataFrame = {
+    import spark.implicits._
+    tk.encoder(model(spark, sfDir, tk)).toDF("w", tk.countCol)
+  }
+
+  /** The 60-bit word key the encoder joins run on. */
+  private def wordKey: Column = Dedup.hash60(col("w")).as("wh")
+
+  /** The per-doc word frame every tokenizer's accounting reads: per
+    * (doc_id, `key`) the word's multiplicity `k` and length `wlen`.
+    * `key` is [[wordKey]] against encoder tables, the word itself where
+    * served words map per distinct word.
+    */
+  private def docWords(docs: DataFrame, key: Column): DataFrame =
+    docs.select(col("doc_id"),
+        explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
+      .groupBy(col("doc_id"), key)
+      .agg(count(lit(1)).as("k"), max(length(col("w"))).as("wlen"))
+
+  /** Tokenize-under-the-learned-tokenizer accounting — the number a
+    * training pipeline consumes: per document, n_words and the tokens
+    * they encode to (`totalCol`, `rateCol` per word), against a readable
+    * (w, `countCol`) encoder table, in-line trained or loaded from
+    * parquet. Encoding is a vocab lookup: the per-doc word frame joins
+    * the vocab-sized (broadcastable) table on 60-bit int keys, then
+    * per-doc sums. The corpus never re-tokenizes per merge or EM round,
+    * and text never shuffles. Words outside the trainer's scope (the
+    * unigram [[UNI_MAX_WORD]] fence) drop through the inner join.
+    */
+  private[jobs] def encodeWith[M <: AnyRef](spark: SparkSession,
+      sfDir: String, tk: Tokenizer[M], table: DataFrame): DataFrame = {
+    val n = col(tk.countCol)
+    docWords(Tables.documents(spark, sfDir), wordKey)
+      .join(table.select(wordKey, n), "wh")
+      .groupBy(col("doc_id"))
+      .agg(sum(col("k")).as("n_words"),
+        sum(col("k") * n).as(tk.totalCol),
+        round(sum(col("k") * n).cast("double") / sum(col("k"))
+          + lit(1e-9), 4).as(tk.rateCol))
+  }
+
+  private def encode[M <: AnyRef](spark: SparkSession, sfDir: String,
+      tk: Tokenizer[M]): DataFrame =
+    encodeWith(spark, sfDir, tk, encoderTable(spark, sfDir, tk))
+
+  /** Oracle twin of [[wordCounts]]: `wc(w, cnt)` over the documents
+    * `docWhere` keeps.
+    */
+  private def wcCte(docWhere: String): String =
+    s"""wc AS (
+       |  SELECT w, COUNT(*) AS cnt FROM (
+       |    SELECT unnest(${tokensSql("lower(text)")}) AS w
+       |    FROM documents $docWhere)
+       |  GROUP BY w
+       |)""".stripMargin
+
+  /** Oracle twin of [[docWords]] on the word: `dw(doc_id, w, k)`. */
+  private def dwCte(docWhere: String): String =
+    s"""dw AS (
+       |  SELECT doc_id, w, COUNT(*) AS k FROM (
+       |    SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS w
+       |    FROM documents $docWhere)
+       |  GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** Oracle twin of [[encodeWith]]: `withList` ends in an
+    * `enc(w, countCol)` CTE; the documents' word multiplicities join it
+    * and sum per doc.
+    */
+  private def encodeSql[M <: AnyRef](withList: String,
+      tk: Tokenizer[M]): String =
+    s"""$withList, ${dwCte("")}
+       |${accountingSql(tk.countCol, tk.totalCol, tk.rateCol)}""".stripMargin
+
+  /** The per-doc accounting select over `dw` ⨝ `enc(w, n)`. */
+  private def accountingSql(n: String, total: String, rate: String): String =
+    s"""SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n_words,
+       |       CAST(SUM(k * $n) AS BIGINT) AS $total,
+       |       ROUND(CAST(SUM(k * $n) AS DOUBLE) / CAST(SUM(k) AS BIGINT)
+       |             + 1e-9, 4) AS $rate
+       |FROM dw JOIN enc USING (w)
+       |GROUP BY doc_id""".stripMargin
+
+  /** The symbols of `repr`, a word in the `|a||b||c|` delimited form
+    * (the merge trainers' SQL symbolization: greedy left-to-right
+    * `replace` on it is the Scala [[fusePair]]).
+    */
+  private def reprSymsSql: String =
+    "string_split(substr(repr, 2, length(repr) - 2), '||')"
+
+  /** An `enc(w, n)` CTE: each `src` word's symbol count — a merge
+    * trainer's final symbolization IS its encoder.
+    */
+  private def symEncCte(src: String, n: String): String =
+    s"""enc AS (
+       |  SELECT w, CAST(len($reprSymsSql) AS BIGINT) AS $n
+       |  FROM $src
+       |)""".stripMargin
+
+  /** Round r's adjacent-pair counts `p$r` over `v${r-1}`. */
+  private def pairsCte(r: Int): String =
+    s"""p$r AS MATERIALIZED (
+       |  SELECT s[i] AS left_sym, s[i + 1] AS right_sym,
+       |         CAST(SUM(cnt) AS BIGINT) AS pair_count
+       |  FROM (SELECT s, cnt, unnest(range(1, len(s))) AS i
+       |        FROM (SELECT $reprSymsSql AS s, cnt FROM v${r - 1}))
+       |  GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** `$chain$r`: round r's merge `m$r` applied to `$chain${r-1}` (left to
+    * right, non-overlapping — the `replace` semantics), carrying
+    * `carry`. LEFT JOIN ON TRUE: an exhausted merge table (`m$r` empty
+    * before the last round) passes the words through unchanged instead
+    * of emptying the chain.
+    */
+  private def mergeCte(chain: String, r: Int, carry: String): String =
+    s"""$chain$r AS MATERIALIZED (
+       |  SELECT w, COALESCE(replace(repr,
+       |           '|' || m.left_sym || '||' || m.right_sym || '|',
+       |           '|' || m.merged || '|'), repr) AS repr$carry
+       |  FROM $chain${r - 1} LEFT JOIN m$r m ON TRUE
+       |)""".stripMargin
+
+  // ---- BPE ----
+
   private val BPE_ROUNDS = 6
 
-  /** BPE tokenizer training: `BPE_ROUNDS` rounds of count-adjacent-pairs →
-    * merge the argmax — the merge-LEARNING step a tokenizer pipeline runs
-    * after [[vocabTopK]]'s counting pass. Output: one row per round,
-    * (round, left_sym, right_sym, pair_count) — the learned merge table.
-    *
-    * Scale shape: the corpus contributes ONE tokenize + two-phase word
-    * count; every merge round then runs on the compressed (word, cnt)
-    * vocab frame (distinct words — orders of magnitude smaller than a
-    * 100 TB corpus, the standard BPE training compression). Per round:
-    * pair counts ride a vocab-sized aggregation, the argmax is a global
-    * `orderBy.limit(1)` (TakeOrderedAndProject, count-desc with full
-    * lexicographic tie-break), and the merge applies via a broadcast
-    * crossJoin + codegen `replace` — no driver-side data, no typed map.
-    *
-    * The merge-round loop deliberately runs INSIDE one task (coalesce(1) +
-    * `mapPartitions`), not as k chained DataFrame rounds: each distributed
-    * round would pay ~3 exchanges + a cache of a frame that fits in one
-    * task (measured 7.9 s for 6 rounds at sf0.1, ~all scheduling fixed
-    * cost), while the global-argmax recurrence is inherently sequential —
-    * there is no parallelism to buy. This is the standard industrial
-    * trainer shape (SentencePiece/HF tokenizers hold the word-count table
-    * of arbitrarily large corpora on one node); a 100 TB corpus caps the
-    * vocab with a frequency floor first, which composes here as a HAVING
-    * on the distributed count. Greedy left-to-right pair replacement and
-    * full (count desc, left, right) lexicographic tie-breaks are
-    * deterministic and ASCII-collation-identical in both engines.
-    */
-  /** The in-memory trainer pass shared by [[bpeMerges]] and [[bpeEncode]]:
-    * up to `rounds` greedy merge rounds over (word, symbols, count),
-    * returning the merge table and the final symbolization. Stops early
-    * when no adjacent pair remains.
+  /** BPE tokenizer training: `BPE_ROUNDS` rounds of count-adjacent-pairs
+    * → merge the argmax over (word, symbols, count), returning the merge
+    * table (round, left_sym, right_sym, pair_count) and the final
+    * symbolization. Full (count desc, left, right) lexicographic
+    * tie-breaks and greedy left-to-right pair replacement are
+    * deterministic and ASCII-collation-identical in both engines. Stops
+    * early when no adjacent pair remains.
     */
   private def trainBpeRounds(
       vocab0: Array[(String, Array[String], Long)], rounds: Int)
@@ -221,87 +402,33 @@ object TextJobs {
     (merges.result(), vocab)
   }
 
-  /** The distributed corpus stage both BPE queries share: one tokenize +
-    * two-phase word count.
+  /** A merge trainer's model: its merge table and each training word's
+    * final symbol count (the encoder).
     */
-  private def wordCounts(spark: SparkSession, sfDir: String,
-      docFilter: Column = lit(true)): DataFrame =
-    Tables.documents(spark, sfDir)
-      .where(docFilter)
-      .select(explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+  private def mergeModel[T](trained: (List[T],
+      Array[(String, Array[String], Long)])): (Seq[T], Seq[(String, Long)]) =
+    (trained._1, trained._2.toSeq.map { case (w, syms, _) =>
+      (w, syms.length.toLong)
+    })
 
-  /** The trained BPE model (merge table, encoder table), held in
-    * [[graft.model.ModelMemo]]. Training still runs as ONE distributed
-    * word count + a single-task trainer; only its OUTPUTS are collected —
-    * merge-table- and vocab-sized, the same memory contract as the
-    * broadcast every scoring join already ships. Registry consumers
-    * (`bpe_merges`, `bpe_encode`, `tokenizer_compare`, `bpe_greedy`, the
-    * artifact twins) share ONE training pass per corpus per JVM.
-    *
-    * `tag`/`docFilter` select a sub-corpus training run (the
-    * [[tokenizerEval]] train split) under its own memo key; the defaults
-    * are the full-corpus model every existing consumer shares.
-    */
-  private[jobs] def bpeModel(spark: SparkSession, sfDir: String,
-      tag: String = "", docFilter: Column = lit(true))
-      : (Seq[(Long, String, String, Long)], Seq[(String, Long)]) =
-    ModelMemo.shared.value("bpe", sfDir, "documents", tag) {
-      bpeTraining(spark, sfDir, docFilter).collect().headOption
-        .getOrElse((Nil, Nil))
-    }
-
-  /** The pass [[bpeModel]] collects: one distributed word count, then the
-    * whole model as the single task's one output row (none when an empty
-    * corpus leaves no partition to run).
-    */
-  private[graft] def bpeTraining(spark: SparkSession, sfDir: String,
-      docFilter: Column = lit(true))
-      : Dataset[(Seq[(Long, String, String, Long)], Seq[(String, Long)])] = {
-    import spark.implicits._
-    wordCounts(spark, sfDir, docFilter).as[(String, Long)]
-      .coalesce(1).mapPartitions { it =>
-        val vocab0 = it.map { case (w, c) =>
-          (w, w.toCharArray.map(_.toString): Array[String], c)
-        }.toArray
-        val (merges, vocab) = trainBpeRounds(vocab0, BPE_ROUNDS)
-        Iterator.single((merges: Seq[(Long, String, String, Long)],
-          vocab.toSeq.map { case (w, syms, _) => (w, syms.length.toLong) }))
-      }
-  }
+  /** BPE: (merge table, encoder); every word starts as its chars. */
+  private[graft] val bpe =
+    new Tokenizer[(Seq[(Long, String, String, Long)], Seq[(String, Long)])](
+      "bpe", "n_syms", "n_bpe_tokens", "tokens_per_word", (Nil, Nil),
+      counts => mergeModel(trainBpeRounds(counts.map { case (w, c) =>
+        (w, w.toCharArray.map(_.toString), c)
+      }, BPE_ROUNDS)),
+      _._2, Encoders.product)
 
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    bpeModel(spark, sfDir)._1.toDF("round", "left_sym", "right_sym",
+    model(spark, sfDir, bpe)._1.toDF("round", "left_sym", "right_sym",
       "pair_count")
   }
 
-  /** Tokenize-under-the-learned-tokenizer accounting — the number a
-    * training pipeline actually consumes from BPE: per document, how many
-    * tokens the [[bpeMerges]] merge table yields, vs whitespace words.
-    * The trainer's final vocab IS the encoder (every corpus word's
-    * symbolization after k merges), so encoding a document is a
-    * vocab-lookup: explode words → pre-aggregate per-(doc, word) → join
-    * the (word → n_syms) table on 60-bit int keys → per-doc sums. The
-    * corpus never re-tokenizes per merge, text never shuffles, and the
-    * single-task trainer output joins back as an ordinary (broadcastable,
-    * vocab-sized) relation.
-    */
+  /** Per-doc token accounting under the trained BPE tokenizer. */
   def bpeEncode(spark: SparkSession, sfDir: String): DataFrame =
-    bpeEncodeWith(spark, sfDir,
-      bpeEncoderTable(spark, sfDir)
-        .select(Dedup.hash60(col("w")).as("wh"), col("n_syms")))
-
-  /** The trained tokenizer as a persistable artifact: (w, n_syms) — each
-    * corpus word's symbol count after [[BPE_ROUNDS]] merges. Vocab-sized
-    * (broadcastable); [[ArtifactJobs]] writes it to parquet and scores
-    * from the load.
-    */
-  private[jobs] def bpeEncoderTable(
-      spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    bpeModel(spark, sfDir)._2.toDF("w", "n_syms")
-  }
+    encode(spark, sfDir, bpe)
 
   /** Both engines fence BPE inference to words this long or shorter (the
     * unigram rule: the oracle's CTE chain is bounded by construction;
@@ -325,15 +452,15 @@ object TextJobs {
     * own rank. Hence once rank r is exhausted it can never reapply, and
     * ascending rank order with one exhaustive greedy left-to-right pass
     * each is exactly the reference loop — restatable as k sequential
-    * `replace()` CTEs over the `|a||b|` delimited form (the
-    * [[bpeVocabCtes]] discipline) and hash-checkable.
+    * `replace()` CTEs over the `|a||b|` delimited form
+    * ([[bpeApplyCtes]]) and hash-checkable.
     *
     * Scale shape: one distributed word count; the merge table ships in
     * the closure (6 rows); the apply loop is per-row O(len·k).
     */
   def bpeGreedy(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val merges = bpeModel(spark, sfDir)._1.map { case (_, l, r, _) => (l, r) }
+    val merges = model(spark, sfDir, bpe)._1.map { case (_, l, r, _) => (l, r) }
     wordCounts(spark, sfDir)
       .filter(length(col("w")) <= BPE_GREEDY_MAX_WORD)
       .select(reverse(col("w")).as("w"))
@@ -369,65 +496,41 @@ object TextJobs {
     out.result()
   }
 
-  /** The scoring half of [[bpeEncode]]: per-doc token accounting against
-    * an encoder lookup table (wh, n_syms) — in-line trained or loaded.
-    */
-  private[jobs] def bpeEncodeWith(spark: SparkSession, sfDir: String,
-      enc: DataFrame): DataFrame = {
-    val dw = Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), Dedup.hash60(col("w")).as("wh"))
-      .agg(count(lit(1)).as("k"))
-    dw.join(enc, "wh")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("k")).as("n_words"),
-        sum(col("k") * col("n_syms")).as("n_bpe_tokens"),
-        round(sum(col("k") * col("n_syms")).cast("double") / sum(col("k"))
-          + lit(1e-9), 4).as("tokens_per_word"))
-  }
+  /** `w`'s chars in the `|a||b|` delimited form. */
+  private def bpeReprSql: String =
+    "substr('|' || regexp_replace(w, '(.)', '\\1||', 'g'), 1, 3 * length(w))"
 
   /** The k merge rounds unrolled as CTE triples (the `cent$KM_ITERS`
     * discipline) — `p_r` recounts pairs from `v_{r-1}`, `m_r` takes the
-    * deterministic argmax, `v_r` applies the merge with the same
-    * `replace` semantics, carrying the original word through for the
-    * encoder's lookup. Shared by the merges and encode oracles.
+    * deterministic argmax, `v_r` applies the merge, carrying the
+    * original word through for the encoder's lookup.
     */
   private def bpeVocabCtesFor(docWhere: String): String = {
     val roundCtes = (1 to BPE_ROUNDS).map { r =>
-      s"""p$r AS (
-         |  SELECT s[i] AS left_sym, s[i + 1] AS right_sym,
-         |         CAST(SUM(cnt) AS BIGINT) AS pair_count
-         |  FROM (SELECT s, cnt, unnest(range(1, len(s))) AS i
-         |        FROM (SELECT string_split(substr(repr, 2, length(repr) - 2),
-         |                       '||') AS s, cnt
-         |              FROM v${r - 1}))
-         |  GROUP BY 1, 2
-         |), m$r AS (
-         |  SELECT left_sym, right_sym, pair_count FROM p$r
+      s"""${pairsCte(r)}, m$r AS (
+         |  SELECT left_sym, right_sym, pair_count,
+         |         left_sym || right_sym AS merged
+         |  FROM p$r
          |  ORDER BY pair_count DESC, left_sym ASC, right_sym ASC LIMIT 1
-         |), v$r AS (
-         |  -- LEFT JOIN ON TRUE: an exhausted merge table (m empty before
-         |  -- round k) must pass the vocab through unchanged, not empty it
-         |  SELECT w, COALESCE(replace(repr,
-         |           '|' || m.left_sym || '||' || m.right_sym || '|',
-         |           '|' || m.left_sym || m.right_sym || '|'), repr) AS repr, cnt
-         |  FROM v${r - 1} LEFT JOIN m$r m ON TRUE
-         |)""".stripMargin
+         |), ${mergeCte("v", r, ", cnt")}""".stripMargin
     }.mkString(", ")
-    s"""wc AS (
-       |  SELECT w, COUNT(*) AS cnt FROM (
-       |    SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $docWhere)
-       |  GROUP BY w
-       |), v0 AS (
-       |  SELECT w, substr('|' || regexp_replace(w, '(.)', '\\1||', 'g'),
-       |           1, 3 * length(w)) AS repr, cnt
-       |  FROM wc
+    s"""${wcCte(docWhere)}, v0 AS MATERIALIZED (
+       |  SELECT w, $bpeReprSql AS repr, cnt FROM wc
        |), $roundCtes""".stripMargin
   }
 
   private val bpeVocabCtes: String = bpeVocabCtesFor("")
+
+  /** The learned merge tables `m_r` applied in rank order to `words`'
+    * `w` (`g0` their chars, `g_k` the served symbols) — the
+    * [[bpeApplyMerges]] loop restated (see [[bpeGreedy]]'s equivalence
+    * note).
+    */
+  private def bpeApplyCtes(words: String): String =
+    (s"""g0 AS (
+        |  SELECT w, $bpeReprSql AS repr FROM $words
+        |)""".stripMargin +:
+      (1 to BPE_ROUNDS).map(r => mergeCte("g", r, ""))).mkString(", ")
 
   val bpeMergesSql: String = {
     val out = (1 to BPE_ROUNDS).map { r =>
@@ -436,55 +539,19 @@ object TextJobs {
     s"WITH $bpeVocabCtes\n$out"
   }
 
-  /** Oracle: the final `v_k` symbolization IS the encoder — count its
-    * symbols per word and join the documents' word multiplicities.
-    */
-  val bpeEncodeSql: String =
-    s"""WITH $bpeVocabCtes, enc AS (
-       |  SELECT w, CAST(len(string_split(substr(repr, 2, length(repr) - 2),
-       |           '||')) AS BIGINT) AS n_syms
-       |  FROM v$BPE_ROUNDS
-       |), dw AS (
-       |  SELECT doc_id, w, COUNT(*) AS k FROM (
-       |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents)
-       |  GROUP BY 1, 2
-       |)
-       |SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n_words,
-       |       CAST(SUM(k * n_syms) AS BIGINT) AS n_bpe_tokens,
-       |       ROUND(CAST(SUM(k * n_syms) AS DOUBLE) / CAST(SUM(k) AS BIGINT)
-       |             + 1e-9, 4) AS tokens_per_word
-       |FROM dw JOIN enc USING (w)
-       |GROUP BY doc_id""".stripMargin
+  val bpeEncodeSql: String = encodeSql(
+    s"WITH $bpeVocabCtes, ${symEncCte(s"v$BPE_ROUNDS", bpe.countCol)}", bpe)
 
-  /** Oracle: the serve words' char-split reprs pushed through the SAME
-    * per-round merge tables (`m_r` from [[bpeVocabCtes]]) as k sequential
-    * replace CTEs — the rank-order apply loop restated (see
-    * [[bpeGreedy]]'s equivalence note).
-    */
   val bpeGreedySql: String = {
-    val applyCtes = (1 to BPE_ROUNDS).map { r =>
-      s"""g$r AS (
-         |  SELECT w, COALESCE(replace(repr,
-         |           '|' || m.left_sym || '||' || m.right_sym || '|',
-         |           '|' || m.left_sym || m.right_sym || '|'), repr) AS repr
-         |  FROM g${r - 1} LEFT JOIN m$r m ON TRUE
-         |)""".stripMargin
-    }.mkString(", ")
-    s"""WITH $bpeVocabCtes, g0 AS (
-       |  SELECT w, substr('|' || regexp_replace(w, '(.)', '\\1||', 'g'),
-       |           1, 3 * length(w)) AS repr
-       |  FROM (SELECT reverse(w) AS w FROM wc
-       |        WHERE length(w) <= $BPE_GREEDY_MAX_WORD)
-       |), $applyCtes
-       |SELECT w,
-       |  CAST(len(string_split(substr(repr, 2, length(repr) - 2), '||'))
-       |    AS BIGINT) AS n_tokens,
+    val serve =
+      s"(SELECT reverse(w) AS w FROM wc WHERE length(w) <= $BPE_GREEDY_MAX_WORD)"
+    s"""WITH $bpeVocabCtes, ${bpeApplyCtes(serve)}
+       |SELECT w, CAST(len($reprSymsSql) AS BIGINT) AS n_tokens,
        |  replace(substr(repr, 2, length(repr) - 2), '||', '|') AS seg
        |FROM g$BPE_ROUNDS""".stripMargin
   }
 
-  // ---- WordPiece tokenizer trainer ----
+  // ---- WordPiece ----
 
   private val WP_ROUNDS = 6
 
@@ -502,23 +569,26 @@ object TextJobs {
 
   /** Word-initial symbol plain, every continuation symbol `##`-prefixed —
     * the WordPiece convention: `"abc"` → `["a", "##b", "##c"]`. Merging
-    * (l, r) concatenates l with r's payload (`##` stripped), so the
-    * merged symbol keeps `##` iff l was itself a continuation.
+    * (l, r) concatenates l with r's payload ([[wpMerged]]), so the merged
+    * symbol keeps `##` iff l was itself a continuation.
     */
   private def wpInitSyms(w: String): Array[String] =
     Array.tabulate(w.length) { i =>
       if (i == 0) w.substring(0, 1) else "##" + w.charAt(i)
     }
 
+  private def wpMerged(l: String, r: String): String = l + r.stripPrefix("##")
+
   /** WordPiece tokenizer training (Schuster & Nakajima 2012; the BERT
     * tokenizer): same greedy-merge loop as [[trainBpeRounds]] but the
     * argmax is the LIKELIHOOD score count(ab)/(count(a)·count(b)) — the
     * pair whose merge most improves a unigram LM over symbols — rather
     * than raw pair frequency, computed in scaled-integer form
-    * ([[WP_SCORE_SHIFT]]) so both engines land on identical merges.
-    * Symbol counts are recomputed from the current symbolization every
-    * round (they shift as merges absorb occurrences). Stops early when
-    * no adjacent pair remains.
+    * ([[WP_SCORE_SHIFT]]) so both engines land on identical merges; the
+    * merge table carries the score (round, left_sym, right_sym,
+    * pair_count, score_fp). Symbol counts are recomputed from the
+    * current symbolization every round (they shift as merges absorb
+    * occurrences). Stops early when no adjacent pair remains.
     */
   private def trainWordPieceRounds(
       vocab0: Array[(String, Array[String], Long)], rounds: Int)
@@ -550,7 +620,7 @@ object TextJobs {
         val ((l, rr), pc) = pairCounts.minBy { case ((a, b), v) =>
           (-score(a, b, v), a, b)
         }
-        val mergedSym = l + rr.stripPrefix("##")
+        val mergedSym = wpMerged(l, rr)
         vocab = vocab.map { case (w, syms, c0) =>
           (w, fusePair(syms, l, rr, mergedSym), c0)
         }
@@ -561,78 +631,36 @@ object TextJobs {
     (merges.result(), vocab)
   }
 
-  /** The learned WordPiece merge table: one row per round,
-    * (round, left_sym, right_sym, pair_count, score_fp) — the third
-    * tokenizer algorithm beside [[bpeMerges]] (frequency argmax) and
-    * [[unigramVocab]] (EM pruning). Scale shape is identical to BPE: the
-    * corpus contributes the ONE distributed tokenize + word count; the
-    * merge rounds are a sequential recurrence over the vocab-sized
-    * (word, cnt) table and run inside one task (coalesce(1), the round-6
-    * rule — k distributed rounds would be pure exchange scheduling).
+  /** WordPiece — the third tokenizer algorithm beside BPE (frequency
+    * argmax) and unigram (EM pruning): (merge table, encoder).
     */
-  /** The trained WordPiece model — the [[bpeModel]] contract:
-    * (merge table, encoder table), trained once per corpus per JVM by the
-    * same distributed-count + single-task pass, collected at merge-table/
-    * vocab size.
-    */
-  private[jobs] def wordpieceModel(spark: SparkSession, sfDir: String,
-      tag: String = "", docFilter: Column = lit(true))
-      : (Seq[(Long, String, String, Long, Long)], Seq[(String, Long)]) =
-    ModelMemo.shared.value("wordpiece", sfDir, "documents", tag) {
-      import spark.implicits._
-      wordCounts(spark, sfDir, docFilter).as[(String, Long)]
-        .coalesce(1).mapPartitions { it =>
-          val vocab0 = it.map { case (w, c) => (w, wpInitSyms(w), c) }.toArray
-          val (merges, vocab) = trainWordPieceRounds(vocab0, WP_ROUNDS)
-          Iterator.single((merges: Seq[(Long, String, String, Long, Long)],
-            vocab.toSeq.map { case (w, syms, _) => (w, syms.length.toLong) }))
-        }.collect().headOption.getOrElse((Nil, Nil))
-    }
+  private[graft] val wordpiece =
+    new Tokenizer[(Seq[(Long, String, String, Long, Long)],
+        Seq[(String, Long)])](
+      "wordpiece", "n_syms", "n_wp_tokens", "tokens_per_word", (Nil, Nil),
+      counts => mergeModel(trainWordPieceRounds(counts.map { case (w, c) =>
+        (w, wpInitSyms(w), c)
+      }, WP_ROUNDS)),
+      _._2, Encoders.product)
 
   def wordpieceMerges(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    wordpieceModel(spark, sfDir)._1
+    model(spark, sfDir, wordpiece)._1
       .toDF("round", "left_sym", "right_sym", "pair_count", "score_fp")
   }
 
-  /** The trained WordPiece tokenizer as a persistable artifact:
-    * (w, n_syms) — each corpus word's symbol count after [[WP_ROUNDS]]
-    * likelihood-scored merges. Vocab-sized (broadcastable);
-    * [[ArtifactJobs]] round-trips it through parquet.
-    */
-  private[jobs] def wordpieceEncoderTable(
-      spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    wordpieceModel(spark, sfDir)._2.toDF("w", "n_syms")
-  }
-
-  /** Token accounting under the trained WordPiece tokenizer — the
-    * [[bpeEncode]] shape: explode words → per-(doc, word) counts → join
-    * the vocab-sized encoder on 60-bit int keys → per-doc sums. The
-    * corpus never re-symbolizes per merge round.
-    */
+  /** Per-doc token accounting under the trained WordPiece tokenizer. */
   def wordpieceEncode(spark: SparkSession, sfDir: String): DataFrame =
-    wordpieceEncodeWith(spark, sfDir,
-      wordpieceEncoderTable(spark, sfDir)
-        .select(Dedup.hash60(col("w")).as("wh"), col("n_syms")))
+    encode(spark, sfDir, wordpiece)
 
-  /** The scoring half of [[wordpieceEncode]] against an encoder lookup
-    * table (wh, n_syms) — in-line trained or loaded from parquet.
+  /** The greedy vocabulary of a trained WordPiece model: every training
+    * word's base symbols ∪ one merged symbol per learned merge — a
+    * vocab-sized model transform, no corpus pass.
     */
-  private[jobs] def wordpieceEncodeWith(spark: SparkSession, sfDir: String,
-      enc: DataFrame): DataFrame = {
-    val dw = Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), Dedup.hash60(col("w")).as("wh"))
-      .agg(count(lit(1)).as("k"))
-    dw.join(enc, "wh")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("k")).as("n_words"),
-        sum(col("k") * col("n_syms")).as("n_wp_tokens"),
-        round(sum(col("k") * col("n_syms")).cast("double") / sum(col("k"))
-          + lit(1e-9), 4).as("tokens_per_word"))
-  }
+  private def wpVocab(m: (Seq[(Long, String, String, Long, Long)],
+      Seq[(String, Long)])): Set[String] =
+    m._2.iterator.flatMap { case (w, _) => wpInitSyms(w) }.toSet ++
+      m._1.iterator.map { case (_, l, r, _, _) => wpMerged(l, r) }
 
   /** Oracle-side enumeration stays bounded by construction (the unigram
     * rule: DuckDB enumerates ALL paths, not best-first) — both engines
@@ -663,14 +691,10 @@ object TextJobs {
     */
   def wordpieceGreedy(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // model-transform off the memoized trainer: the encoder table's keys
-    // ARE the corpus word list, and base-symbol ∪ merged-symbol is the
-    // greedy vocabulary — vocab-sized driver work, zero extra corpus pass
-    val (merges, enc) = wordpieceModel(spark, sfDir)
-    val vocab: Set[String] =
-      enc.iterator.flatMap { case (w, _) => wpInitSyms(w) }.toSet ++
-        merges.iterator.map { case (_, l, r, _, _) => l + r.stripPrefix("##") }
-    enc.map(_._1)
+    // the encoder table's keys ARE the corpus word list
+    val m = model(spark, sfDir, wordpiece)
+    val vocab = wpVocab(m)
+    m._2.map(_._1)
       .filter(_.length <= WP_GREEDY_MAX_WORD)
       .map { w =>
         val pieces = wpGreedySegment(w, vocab)
@@ -700,29 +724,19 @@ object TextJobs {
   }
 
   /** The WordPiece merge rounds unrolled as CTE quadruples — the
-    * [[bpeVocabCtes]] discipline plus a per-round symbol-count CTE
-    * (`s_r`, the likelihood denominator) and the scaled-integer score in
-    * the argmax. `wv0` decorates continuations with `##`; the merged
-    * symbol strips the right side's `##` so the prefix survives iff the
-    * left was itself a continuation.
+    * [[bpeVocabCtesFor]] chain plus a per-round symbol-count CTE (`s_r`,
+    * the likelihood denominator) and the scaled-integer score in the
+    * argmax. `v0` decorates continuations with `##`; the merged symbol
+    * strips the right side's `##` so the prefix survives iff the left
+    * was itself a continuation.
     */
   private def wpVocabCtesFor(docWhere: String): String = {
     val roundCtes = (1 to WP_ROUNDS).map { r =>
       s"""s$r AS MATERIALIZED (
          |  SELECT sym, CAST(SUM(cnt) AS BIGINT) AS n FROM (
-         |    SELECT unnest(string_split(substr(repr, 2, length(repr) - 2),
-         |             '||')) AS sym, cnt
-         |    FROM wv${r - 1})
+         |    SELECT unnest($reprSymsSql) AS sym, cnt FROM v${r - 1})
          |  GROUP BY 1
-         |), p$r AS MATERIALIZED (
-         |  SELECT s[i] AS left_sym, s[i + 1] AS right_sym,
-         |         CAST(SUM(cnt) AS BIGINT) AS pair_count
-         |  FROM (SELECT s, cnt, unnest(range(1, len(s))) AS i
-         |        FROM (SELECT string_split(substr(repr, 2, length(repr) - 2),
-         |                       '||') AS s, cnt
-         |              FROM wv${r - 1}))
-         |  GROUP BY 1, 2
-         |), m$r AS MATERIALIZED (
+         |), ${pairsCte(r)}, m$r AS MATERIALIZED (
          |  SELECT left_sym, right_sym, pair_count,
          |         (pair_count * (CAST(1 AS BIGINT) << $WP_SCORE_SHIFT))
          |           // (sl.n * sr.n) AS score_fp,
@@ -731,21 +745,9 @@ object TextJobs {
          |  FROM p$r JOIN s$r sl ON sl.sym = p$r.left_sym
          |            JOIN s$r sr ON sr.sym = p$r.right_sym
          |  ORDER BY score_fp DESC, left_sym ASC, right_sym ASC LIMIT 1
-         |), wv$r AS MATERIALIZED (
-         |  -- LEFT JOIN ON TRUE: an exhausted merge table passes the
-         |  -- vocab through unchanged instead of emptying the chain
-         |  SELECT w, COALESCE(replace(repr,
-         |           '|' || m.left_sym || '||' || m.right_sym || '|',
-         |           '|' || m.merged || '|'), repr) AS repr, cnt
-         |  FROM wv${r - 1} LEFT JOIN m$r m ON TRUE
-         |)""".stripMargin
+         |), ${mergeCte("v", r, ", cnt")}""".stripMargin
     }.mkString(", ")
-    s"""wc AS (
-       |  SELECT w, COUNT(*) AS cnt FROM (
-       |    SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $docWhere)
-       |  GROUP BY w
-       |), wv0 AS MATERIALIZED (
+    s"""${wcCte(docWhere)}, v0 AS MATERIALIZED (
        |  SELECT w, '|' || substr(w, 1, 1) || '|' ||
        |         CASE WHEN length(w) > 1 THEN
        |           regexp_replace(substr(w, 2, length(w) - 1),
@@ -757,6 +759,19 @@ object TextJobs {
 
   private val wpVocabCtes: String = wpVocabCtesFor("")
 
+  /** Oracle twin of [[wpVocab]]: `vocab(piece)`, the trained base symbols
+    * ∪ per-round merged symbols.
+    */
+  private val wpVocabCte: String = {
+    val mergedUnion = (1 to WP_ROUNDS)
+      .map(r => s"SELECT merged AS piece FROM m$r").mkString(" UNION ")
+    s"""vocab AS MATERIALIZED (
+       |  SELECT DISTINCT sym AS piece FROM (
+       |    SELECT unnest($reprSymsSql) AS sym FROM v0)
+       |  UNION $mergedUnion
+       |)""".stripMargin
+  }
+
   val wordpieceMergesSql: String = {
     val out = (1 to WP_ROUNDS).map { r =>
       s"SELECT CAST($r AS BIGINT) AS round, left_sym, right_sym, pair_count, score_fp FROM m$r"
@@ -764,45 +779,20 @@ object TextJobs {
     s"WITH $wpVocabCtes\n$out"
   }
 
-  /** Oracle: the final `wv_k` symbolization IS the encoder — count its
-    * symbols per word and join the documents' word multiplicities.
-    */
-  val wordpieceEncodeSql: String =
-    s"""WITH $wpVocabCtes, enc AS (
-       |  SELECT w, CAST(len(string_split(substr(repr, 2, length(repr) - 2),
-       |           '||')) AS BIGINT) AS n_syms
-       |  FROM wv$WP_ROUNDS
-       |), dw AS (
-       |  SELECT doc_id, w, COUNT(*) AS k FROM (
-       |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents)
-       |  GROUP BY 1, 2
-       |)
-       |SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n_words,
-       |       CAST(SUM(k * n_syms) AS BIGINT) AS n_wp_tokens,
-       |       ROUND(CAST(SUM(k * n_syms) AS DOUBLE) / CAST(SUM(k) AS BIGINT)
-       |             + 1e-9, 4) AS tokens_per_word
-       |FROM dw JOIN enc USING (w)
-       |GROUP BY doc_id""".stripMargin
+  val wordpieceEncodeSql: String = encodeSql(
+    s"WITH $wpVocabCtes, ${symEncCte(s"v$WP_ROUNDS", wordpiece.countCol)}",
+    wordpiece)
 
-  /** Oracle for the greedy gate: the trained vocabulary (base symbols ∪
-    * per-round merged symbols), then a recursive enumeration of every
-    * positional segmentation; greedy = the lexicographic MAX of the
-    * fixed-width consumed-length sequence (`lenseq`), so the argmax is a
-    * string comparison — no scores, no floats. Equal `lenseq` implies
-    * the identical segmentation (pieces are position+length determined),
-    * so the `seg ASC` tie-break is belt-and-braces only.
+  /** Oracle for the greedy gate: the trained vocabulary, then a recursive
+    * enumeration of every positional segmentation; greedy = the
+    * lexicographic MAX of the fixed-width consumed-length sequence
+    * (`lenseq`), so the argmax is a string comparison — no scores, no
+    * floats. Equal `lenseq` implies the identical segmentation (pieces
+    * are position+length determined), so the `seg ASC` tie-break is
+    * belt-and-braces only.
     */
-  val wordpieceGreedySql: String = {
-    val mergedUnion = (1 to WP_ROUNDS)
-      .map(r => s"SELECT merged AS piece FROM m$r").mkString(" UNION ")
-    s"""WITH RECURSIVE $wpVocabCtes, vocab AS MATERIALIZED (
-       |  SELECT DISTINCT sym AS piece FROM (
-       |    SELECT unnest(string_split(substr(repr, 2, length(repr) - 2),
-       |             '||')) AS sym
-       |    FROM wv0)
-       |  UNION $mergedUnion
-       |), gwords AS (
+  val wordpieceGreedySql: String =
+    s"""WITH RECURSIVE $wpVocabCtes, $wpVocabCte, gwords AS (
        |  SELECT w FROM wc WHERE length(w) <= $WP_GREEDY_MAX_WORD
        |), reach AS (
        |  SELECT w, 0 AS pos, '' AS lenseq, '' AS seg FROM gwords
@@ -828,9 +818,8 @@ object TextJobs {
        |    ORDER BY lenseq DESC, seg ASC) AS rn
        |  FROM reach WHERE pos = length(w)) b
        |WHERE rn = 1""".stripMargin
-  }
 
-  // ---- unigram-LM (SentencePiece-style) tokenizer trainer ----
+  // ---- unigram-LM (SentencePiece-style) ----
 
   private val UNI_MAX_WORD = 10
   private val UNI_MAX_PIECE = 4
@@ -839,12 +828,12 @@ object TextJobs {
   private val UNI_TOP_V = 24
 
   /** SentencePiece-style UNIGRAM tokenizer trainer, hard-EM (Viterbi)
-    * form — the second major tokenizer algorithm beside [[bpeMerges]]:
-    * seed a candidate vocabulary from substring statistics, then
-    * alternate (a) Viterbi-segment every word under the current piece
-    * scores and (b) re-score pieces by their segmentation usage, pruning
-    * multi-char pieces that fall out of use (single chars survive — the
-    * coverage guarantee).
+    * form — the second major tokenizer algorithm beside BPE: seed a
+    * candidate vocabulary from substring statistics, then alternate (a)
+    * Viterbi-segment every word under the current piece scores and (b)
+    * re-score pieces by their segmentation usage, pruning multi-char
+    * pieces that fall out of use (single chars survive — the coverage
+    * guarantee).
     *
     * Engine-exactness: true unigram EM maximizes Σ log p(piece), and
     * `ln` is the one libm call whose last ulp differs across engines
@@ -856,19 +845,16 @@ object TextJobs {
     * log-prob weighting changes WHICH optimum EM converges to, not the
     * algorithm shape).
     *
-    * Scale shape: identical to BPE — the corpus contributes the ONE
-    * distributed tokenize + word count; seed statistics, EM rounds and
-    * the Viterbi DP all run on the vocab-sized (word, cnt) table inside
-    * one task (a sequential recurrence buys no parallelism —
-    * coalesce(1), the round-6 rule; a 100 TB corpus caps the vocab with
-    * a frequency floor in the distributed count first).
+    * Scale shape: the shared [[training]] pass — seed statistics, EM
+    * rounds and the Viterbi DP all run on the vocab-sized (word, cnt)
+    * table inside one task.
     */
   private[jobs] def uniWords(
       vocab0: Array[(String, Long)]): Array[(String, Long)] =
     vocab0.filter { case (w, _) => w.nonEmpty && w.length <= UNI_MAX_WORD }
 
   /** The FULL final piece scores (chars + EM survivors) — the model the
-    * encoder segments under; [[trainUnigram]] is its top-V projection.
+    * encoder segments under; [[uniTopV]] is its top-V projection.
     */
   private[jobs] def trainUnigramScores(
       words: Array[(String, Long)]): Map[String, Long] = {
@@ -894,10 +880,15 @@ object TextJobs {
     scores
   }
 
+  /** The trained unigram vocabulary: (piece, usage) — final EM-round
+    * Viterbi usage counts, top [[UNI_TOP_V]] by (usage desc, piece asc).
+    */
+  private def uniTopV(scores: Map[String, Long]): Seq[(String, Long)] =
+    scores.toSeq.sortBy { case (p, u) => (-u, p) }.take(UNI_TOP_V)
+
   private[graft] def trainUnigram(
       vocab0: Array[(String, Long)]): Seq[(String, Long)] =
-    trainUnigramScores(uniWords(vocab0)).toSeq
-      .sortBy { case (p, u) => (-u, p) }.take(UNI_TOP_V)
+    uniTopV(trainUnigramScores(uniWords(vocab0)))
 
   /** Viterbi segmentation under the integer objective: minimize
     * (piece count, −score sum, segmentation string) lexicographically.
@@ -930,89 +921,37 @@ object TextJobs {
     dp(w.length).pieces.reverse
   }
 
-  /** The trained unigram vocabulary: (piece, usage) — final EM-round
-    * Viterbi usage counts, top [[UNI_TOP_V]] by (usage desc, piece asc).
+  /** Unigram: (top-V vocab, encoder, FULL final scores). The encoder
+    * counts each trainer word's Viterbi pieces under the full scores (not
+    * the top-V projection); the scores themselves are what
+    * [[tokenizerEval]] segments HELD-OUT words under, which the
+    * (train-word → count) encoder cannot answer.
     */
-  /** The trained unigram model — the [[bpeModel]] contract: one training
-    * pass per corpus per JVM shared by `unigram_vocab`/`unigram_encode*`/
-    * `tokenizer_compare` and the artifact twin.
-    *
-    * (top-V vocab, encoder table, FULL final scores). The third element
-    * is the complete `v2` piece-score map — what [[viterbi]] actually
-    * segments under; [[tokenizerEval]] serves HELD-OUT words, which
-    * the (train-word → count) encoder table cannot answer.
-    */
-  private[jobs] def unigramModel(spark: SparkSession, sfDir: String,
-      tag: String = "", docFilter: Column = lit(true))
-      : (Seq[(String, Long)], Seq[(String, Long)], Seq[(String, Long)]) =
-    ModelMemo.shared.value("unigram", sfDir, "documents", tag) {
-      unigramTraining(spark, sfDir, docFilter).collect().headOption
-        .getOrElse((Nil, Nil, Nil))
-    }
-
-  /** The pass [[unigramModel]] collects, shaped as [[bpeTraining]]. */
-  private[graft] def unigramTraining(spark: SparkSession, sfDir: String,
-      docFilter: Column = lit(true)): Dataset[(Seq[(String, Long)],
-        Seq[(String, Long)], Seq[(String, Long)])] = {
-    import spark.implicits._
-    wordCounts(spark, sfDir, docFilter).as[(String, Long)]
-      .coalesce(1).mapPartitions { it =>
-        val words = uniWords(it.toArray)
+  private[graft] val unigram =
+    new Tokenizer[(Seq[(String, Long)], Seq[(String, Long)],
+        Seq[(String, Long)])](
+      "unigram", "n_pieces", "n_unigram_pieces", "pieces_per_word",
+      (Nil, Nil, Nil),
+      counts => {
+        val words = uniWords(counts)
         val scores = trainUnigramScores(words)
-        val topV = scores.toSeq
-          .sortBy { case (p, u) => (-u, p) }.take(UNI_TOP_V)
-        Iterator.single((topV, words.toSeq.map { case (w, _) =>
+        (uniTopV(scores), words.toSeq.map { case (w, _) =>
           (w, viterbi(w, scores).length.toLong)
-        }, scores.toSeq))
-      }
-  }
+        }, scores.toSeq)
+      },
+      _._2, Encoders.product)
 
   def unigramVocab(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    unigramModel(spark, sfDir)._1.toDF("piece", "usage")
+    model(spark, sfDir, unigram)._1.toDF("piece", "usage")
   }
 
-  /** The trained unigram tokenizer as a persistable artifact:
-    * (w, n_pieces) — each trainer word's Viterbi piece count under the
-    * FULL final scores (not the top-V projection). Vocab-sized;
-    * [[ArtifactJobs]] round-trips it through parquet.
-    */
-  private[jobs] def unigramEncoderTable(
-      spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    unigramModel(spark, sfDir)._2.toDF("w", "n_pieces")
-  }
-
-  /** Token accounting under the trained unigram tokenizer — the unigram
-    * sibling of [[bpeEncode]], same scale shape: the single-task trainer
-    * output joins back as a vocab-sized (broadcastable) relation on
-    * 60-bit int keys; the corpus never re-segments per EM round. Words
+  /** Per-doc piece accounting under the trained unigram tokenizer; words
     * longer than [[UNI_MAX_WORD]] are outside the trainer's scope and
-    * drop from the accounting via the encoder join (this corpus' longest
-    * word is 8 chars, well inside the cap).
+    * drop from the accounting (this corpus' longest word is 8 chars).
     */
   def unigramEncode(spark: SparkSession, sfDir: String): DataFrame =
-    unigramEncodeWith(spark, sfDir,
-      unigramEncoderTable(spark, sfDir)
-        .select(Dedup.hash60(col("w")).as("wh"), col("n_pieces")))
-
-  /** The scoring half of [[unigramEncode]] against an encoder lookup
-    * table (wh, n_pieces) — in-line trained or loaded from parquet.
-    */
-  private[jobs] def unigramEncodeWith(spark: SparkSession, sfDir: String,
-      enc: DataFrame): DataFrame = {
-    val dw = Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), Dedup.hash60(col("w")).as("wh"))
-      .agg(count(lit(1)).as("k"))
-    dw.join(enc, "wh")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("k")).as("n_words"),
-        sum(col("k") * col("n_pieces")).as("n_unigram_pieces"),
-        round(sum(col("k") * col("n_pieces")).cast("double") / sum(col("k"))
-          + lit(1e-9), 4).as("pieces_per_word"))
-  }
+    encode(spark, sfDir, unigram)
 
   /** Serve-time vocab cap for the byte-fallback gate: encoder entries for
     * words ≤ 6 chars only, so this corpus' 7–8-char words genuinely take
@@ -1033,15 +972,11 @@ object TextJobs {
     * exists; a probabilistic fallback score would force float drift.
     */
   def unigramEncodeFallback(spark: SparkSession, sfDir: String): DataFrame = {
-    val enc = unigramEncoderTable(spark, sfDir)
+    val enc = encoderTable(spark, sfDir, unigram)
       .filter(length(col("w")) <= UNI_FB_MAX)
-      .select(Dedup.hash60(col("w")).as("wh"), col("n_pieces"))
-    val dw = Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), Dedup.hash60(col("w")).as("wh"))
-      .agg(count(lit(1)).as("k"), max(length(col("w"))).as("wlen"))
-    dw.join(enc, Seq("wh"), "left")
+      .select(wordKey, col("n_pieces"))
+    docWords(Tables.documents(spark, sfDir), wordKey)
+      .join(enc, Seq("wh"), "left")
       .groupBy(col("doc_id"))
       .agg(sum(col("k")).as("n_words"),
         sum(col("k") * coalesce(col("n_pieces"), col("wlen")))
@@ -1091,12 +1026,7 @@ object TextJobs {
     * engines.
     */
   private def unigramVocabCtesFor(docWhere: String): String =
-    s"""wc AS (
-       |  SELECT w, COUNT(*) AS cnt FROM (
-       |    SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $docWhere)
-       |  GROUP BY w
-       |), uwords AS (
+    s"""${wcCte(docWhere)}, uwords AS (
        |  SELECT w, cnt FROM wc WHERE length(w) BETWEEN 1 AND $UNI_MAX_WORD
        |), cand AS (
        |  SELECT substr(w, i, l) AS piece, CAST(SUM(cnt) AS BIGINT) AS freq
@@ -1139,39 +1069,22 @@ object TextJobs {
        |  FROM v2) f
        |WHERE rn <= $UNI_TOP_V""".stripMargin
 
-  /** Oracle: a THIRD Viterbi pass against the full final vocabulary `v2`
-    * gives each word's piece count; the document accounting mirrors the
-    * BPE encode oracle.
+  /** The encoder oracle: a THIRD Viterbi pass against the full final
+    * vocabulary `v2` gives each word's piece count, `enc(w, n_pieces)`
+    * for the words `encWhere` keeps.
     */
-  val unigramEncodeSql: String =
+  private def unigramEncCtes(encWhere: String): String =
     s"""WITH RECURSIVE $unigramVocabCtes, ${uniReachCte(3, "v2")}, enc AS (
-       |  SELECT w, CAST(np AS BIGINT) AS n_pieces FROM best3
-       |), dw AS (
-       |  SELECT doc_id, w, COUNT(*) AS k FROM (
-       |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents)
-       |  GROUP BY 1, 2
-       |)
-       |SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n_words,
-       |       CAST(SUM(k * n_pieces) AS BIGINT) AS n_unigram_pieces,
-       |       ROUND(CAST(SUM(k * n_pieces) AS DOUBLE) / CAST(SUM(k) AS BIGINT)
-       |             + 1e-9, 4) AS pieces_per_word
-       |FROM dw JOIN enc USING (w)
-       |GROUP BY doc_id""".stripMargin
+       |  SELECT w, CAST(np AS BIGINT) AS n_pieces FROM best3 $encWhere
+       |)""".stripMargin
+
+  val unigramEncodeSql: String = encodeSql(unigramEncCtes(""), unigram)
 
   /** Oracle for the byte-fallback gate: LEFT join against the ≤ 6-char
     * vocabulary subset, COALESCE to word length on the fallback path.
     */
   val unigramEncodeFallbackSql: String =
-    s"""WITH RECURSIVE $unigramVocabCtes, ${uniReachCte(3, "v2")}, enc AS (
-       |  SELECT w, CAST(np AS BIGINT) AS n_pieces FROM best3
-       |  WHERE length(w) <= $UNI_FB_MAX
-       |), dw AS (
-       |  SELECT doc_id, w, COUNT(*) AS k FROM (
-       |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents)
-       |  GROUP BY 1, 2
-       |)
+    s"""${unigramEncCtes(s"WHERE length(w) <= $UNI_FB_MAX")}, ${dwCte("")}
        |SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n_words,
        |       CAST(SUM(k * COALESCE(n_pieces, length(w))) AS BIGINT)
        |         AS n_pieces_total,
@@ -1288,7 +1201,7 @@ object TextJobs {
          |    (CAST($nStopSql AS DOUBLE) / CAST(greatest($nTokSql, 1) AS DOUBLE)) * 0.4
          |    + 1e-9, 4)""".stripMargin
     s"""WITH tok AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[A-Za-z0-9]+') AS w,
+       |  SELECT doc_id, ${tokensSql("lower(text)")} AS w,
        |         $qualitySql AS q
        |  FROM documents
        |), pairs AS (
@@ -1316,7 +1229,7 @@ object TextJobs {
 
   val lmSurpriseSql: String =
     s"""WITH tok AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[A-Za-z0-9]+') AS w
+       |  SELECT doc_id, ${tokensSql("lower(text)")} AS w
        |  FROM documents
        |), pairs AS (
        |  SELECT doc_id, ${hex60Sql("w[i]")} AS ph,
@@ -1369,7 +1282,7 @@ object TextJobs {
   val vocabCoverageSql: String =
     s"""WITH toks AS (
        |  SELECT doc_id,
-       |         unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS t
+       |         unnest(${tokensSql("lower(text)")}) AS t
        |  FROM documents
        |), vocab AS (
        |  SELECT t FROM (
@@ -1438,7 +1351,7 @@ object TextJobs {
 
   val heavyHittersSql: String =
     s"""WITH t AS (
-       |  SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS t
+       |  SELECT unnest(${tokensSql("lower(text)")}) AS t
        |  FROM documents
        |)
        |SELECT t AS token, COUNT(*) AS n, true AS cms_in_bounds
@@ -1485,7 +1398,7 @@ object TextJobs {
 
   val tfidfTopKSql: String =
     s"""WITH t AS (
-       |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS token
+       |  SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS token
        |  FROM documents
        |), tf AS (
        |  SELECT doc_id, token, COUNT(*) AS tf FROM t GROUP BY 1, 2
@@ -1556,7 +1469,7 @@ object TextJobs {
 
   val termAssociationsSql: String =
     s"""WITH t AS (
-       |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS token
+       |  SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS token
        |  FROM documents
        |), tf AS (
        |  SELECT doc_id, token, COUNT(*) AS tf FROM t GROUP BY 1, 2
@@ -1651,7 +1564,7 @@ object TextJobs {
        |  SELECT CAST(query_id AS BIGINT) AS query_id, term
        |  FROM (VALUES $vals) v(query_id, term)
        |), t AS (
-       |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS token
+       |  SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS token
        |  FROM documents
        |), tf AS (
        |  SELECT doc_id, token, COUNT(*) AS tf FROM t GROUP BY 1, 2
@@ -1813,7 +1726,7 @@ object TextJobs {
        |  SELECT CAST(query_id AS BIGINT) AS query_id, term
        |  FROM (VALUES $vals) v(query_id, term)
        |), t AS (
-       |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS token
+       |  SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS token
        |  FROM documents
        |), tf AS MATERIALIZED (
        |  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2
@@ -1940,8 +1853,8 @@ object TextJobs {
   }
 
   val tokenRaritySql: String =
-    """WITH t AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS token
+    s"""WITH t AS (
+      |  SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS token
       |  FROM documents
       |), tf AS (
       |  SELECT doc_id, token, COUNT(*) AS tf FROM t GROUP BY 1, 2
@@ -2762,7 +2675,7 @@ object TextJobs {
     *
     * Scale shape: three vocab-sized half-corpus trainings (each one
     * distributed word count + a single-task recurrence, content-memoized
-    * per split under the [[bpeModel]] contract), inference as a
+    * per split under the [[model]] contract), inference as a
     * distributed map over DISTINCT held-out words with the vocab-sized
     * models in the closure, then int-keyed per-doc joins and a 3-row
     * aggregate. The corpus is scanned twice (train count, held-out
@@ -2772,30 +2685,22 @@ object TextJobs {
   def tokenizerEval(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val trainF = col("doc_id") % EVAL_HOLD_MOD =!= 0
-    val merges = bpeModel(spark, sfDir, ":ev", trainF)._1
+    val merges = model(spark, sfDir, bpe, ":ev", trainF)._1
       .map { case (_, l, r, _) => (l, r) }
-    val (wpMerges, wpEnc) = wordpieceModel(spark, sfDir, ":ev", trainF)
-    val wpVocab: Set[String] =
-      wpEnc.iterator.flatMap { case (w, _) => wpInitSyms(w) }.toSet ++
-        wpMerges.iterator.map { case (_, l, r, _, _) =>
-          l + r.stripPrefix("##")
-        }
+    val wpv = wpVocab(model(spark, sfDir, wordpiece, ":ev", trainF))
     val uniScores: Map[String, Long] =
-      unigramModel(spark, sfDir, ":ev", trainF)._3.toMap
+      model(spark, sfDir, unigram, ":ev", trainF)._3.toMap
     val uniChars: Set[Char] =
       uniScores.keysIterator.filter(_.length == 1).map(_.head).toSet
     val hold = Tables.documents(spark, sfDir)
       .where(col("doc_id") % EVAL_HOLD_MOD === 0)
-    val dw = hold
-      .select(col("doc_id"),
-        explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
-      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("k"))
+    val dw = docWords(hold, col("w"))
     val tok = dw.select(col("w")).distinct().as[String]
       .map { w =>
         val tb = bpeApplyMerges(w, merges).length.toLong
-        val wpCov = wpVocab.contains(w.substring(0, 1)) &&
-          w.drop(1).forall(c => wpVocab.contains("##" + c))
-        val tw = if (wpCov) wpGreedySegment(w, wpVocab).length.toLong else 1L
+        val wpCov = wpv.contains(w.substring(0, 1)) &&
+          w.drop(1).forall(c => wpv.contains("##" + c))
+        val tw = if (wpCov) wpGreedySegment(w, wpv).length.toLong else 1L
         val uCov = w.forall(uniChars.contains)
         val tu =
           if (uCov) viterbi(w, uniScores).length.toLong else w.length.toLong
@@ -2837,42 +2742,22 @@ object TextJobs {
   private lazy val evalTrainWhere = s"WHERE doc_id % $EVAL_HOLD_MOD != 0"
   private lazy val evalHoldWhere = s"WHERE doc_id % $EVAL_HOLD_MOD = 0"
 
+  /** The held-out split's distinct words `hw(w)`. */
+  private lazy val hwCte: String =
+    s"""hw AS (
+       |  SELECT DISTINCT w FROM (
+       |    SELECT unnest(${tokensSql("lower(text)")}) AS w
+       |    FROM documents $evalHoldWhere)
+       |)""".stripMargin
+
   /** Per-doc BPE accounting on the held-out split under the half-trained
     * merge tables: the [[bpeGreedySql]] apply-loop restatement over the
     * held-out word set.
     */
-  private lazy val bpeHoldSql: String = {
-    val applyCtes = (1 to BPE_ROUNDS).map { r =>
-      s"""g$r AS (
-         |  SELECT w, COALESCE(replace(repr,
-         |           '|' || m.left_sym || '||' || m.right_sym || '|',
-         |           '|' || m.left_sym || m.right_sym || '|'), repr) AS repr
-         |  FROM g${r - 1} LEFT JOIN m$r m ON TRUE
-         |)""".stripMargin
-    }.mkString(", ")
-    s"""WITH ${bpeVocabCtesFor(evalTrainWhere)}, hw AS (
-       |  SELECT DISTINCT w FROM (
-       |    SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $evalHoldWhere)
-       |), g0 AS (
-       |  SELECT w, substr('|' || regexp_replace(w, '(.)', '\\1||', 'g'),
-       |           1, 3 * length(w)) AS repr
-       |  FROM hw
-       |), $applyCtes, enc AS (
-       |  SELECT w, CAST(len(string_split(substr(repr, 2, length(repr) - 2),
-       |           '||')) AS BIGINT) AS n_tok
-       |  FROM g$BPE_ROUNDS
-       |), dw AS (
-       |  SELECT doc_id, w, COUNT(*) AS k FROM (
-       |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $evalHoldWhere)
-       |  GROUP BY 1, 2
-       |)
-       |SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n_words,
-       |       CAST(SUM(k * n_tok) AS BIGINT) AS t_bpe
-       |FROM dw JOIN enc USING (w)
-       |GROUP BY doc_id""".stripMargin
-  }
+  private lazy val bpeHoldSql: String =
+    s"""WITH ${bpeVocabCtesFor(evalTrainWhere)}, $hwCte, ${bpeApplyCtes("hw")},
+       |${symEncCte(s"g$BPE_ROUNDS", "n_syms")}, ${dwCte(evalHoldWhere)}
+       |${accountingSql("n_syms", "t_bpe", "bpe_per_word")}""".stripMargin
 
   /** Per-doc WordPiece accounting on the held-out split: the
     * [[wordpieceGreedySql]] all-segmentations argmax over held-out words
@@ -2881,20 +2766,9 @@ object TextJobs {
     * greedy is the lexicographic-max lenseq); uncovered words count 1
     * ([UNK]) via the LEFT-join fallback.
     */
-  private lazy val wpHoldSql: String = {
-    val mergedUnion = (1 to WP_ROUNDS)
-      .map(r => s"SELECT merged AS piece FROM m$r").mkString(" UNION ")
-    s"""WITH RECURSIVE ${wpVocabCtesFor(evalTrainWhere)}, vocab AS MATERIALIZED (
-       |  SELECT DISTINCT sym AS piece FROM (
-       |    SELECT unnest(string_split(substr(repr, 2, length(repr) - 2),
-       |             '||')) AS sym
-       |    FROM wv0)
-       |  UNION $mergedUnion
-       |), hw AS (
-       |  SELECT DISTINCT w FROM (
-       |    SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $evalHoldWhere)
-       |), wsym AS (
+  private lazy val wpHoldSql: String =
+    s"""WITH RECURSIVE ${wpVocabCtesFor(evalTrainWhere)}, $wpVocabCte,
+       |$hwCte, wsym AS (
        |  SELECT w, CASE WHEN i = 1 THEN substr(w, 1, 1)
        |              ELSE '##' || substr(w, i, 1) END AS sym
        |  FROM (SELECT w, unnest(range(1, length(w) + 1)) AS i FROM hw)
@@ -2922,19 +2796,13 @@ object TextJobs {
        |      ORDER BY lenseq DESC) AS rn
        |    FROM reach WHERE pos = length(w)) b
        |  WHERE rn = 1
-       |), dw AS (
-       |  SELECT doc_id, w, COUNT(*) AS k FROM (
-       |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $evalHoldWhere)
-       |  GROUP BY 1, 2
-       |)
+       |), ${dwCte(evalHoldWhere)}
        |SELECT doc_id,
        |       CAST(SUM(k * COALESCE(n_pieces, 1)) AS BIGINT) AS t_wp,
        |       CAST(SUM(CASE WHEN n_pieces IS NULL THEN k ELSE 0 END)
        |            AS BIGINT) AS o_wp
        |FROM dw LEFT JOIN best USING (w)
        |GROUP BY doc_id""".stripMargin
-  }
 
   /** Per-doc unigram accounting on the held-out split: a Viterbi pass
     * (the [[uniReachCte]] machinery) against the half-trained full
@@ -2943,11 +2811,7 @@ object TextJobs {
     * `unigram_encode_fallback` convention).
     */
   private lazy val uniHoldSql: String =
-    s"""WITH RECURSIVE ${unigramVocabCtesFor(evalTrainWhere)}, hw AS (
-       |  SELECT DISTINCT w FROM (
-       |    SELECT unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $evalHoldWhere)
-       |), hsym AS (
+    s"""WITH RECURSIVE ${unigramVocabCtesFor(evalTrainWhere)}, $hwCte, hsym AS (
        |  SELECT w, substr(w, i, 1) AS sym
        |  FROM (SELECT w, unnest(range(1, length(w) + 1)) AS i FROM hw)
        |), hcov AS MATERIALIZED (
@@ -2956,12 +2820,7 @@ object TextJobs {
        |    (SELECT piece FROM v2 WHERE length(piece) = 1) c
        |    ON c.piece = s.sym
        |  GROUP BY s.w HAVING COUNT(*) = COUNT(c.piece)
-       |), ${uniReachCte(3, "v2", "hcov")}, dw AS (
-       |  SELECT doc_id, w, COUNT(*) AS k FROM (
-       |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[A-Za-z0-9]+')) AS w
-       |    FROM documents $evalHoldWhere)
-       |  GROUP BY 1, 2
-       |)
+       |), ${uniReachCte(3, "v2", "hcov")}, ${dwCte(evalHoldWhere)}
        |SELECT doc_id,
        |       CAST(SUM(k * COALESCE(np, length(w))) AS BIGINT) AS t_uni,
        |       CAST(SUM(CASE WHEN np IS NULL THEN k ELSE 0 END) AS BIGINT)
@@ -3220,7 +3079,7 @@ object TextJobs {
        |), d AS (
        |  SELECT doc_id, lang,
        |         CAST(length(array_to_string(
-       |           regexp_extract_all(lower(text), '[A-Za-z0-9]+'), ''))
+       |           ${tokensSql("lower(text)")}, ''))
        |           AS BIGINT) AS n_word_chars
        |  FROM documents
        |)

@@ -497,28 +497,28 @@ object Graph {
     * whole frame hash-matches any engine. Scale shape: two int-keyed
     * joins (wedge build on the shared endpoint, closure on the (v,w)
     * pair), one explode(3) + count per triangle, one broadcast-sized
-    * degree join back; no window, no global funnel.
+    * degree join back; no window, no global funnel. The degree and
+    * oriented-edge caches register with `scope`.
     */
-  def triangles(und: DataFrame): DataFrame = {
+  def triangles(und: DataFrame,
+      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     val e = und.select(col("a").cast("long"), col("b").cast("long"))
     // node-sized, referenced by both orientation sides and the final join
-    val deg = e.select(col("a").as("node"))
+    val deg = scope.cache(e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .cache()
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     val ed = e
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
     // orient: u = (deg,id)-smaller endpoint; carry v's key for the wedge order
-    val oriented = ed.select(
+    val oriented = scope.cache(ed.select(
         when(col("da") < col("db") ||
              (col("da") === col("db") && col("a") < col("b")),
           struct(col("a").as("u"), col("b").as("v"), col("db").as("dv")))
         .otherwise(
           struct(col("b").as("u"), col("a").as("v"), col("da").as("dv")))
         .as("o"))
-      .select(col("o.u").as("u"), col("o.v").as("v"), col("o.dv").as("dv"))
-      .cache()
+      .select(col("o.u").as("u"), col("o.v").as("v"), col("o.dv").as("dv")))
     val wedges = oriented.alias("x").join(oriented.alias("y"),
         col("x.u") === col("y.u") &&
           (col("x.dv") < col("y.dv") ||

@@ -158,6 +158,9 @@ object PlanAudit {
     var unexplained = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
+        // each row reads only its own query's caches (Bench, Verify and
+        // PlanSnap clear between queries too)
+        spark.catalog.clearCache()
         val p = Handoff.lineage(fn(spark, sfDir)).queryExecution.executedPlan
           .toString
         val ex = count(p, "Exchange hashpartitioning") +

@@ -83,6 +83,22 @@ class CacheScopeSpec extends SparkSpec {
       "the whole composed session must release at one close()")
   }
 
+  test("scoped registry builds leave no cached frame in the session") {
+    // both queries build inside a scope and hand off an eager cut: once
+    // built, nothing they cached (IVF assignment, degree-capped user-item
+    // frame) may outlive them. Suites run one at a time in the forked
+    // test JVM, so the session-wide count is this test's own.
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    Seq("ann_ivf_pq_retrained", "item_triangles").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, sf("sf0.001")).count() > 0)
+      assert(cacheManager.isEmpty,
+        s"$q left a cached frame in the session")
+    }
+  }
+
   test("the loan wrapper closes on both success and failure") {
     val seen = new java.util.concurrent.atomic.AtomicReference[CacheScope]
     CacheScope.scoped { scope =>

@@ -401,16 +401,24 @@ class PlanQualitySpec extends SparkSpec {
       s"corpus-wide single-partition funnel appeared:\n$p")
   }
 
-  test("bpe_merges: one distributed count, then a narrow single-task trainer") {
-    // bpe_merges serves the memoized model as local rows, so the pin
-    // reads the training pass the memo collects
-    val p = plan(TextJobs.bpeTraining(spark, sf("sf0.001")).toDF())
-    // the k merge rounds must not re-introduce per-round exchanges: the
-    // only exchanges are the word count's partial/final pair plus the
-    // coalesce(1) funnel — regression = exchange count growing with k
-    val exchanges = "Exchange".r.findAllIn(p).length
-    assert(exchanges <= 2, s"BPE trainer pays per-round exchanges:\n$p")
-  }
+  // one pin over the three trainers: the merges/vocab queries serve the
+  // memoized model as local rows, so each pin reads the training pass the
+  // memo collects
+  for ((name, tk) <- Seq[(String, TextJobs.Tokenizer[_ <: AnyRef])](
+      "bpe_merges: one distributed count, then a narrow single-task trainer" ->
+        TextJobs.bpe,
+      "wordpiece trainer shares the BPE exchange discipline" -> TextJobs.wordpiece,
+      "unigram trainer shares the BPE exchange discipline" -> TextJobs.unigram))
+    test(name) {
+      val p = plan(TextJobs.training(spark, sf("sf0.001"), tk).toDF())
+      // the k merge / EM rounds must not re-introduce per-round
+      // exchanges: the only exchanges are the word count's partial/final
+      // pair plus the coalesce(1) funnel — regression = exchange count
+      // growing with k
+      val exchanges = "Exchange".r.findAllIn(p).length
+      assert(exchanges <= 2,
+        s"${tk.key} trainer pays per-round exchanges:\n$p")
+    }
 
   test("dedup_clusters: union-find path leaves the vertex frame unshuffled") {
     // the round-8 regime split: a dup-pair-sized candidate graph resolves
@@ -431,12 +439,5 @@ class PlanQualitySpec extends SparkSpec {
     // every exchange keys on fingerprint/band ints — no text, no binary
     assert(!p.contains("Exchange hashpartitioning(content"),
       s"image payload crossed an exchange:\n$p")
-  }
-
-  test("unigram trainer shares the BPE exchange discipline") {
-    val p = plan(TextJobs.unigramTraining(spark, sf("sf0.001")).toDF())
-    val exchanges = "Exchange".r.findAllIn(p).length
-    assert(exchanges <= 2,
-      s"unigram trainer pays per-EM-round exchanges:\n$p")
   }
 }
