@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.ops.{CacheScope, Dedup, Handoff, Similarity}
+import graft.ops.{CacheScope, Dedup, Handoff, Media, Similarity}
 
 /** Persist-then-score: the production train-once/score-many shape.
   *
@@ -31,13 +31,24 @@ import graft.ops.{CacheScope, Dedup, Handoff, Similarity}
   */
 object ArtifactJobs {
 
-  /** Artifact store root — per-JVM temp space (model files, not data). */
+  /** Artifact store root — a fresh directory under `java.io.tmpdir` per
+    * JVM (model files, not data), removed at exit. [[persist]] trusts an
+    * in-JVM memo for freshness, so a directory shared between JVMs would
+    * let one overwrite the artifacts the other serves as its own.
+    */
   private lazy val root: java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_artifacts")
-    java.nio.file.Files.createDirectories(p)
+    val p = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(sys.props("java.io.tmpdir")), "graft_artifacts_")
+    sys.addShutdownHook(deleteTree(p))
     p
   }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq
+        .reverse.foreach(java.nio.file.Files.delete)
+    }
 
   /** Write a model-sized frame as a one-file parquet artifact and hand
     * back the LOADED frame — the round-trip is the point of the test.
@@ -378,149 +389,75 @@ object ArtifactJobs {
       AnalyticsJobs.itemSimilarityCore(storedUi.unionAll(deltaUi).distinct()))
   }
 
-  /** Incremental VIDEO fingerprint index — the daily-ingest shape for the
-    * newest modality: the per-frame fingerprint index of the established
-    * corpus (doc_id % 5 != 0, the "yesterday" 4/5) is a persisted
-    * artifact; serve time parses ONLY the delta clips (doc_id % 5 == 0)
-    * and pairs delta × (stored ∪ delta) through a bipartite anchored band
-    * join — at 100 TB the corpus is never re-decoded, and the join's
-    * stream side is delta-sized. Candidates keep the first-shared-band
-    * multiplicity-1 rule on the raw exploded sides (no identity
-    * compression needed: identical anchors meet exactly once at band 0);
-    * delta-delta pairs canonicalize by id order so each unordered pair
-    * survives once. Output: every near-dup pair touching the delta.
-    *
-    * Oracle: the full in-line per-frame recompute restricted to
-    * delta-touching pairs — hash-equality proves parsing only the delta
-    * against the stored artifact loses nothing vs re-fingerprinting the
-    * world.
-    */
-  def videoIndexIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ops.{Dedup, Multimodal, VideoPipeline}
-    val docs = Tables.documents(spark, sfDir)
-    val stored = persist(spark, "video_fp_index", docsFp(sfDir),
-      Multimodal.videoScan(spark, docs.filter(col("doc_id") % 5 =!= 0)))
-    // a handoff cut, not .cache(): consumed by both the banded join and
-    // the verify stage, and a bare cache would leak past the query (see
-    // [[fpIndexIncremental]]).
-    val delta = Handoff.cut(Multimodal.videoScan(spark,
-      docs.filter(col("doc_id") % 5 === 0)))
-    val full = stored.unionByName(delta)
-    val bands = Dedup.Bands63
-    def banded(anchors: DataFrame, idAs: String, fpAs: String) =
-      anchors.filter(col("frame_idx") === 0)
-        .select(col("doc_id").as(idAs), col("fp").as(fpAs),
-          posexplode(array(bands.map(b => Dedup.bandVal(col("fp"), b)): _*))
-            .as(Seq("b", "bv")))
-    val earlierBandsDiffer = bands.zipWithIndex.map { case (bd, j) =>
-      (lit(j) >= col("b")) ||
-        (Dedup.bandVal(col("d_fp"), bd) =!= Dedup.bandVal(col("f_fp"), bd))
-    }.reduce(_ && _)
-    val cand = banded(delta, "d_id", "d_fp")
-      .join(banded(full, "f_id", "f_fp"), Seq("b", "bv"))
-      .filter(col("d_id") =!= col("f_id"))
-      .filter(earlierBandsDiffer)
-      // both-delta pairs arrive in both orders — keep the id-ordered one
-      .filter(col("f_id") % 5 =!= 0 || col("d_id") < col("f_id"))
-      .select(least(col("d_id"), col("f_id")).as("doc_a"),
-        greatest(col("d_id"), col("f_id")).as("doc_b"))
-    VideoPipeline.verifyAligned(full, cand,
-      MultimodalJobs.NEARDUP_MAX_HAMMING)
-  }
-
-  /** Incremental IMAGE fingerprint index — the daily-ingest shape for the
-    * highest-volume multimodal stream: the dHash index of the established
-    * corpus (doc_id % 5 != 0, the "yesterday" 4/5) is a persisted
-    * artifact; serve time DECODES ONLY the delta images (doc_id % 5 == 0)
-    * and pairs delta × (stored ∪ delta) through a bipartite banded
-    * Hamming join — at 100 TB the corpus is never re-decoded (decode
-    * dominates image-dedup cost; memo-key scope: see
-    * [[fpIndexIncremental]]), and the join's stream side is
-    * delta-sized. First-shared-band keeps candidate multiplicity exactly
-    * 1 (identical fingerprints meet at band 0); delta-delta pairs arrive
-    * in both orientations and keep the id-ordered one — the
-    * [[videoIndexIncremental]] discipline, single-fingerprint form.
-    * Bands: the disjoint [[graft.ops.Dedup.Bands63]] plan (pigeonhole
-    * holds through Hamming 3); a corpus past the accidental-collision
-    * knee swaps in [[graft.ops.Dedup.bandPlanMeasured]]'s super-bands
-    * exactly as the full pipeline does. Probed non-degenerate at every
-    * SF: 662/662/6625 delta-touching pairs (38/38/375 delta-delta).
-    *
-    * Oracle: the full in-line dHash recompute restricted to
-    * delta-touching pairs — hash-equality proves decoding only the delta
-    * against the stored artifact loses nothing.
-    */
-  def imageIndexIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    fpIndexIncremental(spark, sfDir, "image_fp_index",
-      graft.ops.Multimodal.imageScan)
-
-  /** The audio twin of [[imageIndexIncremental]] — same persisted
-    * single-fingerprint index discipline over the `javax.sound` decode
-    * (the energy-difference fingerprint): stored clips are never
-    * re-decoded, only the doc_id % 5 == 0 delta is parsed at serve time.
-    * Probed non-degenerate at every SF: 662/662/6623 delta-touching
-    * pairs (38/38/375 delta-delta).
-    */
-  def audioIndexIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    fpIndexIncremental(spark, sfDir, "audio_fp_index",
-      graft.ops.Multimodal.audioScan)
-
-  /** The shared single-fingerprint incremental-index core: persisted
-    * (doc_id, fp) artifact for the established 4/5 corpus, delta-only
-    * decode via `scan`, bipartite delta × (stored ∪ delta) banded
-    * Hamming join with the first-shared-band multiplicity-1 rule,
-    * delta-delta pairs canonicalized by id order, in-row bit_count
-    * verify. Output: (doc_a, doc_b, hamming) for every near-dup pair
-    * touching the delta.
+  /** Incremental fingerprint index — the daily-ingest shape for every
+    * modality: the fingerprint index of the established corpus
+    * (doc_id % 5 != 0, the "yesterday" 4/5) is a persisted artifact
+    * (`<modality>_fp_index`; video's is per frame); serve time decodes
+    * ONLY the delta (doc_id % 5 == 0) and pairs delta × (stored ∪ delta)
+    * anchors through the bipartite banded join ([[Dedup.bandedProbe]]) —
+    * at 100 TB the corpus is never re-decoded, and the join's stream side
+    * is delta-sized. The join's first-shared-band rule keeps candidate
+    * multiplicity exactly 1 on the raw sides (no identity compression
+    * needed: identical fingerprints meet once, at band 0); delta-delta
+    * pairs arrive in both orientations and keep the id-ordered one; the
+    * modality then verifies ([[Media.verify]]: video frame-aligned).
+    * Bands: the disjoint [[Dedup.Bands63]] plan (pigeonhole holds through
+    * Hamming 3); a corpus past the accidental-collision knee swaps in
+    * [[Dedup.bandPlanMeasured]]'s super-bands exactly as the full
+    * pipeline does. Probed non-degenerate at every SF: image 662/662/6625
+    * and audio 662/662/6623 delta-touching pairs (38/38/375 delta-delta).
+    * Output: (doc_a, doc_b, hamming) for every near-dup pair touching the
+    * delta.
     *
     * Memo-key scope: the stored artifact is keyed on the fingerprint of
     * the ONE fixture parquet that holds both the established corpus and
-    * the delta, so rewriting that file re-builds the index — the
-    * "never re-decoded" economics hold within a fixture generation. A
-    * production deployment where deltas land as NEW partitions keys the
-    * stored index on a manifest of landed partitions instead (the
+    * the delta, so rewriting that file re-builds the index — the "never
+    * re-decoded" economics hold within a fixture generation. A production
+    * deployment where deltas land as NEW partitions keys the stored index
+    * on a manifest of landed partitions instead (the
     * [[itemPagerankIncremental]] manifest discipline), so arrivals never
     * invalidate the established index.
+    *
+    * Oracle: the full in-line recompute restricted to delta-touching
+    * pairs ([[MultimodalJobs.neardupDeltaSql]]) — hash-equality proves
+    * decoding only the delta against the stored artifact loses nothing.
     */
-  private def fpIndexIncremental(spark: SparkSession, sfDir: String,
-      indexName: String,
-      scan: (SparkSession, DataFrame) => DataFrame): DataFrame = {
-    import graft.ops.Dedup
+  def indexIncremental(m: Media)(spark: SparkSession,
+      sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val stored = persist(spark, indexName, docsFp(sfDir),
-      scan(spark, docs.filter(col("doc_id") % 5 =!= 0))
-        .select(col("doc_id"), col("fp")))
-    // A handoff cut (ContextCleaner-reclaimed) rather than .cache()d: the delta frame is consumed twice (its own
-    // banded side and the stored ∪ delta side) but a bare cache would
-    // outlive the query for the JVM lifetime — the same concurrent-
-    // footprint class the cross_modal_clusters scoping fixed.
-    val delta = Handoff.cut(scan(spark, docs.filter(col("doc_id") % 5 === 0))
-      .select(col("doc_id"), col("fp")))
+    val stored = persist(spark, s"${m.name}_fp_index", docsFp(sfDir),
+      m.index(m.scan(spark, docs.filter(col("doc_id") % 5 =!= 0))))
+    // a handoff cut, not .cache(): consumed by both join sides and the
+    // verify, and a bare cache would outlive the query for the JVM
+    // lifetime (the cross_modal_clusters footprint class)
+    val delta = Handoff.cut(
+      m.index(m.scan(spark, docs.filter(col("doc_id") % 5 === 0))))
     val full = stored.unionByName(delta)
-    val bands = Dedup.Bands63
-    def banded(side: DataFrame, idAs: String, fpAs: String) =
-      side.select(col("doc_id").as(idAs), col("fp").as(fpAs),
-        posexplode(array(bands.map(b => Dedup.bandVal(col("fp"), b)): _*))
-          .as(Seq("b", "bv")))
-    val earlierBandsDiffer = bands.zipWithIndex.map { case (bd, j) =>
-      (lit(j) >= col("b")) ||
-        (Dedup.bandVal(col("d_fp"), bd) =!= Dedup.bandVal(col("f_fp"), bd))
-    }.reduce(_ && _)
-    banded(delta, "d_id", "d_fp")
-      .join(banded(full, "f_id", "f_fp"), Seq("b", "bv"))
+    def side(idx: DataFrame, id: String, fp: String) =
+      m.anchors(idx).select(col("doc_id").as(id), col("fp").as(fp))
+    val cand = Dedup.bandedProbe(side(delta, "d_id", "d_fp"), "d_fp",
+        side(full, "f_id", "f_fp"), "f_fp", Dedup.Bands63.map(Seq(_)))
       .filter(col("d_id") =!= col("f_id"))
-      .filter(earlierBandsDiffer)
+      // both-delta pairs arrive in both orders — keep the id-ordered one
       .filter(col("f_id") % 5 =!= 0 || col("d_id") < col("f_id"))
       .select(least(col("d_id"), col("f_id")).as("doc_a"),
         greatest(col("d_id"), col("f_id")).as("doc_b"),
         bit_count(col("d_fp").bitwiseXOR(col("f_fp"))).cast("long")
           .as("hamming"))
       .filter(col("hamming") <= MultimodalJobs.NEARDUP_MAX_HAMMING)
+    m.verify(full, cand, MultimodalJobs.NEARDUP_MAX_HAMMING)
   }
+
+  val imageIndexIncremental: (SparkSession, String) => DataFrame =
+    indexIncremental(Media.Image)
+  val audioIndexIncremental: (SparkSession, String) => DataFrame =
+    indexIncremental(Media.Audio)
+  val videoIndexIncremental: (SparkSession, String) => DataFrame =
+    indexIncremental(Media.Video)
 
   /** Compact an append-accumulated index back into ONE canonically-sorted
     * parquet part — the missing piece of the incremental serving story:
-    * [[fpIndexIncremental]] and the streaming refreshers
+    * [[indexIncremental]] and the streaming refreshers
     * ([[graft.streaming.StreamingMultimodal]] /
     * [[graft.streaming.StreamingSimilarity.indexRefreshBatches]]) APPEND
     * one small file per micro-batch / ingest day, so an uncompacted index
@@ -546,11 +483,7 @@ object ArtifactJobs {
       java.nio.file.Files.exists(root.resolve(name))
     if (!fresh) {
       // rebuild the micro-batch append tail from scratch
-      if (java.nio.file.Files.exists(appendDir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(appendDir).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.delete)
-      }
+      deleteTree(appendDir)
       chunks.foreach(_.coalesce(1)
         .write.mode("append").parquet(appendDir.toString))
       stored.unionByName(spark.read.parquet(appendDir.toString))
@@ -572,44 +505,52 @@ object ArtifactJobs {
   private[graft] def artifactPath(name: String): String =
     root.resolve(name).toString
 
-  /** Image fingerprint index COMPACTION — the serving-lifecycle close of
-    * [[imageIndexIncremental]]: the established 4/5 index is the stored
-    * artifact, the doc_id % 5 == 0 delta arrives as FIVE append chunks
-    * (the micro-batch tail the streaming refresher leaves behind), and
-    * compaction merges them into one doc_id-sorted part. The query then
-    * serves ALL near-dup pairs from the compacted index alone — zero
-    * decode anywhere on the serve path.
+  /** Fingerprint index COMPACTION — the serving-lifecycle close of
+    * [[indexIncremental]], for every modality: the established 4/5 index
+    * is the stored artifact, the doc_id % 5 == 0 delta arrives as FIVE
+    * append chunks (the micro-batch tail the streaming refresher leaves
+    * behind), and compaction merges them into one sorted part
+    * ([[compactedIdx]]). The query then serves ALL near-dup pairs from the
+    * compacted index alone — the [[graft.ops.MediaPipeline]] pair contract (video:
+    * anchor-banded candidates, frame-aligned verify) with zero decode
+    * anywhere on the serve path.
     *
-    * Oracle: the full in-line dHash brute force
-    * ([[MultimodalJobs.imageNeardupSql]] VERBATIM) — hash-equality proves
-    * stored ∪ appends → compacted → serve loses nothing vs
-    * re-fingerprinting the world from pixels.
+    * Oracle: the full in-line brute force ([[MultimodalJobs.neardupSql]]
+    * VERBATIM) — hash-equality proves stored ∪ appends → compacted →
+    * serve loses nothing vs re-fingerprinting the world from payloads.
     */
-  def imageIndexCompacted(spark: SparkSession, sfDir: String): DataFrame = {
-    val idx = imageFpCompactedIdx(spark, sfDir)
+  def indexCompacted(m: Media)(spark: SparkSession, sfDir: String): DataFrame = {
+    val idx = compactedIdx(m, spark, sfDir)
     CacheScope.scoped { scope =>
-      Handoff.cut(Dedup.hammingPairsAuto(idx,
-        MultimodalJobs.NEARDUP_MAX_HAMMING, scope))
+      Handoff.cut(m.verify(idx,
+        Dedup.hammingPairsAuto(m.anchors(idx).select(col("doc_id"), col("fp")),
+          MultimodalJobs.NEARDUP_MAX_HAMMING, scope),
+        MultimodalJobs.NEARDUP_MAX_HAMMING))
     }
   }
 
-  /** The compacted full-corpus image fp index (stored 4/5 artifact ∪ five
-    * delta append chunks → one sorted part) — shared by the compaction
-    * gate and the erasure pass that runs after it in the lifecycle.
+  val imageIndexCompacted: (SparkSession, String) => DataFrame =
+    indexCompacted(Media.Image)
+  val audioIndexCompacted: (SparkSession, String) => DataFrame =
+    indexCompacted(Media.Audio)
+  val videoIndexCompacted: (SparkSession, String) => DataFrame =
+    indexCompacted(Media.Video)
+
+  /** The compacted full-corpus fingerprint index of a modality (stored 4/5
+    * artifact ∪ five delta append chunks → one part sorted by doc_id, and
+    * frame_idx for video) — shared by the compaction gate and the erasure
+    * pass that runs after it in the lifecycle.
     */
-  private def imageFpCompactedIdx(spark: SparkSession,
+  private def compactedIdx(m: Media, spark: SparkSession,
       sfDir: String): DataFrame = {
-    import graft.ops.Multimodal
     val docs = Tables.documents(spark, sfDir)
-    compacted(spark, "image_fp_compacted", docsFp(sfDir),
-      stored = Multimodal.imageScan(spark, docs.filter(col("doc_id") % 5 =!= 0))
-        .select(col("doc_id"), col("fp")),
-      chunks = (0 until 5).map { c =>
-        Multimodal.imageScan(spark,
-            docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 25 === c * 5))
-          .select(col("doc_id"), col("fp"))
-      },
-      sortCols = Seq("doc_id"))
+    def indexOf(pred: org.apache.spark.sql.Column) =
+      m.index(m.scan(spark, docs.filter(pred)))
+    compacted(spark, s"${m.name}_fp_compacted", docsFp(sfDir),
+      stored = indexOf(col("doc_id") % 5 =!= 0),
+      chunks = (0 until 5).map(c =>
+        indexOf(col("doc_id") % 5 === 0 && col("doc_id") % 25 === c * 5)),
+      sortCols = m.indexKey)
   }
 
   /** Tombstone cohort for the artifact-erasure gates: `index_erasure`
@@ -647,7 +588,7 @@ object ArtifactJobs {
     */
   def indexErasure(spark: SparkSession, sfDir: String): DataFrame = {
     val purged = persist(spark, "image_fp_purged", docsFp(sfDir),
-      imageFpCompactedIdx(spark, sfDir)
+      compactedIdx(Media.Image, spark, sfDir)
         .filter(col("doc_id") % 29 =!= DOC_ERASE_RESIDUE))
     CacheScope.scoped { scope =>
       Handoff.cut(Dedup.hammingPairsAuto(purged,
@@ -711,70 +652,6 @@ object ArtifactJobs {
         Handoff.cut(listsFromCounts(newInter, newSizes))
       }
     })
-  }
-
-  /** AUDIO fingerprint index COMPACTION — completes the modality matrix
-    * ([[imageIndexCompacted]] / [[videoIndexCompacted]] / IVF×PQ were the
-    * other three): the established 4/5 energy-difference index
-    * ([[graft.ops.Multimodal.audioScan]], the `javax.sound` decode) is
-    * the stored artifact, the doc_id % 5 == 0 delta arrives as five
-    * append chunks (the tail [[audioIndexIncremental]] and the streaming
-    * audio refresher leave behind), and compaction merges them into one
-    * doc_id-sorted part. The serve pairs near-dups from the compacted
-    * index alone — zero WAV decode anywhere on the serve path.
-    *
-    * Oracle: the full in-line acoustic-fingerprint brute force
-    * ([[MultimodalJobs.audioNeardupSql]] VERBATIM) — hash-equality proves
-    * stored ∪ appends → compacted → serve loses nothing vs re-decoding
-    * every clip.
-    */
-  def audioIndexCompacted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ops.Multimodal
-    val docs = Tables.documents(spark, sfDir)
-    val idx = compacted(spark, "audio_fp_compacted", docsFp(sfDir),
-      stored = Multimodal.audioScan(spark, docs.filter(col("doc_id") % 5 =!= 0))
-        .select(col("doc_id"), col("fp")),
-      chunks = (0 until 5).map { c =>
-        Multimodal.audioScan(spark,
-            docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 25 === c * 5))
-          .select(col("doc_id"), col("fp"))
-      },
-      sortCols = Seq("doc_id"))
-    CacheScope.scoped { scope =>
-      Handoff.cut(Dedup.hammingPairsAuto(idx,
-        MultimodalJobs.NEARDUP_MAX_HAMMING, scope))
-    }
-  }
-
-  /** VIDEO per-frame index COMPACTION — the sequence-fingerprint member
-    * of the [[imageIndexCompacted]] family: the established per-frame
-    * index is the stored artifact, the delta's frame rows arrive as five
-    * append chunks, and compaction merges them into one
-    * (doc_id, frame_idx)-sorted part. The serve then runs the FULL
-    * frame-aligned pair contract ([[VideoPipeline.verifyAligned]] over
-    * anchor-banded candidates) from the compacted table alone — zero
-    * RAWV parse anywhere. Oracle: the full in-line per-frame recompute
-    * ([[MultimodalJobs.videoNeardupSql]] VERBATIM).
-    */
-  def videoIndexCompacted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ops.{Dedup, Multimodal, VideoPipeline}
-    val docs = Tables.documents(spark, sfDir)
-    val idx = compacted(spark, "video_fp_compacted", docsFp(sfDir),
-      stored = Multimodal.videoScan(spark, docs.filter(col("doc_id") % 5 =!= 0)),
-      chunks = (0 until 5).map { c =>
-        Multimodal.videoScan(spark,
-          docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 25 === c * 5))
-      },
-      sortCols = Seq("doc_id", "frame_idx"))
-    CacheScope.scoped { scope =>
-      val anchors = idx.filter(col("frame_idx") === 0)
-        .select(col("doc_id"), col("fp"))
-      Handoff.cut(VideoPipeline.verifyAligned(idx,
-        Dedup.hammingPairsAuto(anchors,
-            MultimodalJobs.NEARDUP_MAX_HAMMING, scope)
-          .select(col("doc_a"), col("doc_b")),
-        MultimodalJobs.NEARDUP_MAX_HAMMING))
-    }
   }
 
   /** IVF×PQ index COMPACTION — the embedding sibling of
@@ -930,13 +807,13 @@ object ArtifactJobs {
     "index_erasure" -> MultimodalJobs.imageNeardupSurvivorsSql,
     "cf_erasure" -> cfErasureSql,
     "ann_index_erasure" -> SimilarityJobs.annIvfPqRerankSurvivorsSql,
-    "image_index_compacted" -> MultimodalJobs.imageNeardupSql,
-    "audio_index_compacted" -> MultimodalJobs.audioNeardupSql,
-    "video_index_compacted" -> MultimodalJobs.videoNeardupSql,
+    "image_index_compacted" -> MultimodalJobs.neardupSql(Media.Image),
+    "audio_index_compacted" -> MultimodalJobs.neardupSql(Media.Audio),
+    "video_index_compacted" -> MultimodalJobs.neardupSql(Media.Video),
     "ann_ivf_pq_compacted" -> SimilarityJobs.annIvfPqRerankSql,
-    "image_index_incremental" -> MultimodalJobs.imageNeardupDeltaSql,
-    "audio_index_incremental" -> MultimodalJobs.audioNeardupDeltaSql,
-    "video_index_incremental" -> MultimodalJobs.videoNeardupDeltaSql,
+    "image_index_incremental" -> MultimodalJobs.neardupDeltaSql(Media.Image),
+    "audio_index_incremental" -> MultimodalJobs.neardupDeltaSql(Media.Audio),
+    "video_index_incremental" -> MultimodalJobs.neardupDeltaSql(Media.Video),
     "item_pagerank_incremental" -> AnalyticsJobs.itemPagerankSql,
     "item_communities_incremental" -> AnalyticsJobs.itemCommunitiesSql,
     "item_similarity_incremental" -> AnalyticsJobs.itemSimilaritySql,

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.{CacheScope, Dedup, Handoff, TextAnalysis}
+import graft.ops.{CacheScope, Dedup, Handoff, Media, MediaPipeline, TextAnalysis}
 import OracleSql.{fingerprintSql, hexIntSql, hexIntSqlAt, normalizedSql, wordsSql}
 
 /** Deduplication queries over `documents`, each with a DuckDB oracle that
@@ -552,16 +552,8 @@ object DedupJobs {
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame =
     pipeline(spark, sfDir).clusters
 
-  /** Oracle: transitive closure by recursive CTE over the same candidate
-    * edges; MIN(reached) is the same fixpoint min-label propagation reaches.
-    */
-  /** Shared CTE chain: grams → hashed grams → signatures → LSH candidate
-    * edges → recursive transitive closure. [[dedupClustersSql]] reads the
-    * component minimum off it directly; [[splitLeakageSafeSql]] builds the
-    * cluster-keyed split on top of the same chain.
-    */
-  /** The minhash candidate chain alone (grams → signatures → LSH cand) —
-    * shared by [[clusterReachCtes]] and the cross-modal union.
+  /** The minhash candidate chain (grams → signatures → LSH cand) —
+    * shared by [[clusterCtes]] and the cross-modal union.
     */
   private def minhashCandCtes: String =
     s"""$bigramCte, $hashedGramCte, sig AS (
@@ -572,20 +564,18 @@ object DedupJobs {
        |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ($bandEqSql)
        |)""".stripMargin
 
-  private def clusterReachCtes: String =
-    s"""$minhashCandCtes, edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM cand
-       |  UNION
-       |  SELECT doc_b, doc_a FROM cand
-       |), reach AS (
-       |  SELECT doc_id, doc_id AS reached FROM documents
-       |  UNION
-       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON e.src = r.reached
-       |)""".stripMargin
+  /** The candidate chain closed transitively, ending at `clusters`
+    * ([[OracleSql.componentsSql]]): [[dedupClustersSql]] reads it
+    * directly; [[splitLeakageSafeSql]] builds the cluster-keyed split on
+    * top.
+    */
+  private def clusterCtes: String =
+    s"$minhashCandCtes, ${OracleSql.componentsSql("documents", "cand")}"
 
+  /** Oracle: transitive closure over the same candidate edges. */
   val dedupClustersSql: String =
-    s"""WITH RECURSIVE $clusterReachCtes
-       |SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id""".stripMargin
+    s"""WITH RECURSIVE $clusterCtes
+       |SELECT doc_id, cluster FROM clusters""".stripMargin
 
   /** ANY-SIGNAL cross-modal cluster resolution: a document joins a
     * cluster when its TEXT is a minhash-LSH candidate dup OR its IMAGE
@@ -618,8 +608,9 @@ object DedupJobs {
       val text = new graft.ops.DedupPipeline(
           docs.select(col("doc_id"), col("text")), K, BANDS, JACCARD_N, scope)
         .candidates.select(col("doc_a"), col("doc_b"))
-      val img = MultimodalJobs.pipelineScoped(spark, docs, scope).pairs
-        .select(col("doc_a"), col("doc_b"))
+      val img = new MediaPipeline(docs, Media.Image,
+          MultimodalJobs.NEARDUP_MAX_HAMMING, scope)
+        .pairs.select(col("doc_a"), col("doc_b"))
       Handoff.cut(text.unionAll(img))
     }
     Dedup.connectedComponents(docs.select(col("doc_id")), edges)
@@ -633,20 +624,8 @@ object DedupJobs {
   lazy val crossModalClustersSql: String =
     s"""WITH RECURSIVE $minhashCandCtes, ipairs AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (${MultimodalJobs.oracles("image_neardup")}) iq
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM cand
-       |  UNION
-       |  SELECT doc_b, doc_a FROM cand
-       |  UNION
-       |  SELECT doc_a, doc_b FROM ipairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM ipairs
-       |), reach AS (
-       |  SELECT doc_id, doc_id AS reached FROM documents
-       |  UNION
-       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON e.src = r.reached
-       |)
-       |SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id""".stripMargin
+       |), ${OracleSql.componentsSql("documents", "cand", "ipairs")}
+       |SELECT doc_id, cluster FROM clusters""".stripMargin
 
   // ---- deterministic train/val/test split + decontamination ----
 
@@ -709,12 +688,10 @@ object DedupJobs {
     * sides; COUNT OVER stays BIGINT so no HUGEINT cast is needed).
     */
   val splitLeakageSafeSql: String =
-    s"""WITH RECURSIVE $clusterReachCtes, clust AS (
-       |  SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id
-       |), sized AS (
+    s"""WITH RECURSIVE $clusterCtes, sized AS (
        |  SELECT doc_id, cluster,
        |         COUNT(*) OVER (PARTITION BY cluster) AS cluster_size
-       |  FROM clust
+       |  FROM clusters
        |)
        |SELECT doc_id, cluster, cluster_size,
        |       ${splitSqlOf("cluster")} AS split,
@@ -1918,9 +1895,7 @@ object DedupJobs {
        |), fp AS (
        |  SELECT doc_id, CAST($fp AS BIGINT) AS f FROM sums
        |), cand AS MATERIALIZED (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.f, b.f)) <= $SIMHASH_EVAL_H
+       |${OracleSql.hammingPairsSql("fp", SIMHASH_EVAL_H)}
        |), truth AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM ($ngramJaccardSql) tq
        |), t AS (SELECT COUNT(*) AS n_truth FROM truth),

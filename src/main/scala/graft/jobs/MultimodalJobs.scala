@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.{CacheScope, Handoff, Multimodal}
+import graft.ops.{CacheScope, Dedup, Handoff, Media, MediaPipeline, Multimodal}
 
 /** Multimodal-pipeline queries. `multimodal_meta` (binary payload + typed
   * metadata extraction) is oracle-checked; the decode/feature path runs
@@ -177,45 +177,86 @@ object MultimodalJobs {
        |FROM s""".stripMargin
 
   private[graft] val NEARDUP_MAX_HAMMING = 3
-  /** Perceptual-hash image near-dup (the LAION-style image dedup step):
-    * REAL PNG payloads ([[Multimodal.neardupImageAssets]]) decode through
-    * `javax.imageio`, hash to a 63-bit dHash
-    * ([[Multimodal.dHash63]]), and pair up through banded Hamming LSH
-    * with identity compression ([[graft.ops.Dedup.hammingPairsAuto]],
-    * corpus-scaled band widths) — per-band int equi-joins on distinct
-    * fingerprints, never all-pairs.
-    * The oracle recomputes the pixels arithmetically (PNG is lossless),
-    * re-derives the dHash bit-for-bit, and takes ALL pairs within the
-    * Hamming radius — hash-equality therefore proves both the real
-    * decode path and the LSH's losslessness at this radius.
-    */
-  def imageNeardup(spark: SparkSession, sfDir: String): DataFrame =
-    pipeline(spark, sfDir).pairs
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
 
-  /** The shared decode→dHash pass the image gate queries are built on.
-    * Each isolated gate instantiates its own (driver contract); a
-    * library user holds ONE per corpus pass and reads pairs/clusters/
-    * curation off the same cached scan — see [[graft.ops.ImagePipeline]].
+  /** The modality's one decode pass over the documents corpus, its caches
+    * owned by `scope`.
     */
-  def pipeline(spark: SparkSession, sfDir: String): graft.ops.ImagePipeline =
-    graft.ops.ImagePipeline(spark, Tables.documents(spark, sfDir),
-      NEARDUP_MAX_HAMMING)
+  private def pipelineOf(m: Media, spark: SparkSession, sfDir: String,
+      scope: CacheScope): MediaPipeline =
+    new MediaPipeline(Tables.documents(spark, sfDir), m, NEARDUP_MAX_HAMMING,
+      scope)
 
-  /** [[pipeline]] with its internal caches registered to `scope` — for
-    * consumers (cross_modal_clusters) that extract one slim frame and
-    * release the decode/fingerprint caches before downstream work.
+  /** Perceptual near-dup pairs (doc_a, doc_b, hamming) — the LAION-style
+    * dedup step, for each modality off its [[MediaPipeline]]: REAL
+    * payloads (PNG through `javax.imageio`, WAV through
+    * `javax.sound.sampled`, RAWV byte-level parse) decode, fingerprint
+    * ([[Multimodal.dHash63]], [[Multimodal.audioFp63]], per-frame dHash),
+    * and pair up through banded Hamming LSH with identity compression
+    * ([[graft.ops.Dedup.hammingPairsAuto]], corpus-scaled band widths) —
+    * per-band int equi-joins on distinct fingerprints, never all-pairs.
+    * Video pairs need equal frame counts and every aligned frame within
+    * the radius; its `hamming` is the total across frames.
+    *
+    * The oracle recomputes the pixels/samples arithmetically (PNG and PCM
+    * are lossless), re-derives every fingerprint bit-for-bit, and takes
+    * ALL pairs within the radius — hash-equality therefore proves both the
+    * real decode path and the LSH's losslessness at this radius.
     */
-  def pipelineScoped(spark: SparkSession, docs: DataFrame,
-      scope: CacheScope): graft.ops.ImagePipeline =
-    graft.ops.ImagePipeline(spark, docs, NEARDUP_MAX_HAMMING, scope)
+  def neardup(m: Media)(spark: SparkSession, sfDir: String): DataFrame =
+    CacheScope.scoped { scope =>
+      Handoff.cut(pipelineOf(m, spark, sfDir, scope).pairs)
+    }
+
+  /** Cluster resolution — the step a media-dedup pipeline runs after
+    * candidate pairing, exactly as `dedup_clusters` does for text: every
+    * asset labelled with the minimum doc_id reachable through the near-dup
+    * pair graph ([[graft.ops.Dedup.connectedComponents]] — at this graph
+    * size the single-task union-find path). Singletons keep their own id.
+    */
+  def clusters(m: Media)(spark: SparkSession, sfDir: String): DataFrame = {
+    // Cluster resolution reads only the slim (doc_id) / (doc_a, doc_b)
+    // frames, so both are cut and every pipeline cache (decode scan,
+    // distinct-fingerprint frame) is released BEFORE the components pass
+    // runs — the cross_modal_clusters footprint playbook (the r14
+    // driver-memory gap; video's per-FRAME scan is the biggest win).
+    val (ids, edges) = CacheScope.scoped { scope =>
+      val p = pipelineOf(m, spark, sfDir, scope)
+      (Handoff.cut(p.anchors.select(col("doc_id"))),
+        Handoff.cut(p.pairs.select(col("doc_a"), col("doc_b"))))
+    }
+    Dedup.connectedComponents(ids, edges)
+  }
+
+  /** Composed curation pass — the multimodal analogue of
+    * `curation_pipeline`: ONE decode scan yields per-asset metadata
+    * (decoded, not declared — the codec stays in the loop) and the
+    * fingerprint; near-dup clusters resolve over the pairs; the keeper rule
+    * (minimum id per cluster) and per-cluster dup mass land on every row.
+    * Output: (asset_id, metadata..., cluster, is_keeper, cluster_size),
+    * metadata image (width, height, n_pixels), audio (n_samples), video
+    * (n_frames).
+    */
+  def curation(m: Media)(spark: SparkSession, sfDir: String): DataFrame =
+    CacheScope.scoped { scope =>
+      Handoff.cut(pipelineOf(m, spark, sfDir, scope).curation)
+    }
+
+  val imageNeardup: (SparkSession, String) => DataFrame = neardup(Media.Image)
+  val imageClusters: (SparkSession, String) => DataFrame = clusters(Media.Image)
+  val imageCuration: (SparkSession, String) => DataFrame = curation(Media.Image)
+  val audioNeardup: (SparkSession, String) => DataFrame = neardup(Media.Audio)
+  val audioClusters: (SparkSession, String) => DataFrame = clusters(Media.Audio)
+  val audioCuration: (SparkSession, String) => DataFrame = curation(Media.Audio)
+  val videoNeardup: (SparkSession, String) => DataFrame = neardup(Media.Video)
+  val videoClusters: (SparkSession, String) => DataFrame = clusters(Media.Video)
+  val videoCuration: (SparkSession, String) => DataFrame = curation(Media.Video)
 
   /** The dHash pipeline restated for the oracles: pixel mix (two
     * multiplicative steps mod 2^31−1 with xor-shifts between — every
     * intermediate < 2^47, BIGINT-exact), per-id perturbation,
     * floor-scaled 9×8 grid samples, 63-bit pack (SUM of shifted bits;
     * DuckDB SUM(BIGINT) is HUGEINT, hence the cast). Ends at `fp`
-    * (doc_id, f) — shared by the pair and cluster oracles.
+    * (doc_id, f); dims in `dim`.
     */
   private val imageFpCtes: String =
     s"""grid AS (
@@ -257,161 +298,11 @@ object MultimodalJobs {
        |  FROM cmp GROUP BY doc_id
        |)""".stripMargin
 
-  /** Brute-force all pairs within the Hamming radius over `fp`. */
-  val imageNeardupSql: String =
-    s"""WITH $imageFpCtes
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |       CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
-       |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING""".stripMargin
-
-  /** [[imageNeardupSql]] restricted to pairs touching the doc_id % 5 == 0
-    * delta — the oracle of `image_index_incremental`
-    * ([[ArtifactJobs.imageIndexIncremental]]): DuckDB recomputes every
-    * dHash in-line, so hash-equality proves the stored-index + delta-only
-    * decode path loses nothing vs re-decoding the corpus.
-    */
-  val imageNeardupDeltaSql: String =
-    s"""WITH $imageFpCtes
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |       CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
-       |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING
-       |  AND (a.doc_id % 5 = 0 OR b.doc_id % 5 = 0)""".stripMargin
-
-  /** [[imageNeardupSql]] rebuilt from the SURVIVING corpus — the oracle of
-    * `index_erasure` ([[ArtifactJobs.indexErasure]]): every dHash is a
-    * per-document function, so restricting the `fp` relation to
-    * doc_id % 29 <> 7 IS the relation the full fp CTEs produce over
-    * `documents WHERE doc_id % 29 <> 7` — DuckDB recomputes the surviving
-    * fingerprints in-line and hash-equality proves the purged persisted
-    * index serves exactly what a rebuild from survivors would.
-    */
-  val imageNeardupSurvivorsSql: String =
-    s"""WITH $imageFpCtes, sfp AS (
-       |  SELECT doc_id, f FROM fp WHERE doc_id % 29 <> 7
-       |)
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |       CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
-       |FROM sfp a JOIN sfp b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING""".stripMargin
-
-  /** Image cluster resolution — the step an image-dedup pipeline runs
-    * after candidate pairing, exactly as `dedup_clusters` does for text:
-    * every document labelled with the minimum doc_id reachable through
-    * the near-dup pair graph ([[graft.ops.Dedup.connectedComponents]] —
-    * at this graph size the single-task union-find path, behind an
-    * oracle gate). Singletons keep their own id.
-    */
-  def imageClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    // Cluster resolution reads only the slim (doc_id) / (doc_a, doc_b)
-    // frames, so both are materialized eagerly and every pipeline cache
-    // (decode scan, distinct-fingerprint frame) is released BEFORE the
-    // components pass runs — the cross_modal_clusters footprint playbook
-    // (holding the full decode cache through components was the r14
-    // driver-memory gap on this query).
-    val (ids, edges) = CacheScope.scoped { scope =>
-      val p = pipelineScoped(spark, Tables.documents(spark, sfDir), scope)
-      (Handoff.cut(p.scan.select(col("doc_id"))),
-        Handoff.cut(p.pairs.select(col("doc_a"), col("doc_b"))))
-    }
-    graft.ops.Dedup.connectedComponents(ids, edges)
-  }
-
-  /** Oracle: transitive closure by recursive CTE over the brute-force
-    * Hamming pairs; MIN(reached) is the same fixpoint every
-    * connectedComponents path lands on.
-    */
-  val imageClustersSql: String =
-    s"""WITH RECURSIVE $imageFpCtes, pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT doc_id, doc_id AS reached FROM documents
-       |  UNION
-       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON e.src = r.reached
-       |)
-       |SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id""".stripMargin
-
-  /** Composed image-curation pass — the multimodal analogue of
-    * `curation_pipeline`: ONE decode scan yields per-image metadata
-    * (decoded pixel count, not declared metadata — the codec stays in
-    * the loop) and the dHash fingerprint; near-dup clusters resolve over
-    * the banded Hamming pairs; the keeper rule (minimum id per cluster)
-    * and per-cluster dup mass land on every row. A LAION-style pipeline
-    * runs exactly this before training: decode-validate, near-dup
-    * collapse, keep-list accounting.
-    *
-    * Output: (asset_id, width, height, n_pixels, cluster, is_keeper,
-    * cluster_size).
-    */
-  def imageCuration(spark: SparkSession, sfDir: String): DataFrame =
-    pipeline(spark, sfDir).curation
-
-  /** Oracle: the shared fingerprint CTEs + transitive-closure clusters +
-    * size counts; width/height/n_pixels restated arithmetically (PNG is
-    * lossless, so the decoded buffer is exactly w·h bytes).
-    */
-  val imageCurationSql: String =
-    s"""WITH RECURSIVE $imageFpCtes, pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT doc_id, doc_id AS reached FROM documents
-       |  UNION
-       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON e.src = r.reached
-       |), clusters AS (
-       |  SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id
-       |), sizes AS (
-       |  SELECT cluster, COUNT(*) AS cluster_size FROM clusters GROUP BY 1
-       |)
-       |SELECT c.doc_id AS asset_id,
-       |       CAST(d.w AS BIGINT) AS width, CAST(d.h AS BIGINT) AS height,
-       |       CAST(d.w * d.h AS BIGINT) AS n_pixels,
-       |       c.cluster, c.doc_id = c.cluster AS is_keeper,
-       |       CAST(s.cluster_size AS BIGINT) AS cluster_size
-       |FROM clusters c
-       |JOIN dim d ON d.doc_id = c.doc_id
-       |JOIN sizes s ON s.cluster = c.cluster""".stripMargin
-
-  /** Acoustic-fingerprint audio near-dup — the audio sibling of
-    * [[imageNeardup]]: REAL WAV payloads
-    * ([[Multimodal.neardupAudioAssets]]) decode through
-    * `javax.sound.sampled`, hash to a 63-bit energy-difference
-    * fingerprint ([[Multimodal.audioFp63]]), and pair up through the SAME
-    * banded Hamming LSH ([[graft.ops.Dedup.hammingPairsAuto]] — unchanged;
-    * the fingerprint abstraction is the whole point). Oracle recomputes
-    * the samples arithmetically (PCM is lossless), re-derives the frame
-    * sums and sign bits, and brute-forces all pairs within the radius.
-    */
-  def audioNeardup(spark: SparkSession, sfDir: String): DataFrame =
-    audioPipeline(spark, sfDir).pairs
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-
-  /** The shared decode→fingerprint pass the audio gate queries build on
-    * ([[graft.ops.AudioPipeline]]) — one decode scan per corpus pass.
-    */
-  def audioPipeline(spark: SparkSession, sfDir: String,
-      scope: CacheScope = CacheScope.unmanaged)
-      : graft.ops.AudioPipeline =
-    graft.ops.AudioPipeline(spark, Tables.documents(spark, sfDir),
-      NEARDUP_MAX_HAMMING, scope)
-
   /** The audio fingerprint restated for the oracles: avalanche sample mix
     * (BIGINT-exact, every intermediate < 2^47), per-id perturbation,
     * floor-scaled frame assignment i·64 // n, integer frame-energy sums,
     * adjacent-comparison sign bits packed to 63 bits. Ends at `fp`
-    * (doc_id, f) — shared by the pair and cluster oracles.
+    * (doc_id, f); clip lengths in `dim`.
     */
   private val audioFpCtes: String =
     s"""dim AS (
@@ -443,128 +334,27 @@ object MultimodalJobs {
        |  GROUP BY a.doc_id
        |)""".stripMargin
 
-  /** Brute-force all pairs within the Hamming radius over the audio `fp`. */
-  val audioNeardupSql: String =
-    s"""WITH $audioFpCtes
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |       CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
-       |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING""".stripMargin
-
-  /** [[audioNeardupSql]] restricted to pairs touching the doc_id % 5 == 0
-    * delta — the oracle of `audio_index_incremental`
-    * ([[ArtifactJobs.audioIndexIncremental]]).
-    */
-  val audioNeardupDeltaSql: String =
-    s"""WITH $audioFpCtes
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |       CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
-       |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING
-       |  AND (a.doc_id % 5 = 0 OR b.doc_id % 5 = 0)""".stripMargin
-
-  /** Audio cluster resolution — component minimum over the near-dup pair
-    * graph, exactly as [[imageClusters]] ([[graft.ops.AudioPipeline]]
-    * reuses [[graft.ops.Dedup.connectedComponents]] unchanged).
-    */
-  def audioClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    // Slim handoff before components — see [[imageClusters]].
-    val (ids, edges) = CacheScope.scoped { scope =>
-      val p = audioPipeline(spark, sfDir, scope)
-      (Handoff.cut(p.scan.select(col("doc_id"))),
-        Handoff.cut(p.pairs.select(col("doc_a"), col("doc_b"))))
-    }
-    graft.ops.Dedup.connectedComponents(ids, edges)
-  }
-
-  val audioClustersSql: String =
-    s"""WITH RECURSIVE $audioFpCtes, pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT doc_id, doc_id AS reached FROM documents
-       |  UNION
-       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON e.src = r.reached
-       |)
-       |SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id""".stripMargin
-
-  /** Composed audio-curation pass off the one decode scan: decoded sample
-    * count (codec stays in the loop), cluster label, keeper rule, dup
-    * mass — (asset_id, n_samples, cluster, is_keeper, cluster_size).
-    */
-  def audioCuration(spark: SparkSession, sfDir: String): DataFrame =
-    audioPipeline(spark, sfDir).curation
-
-  val audioCurationSql: String =
-    s"""WITH RECURSIVE $audioFpCtes, pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.f, b.f)) <= $NEARDUP_MAX_HAMMING
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT doc_id, doc_id AS reached FROM documents
-       |  UNION
-       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON e.src = r.reached
-       |), clusters AS (
-       |  SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id
-       |), sizes AS (
-       |  SELECT cluster, COUNT(*) AS cluster_size FROM clusters GROUP BY 1
-       |)
-       |SELECT c.doc_id AS asset_id, CAST(d.n AS BIGINT) AS n_samples,
-       |       c.cluster, c.doc_id = c.cluster AS is_keeper,
-       |       CAST(s.cluster_size AS BIGINT) AS cluster_size
-       |FROM clusters c
-       |JOIN dim d ON d.doc_id = c.doc_id
-       |JOIN sizes s ON s.cluster = c.cluster""".stripMargin
-
-  /** Frame-aligned video near-dup pairs — the video sibling of
-    * [[imageNeardup]]/[[audioNeardup]] over the planted RAWV clips
-    * ([[graft.ops.Multimodal.videoPixel]]): per-frame dHash63 on the
-    * byte-level-parsed frames, frame-0-anchored banded candidate
-    * generation, full frame-sequence Hamming verification (every aligned
-    * frame within the radius, equal frame counts). Output
-    * (doc_a, doc_b, hamming) with `hamming` the total across frames.
-    */
-  def videoNeardup(spark: SparkSession, sfDir: String): DataFrame =
-    videoPipeline(spark, sfDir).pairs
-
-  /** The shared parse→per-frame-fingerprint pass the video gate queries
-    * build on ([[graft.ops.VideoPipeline]]).
-    */
-  def videoPipeline(spark: SparkSession, sfDir: String,
-      scope: CacheScope = CacheScope.unmanaged)
-      : graft.ops.VideoPipeline =
-    graft.ops.VideoPipeline(spark, Tables.documents(spark, sfDir),
-      NEARDUP_MAX_HAMMING, scope)
-
   /** The per-frame video fingerprint restated for the oracles: the
-    * [[audioFpCtes]]/[[imageFpCtes]] avalanche chain extended with the
-    * frame term (f·69491 in the mix, f·11 in the perturbation window) and
-    * the per-base frame count — (doc_id, f, fp) rows in `vfp`, dims in
-    * `vdim`. Frame indices come from a SELECT-level `unnest(range(...))`
-    * (DuckDB can't take lateral column parameters in FROM — CLAUDE.md r9).
+    * [[imageFpCtes]] avalanche chain extended with the frame term (f·69491
+    * in the mix, f·11 in the perturbation window) and the per-base frame
+    * count — (doc_id, f, fp) rows in `vfp`, dims in `dim`, and the
+    * brute-force frame-aligned pair aggregate in `vpairs`. Frame indices
+    * come from a SELECT-level `unnest(range(...))` (DuckDB can't take
+    * lateral column parameters in FROM — CLAUDE.md r9).
     */
   private val videoFpCtes: String =
     s"""grid AS (
        |  SELECT gr, gc FROM (SELECT unnest(range(0, 8)) AS gr),
        |                     (SELECT unnest(range(0, 8)) AS gc)
        |  WHERE NOT (gr = 7 AND gc = 7)
-       |), vdim AS (
+       |), dim AS (
        |  SELECT doc_id, doc_id // ${Multimodal.NeardupGroup} AS base,
        |         16 + (doc_id // ${Multimodal.NeardupGroup}) % 5 AS w,
        |         12 + (doc_id // ${Multimodal.NeardupGroup}) % 4 AS h,
        |         4 + (doc_id // ${Multimodal.NeardupGroup}) % 4 AS nf
        |  FROM documents
        |), vframes AS (
-       |  SELECT doc_id, base, w, h, nf, unnest(range(0, nf)) AS f FROM vdim
+       |  SELECT doc_id, base, w, h, nf, unnest(range(0, nf)) AS f FROM dim
        |), vsamples AS (
        |  SELECT doc_id, base, f, gr, gc, pos,
        |         CASE WHEN pos = 0 THEN gc * w // 9
@@ -600,93 +390,94 @@ object MultimodalJobs {
        |         MAX(bit_count(xor(a.fp, b.fp))) AS maxh,
        |         COUNT(*) AS n_aligned, da.nf AS nf
        |  FROM vfp a JOIN vfp b ON a.f = b.f AND a.doc_id < b.doc_id
-       |  JOIN vdim da ON da.doc_id = a.doc_id
-       |  JOIN vdim db ON db.doc_id = b.doc_id AND db.nf = da.nf
+       |  JOIN dim da ON da.doc_id = a.doc_id
+       |  JOIN dim db ON db.doc_id = b.doc_id AND db.nf = da.nf
        |  GROUP BY a.doc_id, b.doc_id, da.nf
        |)""".stripMargin
 
-  /** Brute-force frame-aligned pairs: equal frame counts, every aligned
-    * frame within the radius.
+  /** A modality's oracle: its fingerprint CTEs (with the metadata relation
+    * `dim`), the brute-force near-dup pair SELECT (doc_a, doc_b, hamming)
+    * over them, and its curation metadata columns read off `dim` d.
     */
-  val videoNeardupSql: String =
-    s"""WITH $videoFpCtes
-       |SELECT doc_a, doc_b, hamming FROM vpairs
-       |WHERE maxh <= $NEARDUP_MAX_HAMMING AND n_aligned = nf""".stripMargin
+  private final case class MediaSql(ctes: String, pairs: String, meta: String)
 
-  /** [[videoNeardupSql]] restricted to pairs touching the doc_id % 5 == 0
-    * delta — the oracle of `video_index_incremental`
-    * ([[ArtifactJobs.videoIndexIncremental]]): DuckDB recomputes every
-    * frame fingerprint in-line, so hash-equality proves the stored-index
-    * + delta-parse path loses nothing vs re-fingerprinting the corpus.
-    */
-  val videoNeardupDeltaSql: String =
-    s"""WITH $videoFpCtes
-       |SELECT doc_a, doc_b, hamming FROM vpairs
-       |WHERE maxh <= $NEARDUP_MAX_HAMMING AND n_aligned = nf
-       |  AND (doc_a % 5 = 0 OR doc_b % 5 = 0)""".stripMargin
-
-  /** Video cluster resolution — component minimum over the near-dup pair
-    * graph, exactly as [[imageClusters]]/[[audioClusters]].
-    */
-  def videoClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    // Slim handoff before components — see [[imageClusters]]. The video
-    // scan cache is per-FRAME rows (an order more than images), so
-    // releasing it before the components pass is the biggest footprint
-    // win of the three modalities (the r14 3.7x driver/local flag).
-    val (ids, edges) = CacheScope.scoped { scope =>
-      val p = videoPipeline(spark, sfDir, scope)
-      (Handoff.cut(p.anchors.select(col("doc_id"))),
-        Handoff.cut(p.pairs.select(col("doc_a"), col("doc_b"))))
-    }
-    graft.ops.Dedup.connectedComponents(ids, edges)
+  private def mediaSql(m: Media): MediaSql = m match {
+    case Media.Image => MediaSql(imageFpCtes,
+      OracleSql.hammingPairsSql("fp", NEARDUP_MAX_HAMMING),
+      "CAST(d.w AS BIGINT) AS width, CAST(d.h AS BIGINT) AS height,\n" +
+        "       CAST(d.w * d.h AS BIGINT) AS n_pixels")
+    case Media.Audio => MediaSql(audioFpCtes,
+      OracleSql.hammingPairsSql("fp", NEARDUP_MAX_HAMMING),
+      "CAST(d.n AS BIGINT) AS n_samples")
+    // equal frame counts, every aligned frame within the radius
+    case Media.Video => MediaSql(videoFpCtes,
+      s"""SELECT doc_a, doc_b, hamming FROM vpairs
+         |WHERE maxh <= $NEARDUP_MAX_HAMMING AND n_aligned = nf""".stripMargin,
+      "CAST(d.nf AS BIGINT) AS n_frames")
   }
 
-  val videoClustersSql: String =
-    s"""WITH RECURSIVE $videoFpCtes, pairs AS (
-       |  SELECT doc_a, doc_b FROM vpairs
-       |  WHERE maxh <= $NEARDUP_MAX_HAMMING AND n_aligned = nf
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT doc_id, doc_id AS reached FROM documents
-       |  UNION
-       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON e.src = r.reached
-       |)
-       |SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id""".stripMargin
+  /** [[neardup]]'s oracle: every pair within the radius, brute force. */
+  def neardupSql(m: Media): String = {
+    val o = mediaSql(m)
+    s"WITH ${o.ctes}\n${o.pairs}"
+  }
 
-  /** Composed video-curation pass off the one parse scan: parsed frame
-    * count (container round-trip stays in the loop), cluster label,
-    * keeper rule, dup mass — (asset_id, n_frames, cluster, is_keeper,
-    * cluster_size).
+  /** [[neardupSql]] restricted to pairs touching the doc_id % 5 == 0
+    * delta — the oracle of `<modality>_index_incremental`
+    * ([[ArtifactJobs.indexIncremental]]): DuckDB recomputes every
+    * fingerprint in-line, so hash-equality proves the stored-index +
+    * delta-only decode path loses nothing vs re-decoding the corpus.
     */
-  def videoCuration(spark: SparkSession, sfDir: String): DataFrame =
-    videoPipeline(spark, sfDir).curation
+  def neardupDeltaSql(m: Media): String = {
+    val o = mediaSql(m)
+    s"""WITH ${o.ctes}, pairs AS (
+       |${o.pairs}
+       |)
+       |SELECT doc_a, doc_b, hamming FROM pairs
+       |WHERE doc_a % 5 = 0 OR doc_b % 5 = 0""".stripMargin
+  }
 
-  val videoCurationSql: String =
-    s"""WITH RECURSIVE $videoFpCtes, pairs AS (
-       |  SELECT doc_a, doc_b FROM vpairs
-       |  WHERE maxh <= $NEARDUP_MAX_HAMMING AND n_aligned = nf
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT doc_id, doc_id AS reached FROM documents
-       |  UNION
-       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON e.src = r.reached
-       |), clusters AS (
-       |  SELECT doc_id, MIN(reached) AS cluster FROM reach GROUP BY doc_id
-       |), sizes AS (
+  /** The pair CTEs plus the transitive closure ending at `clusters`. */
+  private def clusterCtes(m: Media): String = {
+    val o = mediaSql(m)
+    s"""${o.ctes}, pairs AS (
+       |${o.pairs}
+       |), ${OracleSql.componentsSql("documents", "pairs")}""".stripMargin
+  }
+
+  /** [[clusters]]' oracle: the closure over the brute-force pairs. */
+  def clustersSql(m: Media): String =
+    s"""WITH RECURSIVE ${clusterCtes(m)}
+       |SELECT doc_id, cluster FROM clusters""".stripMargin
+
+  /** [[curation]]'s oracle: the closure clusters + size counts; the
+    * metadata restated arithmetically (PNG, PCM and RAWV are lossless, so
+    * the decoded sizes are the planted ones).
+    */
+  def curationSql(m: Media): String =
+    s"""WITH RECURSIVE ${clusterCtes(m)}, sizes AS (
        |  SELECT cluster, COUNT(*) AS cluster_size FROM clusters GROUP BY 1
        |)
-       |SELECT c.doc_id AS asset_id, CAST(d.nf AS BIGINT) AS n_frames,
+       |SELECT c.doc_id AS asset_id, ${mediaSql(m).meta},
        |       c.cluster, c.doc_id = c.cluster AS is_keeper,
        |       CAST(s.cluster_size AS BIGINT) AS cluster_size
        |FROM clusters c
-       |JOIN vdim d ON d.doc_id = c.doc_id
+       |JOIN dim d ON d.doc_id = c.doc_id
        |JOIN sizes s ON s.cluster = c.cluster""".stripMargin
+
+  /** The image [[neardupSql]] rebuilt from the SURVIVING corpus — the
+    * oracle of `index_erasure` ([[ArtifactJobs.indexErasure]]): every dHash
+    * is a per-document function, so restricting the `fp` relation to
+    * doc_id % 29 <> 7 IS the relation the full fp CTEs produce over
+    * `documents WHERE doc_id % 29 <> 7` — DuckDB recomputes the surviving
+    * fingerprints in-line and hash-equality proves the purged persisted
+    * index serves exactly what a rebuild from survivors would.
+    */
+  val imageNeardupSurvivorsSql: String =
+    s"""WITH $imageFpCtes, sfp AS (
+       |  SELECT doc_id, f FROM fp WHERE doc_id % 29 <> 7
+       |)
+       |${OracleSql.hammingPairsSql("sfp", NEARDUP_MAX_HAMMING)}""".stripMargin
 
   /** Cross-modal thumbnail-to-video linking: every (image, video) pair
     * whose image dHash is within the Hamming radius of the video's ANCHOR
@@ -700,25 +491,25 @@ object MultimodalJobs {
     * same [[graft.ops.Dedup.hammingPairsAuto]] machinery by tagging the
     * two sides with id parity (image 2i, video 2j+1) and keeping only
     * cross-parity pairs — every (i, j) combination surfaces exactly once
-    * (as the unordered union-id pair {2i, 2j+1}), identity compression
-    * and the measured band plan carry over unchanged, and no new join
-    * core is needed. Output (image_id, video_id, hamming), both
-    * directions, self-matches included.
+    * (as the unordered union-id pair {2i, 2j+1}), and identity compression
+    * and the measured band plan carry over unchanged. Output (image_id,
+    * video_id, hamming), both directions, self-matches included.
     */
   def thumbnailMatch(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val img = Multimodal.imageFingerprints(spark, docs)
       .select((col("doc_id") * 2).as("doc_id"), col("fp"))
-    val vid = Multimodal.videoScan(spark, docs)
-      .filter(col("frame_idx") === 0)
+    val vid = Media.Video.anchors(Multimodal.videoScan(spark, docs))
       .select((col("doc_id") * 2 + 1).as("doc_id"), col("fp"))
-    graft.ops.Dedup.hammingPairsAuto(img.unionByName(vid),
-        NEARDUP_MAX_HAMMING)
-      .filter(col("doc_a") % 2 =!= col("doc_b") % 2)
-      .select(
-        expr("if(doc_a % 2 = 0, doc_a, doc_b) div 2").as("image_id"),
-        expr("if(doc_a % 2 = 0, doc_b, doc_a) div 2").as("video_id"),
-        col("hamming"))
+    CacheScope.scoped { scope =>
+      Handoff.cut(Dedup.hammingPairsAuto(img.unionByName(vid),
+          NEARDUP_MAX_HAMMING, scope)
+        .filter(col("doc_a") % 2 =!= col("doc_b") % 2)
+        .select(
+          expr("if(doc_a % 2 = 0, doc_a, doc_b) div 2").as("image_id"),
+          expr("if(doc_a % 2 = 0, doc_b, doc_a) div 2").as("video_id"),
+          col("hamming")))
+    }
   }
 
   /** Oracle: the image fingerprint at f = 0 of the shared arithmetic
@@ -745,7 +536,7 @@ object MultimodalJobs {
     * re-derive.
     *
     * Scale shape: one decoded-image pass (the `image_curation` lineage,
-    * shared via [[graft.ops.ImagePipeline]]) + one text scan, joined on
+    * shared via [[graft.ops.MediaPipeline]]) + one text scan, joined on
     * the int doc key — the caption side never touches pixels and the
     * image side never parses text.
     */
@@ -768,7 +559,7 @@ object MultimodalJobs {
     * quality expression, same join and keep rule.
     */
   val multimodalPairsSql: String =
-    s"""WITH cur AS ($imageCurationSql
+    s"""WITH cur AS (${curationSql(Media.Image)}
        |), q AS (
        |  SELECT doc_id,
        |         CAST(ROUND(ROUND(
@@ -803,14 +594,14 @@ object MultimodalJobs {
     "multimodal_meta" -> multimodalMetaSql,
     "multimodal_features" -> multimodalFeaturesSql,
     "multimodal_resize" -> multimodalResizeSql,
-    "image_neardup" -> imageNeardupSql,
-    "image_clusters" -> imageClustersSql,
-    "image_curation" -> imageCurationSql,
-    "audio_neardup" -> audioNeardupSql,
-    "audio_clusters" -> audioClustersSql,
-    "audio_curation" -> audioCurationSql,
-    "video_neardup" -> videoNeardupSql,
-    "video_clusters" -> videoClustersSql,
-    "video_curation" -> videoCurationSql,
+    "image_neardup" -> neardupSql(Media.Image),
+    "image_clusters" -> clustersSql(Media.Image),
+    "image_curation" -> curationSql(Media.Image),
+    "audio_neardup" -> neardupSql(Media.Audio),
+    "audio_clusters" -> clustersSql(Media.Audio),
+    "audio_curation" -> curationSql(Media.Audio),
+    "video_neardup" -> neardupSql(Media.Video),
+    "video_clusters" -> clustersSql(Media.Video),
+    "video_curation" -> curationSql(Media.Video),
     "thumbnail_match" -> thumbnailMatchSql)
 }

@@ -731,13 +731,54 @@ object Dedup {
       return hammingCore(fpc, disjoint, maxHamming)
     val distinctFp = scope.cache(fpc.select(col("fp")).distinct())
     val f = distinctFp.count()
-    val exactC1 = distinctFp
-      .select(posexplode(array(disjoint.map(b =>
-        superBandVal(col("fp"), b)): _*)).as(Seq("b", "bv")))
+    hammingCore(fpc,
+      bandPlanMeasured(f, exactC1(distinctFp, disjoint), maxHamming, bits),
+      maxHamming, Some(distinctFp))
+  }
+
+  /** The EXACT accidental-candidate mass of band plan `bands` over a
+    * distinct (fp) frame: Σ over (band, value) of C(cnt, 2), the number
+    * of fingerprint pairs the banded join would test. One job.
+    */
+  private[graft] def exactC1(distinctFp: DataFrame,
+      bands: Seq[Seq[(Int, Int)]]): Long =
+    distinctFp.select(bandExplode(col("fp"), bands))
       .groupBy(col("b"), col("bv")).count()
       .agg(sum(expr("count * (count - 1) div 2"))).first().getLong(0)
-    hammingCore(fpc, bandPlanMeasured(f, exactC1, maxHamming, bits),
-      maxHamming, Some(distinctFp))
+
+  /** One row per band of fingerprint `fp`: (b, bv), b the band's index in
+    * `bands` and bv its [[superBandVal]].
+    */
+  private def bandExplode(fp: Column, bands: Seq[Seq[(Int, Int)]]): Column =
+    posexplode(array(bands.map(b => superBandVal(fp, b)): _*)).as(Seq("b", "bv"))
+
+  /** The FIRST-shared-band predicate: a candidate joined on band `b`
+    * survives only if every band before `b` differs between fingerprints
+    * `x` and `y` — in-row, so each pair materializes exactly once.
+    */
+  private def firstSharedBand(bands: Seq[Seq[(Int, Int)]], b: Column,
+      x: Column, y: Column): Column =
+    bands.zipWithIndex.map { case (bd, j) =>
+      (lit(j) >= b) || (superBandVal(x, bd) =!= superBandVal(y, bd))
+    }.reduce(_ && _)
+
+  /** The bipartite banded join: every (probe row, build row) pair whose
+    * fingerprint columns `probeFp` / `buildFp` share at least one band of
+    * `bands`, each pair exactly once (the [[hammingCore]] predicate). The
+    * output keeps both sides' columns, which must not clash; the caller
+    * applies its own Hamming bound or verify. Lossless for pairs within
+    * maxHamming whenever `bands` is a pigeonhole plan for it
+    * ([[bandPlan]]). No identity compression: each side joins row by row,
+    * so the probe may be a stream and the build a landed index.
+    */
+  private[graft] def bandedProbe(probe: DataFrame, probeFp: String,
+      build: DataFrame, buildFp: String,
+      bands: Seq[Seq[(Int, Int)]]): DataFrame = {
+    def banded(side: DataFrame, fp: String) =
+      side.select(col("*"), bandExplode(col(fp), bands))
+    banded(probe, probeFp).join(banded(build, buildFp), Seq("b", "bv"))
+      .filter(firstSharedBand(bands, col("b"), col(probeFp), col(buildFp)))
+      .drop("b", "bv")
   }
 
   /** The banded-join core over an arbitrary super-band plan (each band a
@@ -765,17 +806,11 @@ object Dedup {
       s"pigeonhole needs more bands (${bands.size}) than maxHamming=$maxHamming")
     val distinctFp =
       sharedDistinct.getOrElse(fpc.select(col("fp")).distinct())
-    val bandRows = distinctFp.select(col("fp"),
-      posexplode(array(bands.map(b => superBandVal(col("fp"), b)): _*))
-        .as(Seq("b", "bv")))
-    val earlierBandsDiffer = bands.zipWithIndex.map { case (bd, j) =>
-      (lit(j) >= col("x.b")) ||
-        (superBandVal(col("x.fp"), bd) =!= superBandVal(col("y.fp"), bd))
-    }.reduce(_ && _)
+    val bandRows = distinctFp.select(col("fp"), bandExplode(col("fp"), bands))
     val fpPairs = bandRows.alias("x").join(bandRows.alias("y"),
         col("x.b") === col("y.b") && col("x.bv") === col("y.bv") &&
           col("x.fp") < col("y.fp"))
-      .filter(earlierBandsDiffer)
+      .filter(firstSharedBand(bands, col("x.b"), col("x.fp"), col("y.fp")))
       .select(col("x.fp").as("fp_a"), col("y.fp").as("fp_b"),
         bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).cast("long")
           .as("hamming"))

@@ -331,13 +331,19 @@ object Multimodal {
     fp
   }
 
-  /** (doc_id, fp): decode the real PNG payloads, dHash the pixels. */
-  def imageFingerprints(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    neardupImageAssets(spark, docs).mapPartitions { it =>
-      it.map(a => (a.asset_id, dHash63(decode(a), a.width, a.height)))
-    }.toDF("doc_id", "fp")
+  /** THE image fingerprint — the one payload → fingerprint function the
+    * batch scan, the stream screen and the index refresher all call:
+    * decode the PNG (declared dims `a.width`×`a.height`), dHash the
+    * pixels. Returns (decoded pixel count, fp).
+    */
+  def imageFingerprint(a: Asset): (Long, Long) = {
+    val px = decode(a)
+    (px.length.toLong, dHash63(px, a.width, a.height))
   }
+
+  /** (doc_id, fp): [[imageScan]]'s fingerprint column. */
+  def imageFingerprints(spark: SparkSession, docs: DataFrame): DataFrame =
+    imageScan(spark, docs).select(col("doc_id"), col("fp"))
 
   /** (doc_id, width, height, n_pixels, fp) in ONE decode pass — the
     * curation composition's scan: n_pixels is the DECODED buffer length
@@ -348,9 +354,8 @@ object Multimodal {
     import spark.implicits._
     neardupImageAssets(spark, docs).mapPartitions { it =>
       it.map { a =>
-        val px = decode(a)
-        (a.asset_id, a.width.toLong, a.height.toLong, px.length.toLong,
-          dHash63(px, a.width, a.height))
+        val (n, fp) = imageFingerprint(a)
+        (a.asset_id, a.width.toLong, a.height.toLong, n, fp)
       }
     }.toDF("doc_id", "width", "height", "n_pixels", "fp")
   }
@@ -430,6 +435,15 @@ object Multimodal {
     fp
   }
 
+  /** THE audio fingerprint (the [[imageFingerprint]] of clips): decode
+    * the WAV, energy-difference hash the samples. Returns (decoded sample
+    * count, fp).
+    */
+  def audioFingerprint(a: Asset): (Long, Long) = {
+    val samples = decode(a)
+    (samples.length.toLong, audioFp63(samples))
+  }
+
   /** (doc_id, n_samples, fp) in ONE decode pass — the audio sibling of
     * [[imageScan]]: n_samples is the DECODED sample count, so the hash
     * gate re-verifies the WAV codec round-trip alongside the fingerprint.
@@ -438,8 +452,8 @@ object Multimodal {
     import spark.implicits._
     neardupAudioAssets(spark, docs).mapPartitions { it =>
       it.map { a =>
-        val px = decode(a)
-        (a.asset_id, px.length.toLong, audioFp63(px))
+        val (n, fp) = audioFingerprint(a)
+        (a.asset_id, n, fp)
       }
     }.toDF("doc_id", "n_samples", "fp")
   }
@@ -548,13 +562,21 @@ object Multimodal {
     import spark.implicits._
     neardupVideoAssets(spark, docs).mapPartitions { it =>
       it.flatMap { a =>
-        val (w, h, nf, px) = decodeRawv(a.content)
-        (0 until nf).map { f =>
-          val frame = java.util.Arrays.copyOfRange(px, f * w * h, (f + 1) * w * h)
-          (a.asset_id, nf.toLong, f.toLong, dHash63(frame, w, h))
-        }
+        val fps = videoFingerprints(a.content)
+        fps.indices.map(f => (a.asset_id, fps.length.toLong, f.toLong, fps(f)))
       }
     }.toDF("doc_id", "n_frames", "frame_idx", "fp")
+  }
+
+  /** THE video fingerprint (the [[imageFingerprint]] of clips): parse the
+    * RAWV payload, dHash every frame. The sequence, frame 0 first; its
+    * length is the parsed frame count.
+    */
+  def videoFingerprints(rawv: Array[Byte]): Array[Long] = {
+    val (w, h, nf, px) = decodeRawv(rawv)
+    Array.tabulate(nf) { f =>
+      dHash63(java.util.Arrays.copyOfRange(px, f * w * h, (f + 1) * w * h), w, h)
+    }
   }
 
   /** Deterministic frame sampling: every ceil(n/target)-th frame index. */

@@ -2,122 +2,81 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Multimodal}
+import graft.ops.{Dedup, Media}
 
-/** Streaming perceptual-dedup screen — the IMAGE sibling of
+/** Streaming perceptual-dedup screens — the media siblings of
   * [[StreamingDedup.screenAgainstCorpus]] (text minhash) and
   * [[StreamingSimilarity.adcScreenFromIndex]] (embeddings), completing
-  * the in-flight ingest story for the third modality: each ARRIVING
-  * image is decoded and dHashed in-flight, then Hamming-banded against
-  * the PERSISTED corpus fingerprint table, so a near-duplicate of an
-  * image already in the corpus is flagged at ingest.
+  * the in-flight ingest story for images, audio and video: each ARRIVING
+  * asset is decoded and fingerprinted in-flight by its modality's one
+  * payload → fingerprint function ([[Media.fingerprint]], the function
+  * the batch scan calls), then Hamming-banded against the PERSISTED
+  * corpus fingerprint table, so a near-duplicate of an asset already in
+  * the corpus is flagged at ingest.
   *
-  * Scale shape: decode + dHash is a stateless typed `mapPartitions` over
-  * the stream (the batch [[Multimodal.extractFeatures]] discipline —
-  * payloads never shuffle; per-arrival cost is one codec decode + a
-  * 63-sample grid walk). The candidate join is a stream-static equi-join
-  * on the (band, band-value) int pair against the banded corpus
-  * fingerprints — 4 rows per corpus image, never stream × corpus — with
-  * the same in-row FIRST-SHARED-BAND rule as the batch
-  * [[Dedup.hammingPairs]], so each (arrival, corpus) candidate
-  * materializes exactly once and the whole query is append-mode
-  * stateless (no aggregation, no dedup state).
+  * Scale shape: decode + fingerprint is a stateless per-row stage over
+  * the stream (payloads never shuffle). The candidate join is the
+  * bipartite banded join ([[Dedup.bandedProbe]]): a stream-static
+  * equi-join on the (band, band-value) int pair against the banded corpus
+  * fingerprints — 4 rows per corpus asset, never stream × corpus — with
+  * the batch [[Dedup.hammingPairs]] FIRST-SHARED-BAND rule, so each
+  * (arrival, corpus) candidate materializes exactly once and the whole
+  * query is append-mode stateless (no aggregation, no dedup state).
   */
 object StreamingMultimodal {
 
-  /** The static side of the screen: the persisted (doc_id, fp)
-    * fingerprint table exploded to its 4 band rows
-    * (b, bv, corpus_fp, corpus_id). In production this is yesterday's
-    * landed index; re-planned per micro-batch like any stream-static
-    * join side.
+  /** Screen a watermarked stream of IMAGE or AUDIO assets against the
+    * corpus (doc_id, fp) fingerprints. Input needs (asset_id, content,
+    * `tsCol`), plus width and height for images (the PNG's declared
+    * dims); emits (asset_id, ts, corpus_id, hamming) for every corpus
+    * asset within `maxHamming` of the arrival (self-id matches excluded —
+    * re-ingesting the same id is not a dup of the corpus). Non-colliding
+    * arrivals pass silently. Video screens whole frame sequences:
+    * [[screenVideo]].
     */
-  def bandedCorpus(fp: DataFrame, bands: Seq[(Int, Int)]): DataFrame =
-    fp.select(col("fp").as("corpus_fp"), col("doc_id").as("corpus_id"))
-      .select(col("corpus_fp"), col("corpus_id"),
-        posexplode(array(bands.map(b => Dedup.bandVal(col("corpus_fp"), b)): _*))
-          .as(Seq("b", "bv")))
-
-  /** Screen a watermarked image-asset stream against the corpus
-    * fingerprints. Input needs (asset_id, content: binary PNG, width,
-    * height, `tsCol`); emits (asset_id, ts, corpus_id, hamming) for
-    * every corpus image within `maxHamming` of the arrival (self-id
-    * matches excluded — re-ingesting the same id is not a dup of the
-    * corpus). Non-colliding arrivals pass silently.
-    */
-  def screenImages(
+  def screen(
       stream: DataFrame, tsCol: String, delay: String,
-      corpusFp: DataFrame, bands: Seq[(Int, Int)], maxHamming: Int): DataFrame = {
+      corpusFp: DataFrame, bands: Seq[(Int, Int)], maxHamming: Int,
+      media: Media): DataFrame = {
+    require(media != Media.Video, "video screens frame sequences: screenVideo")
     require(bands.size > maxHamming,
       s"pigeonhole needs more bands (${bands.size}) than maxHamming=$maxHamming")
-    val spark = stream.sparkSession
-    import spark.implicits._
-    val fps = stream
-      .withWatermark(tsCol, delay)
-      .select(col("asset_id"), col("content"), col("width"), col("height"),
-        col(tsCol).as("ts"))
-      .as[(Long, Array[Byte], Int, Int, java.sql.Timestamp)]
-      .mapPartitions { it =>
-        it.map { case (id, png, w, h, ts) =>
-          val px = Multimodal.decode(
-            Multimodal.Asset(id, png, "image", w, h, 1))
-          (id, Multimodal.dHash63(px, w, h), ts)
-        }
-      }.toDF("asset_id", "fp", "ts")
-    val arrBands = fps.select(col("asset_id"), col("fp"), col("ts"),
-      posexplode(array(bands.map(b => Dedup.bandVal(col("fp"), b)): _*))
-        .as(Seq("b", "bv")))
-    // first-shared-band: candidates joined on band b survive only if
-    // every band BEFORE b differs — computable in-row from the two
-    // fingerprints, so each pair materializes exactly once
-    val earlierBandsDiffer = bands.zipWithIndex.map { case (bd, j) =>
-      (lit(j) >= col("b")) ||
-        (Dedup.bandVal(col("fp"), bd) =!= Dedup.bandVal(col("corpus_fp"), bd))
-    }.reduce(_ && _)
-    arrBands.join(bandedCorpus(corpusFp, bands), Seq("b", "bv"))
+    val arrivals = stream.withWatermark(tsCol, delay)
+      .select(col("asset_id"), media.fingerprint.as("fp"), col(tsCol).as("ts"))
+    val corpus =
+      corpusFp.select(col("fp").as("corpus_fp"), col("doc_id").as("corpus_id"))
+    Dedup.bandedProbe(arrivals, "fp", corpus, "corpus_fp", bands.map(Seq(_)))
       .filter(col("asset_id") =!= col("corpus_id"))
-      .filter(earlierBandsDiffer)
       .select(col("asset_id"), col("ts"), col("corpus_id"),
         bit_count(col("fp").bitwiseXOR(col("corpus_fp"))).cast("long")
           .as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Delta refresh of the persisted image fingerprint index — the
-    * multimodal sibling of
-    * [[StreamingSimilarity.indexRefreshBatches]], closing the freshness
-    * gap [[screenImages]] alone leaves open (it screens against a STATIC
-    * landed table): a foreachBatch handler that decodes + dHashes each
-    * micro-batch of arriving image assets with the SAME in-flight
-    * expressions the screen evaluates (one codec decode + one 63-sample
-    * grid walk per arrival — and the same arithmetic as the batch
-    * [[Multimodal.imageFingerprints]], so an appended row is bit-equal
-    * to a full re-fingerprint's row) and APPENDS the (doc_id, fp) rows
-    * to the index table at `indexPath`. The fingerprint is a pure
-    * function of the payload and appends are additive, so after any
-    * prefix of micro-batches the table equals a batch re-fingerprint
+  /** Delta refresh of a persisted fingerprint index — the multimodal
+    * sibling of [[StreamingSimilarity.indexRefreshBatches]], closing the
+    * freshness gap a screen alone leaves open (it screens against a
+    * STATIC landed table): a foreachBatch handler that fingerprints each
+    * micro-batch of arriving assets with the screen's own in-flight
+    * function ([[Media.indexArrivals]], so an appended row is bit-equal to
+    * a batch re-fingerprint's row) and APPENDS the rows to the index table
+    * at `indexPath`: (doc_id, fp) for images and audio, (doc_id, n_frames,
+    * frame_idx, fp) per frame for video (the `video_fp_index` artifact
+    * shape, [[graft.jobs.ArtifactJobs.indexIncremental]]). The fingerprint
+    * is a pure function of the payload and appends are additive, so after
+    * any prefix of micro-batches the table equals a batch re-fingerprint
     * over corpus ∪ prefix (the spec's contract) — and the NEXT
     * micro-batch's screen flags near-dups of THIS batch's arrivals, not
-    * just of yesterday's corpus.
+    * just of yesterday's corpus ([[videoCorpusSeqs]] for video).
     *
     * Scale: per batch the cost is batch-sized (narrow decode, one
     * appended parquet file); the index is never rewritten or re-scanned.
-    * Batch input needs (asset_id, content: binary PNG, width, height).
+    * Batch input needs the screen's asset columns (no timestamp).
     */
-  def imageIndexRefreshBatches(indexPath: String): (DataFrame, Long) => Unit =
+  def indexRefreshBatches(indexPath: String,
+      media: Media): (DataFrame, Long) => Unit =
     (batch, _) => if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      import spark.implicits._
-      batch
-        .select(col("asset_id"), col("content"), col("width"), col("height"))
-        .as[(Long, Array[Byte], Int, Int)]
-        .mapPartitions { it =>
-          it.map { case (id, png, w, h) =>
-            val px = Multimodal.decode(
-              Multimodal.Asset(id, png, "image", w, h, 1))
-            (id, Multimodal.dHash63(px, w, h))
-          }
-        }.toDF("doc_id", "fp")
-        .write.mode("append").parquet(indexPath)
+      media.indexArrivals(batch).write.mode("append").parquet(indexPath)
     }
 
   /** STREAMING ERASURE of a served fingerprint index — the RTBF path
@@ -153,113 +112,11 @@ object StreamingMultimodal {
       Seq("doc_id"), "left_anti")
   }
 
-  /** The AUDIO sibling of [[screenImages]]: each arriving clip is decoded
-    * (`javax.sound`) and fingerprinted ([[Multimodal.audioFp63]])
-    * in-flight, then Hamming-banded against the persisted corpus
-    * fingerprint table — identical join machinery, different decode +
-    * hash, which is the point of the fingerprint abstraction. Input needs
-    * (asset_id, content: binary WAV, `tsCol`); output shape and the
-    * first-shared-band multiplicity-1 contract as in [[screenImages]].
-    */
-  def screenAudio(
-      stream: DataFrame, tsCol: String, delay: String,
-      corpusFp: DataFrame, bands: Seq[(Int, Int)], maxHamming: Int): DataFrame = {
-    require(bands.size > maxHamming,
-      s"pigeonhole needs more bands (${bands.size}) than maxHamming=$maxHamming")
-    val spark = stream.sparkSession
-    import spark.implicits._
-    val fps = stream
-      .withWatermark(tsCol, delay)
-      .select(col("asset_id"), col("content"), col(tsCol).as("ts"))
-      .as[(Long, Array[Byte], java.sql.Timestamp)]
-      .mapPartitions { it =>
-        it.map { case (id, wav, ts) =>
-          val samples = Multimodal.decode(
-            Multimodal.Asset(id, wav, "audio", 0, 0, 1))
-          (id, Multimodal.audioFp63(samples), ts)
-        }
-      }.toDF("asset_id", "fp", "ts")
-    val arrBands = fps.select(col("asset_id"), col("fp"), col("ts"),
-      posexplode(array(bands.map(b => Dedup.bandVal(col("fp"), b)): _*))
-        .as(Seq("b", "bv")))
-    val earlierBandsDiffer = bands.zipWithIndex.map { case (bd, j) =>
-      (lit(j) >= col("b")) ||
-        (Dedup.bandVal(col("fp"), bd) =!= Dedup.bandVal(col("corpus_fp"), bd))
-    }.reduce(_ && _)
-    arrBands.join(bandedCorpus(corpusFp, bands), Seq("b", "bv"))
-      .filter(col("asset_id") =!= col("corpus_id"))
-      .filter(earlierBandsDiffer)
-      .select(col("asset_id"), col("ts"), col("corpus_id"),
-        bit_count(col("fp").bitwiseXOR(col("corpus_fp"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** The AUDIO sibling of [[imageIndexRefreshBatches]]: arriving clips
-    * are decoded (`javax.sound`) and fingerprinted
-    * ([[Multimodal.audioFp63]]) with [[screenAudio]]'s own in-flight
-    * expressions — bit-equal to the batch [[Multimodal.audioScan]]'s
-    * fp column — and appended to the landed
-    * (doc_id, fp) index. Same rebuild-equivalence invariant, same
-    * batch-sized per-micro-batch cost. Batch input needs (asset_id,
-    * content: binary WAV).
-    */
-  def audioIndexRefreshBatches(indexPath: String): (DataFrame, Long) => Unit =
-    (batch, _) => if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      import spark.implicits._
-      batch.select(col("asset_id"), col("content"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, wav) =>
-            val samples = Multimodal.decode(
-              Multimodal.Asset(id, wav, "audio", 0, 0, 1))
-            (id, Multimodal.audioFp63(samples))
-          }
-        }.toDF("doc_id", "fp")
-        .write.mode("append").parquet(indexPath)
-    }
-
-  /** The VIDEO sibling of [[imageIndexRefreshBatches]] — the last cell of
-    * the modality × streaming-refresh matrix: each arriving RAWV clip is
-    * byte-level parsed and per-frame dHashed with [[screenVideo]]'s own
-    * in-flight expressions — each appended row bit-equal to the batch
-    * [[Multimodal.videoScan]]'s row for the same payload — and the
-    * (doc_id, n_frames, frame_idx, fp) rows land on the persisted
-    * per-frame index (the `video_fp_index` artifact shape,
-    * [[graft.jobs.ArtifactJobs.videoIndexIncremental]]). The fingerprint
-    * sequence is a pure function of the payload and appends are additive,
-    * so after any prefix of micro-batches the table equals a batch
-    * re-fingerprint over corpus ∪ prefix — and [[videoCorpusSeqs]] over
-    * the refreshed table makes THIS batch's arrivals screenable by the
-    * next micro-batch. Per-batch cost is batch-sized (narrow parse, one
-    * appended parquet file); the index is never rewritten. Batch input
-    * needs (asset_id, content: binary RAWV).
-    */
-  def videoIndexRefreshBatches(indexPath: String): (DataFrame, Long) => Unit =
-    (batch, _) => if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      import spark.implicits._
-      batch.select(col("asset_id"), col("content"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.flatMap { case (id, rawv) =>
-            val (w, h, nf, px) = Multimodal.decodeRawv(rawv)
-            (0 until nf).map { f =>
-              val frame =
-                java.util.Arrays.copyOfRange(px, f * w * h, (f + 1) * w * h)
-              (id, nf.toLong, f.toLong, Multimodal.dHash63(frame, w, h))
-            }
-          }
-        }.toDF("doc_id", "n_frames", "frame_idx", "fp")
-        .write.mode("append").parquet(indexPath)
-    }
-
   /** The static side of the VIDEO screen: per-clip frame-fingerprint
-    * sequences rolled up from a [[Multimodal.videoScan]]-shaped table —
-    * (corpus_id, corpus_nf, corpus_fps ordered by frame, corpus_fp =
-    * anchor). In production this is yesterday's landed per-frame
-    * fingerprint index.
+    * sequences rolled up from a [[graft.ops.Multimodal.videoScan]]-shaped
+    * table — (corpus_id, corpus_nf, corpus_fps ordered by frame,
+    * corpus_fp = anchor). In production this is yesterday's landed
+    * per-frame fingerprint index.
     */
   def videoCorpusSeqs(scan: DataFrame): DataFrame =
     scan.groupBy(col("doc_id").as("corpus_id"))
@@ -271,14 +128,14 @@ object StreamingMultimodal {
         element_at(transform(col("ordered"), s => s("fp")), 1)
           .as("corpus_fp"))
 
-  /** The VIDEO sibling of [[screenImages]]: each arriving RAWV clip is
-    * byte-level parsed and per-frame dHashed in-flight, its ANCHOR
-    * (frame 0) fingerprint Hamming-banded against the persisted corpus
-    * anchors, and candidates verified frame-aligned in-row (equal frame
-    * counts + every aligned frame within `maxPerFrame`) — the streaming
-    * twin of [[graft.ops.VideoPipeline.pairs]]'s contract against a
-    * static corpus. Emits (asset_id, ts, corpus_id, hamming) with
-    * `hamming` the total across frames.
+  /** The VIDEO [[screen]]: each arriving RAWV clip is byte-level parsed
+    * and per-frame dHashed in-flight, its ANCHOR (frame 0) fingerprint
+    * Hamming-banded against the persisted corpus anchors, and candidates
+    * verified frame-aligned in-row (equal frame counts + every aligned
+    * frame within `maxPerFrame`) — the streaming twin of
+    * [[graft.ops.MediaPipeline.pairs]]' video contract against a static
+    * corpus. Input needs (asset_id, content, `tsCol`); emits (asset_id,
+    * ts, corpus_id, hamming) with `hamming` the total across frames.
     *
     * The per-candidate verify uses `zip_with`/`aggregate` over the two
     * ≤O(10)-element fingerprint arrays: this is the CANDIDATE-bounded
@@ -294,41 +151,16 @@ object StreamingMultimodal {
       maxPerFrame: Int): DataFrame = {
     require(bands.size > maxPerFrame,
       s"pigeonhole needs more bands (${bands.size}) than maxPerFrame=$maxPerFrame")
-    val spark = stream.sparkSession
-    import spark.implicits._
-    val fps = stream
-      .withWatermark(tsCol, delay)
-      .select(col("asset_id"), col("content"), col(tsCol).as("ts"))
-      .as[(Long, Array[Byte], java.sql.Timestamp)]
-      .mapPartitions { it =>
-        it.map { case (id, rawv, ts) =>
-          val (w, h, nf, px) = Multimodal.decodeRawv(rawv)
-          val seq = Array.tabulate(nf) { f =>
-            Multimodal.dHash63(
-              java.util.Arrays.copyOfRange(px, f * w * h, (f + 1) * w * h),
-              w, h)
-          }
-          (id, nf.toLong, seq, ts)
-        }
-      }.toDF("asset_id", "nf", "fps", "ts")
-      .withColumn("fp", element_at(col("fps"), 1))
-    val arrBands = fps.select(col("asset_id"), col("nf"), col("fps"),
-      col("fp"), col("ts"),
-      posexplode(array(bands.map(b => Dedup.bandVal(col("fp"), b)): _*))
-        .as(Seq("b", "bv")))
-    val corpusB = corpusSeqs.select(col("corpus_id"), col("corpus_nf"),
-      col("corpus_fps"), col("corpus_fp"),
-      posexplode(array(bands.map(b => Dedup.bandVal(col("corpus_fp"), b)): _*))
-        .as(Seq("b", "bv")))
-    val earlierBandsDiffer = bands.zipWithIndex.map { case (bd, j) =>
-      (lit(j) >= col("b")) ||
-        (Dedup.bandVal(col("fp"), bd) =!= Dedup.bandVal(col("corpus_fp"), bd))
-    }.reduce(_ && _)
+    val arrivals = stream.withWatermark(tsCol, delay)
+      .select(col("asset_id"), Media.Video.fingerprint.as("fps"),
+        col(tsCol).as("ts"))
+      .select(col("asset_id"), size(col("fps")).as("nf"), col("fps"),
+        element_at(col("fps"), 1).as("fp"), col("ts"))
     val perFrame = zip_with(col("fps"), col("corpus_fps"),
       (a, c) => bit_count(a.bitwiseXOR(c)).cast("long"))
-    arrBands.join(corpusB, Seq("b", "bv"))
+    Dedup.bandedProbe(arrivals, "fp", corpusSeqs, "corpus_fp",
+        bands.map(Seq(_)))
       .filter(col("asset_id") =!= col("corpus_id"))
-      .filter(earlierBandsDiffer)
       .filter(col("nf") === col("corpus_nf"))
       .withColumn("ham_seq", perFrame)
       .filter(array_max(col("ham_seq")) <= maxPerFrame)

@@ -390,11 +390,8 @@ object Probe {
         val fp = () => spark.read.parquet(dir)
         val f = fp().select(col("fp")).distinct().count()
         // exact c=1 accidental candidate count: Σ_{band,value} C(cnt,2)
-        val exactC1 = fp().select(col("fp")).distinct()
-          .select(posexplode(array(Dedup.Bands63.map(b =>
-            Dedup.bandVal(col("fp"), b)): _*)).as(Seq("b", "bv")))
-          .groupBy(col("b"), col("bv")).count()
-          .agg(sum(expr("count * (count - 1) div 2"))).first().getLong(0)
+        val exactC1 = Dedup.exactC1(fp().select(col("fp")).distinct(),
+          Dedup.Bands63.map(Seq(_)))
         val plan = Dedup.bandPlanMeasured(f, exactC1, 3)
         var n1 = 0L; var n2 = 0L; var nA = 0L
         val tF = median((1 to 3).map(_ => time {

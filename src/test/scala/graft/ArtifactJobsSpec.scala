@@ -281,8 +281,7 @@ class ArtifactJobsSpec extends SparkSpec {
     // both delta-delta and delta-stored pairs must be exercised
     assert(inc.exists { case (a, b, _) => a % 5 == 0 && b % 5 == 0 })
     assert(inc.exists { case (a, b, _) => (a % 5 == 0) != (b % 5 == 0) })
-    val p = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_artifacts", "video_fp_index")
+    val p = java.nio.file.Paths.get(ArtifactJobs.artifactPath("video_fp_index"))
     assert(java.nio.file.Files.exists(p), "video_fp_index artifact missing")
   }
 
@@ -300,8 +299,7 @@ class ArtifactJobsSpec extends SparkSpec {
     // both delta-delta and delta-stored pairs must be exercised
     assert(inc.exists { case (a, b, _) => a % 5 == 0 && b % 5 == 0 })
     assert(inc.exists { case (a, b, _) => (a % 5 == 0) != (b % 5 == 0) })
-    val p = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_artifacts", "image_fp_index")
+    val p = java.nio.file.Paths.get(ArtifactJobs.artifactPath("image_fp_index"))
     assert(java.nio.file.Files.exists(p), "image_fp_index artifact missing")
   }
 
@@ -348,8 +346,7 @@ class ArtifactJobsSpec extends SparkSpec {
 
   test("artifacts land on disk as readable parquet models") {
     ArtifactJobs.bpeEncodeFromArtifact(spark, sf("sf0.001")).count()
-    val p = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_artifacts", "bpe_encoder")
+    val p = java.nio.file.Paths.get(ArtifactJobs.artifactPath("bpe_encoder"))
     assert(java.nio.file.Files.exists(p), "bpe_encoder artifact missing")
     val loaded = spark.read.parquet(p.toString)
     assert(loaded.columns.toSet == Set("w", "n_syms"))

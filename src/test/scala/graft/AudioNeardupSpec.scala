@@ -1,7 +1,7 @@
 package graft
 
 import graft.jobs.MultimodalJobs
-import graft.ops.{AudioPipeline, CacheScope, Multimodal}
+import graft.ops.{CacheScope, Media, MediaPipeline, Multimodal}
 
 /** Acoustic near-dup path: the fingerprint must come from the REAL
   * `javax.sound` decode, the banded LSH must be lossless at the radius,
@@ -80,7 +80,7 @@ class AudioNeardupSpec extends SparkSpec {
   test("one cached decode pass reproduces all three audio gates") {
     val docs = graft.io.Tables.documents(spark, sf("sf0.001"))
     CacheScope.scoped { scope =>
-      val pipe = AudioPipeline(spark, docs, maxHamming = 3, scope)
+      val pipe = new MediaPipeline(docs, Media.Audio, maxHamming = 3, scope)
       assert(rows(pipe.pairs.select("doc_a", "doc_b", "hamming")) ==
         rows(MultimodalJobs.audioNeardup(spark, sf("sf0.001"))))
       assert(rows(pipe.clusters) ==
@@ -89,7 +89,6 @@ class AudioNeardupSpec extends SparkSpec {
       assert(curation ==
         rows(MultimodalJobs.audioCuration(spark, sf("sf0.001"))))
       assert(curation.nonEmpty)
-      pipe.unpersist()
     }
   }
 }

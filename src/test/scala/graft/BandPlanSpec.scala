@@ -9,7 +9,8 @@ import graft.ops.Dedup
   * every plan is a lossless multiplicity-1 candidate generator, so the
   * disjoint 16-bit plan and the super-band plans must emit identical
   * pair sets (the property that lets [[Dedup.hammingPairsAuto]] switch
-  * plans without any oracle noticing).
+  * plans without any oracle noticing), in the self-join and in the
+  * bipartite probe × build form ([[Dedup.bandedProbe]]).
   */
 class BandPlanSpec extends SparkSpec {
   import spark.implicits._
@@ -104,6 +105,33 @@ class BandPlanSpec extends SparkSpec {
       // multiplicity exactly 1: no pair may appear twice
       assert(got.length == got.toSet.size, s"c=$c emitted duplicates")
       assert(got.toSet == expected, s"c=$c pair set diverged")
+    }
+  }
+
+  test("bipartite banded probe is lossless and multiplicity-1 (vs brute force)") {
+    // probe × build over two overlapping halves of the fixture: every
+    // (probe, build) pair within the radius, self pairs included, once
+    val probe = fixture.filter($"doc_id" % 3 === 0)
+      .select($"doc_id".as("p_id"), $"fp".as("p_fp"))
+    val build = fixture.filter($"doc_id" % 3 =!= 1)
+      .select($"doc_id".as("b_id"), $"fp".as("b_fp"))
+    val expected = probe.crossJoin(build)
+      .select($"p_id", $"b_id",
+        bit_count($"p_fp" bitwiseXOR $"b_fp").cast("long").as("hamming"))
+      .filter($"hamming" <= 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(expected.exists(_._3 == 2L) && expected.exists(r => r._1 != r._2))
+    val plans = Seq(
+      "disjoint" -> Dedup.Bands63.map(Seq(_)),
+      "c=2" -> Dedup.bandBlocks(5, 63).combinations(2).toSeq)
+    for ((name, plan) <- plans) {
+      val got = Dedup.bandedProbe(probe, "p_fp", build, "b_fp", plan)
+        .select($"p_id", $"b_id",
+          bit_count($"p_fp" bitwiseXOR $"b_fp").cast("long").as("hamming"))
+        .filter($"hamming" <= 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(got.length == got.toSet.size, s"$name emitted duplicates")
+      assert(got.toSet == expected, s"$name pair set diverged")
     }
   }
 

@@ -84,15 +84,18 @@ class CacheScopeSpec extends SparkSpec {
   }
 
   test("scoped registry builds leave no cached frame in the session") {
-    // both queries build inside a scope and hand off an eager cut: once
-    // built, nothing they cached (IVF assignment, degree-capped user-item
-    // frame) may outlive them. Suites run one at a time in the forked
-    // test JVM, so the session-wide count is this test's own.
+    // each query builds inside a scope and hands off an eager cut: once
+    // built, nothing it cached (IVF assignment, degree-capped user-item
+    // frame, media decode scans and fingerprint frames) may outlive it.
+    // Suites run one at a time in the forked test JVM, so the
+    // session-wide count is this test's own.
     val cacheManager = spark
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
     spark.catalog.clearCache()
-    Seq("ann_ivf_pq_retrained", "item_triangles").foreach { q =>
+    Seq("ann_ivf_pq_retrained", "item_triangles", "image_neardup",
+        "image_curation", "audio_neardup", "audio_curation", "video_neardup",
+        "video_curation", "multimodal_pairs", "thumbnail_match").foreach { q =>
       assert(SparkEntry.queries(q)(spark, sf("sf0.001")).count() > 0)
       assert(cacheManager.isEmpty,
         s"$q left a cached frame in the session")

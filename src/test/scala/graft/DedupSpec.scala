@@ -842,7 +842,7 @@ class DedupSpec extends SparkSpec {
       df.select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val text = pairsOf(DedupJobs.pipeline(spark, sfd).candidates)
-    val img = pairsOf(graft.jobs.MultimodalJobs.pipeline(spark, sfd).pairs)
+    val img = pairsOf(graft.jobs.MultimodalJobs.imageNeardup(spark, sfd))
     val docs = graft.io.Tables.documents(spark, sfd)
       .select("doc_id").collect().map(_.getLong(0))
     // local union-find truth over the unioned pair graphs

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{CacheScope, ImagePipeline}
+import graft.ops.{CacheScope, Media, MediaPipeline}
 
 /** One decode pass must feed pairs, clusters and curation with outputs
   * identical to the isolated gate queries — the shared-scan contract
@@ -14,7 +14,7 @@ class ImagePipelineSpec extends SparkSpec {
   test("one cached decode pass reproduces all three image gates") {
     val docs = graft.io.Tables.documents(spark, sf("sf0.001"))
     CacheScope.scoped { scope =>
-      val pipe = ImagePipeline(spark, docs, maxHamming = 3, scope)
+      val pipe = new MediaPipeline(docs, Media.Image, maxHamming = 3, scope)
       val pairs = rows(pipe.pairs
         .select("doc_a", "doc_b", "hamming"))
       val clusters = rows(pipe.clusters)
@@ -26,7 +26,6 @@ class ImagePipelineSpec extends SparkSpec {
       assert(curation ==
         rows(graft.jobs.MultimodalJobs.imageCuration(spark, sf("sf0.001"))))
       assert(pairs.nonEmpty && clusters.nonEmpty && curation.nonEmpty)
-      pipe.unpersist()
     }
   }
 }

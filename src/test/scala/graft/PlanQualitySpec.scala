@@ -432,7 +432,8 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("image_neardup: band joins on ints, no cartesian, no string exchange") {
-    val p = plan(graft.jobs.MultimodalJobs.imageNeardup(spark, sf("sf0.001")))
+    val p = plan(Handoff.lineage(
+      graft.jobs.MultimodalJobs.imageNeardup(spark, sf("sf0.001"))))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"Hamming LSH regressed to all-pairs:\n$p")

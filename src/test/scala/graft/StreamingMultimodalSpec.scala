@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
-import graft.ops.{Dedup, Multimodal}
+import graft.ops.{Dedup, Media, Multimodal}
 import graft.streaming.StreamingMultimodal
 
 /** The streaming image-ingest screen: in-flight decode + dHash +
@@ -37,9 +37,10 @@ class StreamingMultimodalSpec extends SparkSpec {
       .map(a => (a.asset_id, a.content, a.width, a.height, ts(a.asset_id)))
 
     val in = MemoryStream[(Long, Array[Byte], Int, Int, Timestamp)]
-    val q = StreamingMultimodal.screenImages(
+    val q = StreamingMultimodal.screen(
         in.toDF().toDF("asset_id", "content", "width", "height", "ts"),
-        "ts", "0 seconds", corpusFp, Dedup.Bands63, maxHamming = 3)
+        "ts", "0 seconds", corpusFp, Dedup.Bands63, maxHamming = 3,
+        media = Media.Image)
       .writeStream.format("memory").queryName("stream_img_screen")
       .outputMode("append").start()
     val got = try {
@@ -112,11 +113,12 @@ class StreamingMultimodalSpec extends SparkSpec {
       .collect()
       .map(a => (a.asset_id, a.content, a.width, a.height, ts(a.asset_id)))
     val sin = MemoryStream[(Long, Array[Byte], Int, Int, Timestamp)]
-    val sq = StreamingMultimodal.screenImages(
+    val sq = StreamingMultimodal.screen(
         sin.toDF().toDF("asset_id", "content", "width", "height", "ts"),
         "ts", "0 seconds",
         StreamingMultimodal.servedIndex(spark, dir, tomb),
-        Dedup.Bands63, maxHamming = 3)
+        Dedup.Bands63, maxHamming = 3,
+        media = Media.Image)
       .writeStream.format("memory").queryName("stream_erased_screen")
       .outputMode("append").start()
     try {
@@ -147,7 +149,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val in = MemoryStream[(Long, Array[Byte], Int, Int, Timestamp)]
     val q = in.toDF().toDF("asset_id", "content", "width", "height", "ts")
       .writeStream
-      .foreachBatch(StreamingMultimodal.imageIndexRefreshBatches(dir))
+      .foreachBatch(StreamingMultimodal.indexRefreshBatches(dir, Media.Image))
       .start()
     try {
       in.addData(arrivals.take(50).toSeq: _*); q.processAllAvailable()
@@ -175,10 +177,11 @@ class StreamingMultimodalSpec extends SparkSpec {
       .collect()
       .map(a => (a.asset_id, a.content, a.width, a.height, ts(a.asset_id)))
     val in2 = MemoryStream[(Long, Array[Byte], Int, Int, Timestamp)]
-    val q2 = StreamingMultimodal.screenImages(
+    val q2 = StreamingMultimodal.screen(
         in2.toDF().toDF("asset_id", "content", "width", "height", "ts"),
         "ts", "0 seconds", spark.read.parquet(dir), Dedup.Bands63,
-        maxHamming = 3)
+        maxHamming = 3,
+        media = Media.Image)
       .writeStream.format("memory").queryName("refresh_img_screen")
       .outputMode("append").start()
     val got = try {
@@ -220,7 +223,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val in = MemoryStream[(Long, Array[Byte], Timestamp)]
     val q = in.toDF().toDF("asset_id", "content", "ts")
       .writeStream
-      .foreachBatch(StreamingMultimodal.audioIndexRefreshBatches(dir))
+      .foreachBatch(StreamingMultimodal.indexRefreshBatches(dir, Media.Audio))
       .start()
     try {
       in.addData(arrivals.take(50).toSeq: _*); q.processAllAvailable()
@@ -255,9 +258,10 @@ class StreamingMultimodalSpec extends SparkSpec {
       .map(a => (a.asset_id, a.content, ts(a.asset_id)))
 
     val in = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val q = StreamingMultimodal.screenAudio(
+    val q = StreamingMultimodal.screen(
         in.toDF().toDF("asset_id", "content", "ts"),
-        "ts", "0 seconds", corpusFp, Dedup.Bands63, maxHamming = 3)
+        "ts", "0 seconds", corpusFp, Dedup.Bands63, maxHamming = 3,
+        media = Media.Audio)
       .writeStream.format("memory").queryName("stream_aud_screen")
       .outputMode("append").start()
     val got = try {
@@ -304,7 +308,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val in = MemoryStream[(Long, Array[Byte], Timestamp)]
     val q = in.toDF().toDF("asset_id", "content", "ts")
       .writeStream
-      .foreachBatch(StreamingMultimodal.videoIndexRefreshBatches(dir))
+      .foreachBatch(StreamingMultimodal.indexRefreshBatches(dir, Media.Video))
       .start()
     try {
       in.addData(arrivals.take(50).toSeq: _*); q.processAllAvailable()

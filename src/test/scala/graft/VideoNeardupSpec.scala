@@ -1,7 +1,7 @@
 package graft
 
 import graft.jobs.MultimodalJobs
-import graft.ops.{CacheScope, Multimodal, VideoPipeline}
+import graft.ops.{CacheScope, Media, MediaPipeline, Multimodal}
 
 /** Frame-aligned video near-dup path: per-frame fingerprints must come
   * from the REAL RAWV byte-level parse, the frame-0-anchored banded
@@ -141,7 +141,7 @@ class VideoNeardupSpec extends SparkSpec {
   test("one cached parse pass reproduces all three video gates") {
     val docs = graft.io.Tables.documents(spark, sf("sf0.001"))
     CacheScope.scoped { scope =>
-      val pipe = VideoPipeline(spark, docs, maxPerFrame = 3, scope)
+      val pipe = new MediaPipeline(docs, Media.Video, maxHamming = 3, scope)
       assert(rows(pipe.pairs.select("doc_a", "doc_b", "hamming")) ==
         rows(MultimodalJobs.videoNeardup(spark, sf("sf0.001"))))
       assert(rows(pipe.clusters) ==
@@ -150,7 +150,6 @@ class VideoNeardupSpec extends SparkSpec {
       assert(curation ==
         rows(MultimodalJobs.videoCuration(spark, sf("sf0.001"))))
       assert(curation.nonEmpty)
-      pipe.unpersist()
     }
   }
 }
