@@ -19,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.ops.PrefixScanStrategy)
     e.injectFunction((
       new FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),

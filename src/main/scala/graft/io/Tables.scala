@@ -2,6 +2,9 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
 
 /** Batch sources over the driver's synthetic parquet tables (TESTDATA.md).
   *
@@ -17,9 +20,40 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  /** Generic loader: `Tables.load(spark, sfDir, "lineitem")`. */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Generic loader: `Tables.load(spark, sfDir, "lineitem")`.
+    *
+    * Inferring a parquet schema runs a one-task Spark job, and a query may
+    * load the same table several times, so the inferred schema is memoized
+    * per (file fingerprint, read confs) and handed to the reader. The
+    * fingerprint covers the path and every part file's size, mtime and
+    * footer CRC, so a rewritten table is inferred afresh. A path that does
+    * not exist locally is read plainly: Spark reports its own error.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    if (!Files.exists(Paths.get(path))) spark.read.parquet(path)
+    else {
+      val key = (Fingerprint.ofPath(path), schemaConfs.map(spark.conf.getOption))
+      val schema = Option(schemas.get(key)).getOrElse {
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, s)
+        s
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** The session confs that change what a parquet footer infers to. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[Option[String]]), StructType]()
 
   def region(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "nation")

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.{CacheScope, Dedup, Handoff}
+import graft.ops.{CacheScope, Dedup, Handoff, Prefix}
 
 /** Analytics headroom beyond the reference's own surface (SURVEY.md §2.6 /
   * §2.7 notes): session windows, grouping sets, pivot, set operations.
@@ -2053,18 +2053,16 @@ object AnalyticsJobs {
     * arithmetic in both engines (SQL NTILE's first-buckets-bigger
     * remainder rule is deliberately NOT used).
     *
-    * 100 TB shape: ranks are global, so each is assigned with the
-    * [[graft.jobs.DedupJobs.trainingOrder]] distributed prefix-sum
-    * pattern (range-partition CACHED, per-partition counts → tiny offsets
-    * frame → broadcast join + local rank) over the USER frame — already
-    * one aggregation smaller than the event corpus; the corpus-level
+    * 100 TB shape: ranks are global, so they are assigned by one
+    * [[graft.ops.Prefix.rank]] scan (range exchange, local sort, linear
+    * pass) over the USER frame — already one aggregation smaller than
+    * the event corpus; the corpus-level
     * max-day and user-count ride as 1-row broadcasts (the mixture_plan
     * pattern). Reference anchor: the UBA segmentation read the
     * reference's keyed aggregations feed (HotItem.java:60 keyed state,
     * applied to user lifetime metrics).
     */
   def rfmSegments(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(spark, sfDir)
     val dayCol = expr("unix_micros(ts) div 86400000000")
     val perUser = ev.groupBy(col("user_id")).agg(
@@ -2078,43 +2076,22 @@ object AnalyticsJobs {
     val base = perUser.crossJoin(broadcast(maxDay))
       .select(col("user_id"), (col("max_day") - col("last_day")).as("r_days"),
         col("f"), col("m_cents"))
-      .cache() // the metric explode + the final join read it
-    // ONE distributed prefix-sum ranks all three metrics (r16): explode
-    // each user into (metric, sk) rows, range-partition by the COMPOSITE
-    // (metric, sk, user_id) — ranges are metric-major, so the global rank
-    // within metric m is grank − m·n_users (every user contributes one
-    // row per metric). Per-metric ordering (sk asc, user_id asc) is
-    // unchanged, so ranks — and therefore scores — are bit-identical to
-    // the previous three independent passes; the plan drops two range
-    // exchanges, two sampled-partitioner caches, two offset broadcasts,
-    // and two user_id joins (guide §2.4: share one exchange).
-    val tall = base.select(col("user_id"), explode(array(
-        struct(lit(0L).as("metric"), (-col("r_days")).as("sk")),
-        struct(lit(1L).as("metric"), col("f").as("sk")),
-        struct(lit(2L).as("metric"), col("m_cents").as("sk")))).as("m"))
-      .select(col("user_id"), col("m.metric").as("metric"),
-        col("m.sk").as("sk"))
-    val b = tall.repartitionByRange(col("metric"), col("sk"), col("user_id"))
-      .withColumn("pid", spark_partition_id())
-      .cache() // the partitioner samples — pin one boundary cut
-    val offsets = b.groupBy(col("pid")).agg(count(lit(1)).as("part_n"))
-      .withColumn("part_offset", coalesce(sum(col("part_n")).over(
-        Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("part_offset"))
-    val ranked = b.join(broadcast(offsets), "pid")
-      .withColumn("grank", col("part_offset") +
-        row_number().over(Window.partitionBy(col("pid"))
-          .orderBy(col("metric").asc, col("sk").asc, col("user_id").asc)))
-    val ranks = ranked.crossJoin(broadcast(nUsers))
+    // ONE prefix scan ranks all three metrics: explode each user into
+    // (metric, sk) rows carrying its metric values, rank within metric
+    // over (sk asc, user_id asc), fold the three ranks back per user
+    val tall = base.select(col("user_id"), col("r_days"), col("f"),
+        col("m_cents"), explode(array(
+          struct(lit(0L).as("metric"), (-col("r_days")).as("sk")),
+          struct(lit(1L).as("metric"), col("f").as("sk")),
+          struct(lit(2L).as("metric"), col("m_cents").as("sk")))).as("m"))
+      .select(col("user_id"), col("r_days"), col("f"), col("m_cents"),
+        col("m.metric").as("metric"), col("m.sk").as("sk"))
+    def rankOf(m: Int) = max(when(col("metric") === m, col("rank")))
+    Prefix.rank(tall, Seq("metric"), Seq("sk", "user_id"), "rank")
       .groupBy(col("user_id"))
-      .agg(
-        max(when(col("metric") === 0, col("grank"))).as("r_rank"),
-        (max(when(col("metric") === 1, col("grank"))) -
-          max(col("n_users"))).as("f_rank"),
-        (max(when(col("metric") === 2, col("grank"))) -
-          lit(2) * max(col("n_users"))).as("m_rank"))
-    base.join(ranks, "user_id")
+      .agg(max(col("r_days")).as("r_days"), max(col("f")).as("f"),
+        max(col("m_cents")).as("m_cents"), rankOf(0).as("r_rank"),
+        rankOf(1).as("f_rank"), rankOf(2).as("m_rank"))
       .crossJoin(broadcast(nUsers))
       .select(col("user_id"), col("r_days"), col("f"), col("m_cents"),
         expr("((r_rank - 1) * 5) div n_users + 1").as("r_score"),

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.ops.{CacheScope, Dedup, Handoff, Media, MediaPipeline, TextAnalysis}
+import graft.ops.{CacheScope, Dedup, Handoff, Media, MediaPipeline, Prefix, TextAnalysis}
 import OracleSql.{fingerprintSql, hexIntSql, hexIntSqlAt, normalizedSql, wordsSql}
 
 /** Deduplication queries over `documents`, each with a DuckDB oracle that
@@ -446,59 +446,44 @@ object DedupJobs {
     * banded joins are too hot.
     *
     * 100 TB shape: the global rank is NOT a single-partition ROW_NUMBER —
-    * it is the [[trainingOrder]] distributed prefix-sum (range-partition
-    * by the sort key, per-partition counts, tiny offsets frame broadcast
-    * back); window pairs are an EQUI-join on rank + offset (offsets
-    * exploded 1..W, the rolling-uniques contribution pattern), never a
-    * global window; the Jaccard verify joins hashed gram sets only for
-    * the N·W candidates.
+    * it is a [[Prefix.rank]] scan over the range-partitioned sort key;
+    * window pairs are an EQUI-join on rank + offset (offsets exploded
+    * 1..W, the rolling-uniques contribution pattern), never a global
+    * window; the Jaccard verify joins hashed gram sets only for the N·W
+    * candidates. Built under one scope (the ranked frame is read by both
+    * sides of the pair join) and handed off as one cut.
     */
-  def sortedNeighborhood(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val key = substring(TextAnalysis.normalized(col("text")), 1, SNM_KEY_LEN)
-    val docs = Tables.documents(spark, sfDir) // one load: each runs a schema job
-    val base = docs
-      .select(col("doc_id"), col("lang").as("block"), col("text"),
-        key.as("skey"))
-      .repartitionByRange(col("block"), col("skey"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .cache() // the partitioner samples — round-4 docPacking rule
-    val offsets = base.groupBy(col("pid"))
-      .agg(count(lit(1)).as("part_n"))
-      .withColumn("part_offset",
-        coalesce(sum(col("part_n")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("part_offset"))
-    val wLocal = Window.partitionBy(col("pid"))
-      .orderBy(col("block").asc, col("skey").asc, col("doc_id").asc)
-    val ranked = base.join(broadcast(offsets), "pid")
-      .withColumn("rank", col("part_offset") + row_number().over(wLocal))
-      .select(col("doc_id"), col("block"), col("rank"))
-      .cache()
-    // candidate pairs: rank equi-join via exploded offsets, same block
-    val cand = ranked.alias("a")
-      .select(col("a.doc_id").as("doc_a"), col("a.block"),
-        explode(sequence(col("a.rank") + 1, col("a.rank") + SNM_WINDOW))
-          .as("rank"))
-      .join(ranked.alias("b")
-        .select(col("b.doc_id").as("doc_b"), col("b.block"), col("b.rank")),
-        Seq("block", "rank"))
-      // multiplicity exactly 1: only the lower rank generates a pair and
-      // each (rank, offset) lands on one partner — no distinct needed
-      // (the round-2 wasted-shuffle rule); least/greatest normalizes ids
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-    // exact verify on the linear candidate set, shared-gram machinery
-    val g = Dedup.hashedGrams(docs.select(col("doc_id"), col("text")),
-        JACCARD_N, distinct = true).cache()
-    Dedup.jaccardScored(Dedup.candidateOverlaps(cand, g), Dedup.setSizes(g),
-      JACCARD_THRESHOLD)
-  }
+  def sortedNeighborhood(spark: SparkSession, sfDir: String): DataFrame =
+    CacheScope.scoped { scope =>
+      val key = substring(TextAnalysis.normalized(col("text")), 1, SNM_KEY_LEN)
+      val docs = Tables.documents(spark, sfDir)
+      val ranked = scope.cache(Prefix.rank(
+          docs.select(col("doc_id"), col("lang").as("block"), key.as("skey")),
+          Nil, Seq("block", "skey", "doc_id"), "rank")
+        .select(col("doc_id"), col("block"), col("rank")))
+      // candidate pairs: rank equi-join via exploded offsets, same block
+      val cand = ranked.alias("a")
+        .select(col("a.doc_id").as("doc_a"), col("a.block"),
+          explode(sequence(col("a.rank") + 1, col("a.rank") + SNM_WINDOW))
+            .as("rank"))
+        .join(ranked.alias("b")
+          .select(col("b.doc_id").as("doc_b"), col("b.block"), col("b.rank")),
+          Seq("block", "rank"))
+        // multiplicity exactly 1: only the lower rank generates a pair and
+        // each (rank, offset) lands on one partner — no distinct needed
+        // (the round-2 wasted-shuffle rule); least/greatest normalizes ids
+        .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+          greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+      // exact verify on the linear candidate set, shared-gram machinery
+      val g = scope.cache(Dedup.hashedGrams(
+        docs.select(col("doc_id"), col("text")), JACCARD_N, distinct = true))
+      Handoff.cut(Dedup.jaccardScored(Dedup.candidateOverlaps(cand, g),
+        Dedup.setSizes(g), JACCARD_THRESHOLD))
+    }
 
   /** Oracle: ROW_NUMBER over the identical total sort key (DuckDB may
-    * single-thread it — oracle-side only; the Spark side uses the
-    * distributed prefix-sum), window pairs by rank difference, the
+    * single-thread it — oracle-side only; the Spark side runs the
+    * distributed prefix scan), window pairs by rank difference, the
     * Jaccard oracle's gram chain for the verify.
     */
   val sortedNeighborhoodSql: String =
@@ -1518,35 +1503,15 @@ object DedupJobs {
     * naturally interleaved.
     *
     * 100 TB shape: a global ROW_NUMBER is the canonical single-partition
-    * funnel, so the sequence is assigned with the [[TextJobs.docPacking]]
-    * distributed prefix-sum pattern instead: range-partition by the
-    * shuffle key (CACHED — the partitioner samples, two materializations
-    * could cut different boundaries), per-partition counts → one tiny
-    * offsets frame → broadcast join + per-partition local rank. Work per
-    * task is one local sort; the only global structure is the
-    * partition-count-sized offsets cumsum.
+    * funnel, so the sequence is a [[Prefix.rank]] scan instead: one range
+    * exchange on the shuffle key, one local sort per task, and a
+    * partition-count-sized edge array as the only global structure.
     */
-  def trainingOrder(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("source"),
-        Dedup.md5Long(col("doc_id").cast("string")).as("priority"))
-      .repartitionByRange(col("priority"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .cache()
-    val offsets = base.groupBy(col("pid"))
-      .agg(count(lit(1)).as("part_n"))
-      .withColumn("part_offset",
-        coalesce(sum(col("part_n")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("part_offset"))
-    val wLocal = Window.partitionBy(col("pid"))
-      .orderBy(col("priority").asc, col("doc_id").asc)
-    base.join(broadcast(offsets), "pid")
-      .withColumn("seq", col("part_offset") + row_number().over(wLocal))
-      .select(col("doc_id"), col("source"), col("priority"), col("seq"))
-  }
+  def trainingOrder(spark: SparkSession, sfDir: String): DataFrame =
+    Prefix.rank(Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("source"),
+          Dedup.md5Long(col("doc_id").cast("string")).as("priority")),
+      Nil, Seq("priority", "doc_id"), "seq")
 
   val trainingOrderSql: String =
     s"""SELECT doc_id, source, ${hexIntSql("doc_id::VARCHAR")} AS priority,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Spar
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.model.ModelMemo
-import graft.ops.{CacheScope, Dedup, Handoff, TextAnalysis}
+import graft.ops.{CacheScope, Dedup, Handoff, Prefix, TextAnalysis}
 import OracleSql.{fingerprintSql, hex60Sql, tokensSql, wordsSql}
 
 /** Text-analysis queries over `documents`: token/quality stats, language-ID,
@@ -2016,43 +2016,21 @@ object TextJobs {
     * Scale shape — the distributed prefix sum, NOT a per-lang window: a
     * window partitioned only by `lang` would run each language's cumsum as
     * ONE task (a head language at 100 TB = billions of rows on one
-    * reducer). Instead: range-partition by (lang, doc_id), local sums per
-    * (partition, lang), a cumulative-offset window over the TINY
-    * per-partition totals frame (≤ partitions×langs rows), broadcast the
-    * offsets back, and finish with a per-(partition, lang) local cumsum —
-    * every heavy stage is bounded by a partition, and the result is
-    * partitioning-independent (prefix sums are associative; the oracle
-    * pins output equality with the sequential definition). The bin explode
-    * is pure codegen integer arithmetic — no token-level frame exists.
+    * reducer). A [[graft.ops.Prefix.runningSum]] scan range-partitions by
+    * (lang, doc_id) instead, so every heavy stage is bounded by a
+    * partition, and the result is partitioning-independent (the oracle
+    * pins output equality with the sequential definition). The bin
+    * explode is pure codegen integer arithmetic — no token-level frame
+    * exists.
     */
   def docPacking(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = Tables.documents(spark, sfDir)
+    val toks = Tables.documents(spark, sfDir)
       .select(col("lang"), col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n"))
       .filter(col("n") > 0)
-      .repartitionByRange(col("lang"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      // both consumers must see ONE materialization: the range partitioner
-      // samples, so an uncached re-computation could cut different
-      // boundaries and hand the offset join inconsistent pids
-      .cache()
-    // per-(partition, lang) token totals — partitions×langs rows, tiny
-    val totals = base.groupBy(col("pid"), col("lang"))
-      .agg(sum(col("n")).as("part_total"))
-    val offsets = totals.withColumn("part_offset",
-      coalesce(sum(col("part_total")).over(
-        Window.partitionBy(col("lang")).orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("lang"), col("part_offset"))
-    // local cumsum rides the (pid, lang) clustering; global start = the
-    // broadcast partition offset + the in-partition prefix
-    val wLocal = Window.partitionBy(col("pid"), col("lang"))
-      .orderBy(col("doc_id")).rowsBetween(Window.unboundedPreceding, -1)
-    base
-      .join(broadcast(offsets), Seq("pid", "lang"))
-      .withColumn("s",
-        col("part_offset") + coalesce(sum(col("n")).over(wLocal), lit(0L)))
+    // s = the tokens of every earlier document of the language
+    Prefix.runningSum(toks, Seq("lang"), Seq("doc_id"), "n", "cum")
+      .withColumn("s", col("cum") - col("n"))
       .withColumn("e", col("s") + col("n") - 1)
       .select(col("lang"), col("doc_id"), col("s"), col("e"),
         explode(expr(s"sequence(s div $PACK_W, e div $PACK_W)")).as("bin"))
@@ -2097,7 +2075,7 @@ object TextJobs {
     * Scale shape: two aggs over the packing frame (lang-keyed and
     * (lang, doc)-keyed, both riding the explode's partitioning) + a
     * |langs|-row join — adds nothing corpus-quadratic to the
-    * already-fenced prefix-sum pipeline it reads.
+    * already-fenced prefix-scan pipeline it reads.
     */
   def packingEval(spark: SparkSession, sfDir: String): DataFrame = {
     val dp = docPacking(spark, sfDir).cache()
@@ -2973,45 +2951,22 @@ object TextJobs {
     *
     * Scale shape: per-source ranking NEVER runs as a source-partitioned
     * window (20 sources = 20 tasks on a corpus-sized frame — the
-    * forbidden low-cardinality window). It is the docPacking /
-    * training_order distributed prefix-sum: repartitionByRange on
-    * (source, score, id) → per-(partition, source) COUNTS → offsets
-    * window over the tiny totals frame → broadcast join back; rank =
-    * partition offset + local prefix count. The range-partitioned frame
-    * is CACHED (round-4 rule: the partitioner samples; two
-    * materializations could cut different boundaries).
+    * forbidden low-cardinality window). It is a [[graft.ops.Prefix.rank]]
+    * scan grouped by source over (qt, doc_id); the per-source count is a
+    * source-sized aggregate riding as a broadcast.
     */
   def scoreCalibrate(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = col("text")
     val nTok = TextAnalysis.tokenCount(t)
-    val scored = Tables.documents(spark, sfDir)
+    val docs = Tables.documents(spark, sfDir)
+    val scored = docs
       .select(col("doc_id"), col("source"),
         round(TextAnalysis.qualityScore(nTok,
           TextAnalysis.stopwordCount(t)) * 10000 + lit(1e-9))
           .cast("long").as("qt"))
-    val base = scored
-      .repartitionByRange(col("source"), col("qt"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .cache()
-    val totals = base.groupBy(col("pid"), col("source"))
-      .agg(count(lit(1)).as("part_n"))
-    val offsets = totals.withColumn("part_offset",
-      coalesce(sum(col("part_n")).over(
-        Window.partitionBy(col("source")).orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("source"), col("part_offset"))
-    val srcN = totals.groupBy(col("source"))
-      .agg(sum(col("part_n")).as("n_src"))
-    val wLocal = Window.partitionBy(col("pid"), col("source"))
-      .orderBy(col("qt"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    base
-      .join(broadcast(offsets), Seq("pid", "source"))
+    val srcN = docs.groupBy(col("source")).agg(count(lit(1)).as("n_src"))
+    Prefix.rank(scored, Seq("source"), Seq("qt", "doc_id"), "rnk")
       .join(broadcast(srcN), Seq("source"))
-      .withColumn("rnk",
-        col("part_offset") + coalesce(count(lit(1)).over(wLocal), lit(0L))
-          + 1)
       .select(col("doc_id"), col("source"), col("qt"), col("rnk"),
         expr("((rnk - 1) * 1000000) div greatest(n_src - 1, 1)")
           .as("pct_ppm"))
@@ -3103,30 +3058,19 @@ object TextJobs {
     * reporting its positive-label rate against the base rate and the
     * ppm-scaled lift (pos_ppm·10⁶ div base_ppm — both factors ≤ 10⁶, so
     * the product stays far from BIGINT range at any corpus size). The
-    * global rank uses the trainingOrder distributed prefix-sum pattern;
-    * the trained model is the content-memoized Rocchio pass the other two
-    * classifier gates already share.
+    * global rank is a [[graft.ops.Prefix.rank]] scan; the trained model is
+    * the content-memoized Rocchio pass the other two classifier gates
+    * already share.
     */
   def classifierLift(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val scored = qualityClassifierTrained(spark, sfDir)
       .select(col("doc_id"), col("score_t"),
         col("label_q").cast("long").as("pos"))
-    val b = scored.select(col("doc_id"), col("pos"), (-col("score_t")).as("sk"))
-      .repartitionByRange(col("sk"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .cache() // the partitioner samples — pin one boundary cut
-    val offsets = b.groupBy(col("pid")).agg(count(lit(1)).as("part_n"))
-      .withColumn("part_offset", coalesce(sum(col("part_n")).over(
-        Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("part_offset"))
     val totals = scored.agg(count(lit(1)).as("n_total"),
       sum(col("pos")).as("pos_total"))
-    b.join(broadcast(offsets), "pid")
-      .withColumn("rank", col("part_offset") + row_number().over(
-        Window.partitionBy(col("pid"))
-          .orderBy(col("sk").asc, col("doc_id").asc)))
+    Prefix.rank(
+        scored.select(col("doc_id"), col("pos"), (-col("score_t")).as("sk")),
+        Nil, Seq("sk", "doc_id"), "rank")
       .crossJoin(broadcast(totals))
       .select(expr("((rank - 1) * 10) div n_total + 1").as("decile"),
         col("pos"), col("n_total"), col("pos_total"))

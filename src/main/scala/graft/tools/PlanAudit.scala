@@ -53,8 +53,8 @@ object PlanAudit {
       "split_balance" -> ("CROSSes are the 1-row corpus-total broadcast (the mixture_plan pattern) and the " +
         "3-row split-literal x bucket-totals grid — both bounded model-sized frames, never corpus-sized"),
       "rfm_segments" -> ("CROSSes are the 1-row corpus-max-day and 1-row user-count broadcasts (the " +
-        "mixture_plan pattern) through the fused metric-exploded prefix-sum rank (r16: one range " +
-        "exchange ranks all three metrics) — every build side is a 1-row aggregate, never corpus-sized"),
+        "mixture_plan pattern) around one metric-grouped prefix-scan rank (one range exchange ranks " +
+        "all three metrics) — every build side is a 1-row aggregate, never corpus-sized"),
       "dedup_cluster_sizes" -> "CROSS is the 1-row family-total aggregate broadcast (the mixture_plan pattern)",
       "classifier_lift" -> ("CROSSes are 1-row model/total frames: the loaded Rocchio weights + midpoint " +
         "theta (quality_from_artifact's documented shape) plus the 1-row n_total/pos_total aggregate " +
@@ -63,7 +63,6 @@ object PlanAudit {
         "(ann_cosine_topk's shape; the artifact-served IVF path is the documented scale swap-in); " +
         "the sparse list is an inverted-index equi-join on int token hashes, and the fusion join runs on (queries x depth)-bounded frames"),
       "embedding_neardup" -> "CROSS (if present) is the 1-row plane-matrix broadcast",
-      "doc_packing" -> "CROSS is the 1-row per-(pid,lang) offsets-frame broadcast of the distributed prefix sum",
       "ann_ivf" -> centroidCross,
       "ann_ivf_trained" -> centroidCross,
       "ann_ivf_from_artifact" -> centroidCross,

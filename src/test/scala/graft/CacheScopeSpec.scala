@@ -84,9 +84,10 @@ class CacheScopeSpec extends SparkSpec {
   }
 
   test("scoped registry builds leave no cached frame in the session") {
-    // each query builds inside a scope and hands off an eager cut: once
-    // built, nothing it cached (IVF assignment, degree-capped user-item
-    // frame, media decode scans and fingerprint frames) may outlive it.
+    // each query caches nothing, or builds inside a scope and hands off
+    // an eager cut: once built, nothing it cached (IVF assignment,
+    // degree-capped user-item frame, media decode scans and fingerprint
+    // frames, the sorted-neighborhood ranks) may outlive it.
     // Suites run one at a time in the forked test JVM, so the
     // session-wide count is this test's own.
     val cacheManager = spark
@@ -95,7 +96,9 @@ class CacheScopeSpec extends SparkSpec {
     spark.catalog.clearCache()
     Seq("ann_ivf_pq_retrained", "item_triangles", "image_neardup",
         "image_curation", "audio_neardup", "audio_curation", "video_neardup",
-        "video_curation", "multimodal_pairs", "thumbnail_match").foreach { q =>
+        "video_curation", "multimodal_pairs", "thumbnail_match",
+        "training_order", "sorted_neighborhood", "rfm_segments", "doc_packing",
+        "score_calibrate", "classifier_lift").foreach { q =>
       assert(SparkEntry.queries(q)(spark, sf("sf0.001")).count() > 0)
       assert(cacheManager.isEmpty,
         s"$q left a cached frame in the session")

@@ -3,6 +3,8 @@ package graft
 import graft.jobs._
 import graft.ops.{CacheScope, Handoff}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution._
 
 /** Physical-plan assertions: the properties that make these queries viable
@@ -225,12 +227,45 @@ class PlanQualitySpec extends SparkSpec {
       s"query side not broadcast:\n$p")
   }
 
+  /** The distributed prefix scan behind every global or per-group rank:
+    * range partitioning carries the order, one PrefixScan node runs it,
+    * no window is keyed by the group alone, and no single-partition
+    * exchange funnels rows through one task — the only ones allowed
+    * gather keyless partial aggregates (a corpus count or max that rides
+    * to the rows as a 1-row broadcast).
+    */
+  private def assertPrefixScan(df: DataFrame, group: String*): String = {
+    val p = plan(df)
+    assert(p.contains("rangepartitioning"),
+      s"lost the range partitioning that carries the order:\n$p")
+    assert(p.contains("PrefixScan"), s"rank is not a prefix scan:\n$p")
+    group.foreach { g =>
+      assert(!p.contains(s"windowspecdefinition($g#"),
+        s"window keyed by $g alone:\n$p")
+    }
+    val top = df.queryExecution.executedPlan match {
+      case a: adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case x => x
+    }
+    top.foreach {
+      case e: exchange.ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
+        assert(gathersPartials(e.child),
+          s"corpus-wide single-partition funnel appeared:\n$p")
+      case _ =>
+    }
+    p
+  }
+
+  private def gathersPartials(p: SparkPlan): Boolean = p match {
+    case a: aggregate.BaseAggregateExec =>
+      a.groupingExpressions.isEmpty &&
+        a.aggregateExpressions.forall(_.mode == Partial)
+    case _: WholeStageCodegenExec | _: InputAdapter => gathersPartials(p.children.head)
+    case _ => false
+  }
+
   test("doc_packing runs the distributed prefix sum, not a per-lang window") {
-    val p = plan(TextJobs.docPacking(spark, sf("sf0.001")))
-    // the heavy cumsum window must partition by (pid, lang) — a window
-    // keyed only by lang is one task per language at corpus scale
-    assert(p.contains("windowspecdefinition(pid#"),
-      s"packing cumsum lost its per-partition parallelism:\n$p")
+    val p = assertPrefixScan(TextJobs.docPacking(spark, sf("sf0.001")), "lang")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
   }
 
@@ -376,29 +411,26 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("training_order assigns the global sequence without a corpus-wide funnel") {
-    val p = plan(DedupJobs.trainingOrder(spark, sf("sf0.001")))
-    // the corpus-side rank window must be per-partition (pid-keyed), with
-    // range partitioning carrying the global order; the only
-    // single-partition exchange is the partition-count-sized offsets frame
-    assert(p.contains("rangepartitioning"),
-      s"lost the range partitioning that carries global order:\n$p")
-    assert(p.contains("windowspecdefinition(pid#"),
-      s"rank window not per-partition:\n$p")
-    assert("Exchange SinglePartition".r.findAllIn(p).length <= 1,
-      s"corpus-wide single-partition funnel appeared:\n$p")
+    assertPrefixScan(DedupJobs.trainingOrder(spark, sf("sf0.001")))
   }
 
   test("score_calibrate ranks per source without a low-cardinality window") {
-    val p = plan(TextJobs.scoreCalibrate(spark, sf("sf0.001")))
-    // per-source percentile = the training_order prefix-sum shape: the
-    // corpus-side window must key on (pid, source), never source alone,
-    // and the only single-partition exchange is the tiny offsets frame
-    assert(p.contains("rangepartitioning"),
-      s"lost the range partitioning that carries per-source order:\n$p")
-    assert(p.contains("windowspecdefinition(pid#"),
-      s"rank window not per-partition:\n$p")
-    assert("Exchange SinglePartition".r.findAllIn(p).length <= 1,
-      s"corpus-wide single-partition funnel appeared:\n$p")
+    assertPrefixScan(TextJobs.scoreCalibrate(spark, sf("sf0.001")), "source")
+  }
+
+  test("sorted_neighborhood ranks the blocking key with one prefix scan") {
+    assertPrefixScan(Handoff.lineage(
+      DedupJobs.sortedNeighborhood(spark, sf("sf0.001"))))
+  }
+
+  test("rfm_segments ranks all three metrics with one prefix scan") {
+    val p = assertPrefixScan(AnalyticsJobs.rfmSegments(spark, sf("sf0.001")), "metric")
+    assert("PrefixScan".r.findAllIn(p).length == 1,
+      s"one scan per metric instead of one for all three:\n$p")
+  }
+
+  test("classifier_lift ranks the scored corpus with one prefix scan") {
+    assertPrefixScan(TextJobs.classifierLift(spark, sf("sf0.001")))
   }
 
   // one pin over the three trainers: the merges/vocab queries serve the
